@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from ..sources import file_fingerprint
+
 # Partition-count probe memo. The ``df.rdd.getNumPartitions()`` probe costs
 # ~0.17 s per call (a full Catalyst->RDD conversion), and the r15 fixture
 # gates probe the SAME scan (documents at one sf_dir) dozens of times per
@@ -58,23 +60,24 @@ def scan_partitions(df: DataFrame, memo_key: str | None = None) -> int:
     return df.rdd.getNumPartitions()
 
 
-# Parquet footer row-count memo (same stable-scan contract as the partition
-# memo: a path whose files are rewritten mid-session must not be read
-# through this). The footer read is driver-side metadata only (~1 ms) —
-# the same class of fact AQE reads from file statistics, never data.
-_PARQUET_ROWS_MEMO: dict[str, int] = {}
+# Parquet footer row-count memo, keyed on the path's file fingerprint so a
+# rewrite (e.g. make_scale_data regenerating .scale/sf1) re-reads the
+# footers. The footer read is driver-side metadata only (~1 ms) — the same
+# class of fact AQE reads from file statistics, never data.
+_PARQUET_ROWS_MEMO: dict[tuple, int] = {}
 
 
 def parquet_rows(path: str) -> int:
     """Total row count of a parquet file (or directory of files) from the
     FOOTER metadata — no Spark job, no data read. Used to size small-scan
     fan-out targets by data volume instead of core count."""
-    n = _PARQUET_ROWS_MEMO.get(path)
+    import os
+
+    import pyarrow.parquet as pq
+
+    fingerprint = file_fingerprint(path)
+    n = _PARQUET_ROWS_MEMO.get((path, fingerprint))
     if n is None:
-        import os
-
-        import pyarrow.parquet as pq
-
         if os.path.isdir(path):
             n = sum(
                 pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
@@ -84,7 +87,8 @@ def parquet_rows(path: str) -> int:
             )
         else:
             n = pq.ParquetFile(path).metadata.num_rows
-        _PARQUET_ROWS_MEMO[path] = n
+        if fingerprint is not None:
+            _PARQUET_ROWS_MEMO[(path, fingerprint)] = n
     return n
 
 
@@ -130,6 +134,8 @@ def ensure_min_parallelism(
     frames only — ``.rdd`` on a plan that still contains exchanges
     materializes those shuffle stages eagerly at DataFrame-BUILD time
     under AQE, turning a plan probe into real job cost."""
+    if rows_per_task is not None and rows_per_task <= 0:
+        raise ValueError(f"rows_per_task must be positive, got {rows_per_task}")
     n = scan_partitions(df, memo_key)
     par = df.sparkSession.sparkContext.defaultParallelism
     if n >= par:

@@ -13,6 +13,10 @@ parquet sink partitions by caller-chosen columns so downstream scans prune.
 
 from __future__ import annotations
 
+import os
+import stat
+from urllib.parse import urlparse
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -32,9 +36,81 @@ def read_csv(
     return reader.csv(path, header=header, sep=sep)
 
 
+def file_fingerprint(path: str) -> tuple | None:
+    """Sorted ``(relative name, inode, size, mtime_ns)`` of every file under
+    a local ``path`` (the path itself when it is a file), or None when
+    nothing is there. Rewriting, adding or removing any file changes it."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (("", st.st_ino, st.st_size, st.st_mtime_ns),)
+        entries = []
+        for root, _, files in os.walk(path):
+            for name in files:
+                full = os.path.join(root, name)
+                fst = os.stat(full)
+                rel = os.path.relpath(full, path)
+                entries.append((rel, fst.st_ino, fst.st_size, fst.st_mtime_ns))
+        return tuple(sorted(entries))
+    except OSError:  # vanished mid-walk: no stable version to name
+        return None
+
+
+# Confs that change the schema Spark infers from parquet footers; part of
+# the schema memo key so flipping one re-infers.
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+# Inferred-schema memo. A plain ``spark.read.parquet`` starts one Spark job
+# (footer merge) on every call, even for a single file; a reader handed the
+# schema starts none. Holds schemas only — no DataFrame, listing or data;
+# Spark still lists the files on every read. Keyed on (app id, path, file
+# fingerprint, inference confs), so a rewritten file or a flipped conf
+# re-infers.
+_PARQUET_SCHEMA_MEMO: dict[tuple, StructType] = {}
+
+
+def _schema_memo_key(spark: SparkSession, path: str) -> tuple | None:
+    """Memo key for an absolute path on the local filesystem; None for
+    anything else (remote filesystems, relative paths, globs), which infers
+    on every read."""
+    url = urlparse(path)
+    sc = spark.sparkContext
+    if url.scheme == "file":
+        local = url.path
+    elif url.scheme == "" and sc._jsc.hadoopConfiguration().get(
+        "fs.defaultFS", "file:///"
+    ).startswith("file:"):
+        local = path
+    else:
+        return None
+    if not os.path.isabs(local) or any(c in local for c in "*?[{"):
+        return None
+    fingerprint = file_fingerprint(local)
+    if fingerprint is None:
+        return None
+    confs = tuple(spark.conf.get(k, None) for k in _PARQUET_INFERENCE_CONFS)
+    return (sc.applicationId, path, fingerprint, confs)
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """S2-S4: self-describing parquet scan (:134,907)."""
-    return spark.read.parquet(path)
+    """S2-S4: self-describing parquet scan (:134,907). The first read of a
+    local file version infers its schema (one Spark job); later reads hand
+    the memoized schema to the reader and start no job."""
+    key = _schema_memo_key(spark, path)
+    schema = _PARQUET_SCHEMA_MEMO.get(key) if key is not None else None
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if key is not None:
+        _PARQUET_SCHEMA_MEMO[key] = df.schema
+    return df
 
 
 def read_jsonl(

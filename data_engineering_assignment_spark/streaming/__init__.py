@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..operators.aggregates import dsum
 from ..session import tune
+from ..sources import read_parquet
 
 
 def _nanos_timestamp_cols(path: str) -> list[str]:
@@ -60,8 +61,10 @@ def read_parquet_stream(
     spark: SparkSession, path: str, schema=None
 ) -> DataFrame:
     """File-source stream over a parquet directory. File streams require an
-    explicit schema; by default it is taken from the existing files (one
-    driver-side footer read, no data scan).
+    explicit schema; by default it is inferred from the existing files
+    through :func:`sources.read_parquet` (a footer-merge Spark job on the
+    first read of a file version, none once the schema is memoized; no
+    data scan).
 
     TIMESTAMP(NANOS) columns (e.g. the driver's ``events.ts``) surface as
     ``timestamp_ntz`` — natively on Spark 4, or via the nanos-long fallback
@@ -73,7 +76,7 @@ def read_parquet_stream(
     tune(spark)
     explicit = schema is not None
     if schema is None:
-        schema = spark.read.parquet(path).schema
+        schema = read_parquet(spark, path).schema
     stream = spark.readStream.schema(schema).parquet(path)
     if not explicit:
         for c in _nanos_timestamp_cols(path):

@@ -1,7 +1,9 @@
 """Typed loaders for the driver test tables (TESTDATA.md).
 
 All tables are self-describing parquet (reference pattern: plain
-``spark.read.parquet``, Assignment-python.py:134,907). The one normalization
+``spark.read.parquet``, Assignment-python.py:134,907), read through
+:func:`sources.read_parquet` so each file version's schema is inferred once
+per session and later loads start no Spark job. The one normalization
 is ``events.ts``: stored as parquet TIMESTAMP(NANOS) which Spark's vectorized
 reader rejects, so it is read as nano-longs and converted to a microsecond
 timestamp with integer division — exactly DuckDB's nanos→micros truncation, so
@@ -14,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .session import tune
+from .sources import read_parquet
 
 TABLE_NAMES = [
     "region",
@@ -32,7 +35,7 @@ TABLE_NAMES = [
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver table; pins runtime confs first (driver-owned session)."""
     tune(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # nanos → micros via integer division (matches DuckDB truncation);
         # plain `/` would route through double and lose precision past 2^53.
@@ -42,7 +45,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
         )
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:
-    return tuple(load(spark, sf_dir, n) for n in names)
