@@ -107,10 +107,6 @@ def _escape_bytes(out: bytes) -> bytes:
     )
 
 
-def _escape_literal(s: str) -> bytes:
-    return _escape_bytes(s.encode("latin-1"))
-
-
 def _content_stream(
     lines: list[str],
     tj_split: bool = False,

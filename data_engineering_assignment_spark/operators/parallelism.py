@@ -31,8 +31,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from ..sources import file_fingerprint
-
 # Partition-count probe memo. The ``df.rdd.getNumPartitions()`` probe costs
 # ~0.17 s per call (a full Catalyst->RDD conversion), and the r15 fixture
 # gates probe the SAME scan (documents at one sf_dir) dozens of times per
@@ -60,66 +58,12 @@ def scan_partitions(df: DataFrame, memo_key: str | None = None) -> int:
     return df.rdd.getNumPartitions()
 
 
-# Parquet footer row-count memo, keyed on the path's file fingerprint so a
-# rewrite (e.g. make_scale_data regenerating .scale/sf1) re-reads the
-# footers. The footer read is driver-side metadata only (~1 ms) — the same
-# class of fact AQE reads from file statistics, never data.
-_PARQUET_ROWS_MEMO: dict[tuple, int] = {}
-
-
-def parquet_rows(path: str) -> int:
-    """Total row count of a parquet file (or directory of files) from the
-    FOOTER metadata — no Spark job, no data read. Used to size small-scan
-    fan-out targets by data volume instead of core count."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    fingerprint = file_fingerprint(path)
-    n = _PARQUET_ROWS_MEMO.get((path, fingerprint))
-    if n is None:
-        if os.path.isdir(path):
-            n = sum(
-                pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-                for root, _, files in os.walk(path)
-                for f in files
-                if f.endswith(".parquet")
-            )
-        else:
-            n = pq.ParquetFile(path).metadata.num_rows
-        if fingerprint is not None:
-            _PARQUET_ROWS_MEMO[(path, fingerprint)] = n
-    return n
-
-
-def ensure_min_parallelism(
-    df: DataFrame,
-    memo_key: str | None = None,
-    rows_per_task: int | None = None,
-    rows_fn=None,
-) -> DataFrame:
+def ensure_min_parallelism(df: DataFrame, memo_key: str | None = None) -> DataFrame:
     """Repartition ``df`` to the session default parallelism iff its current
     partitioning is narrower — the row-group-bound small-file guard. The
     round-robin repartition is deterministic (Spark sorts within input
     partitions before distributing) and every caller's downstream
     aggregation is partitioning-independent, so results never change.
-
-    ``rows_per_task`` (with ``rows_fn`` returning the input's row count,
-    e.g. :func:`parquet_rows` on the scan path) sizes the fan-out target
-    by DATA VOLUME instead of core count: target = clamp(ceil(rows /
-    rows_per_task), current, defaultParallelism). A warm mapInPandas
-    stage costs ~0.3 s fixed + ~12-15 ms per task on top of the Python
-    compute (measured r16; the driver-side dispatch component is
-    serialized), so a gate whose per-doc Python work is trivial
-    (~0.01-0.1 ms: WARC envelope parse, sitemap/robots text, archive
-    member walks) is OVERHEAD-bound at a blanket defaultParallelism
-    fan-out — 5 000 fixture docs across 32 tasks pay ~0.65 s of stage
-    plumbing to parallelize ~0.15 s of compute (crawl_discovery A/B:
-    3.17 s -> 1.34 s at target 5). Callers with heavy per-doc work
-    (codec pixel/sample decode, HTML extraction, PDF decrypt — ms-class
-    per doc) omit it and keep the full fan-out. The target never drops
-    below the scan's own partitioning, and at production scale the
-    guard stays a no-op either way.
 
     ``memo_key``: callers probing a STABLE scan (same path, same session)
     many times pass a key naming it, and the partition-count probe runs
@@ -134,15 +78,8 @@ def ensure_min_parallelism(
     frames only — ``.rdd`` on a plan that still contains exchanges
     materializes those shuffle stages eagerly at DataFrame-BUILD time
     under AQE, turning a plan probe into real job cost."""
-    if rows_per_task is not None and rows_per_task <= 0:
-        raise ValueError(f"rows_per_task must be positive, got {rows_per_task}")
     n = scan_partitions(df, memo_key)
     par = df.sparkSession.sparkContext.defaultParallelism
     if n >= par:
         return df
-    target = par
-    if rows_per_task is not None and rows_fn is not None:
-        target = max(n, min(par, -(-int(rows_fn()) // rows_per_task)))
-    if target <= n:
-        return df
-    return df.repartition(target)
+    return df.repartition(par)

@@ -41,14 +41,6 @@ def stopword_ratio(text: Column | str) -> Column:
     return dround(stops / F.size(toks).cast("double"), 4)
 
 
-def avg_token_length(text: Column | str) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(
-        F.transform(toks, lambda t: F.length(t)), F.lit(0), lambda acc, x: acc + x
-    )
-    return dround(total.cast("double") / F.size(toks).cast("double"), 4)
-
-
 def quality_score(text: Column | str) -> Column:
     """Deterministic [0,1] quality heuristic: length credit × stopword credit.
 

@@ -9,6 +9,7 @@ identical declared types — no write ordering between query and oracle runs.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -19,9 +20,7 @@ from ..pipelines.sales import read_sales_csv, sales_in_window
 from ..session import tune
 from . import register
 
-def _doc_ids(
-    spark: SparkSession, sf_dir: str, rows_per_task: int | None = None
-) -> DataFrame:
+def _doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The documents doc_id scan, fanned out before the per-doc Python
     stages every fixture gate in this module hangs off it.
 
@@ -34,25 +33,43 @@ def _doc_ids(
     only the doc_id longs (kilobytes) and is a no-op whenever the scan
     already parallelizes — a production-scale documents table has
     thousands of row groups, so no shuffle is added there
-    (operators/parallelism.py has the full rationale).
-
-    ``rows_per_task`` sizes the fan-out by data volume for gates whose
-    per-doc Python work is TRIVIAL (WARC envelope/robots/sitemap text
-    parses, archive member walks — ~0.01-0.1 ms/doc): a warm Python
-    stage costs ~0.3 s + ~12-15 ms/task of plumbing on top of the
-    compute, so fanning 5 000 tiny docs to 32 tasks is slower than 5
-    right-sized tasks (measured 2.4x on crawl_discovery_pipeline).
-    Heavy per-doc gates (codec decode, HTML extract, PDF decrypt) omit
-    it and keep the defaultParallelism fan-out."""
-    from ..operators.parallelism import ensure_min_parallelism, parquet_rows
+    (operators/parallelism.py has the full rationale)."""
+    from ..operators.parallelism import ensure_min_parallelism
     from ..tables import load
 
     return ensure_min_parallelism(
         load(spark, sf_dir, "documents").select("doc_id"),
         memo_key=f"doc_ids:{sf_dir}",
-        rows_per_task=rows_per_task,
-        rows_fn=lambda: parquet_rows(f"{sf_dir}/documents.parquet"),
     )
+
+
+def _fixture_rows(
+    docs: DataFrame, row: Callable[..., tuple], schema: str
+) -> DataFrame:
+    """One generated row per ``docs`` row: the per-batch mapInPandas loop
+    every fixture gate shares, written once.
+
+    ``row(did, *rest)`` returns the value tuple for ``schema``: ``did`` is
+    the first column as a Python int, ``rest`` the remaining ``docs``
+    columns in order. The pandas column names are derived from ``schema``
+    (sources.schema_field_names), so no gate hand-types a column list that
+    must match it. Junk planting stays in each builder: the junk bytes and
+    row width differ from gate to gate."""
+    import pandas as pd
+
+    from ..sources import schema_field_names
+
+    names = schema_field_names(schema)
+
+    def rows(batches):
+        for batch in batches:
+            cols = (batch[c] for c in batch.columns)
+            yield pd.DataFrame(
+                [row(int(did), *rest) for did, *rest in zip(*cols)],
+                columns=names,
+            )
+
+    return docs.mapInPandas(rows, schema)
 
 
 def _fixture_scan_small(spark: SparkSession, sf_dir: str) -> bool:
@@ -221,33 +238,20 @@ def png_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
     import numpy as np
-    import pandas as pd
 
     from ..functions.multimodal import MEDIA_SCHEMA, decode_media, encode_png
     from ..tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for did, text in zip(pdf["doc_id"], pdf["text"]):
-                w, h = 2 + int(did) % 3, 2 + int(did) % 2
-                digest = hashlib.md5(str(text).encode("utf-8")).digest()
-                payload = (digest * (w * h * 4 // len(digest) + 1))[: w * h * 4]
-                frame = np.frombuffer(payload, np.uint8).reshape(h, w, 4)
-                rows.append(
-                    (f"doc-{did}.png", "image", 0, 0, 0, 0, encode_png(frame))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "path", "media_type", "width", "height",
-                    "channels", "n_frames", "content",
-                ],
-            )
+    def make(did, text):
+        w, h = 2 + did % 3, 2 + did % 2
+        digest = hashlib.md5(str(text).encode("utf-8")).digest()
+        payload = (digest * (w * h * 4 // len(digest) + 1))[: w * h * 4]
+        frame = np.frombuffer(payload, np.uint8).reshape(h, w, 4)
+        return f"doc-{did}.png", "image", 0, 0, 0, 0, encode_png(frame)
 
-    media = docs.mapInPandas(make, MEDIA_SCHEMA)
+    media = _fixture_rows(docs, make, MEDIA_SCHEMA)
     decoded = decode_media(media)
     return decoded.groupBy(
         F.col("width").cast("long").alias("width"),
@@ -296,7 +300,6 @@ GROUP BY 1
 )
 def png_profile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     from ..functions.multimodal import (
         decode_png,
@@ -305,7 +308,6 @@ def png_profile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_png_gray,
         encode_png_palette,
     )
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
     pal = np.stack(
@@ -316,84 +318,73 @@ def png_profile_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub_depths = (1, 2, 4)
     sub_scales = {1: 255, 2: 85, 4: 17}
 
-    def roundtrip(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 3 + did % 13, 2 + did % 11
-                v = 10 + did % 200
-                ys, xs = np.mgrid[0:h, 0:w]
-                # leg 1: interlaced 8-bit RGBA gradient (frame built in
-                # decode_png's BGRA order so expected == input frame)
-                frame = np.empty((h, w, 4), np.uint8)
-                frame[..., 2] = (v + 3 * xs + 5 * ys) % 256  # R
-                frame[..., 1] = (v + xs) % 256  # G
-                frame[..., 0] = (v + ys) % 256  # B
-                frame[..., 3] = 255
-                try:
-                    seq, _ = decode_png(encode_png(frame))
-                    inter, _ = decode_png(encode_png(frame, interlace=1))
-                    iok = bool(
-                        np.array_equal(seq[0], frame)
-                        and np.array_equal(inter, seq)
-                    )
-                    ival = int(inter[0, 0, 0, 2])
-                except Exception:
-                    iok, ival = False, 0
-                # leg 2: 16-bit RGBA, noisy low bytes
-                hi = (v + xs[..., None] + ys[..., None] + np.arange(4)) % 256
-                lo = (did + xs[..., None] + np.zeros_like(hi)) % 256
-                rgba16 = (hi.astype(np.uint16) << 8) | lo.astype(np.uint16)
-                exp16 = hi.astype(np.uint8)[:, :, [2, 1, 0, 3]]
-                try:
-                    d16, _ = decode_png(encode_png16(rgba16))
-                    k16ok = bool(np.array_equal(d16[0], exp16))
-                    k16val = int(d16[0, 0, 0, 2])
-                except Exception:
-                    k16ok, k16val = False, 0
-                # leg 3: sub-byte grayscale, alternating interlace
-                depth = sub_depths[did % 3]
-                mod = 1 << depth
-                g = ((xs + ys + did) % mod).astype(np.uint16)
-                try:
-                    dg, _ = decode_png(
-                        encode_png_gray(g, depth, interlace=did % 2)
-                    )
-                    exp_g = (g * sub_scales[depth]).astype(np.uint8)
-                    sok = bool(
-                        np.array_equal(dg[0, :, :, 0], exp_g)
-                        and (dg[0, :, :, 3] == 255).all()
-                    )
-                    sval = int(dg[0, 0, 0, 0])
-                except Exception:
-                    sok, sval = False, 0
-                # leg 4: 4-bit palette + tRNS alpha, alternating interlace
-                idx = ((xs + ys + did) % 16).astype(np.uint16)
-                try:
-                    dp, _ = decode_png(
-                        encode_png_palette(
-                            idx, pal, atab.tobytes(), 4, interlace=did % 2
-                        )
-                    )
-                    pok = bool(
-                        np.array_equal(dp[0, :, :, :3], pal[idx][:, :, [2, 1, 0]])
-                        and np.array_equal(dp[0, :, :, 3], atab[idx])
-                    )
-                    pval = int(dp[0, 0, 0, 2])
-                except Exception:
-                    pok, pval = False, 0
-                rows.append((w, iok, ival, k16ok, k16val, sok, sval, pok, pval))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "width", "iok", "ival", "k16ok", "k16val",
-                    "sok", "sval", "pok", "pval",
-                ],
+    def roundtrip(did):
+        w, h = 3 + did % 13, 2 + did % 11
+        v = 10 + did % 200
+        ys, xs = np.mgrid[0:h, 0:w]
+        # leg 1: interlaced 8-bit RGBA gradient (frame built in
+        # decode_png's BGRA order so expected == input frame)
+        frame = np.empty((h, w, 4), np.uint8)
+        frame[..., 2] = (v + 3 * xs + 5 * ys) % 256  # R
+        frame[..., 1] = (v + xs) % 256  # G
+        frame[..., 0] = (v + ys) % 256  # B
+        frame[..., 3] = 255
+        try:
+            seq, _ = decode_png(encode_png(frame))
+            inter, _ = decode_png(encode_png(frame, interlace=1))
+            iok = bool(
+                np.array_equal(seq[0], frame)
+                and np.array_equal(inter, seq)
             )
+            ival = int(inter[0, 0, 0, 2])
+        except Exception:
+            iok, ival = False, 0
+        # leg 2: 16-bit RGBA, noisy low bytes
+        hi = (v + xs[..., None] + ys[..., None] + np.arange(4)) % 256
+        lo = (did + xs[..., None] + np.zeros_like(hi)) % 256
+        rgba16 = (hi.astype(np.uint16) << 8) | lo.astype(np.uint16)
+        exp16 = hi.astype(np.uint8)[:, :, [2, 1, 0, 3]]
+        try:
+            d16, _ = decode_png(encode_png16(rgba16))
+            k16ok = bool(np.array_equal(d16[0], exp16))
+            k16val = int(d16[0, 0, 0, 2])
+        except Exception:
+            k16ok, k16val = False, 0
+        # leg 3: sub-byte grayscale, alternating interlace
+        depth = sub_depths[did % 3]
+        mod = 1 << depth
+        g = ((xs + ys + did) % mod).astype(np.uint16)
+        try:
+            dg, _ = decode_png(
+                encode_png_gray(g, depth, interlace=did % 2)
+            )
+            exp_g = (g * sub_scales[depth]).astype(np.uint8)
+            sok = bool(
+                np.array_equal(dg[0, :, :, 0], exp_g)
+                and (dg[0, :, :, 3] == 255).all()
+            )
+            sval = int(dg[0, 0, 0, 0])
+        except Exception:
+            sok, sval = False, 0
+        # leg 4: 4-bit palette + tRNS alpha, alternating interlace
+        idx = ((xs + ys + did) % 16).astype(np.uint16)
+        try:
+            dp, _ = decode_png(
+                encode_png_palette(
+                    idx, pal, atab.tobytes(), 4, interlace=did % 2
+                )
+            )
+            pok = bool(
+                np.array_equal(dp[0, :, :, :3], pal[idx][:, :, [2, 1, 0]])
+                and np.array_equal(dp[0, :, :, 3], atab[idx])
+            )
+            pval = int(dp[0, 0, 0, 2])
+        except Exception:
+            pok, pval = False, 0
+        return w, iok, ival, k16ok, k16val, sok, sval, pok, pval
 
-    decoded = docs.mapInPandas(
-        roundtrip,
+    decoded = _fixture_rows(
+        docs, roundtrip,
         "width int, iok boolean, ival int, k16ok boolean, k16val int,"
         " sok boolean, sval int, pok boolean, pval int",
     )
@@ -440,11 +431,9 @@ GROUP BY 1
 )
 def gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     from ..functions.gif import encode_gif
     from ..functions.multimodal import decode_any
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
     pal = np.stack(
@@ -453,52 +442,45 @@ def gif_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).astype(np.uint8)
     pal_bgr = pal[:, [2, 1, 0]]
 
-    def roundtrip(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 4 + did % 8, 3 + did % 6
-                ys, xs = np.mgrid[0:h, 0:w]
-                idx0 = ((xs + ys + did) % 16).astype(np.uint8)
-                pys, pxs = np.mgrid[0:2, 0:3]
-                idx1 = ((pxs * 2 + pys + did) % 16).astype(np.uint8)
-                transp = did % 16
-                gif = encode_gif(
-                    [idx0, idx1],
-                    pal,
-                    transparent=[None, transp],  # frame 0 fully opaque
-                    offsets=[(0, 0), (1, 1)],
-                    interlace=bool(did % 2),
-                )
-                exp0 = np.dstack(
-                    [pal_bgr[idx0], np.full((h, w), 255, np.uint8)]
-                )
-                exp1 = exp0.copy()
-                region = exp1[1:3, 1:4]
-                keep = idx1 == transp
-                region[~keep, :3] = pal_bgr[idx1[~keep]]
-                try:
-                    frames, meta = decode_any(gif)
-                    ok = bool(
-                        meta["n_frames"] == 2
-                        and frames.shape == (2, h, w, 4)
-                        and np.array_equal(frames[0], exp0)
-                        and np.array_equal(frames[1], exp1)
-                    )
-                    # decoded R channel (BGRA index 2) at the gated pixels
-                    v0 = int(frames[0, 0, 0, 2])
-                    v1 = int(frames[1, 1, 1, 2])
-                    v2 = int(frames[1, 2, 3, 2])
-                except Exception:
-                    ok, v0, v1, v2 = False, 0, 0, 0
-                rows.append((w, ok, v0, v1, v2))
-            yield pd.DataFrame(
-                rows, columns=["width", "ok", "v0", "v1", "v2"]
+    def roundtrip(did):
+        w, h = 4 + did % 8, 3 + did % 6
+        ys, xs = np.mgrid[0:h, 0:w]
+        idx0 = ((xs + ys + did) % 16).astype(np.uint8)
+        pys, pxs = np.mgrid[0:2, 0:3]
+        idx1 = ((pxs * 2 + pys + did) % 16).astype(np.uint8)
+        transp = did % 16
+        gif = encode_gif(
+            [idx0, idx1],
+            pal,
+            transparent=[None, transp],  # frame 0 fully opaque
+            offsets=[(0, 0), (1, 1)],
+            interlace=bool(did % 2),
+        )
+        exp0 = np.dstack(
+            [pal_bgr[idx0], np.full((h, w), 255, np.uint8)]
+        )
+        exp1 = exp0.copy()
+        region = exp1[1:3, 1:4]
+        keep = idx1 == transp
+        region[~keep, :3] = pal_bgr[idx1[~keep]]
+        try:
+            frames, meta = decode_any(gif)
+            ok = bool(
+                meta["n_frames"] == 2
+                and frames.shape == (2, h, w, 4)
+                and np.array_equal(frames[0], exp0)
+                and np.array_equal(frames[1], exp1)
             )
+            # decoded R channel (BGRA index 2) at the gated pixels
+            v0 = int(frames[0, 0, 0, 2])
+            v1 = int(frames[1, 1, 1, 2])
+            v2 = int(frames[1, 2, 3, 2])
+        except Exception:
+            ok, v0, v1, v2 = False, 0, 0, 0
+        return w, ok, v0, v1, v2
 
-    decoded = docs.mapInPandas(
-        roundtrip, "width int, ok boolean, v0 int, v1 int, v2 int"
+    decoded = _fixture_rows(
+        docs, roundtrip, "width int, ok boolean, v0 int, v1 int, v2 int"
     )
     return decoded.groupBy(F.col("width").cast("long").alias("width")).agg(
         F.count(F.lit(1)).alias("n_gifs"),
@@ -543,10 +525,8 @@ GROUP BY 1
 )
 def bmp_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     from ..functions.multimodal import decode_any, encode_bmp
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
     pal = np.stack(
@@ -554,52 +534,44 @@ def bmp_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         axis=1,
     ).astype(np.uint8)  # BGR palette
 
-    def roundtrip(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 3 + did % 9, 2 + did % 7
-                ys, xs = np.mgrid[0:h, 0:w]
-                frame = np.empty((h, w, 4), np.uint8)
-                frame[..., 0] = (did + xs) % 256  # B
-                frame[..., 1] = (did + ys) % 256  # G
-                frame[..., 2] = (did + 2 * xs + 3 * ys) % 256  # R
-                frame[..., 3] = 255
-                idx = ((xs + 2 * ys + did) % 16).astype(np.uint8)
-                exp24 = frame.copy()
-                exp_rle = np.dstack(
-                    [pal[idx], np.full((h, w), 255, np.uint8)]
-                )
-                try:
-                    d24, _ = decode_any(
-                        encode_bmp(frame, 24, top_down=bool(did % 2))
-                    )
-                    drle, _ = decode_any(
-                        encode_bmp(None, 8, palette=pal, indices=idx, rle8=True)
-                    )
-                    ok = bool(
-                        np.array_equal(d24[0], exp24)
-                        and np.array_equal(drle[0], exp_rle)
-                    )
-                    v24 = int(d24[0, 0, 0, 2])
-                    vrle = int(drle[0, 0, 0, 2])
-                except Exception:
-                    ok, v24, vrle = False, 0, 0
-                try:
-                    dos2, _ = decode_any(encode_bmp(frame, 24, os2=True))
-                    os2ok = bool(np.array_equal(dos2[0], exp24))
-                    vos2 = int(dos2[0, 0, 1, 0])  # (0,1).B = (did+1)%256
-                except Exception:
-                    os2ok, vos2 = False, 0
-                rows.append((w, ok, v24, vrle, os2ok, vos2))
-            yield pd.DataFrame(
-                rows,
-                columns=["width", "ok", "v24", "vrle", "os2ok", "vos2"],
+    def roundtrip(did):
+        w, h = 3 + did % 9, 2 + did % 7
+        ys, xs = np.mgrid[0:h, 0:w]
+        frame = np.empty((h, w, 4), np.uint8)
+        frame[..., 0] = (did + xs) % 256  # B
+        frame[..., 1] = (did + ys) % 256  # G
+        frame[..., 2] = (did + 2 * xs + 3 * ys) % 256  # R
+        frame[..., 3] = 255
+        idx = ((xs + 2 * ys + did) % 16).astype(np.uint8)
+        exp24 = frame.copy()
+        exp_rle = np.dstack(
+            [pal[idx], np.full((h, w), 255, np.uint8)]
+        )
+        try:
+            d24, _ = decode_any(
+                encode_bmp(frame, 24, top_down=bool(did % 2))
             )
+            drle, _ = decode_any(
+                encode_bmp(None, 8, palette=pal, indices=idx, rle8=True)
+            )
+            ok = bool(
+                np.array_equal(d24[0], exp24)
+                and np.array_equal(drle[0], exp_rle)
+            )
+            v24 = int(d24[0, 0, 0, 2])
+            vrle = int(drle[0, 0, 0, 2])
+        except Exception:
+            ok, v24, vrle = False, 0, 0
+        try:
+            dos2, _ = decode_any(encode_bmp(frame, 24, os2=True))
+            os2ok = bool(np.array_equal(dos2[0], exp24))
+            vos2 = int(dos2[0, 0, 1, 0])  # (0,1).B = (did+1)%256
+        except Exception:
+            os2ok, vos2 = False, 0
+        return w, ok, v24, vrle, os2ok, vos2
 
-    decoded = docs.mapInPandas(
-        roundtrip,
+    decoded = _fixture_rows(
+        docs, roundtrip,
         "width int, ok boolean, v24 int, vrle int, os2ok boolean, vos2 int",
     )
     return decoded.groupBy(F.col("width").cast("long").alias("width")).agg(
@@ -647,11 +619,9 @@ GROUP BY 1
 )
 def tiff_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     from ..functions.multimodal import decode_any
     from ..functions.tiff import encode_tiff
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
     pal = np.stack(
@@ -659,77 +629,70 @@ def tiff_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         axis=1,
     ).astype(np.uint8)  # RGB palette (encode_tiff convention)
 
-    def roundtrip(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 3 + did % 9, 2 + did % 7
-                ys, xs = np.mgrid[0:h, 0:w]
-                frame = np.empty((h, w, 4), np.uint8)
-                frame[..., 0] = (did + xs) % 256  # B
-                frame[..., 1] = (did + ys) % 256  # G
-                frame[..., 2] = (did + 2 * xs + 3 * ys) % 256  # R
-                frame[..., 3] = 255
-                idx = ((xs + 2 * ys + did) % 16).astype(np.uint8)
-                exp_pal = np.dstack(
-                    [pal[idx][:, :, [2, 1, 0]], np.full((h, w), 255, np.uint8)]
+    def roundtrip(did):
+        w, h = 3 + did % 9, 2 + did % 7
+        ys, xs = np.mgrid[0:h, 0:w]
+        frame = np.empty((h, w, 4), np.uint8)
+        frame[..., 0] = (did + xs) % 256  # B
+        frame[..., 1] = (did + ys) % 256  # G
+        frame[..., 2] = (did + 2 * xs + 3 * ys) % 256  # R
+        frame[..., 3] = 255
+        idx = ((xs + 2 * ys + did) % 16).astype(np.uint8)
+        exp_pal = np.dstack(
+            [pal[idx][:, :, [2, 1, 0]], np.full((h, w), 255, np.uint8)]
+        )
+        try:
+            dlzw, _ = decode_any(
+                encode_tiff(
+                    frame, 2, 5, 2,
+                    big_endian=bool(did % 2), rows_per_strip=3,
+                    alpha=True,
                 )
-                try:
-                    dlzw, _ = decode_any(
-                        encode_tiff(
-                            frame, 2, 5, 2,
-                            big_endian=bool(did % 2), rows_per_strip=3,
-                            alpha=True,
-                        )
-                    )
-                    dpb, _ = decode_any(
-                        encode_tiff(
-                            None, 3, 32773,
-                            big_endian=True, palette=pal, indices=idx,
-                        )
-                    )
-                    ok = bool(
-                        np.array_equal(dlzw[0], frame)
-                        and np.array_equal(dpb[0], exp_pal)
-                    )
-                    vlzw = int(dlzw[0, 0, 0, 2])
-                    vpb = int(dpb[0, 0, 0, 2])
-                except Exception:
-                    ok, vlzw, vpb = False, 0, 0
-                # tiled leg: a 2x2 tile grid of 16x16 tiles with padded
-                # edges; the far-corner pixel crosses tile boundaries, so
-                # a tile-placement/crop/per-tile-predictor bug breaks it
-                wt, ht = w + 16, h + 16
-                yt, xt = np.mgrid[0:ht, 0:wt]
-                tframe = np.empty((ht, wt, 4), np.uint8)
-                tframe[..., 0] = (did + xt) % 256
-                tframe[..., 1] = (did + yt) % 256
-                tframe[..., 2] = (did + 2 * xt + 3 * yt) % 256
-                tframe[..., 3] = 255
-                try:
-                    # uncompressed + predictor 2: tiling's OWN risks
-                    # (grid walk, padding crop, per-tile predictor
-                    # restart) without re-paying the pure-Python LZW the
-                    # strip leg already gates (19.7 -> ~4 s at sf0.1)
-                    dt, _ = decode_any(
-                        encode_tiff(
-                            tframe, 2, 1, 2,
-                            big_endian=bool(did % 2), alpha=True,
-                            tile_size=(16, 16),
-                        )
-                    )
-                    tok = bool(np.array_equal(dt[0], tframe))
-                    vt = int(dt[0, ht - 1, wt - 1, 0])
-                except Exception:
-                    tok, vt = False, 0
-                rows.append((w, ok, vlzw, vpb, tok, vt))
-            yield pd.DataFrame(
-                rows, columns=["width", "ok", "vlzw", "vpb", "tok", "vt"]
             )
+            dpb, _ = decode_any(
+                encode_tiff(
+                    None, 3, 32773,
+                    big_endian=True, palette=pal, indices=idx,
+                )
+            )
+            ok = bool(
+                np.array_equal(dlzw[0], frame)
+                and np.array_equal(dpb[0], exp_pal)
+            )
+            vlzw = int(dlzw[0, 0, 0, 2])
+            vpb = int(dpb[0, 0, 0, 2])
+        except Exception:
+            ok, vlzw, vpb = False, 0, 0
+        # tiled leg: a 2x2 tile grid of 16x16 tiles with padded
+        # edges; the far-corner pixel crosses tile boundaries, so
+        # a tile-placement/crop/per-tile-predictor bug breaks it
+        wt, ht = w + 16, h + 16
+        yt, xt = np.mgrid[0:ht, 0:wt]
+        tframe = np.empty((ht, wt, 4), np.uint8)
+        tframe[..., 0] = (did + xt) % 256
+        tframe[..., 1] = (did + yt) % 256
+        tframe[..., 2] = (did + 2 * xt + 3 * yt) % 256
+        tframe[..., 3] = 255
+        try:
+            # uncompressed + predictor 2: tiling's OWN risks
+            # (grid walk, padding crop, per-tile predictor
+            # restart) without re-paying the pure-Python LZW the
+            # strip leg already gates (19.7 -> ~4 s at sf0.1)
+            dt, _ = decode_any(
+                encode_tiff(
+                    tframe, 2, 1, 2,
+                    big_endian=bool(did % 2), alpha=True,
+                    tile_size=(16, 16),
+                )
+            )
+            tok = bool(np.array_equal(dt[0], tframe))
+            vt = int(dt[0, ht - 1, wt - 1, 0])
+        except Exception:
+            tok, vt = False, 0
+        return w, ok, vlzw, vpb, tok, vt
 
-    decoded = docs.mapInPandas(
-        roundtrip,
+    decoded = _fixture_rows(
+        docs, roundtrip,
         "width int, ok boolean, vlzw int, vpb int, tok boolean, vt int",
     )
     return decoded.groupBy(F.col("width").cast("long").alias("width")).agg(
@@ -794,7 +757,6 @@ GROUP BY 1
 )
 def jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     from ..functions.jpeg import (
         encode_jpeg_color,
@@ -802,116 +764,106 @@ def jpeg_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_jpeg_progressive,
     )
     from ..functions.multimodal import decode_any
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
     subsamplings = ("444", "422", "420")
     _Q256 = np.full((8, 8), 256, np.int64)  # >255 forces the Pq=1 DQT
 
-    def roundtrip(batches):
-        # fixture-encode memo (the avi_video_stats discipline): every leg's
-        # bytes depend on did only through small moduli — 120 gray, 300
-        # color, 120 progressive and 14 q16 distinct files vs 4 pure-Python
-        # encodes per row. The gated DECODE still runs per row.
-        memo: dict = {}
+    # fixture-encode memo (the avi_video_stats discipline): every leg's
+    # bytes depend on did only through small moduli — 120 gray, 300
+    # color, 120 progressive and 14 q16 distinct files vs 4 pure-Python
+    # encodes per row. The gated DECODE still runs per row. The builder
+    # closes over the dict, so each task unpickles its own empty memo.
+    memo: dict = {}
 
-        def enc_memo(key, build):
-            if key not in memo:
-                memo[key] = build()
-            return memo[key]
+    def enc_memo(key, build):
+        if key not in memo:
+            memo[key] = build()
+        return memo[key]
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                w = 8 * (1 + int(did) % 2)
-                v = 68 + 2 * (int(did) % 60)
-                enc = enc_memo(
-                    ("g", w, v),
-                    lambda: encode_jpeg_gray(np.full((8, w), v, np.uint8)),
-                )
-                try:
-                    frames, meta = decode_any(enc)
-                    # frames are (1, h, w, 4) BGRA with gray replicated
-                    g = (meta["width"], True, int(frames[0, 0, 0, 0]))
-                except Exception:
-                    g = (w, False, 0)
-                cv = 78 + 2 * (int(did) % 50)
-                ss = subsamplings[int(did) % 3]
-                cenc = enc_memo(
-                    ("c", w, cv, ss),
-                    lambda: encode_jpeg_color(
-                        np.full((8, w, 3), cv, np.uint8), ss
-                    ),
-                )
-                try:
-                    cframes, _ = decode_any(cenc)
-                    # neutral chroma: B == G == R == cv exactly
-                    ok = bool(
-                        (cframes[0, :, :, :3] == cv).all()
-                        and cframes.shape[1:3] == (8, w)
-                    )
-                    c = (ok, int(cframes[0, 0, 0, 0]))
-                except Exception:
-                    c = (False, 0)
-                penc = enc_memo(
-                    ("p", w, v),
-                    lambda: encode_jpeg_progressive(
-                        np.full((8, w), v, np.uint8)
-                    ),
-                )
-                try:
-                    pframes, _ = decode_any(penc)
-                    pok = bool(
-                        (pframes[0, :, :, :3] == v).all()
-                        and pframes.shape[1:3] == (8, w)
-                    )
-                    p = (pok, int(pframes[0, 0, 0, 0]))
-                except Exception:
-                    p = (False, 0)
-                qv = 32 + 32 * (int(did) % 7)
-                qenc = enc_memo(
-                    ("q", w, qv),
-                    lambda: encode_jpeg_gray(
-                        np.full((8, w), qv, np.uint8), qtable=_Q256
-                    ),
-                )
-                try:
-                    qframes, _ = decode_any(qenc)
-                    qok = bool(
-                        (qframes[0, :, :, :3] == qv).all()
-                        and qframes.shape[1:3] == (8, w)
-                    )
-                    q = (qok, int(qframes[0, 0, 0, 0]))
-                except Exception:
-                    q = (False, 0)
-                v12 = 1048 + 2 * (int(did) % 1000)
-                exp12 = v12 >> 4
-                enc12 = enc_memo(
-                    ("p12", w, v12),
-                    lambda: encode_jpeg_gray(
-                        np.full((8, w), v12, np.uint16), precision=12
-                    ),
-                )
-                try:
-                    f12, _ = decode_any(enc12)
-                    ok12 = bool(
-                        (f12[0, :, :, :3] == exp12).all()
-                        and f12.shape[1:3] == (8, w)
-                    )
-                    p12 = (ok12, int(f12[0, 0, 0, 0]))
-                except Exception:
-                    p12 = (False, 0)
-                rows.append(g + c + p + q + p12)
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "width", "ok", "val", "cok", "cval", "pok", "pval",
-                    "qok", "qval", "ok12", "v12",
-                ],
+    def roundtrip(did):
+        w = 8 * (1 + did % 2)
+        v = 68 + 2 * (did % 60)
+        enc = enc_memo(
+            ("g", w, v),
+            lambda: encode_jpeg_gray(np.full((8, w), v, np.uint8)),
+        )
+        try:
+            frames, meta = decode_any(enc)
+            # frames are (1, h, w, 4) BGRA with gray replicated
+            g = (meta["width"], True, int(frames[0, 0, 0, 0]))
+        except Exception:
+            g = (w, False, 0)
+        cv = 78 + 2 * (did % 50)
+        ss = subsamplings[did % 3]
+        cenc = enc_memo(
+            ("c", w, cv, ss),
+            lambda: encode_jpeg_color(
+                np.full((8, w, 3), cv, np.uint8), ss
+            ),
+        )
+        try:
+            cframes, _ = decode_any(cenc)
+            # neutral chroma: B == G == R == cv exactly
+            ok = bool(
+                (cframes[0, :, :, :3] == cv).all()
+                and cframes.shape[1:3] == (8, w)
             )
+            c = (ok, int(cframes[0, 0, 0, 0]))
+        except Exception:
+            c = (False, 0)
+        penc = enc_memo(
+            ("p", w, v),
+            lambda: encode_jpeg_progressive(
+                np.full((8, w), v, np.uint8)
+            ),
+        )
+        try:
+            pframes, _ = decode_any(penc)
+            pok = bool(
+                (pframes[0, :, :, :3] == v).all()
+                and pframes.shape[1:3] == (8, w)
+            )
+            p = (pok, int(pframes[0, 0, 0, 0]))
+        except Exception:
+            p = (False, 0)
+        qv = 32 + 32 * (did % 7)
+        qenc = enc_memo(
+            ("q", w, qv),
+            lambda: encode_jpeg_gray(
+                np.full((8, w), qv, np.uint8), qtable=_Q256
+            ),
+        )
+        try:
+            qframes, _ = decode_any(qenc)
+            qok = bool(
+                (qframes[0, :, :, :3] == qv).all()
+                and qframes.shape[1:3] == (8, w)
+            )
+            q = (qok, int(qframes[0, 0, 0, 0]))
+        except Exception:
+            q = (False, 0)
+        v12 = 1048 + 2 * (did % 1000)
+        exp12 = v12 >> 4
+        enc12 = enc_memo(
+            ("p12", w, v12),
+            lambda: encode_jpeg_gray(
+                np.full((8, w), v12, np.uint16), precision=12
+            ),
+        )
+        try:
+            f12, _ = decode_any(enc12)
+            ok12 = bool(
+                (f12[0, :, :, :3] == exp12).all()
+                and f12.shape[1:3] == (8, w)
+            )
+            p12 = (ok12, int(f12[0, 0, 0, 0]))
+        except Exception:
+            p12 = (False, 0)
+        return g + c + p + q + p12
 
-    decoded = docs.mapInPandas(
-        roundtrip,
+    decoded = _fixture_rows(
+        docs, roundtrip,
         "width int, ok boolean, val int, cok boolean, cval int,"
         " pok boolean, pval int, qok boolean, qval int,"
         " ok12 boolean, v12 int",
@@ -957,7 +909,6 @@ GROUP BY 1
 )
 def wav_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     from ..functions.multimodal import encode_wav, extract_audio_features
     from ..operators.aggregates import dround
@@ -965,17 +916,13 @@ def wav_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                r = 1 + int(did) % 3
-                # 40 alternating runs of length r, amplitude +/-0.25
-                wave = np.repeat(np.tile([0.25, -0.25], 20), r)
-                rows.append((f"doc-{did}.wav", "audio", encode_wav(wave, 8000)))
-            yield pd.DataFrame(rows, columns=["path", "media_type", "content"])
+    def make(did):
+        r = 1 + did % 3
+        # 40 alternating runs of length r, amplitude +/-0.25
+        wave = np.repeat(np.tile([0.25, -0.25], 20), r)
+        return f"doc-{did}.wav", "audio", encode_wav(wave, 8000)
 
-    media = docs.mapInPandas(make, "path string, media_type string, content binary")
+    media = _fixture_rows(docs, make, "path string, media_type string, content binary")
     feats = extract_audio_features(media)
     # run_len recovered from the DECODED duration (duration*200 = r within
     # 1 ulp), so even the group key proves the codec round-trip
@@ -1146,62 +1093,53 @@ GROUP BY 1
 )
 def avi_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     from ..functions.avi import encode_avi
     from ..functions.jpeg import encode_jpeg_gray
     from ..functions.multimodal import decode_any
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def roundtrip(batches):
-        # fixture-encode memo: only 120 distinct (value, width) frames
-        # exist corpus-wide — cache the pure-Python JPEG encodes so the
-        # per-doc work the gate measures is container walk + real DECODE
-        jpg_memo: dict = {}
+    # fixture-encode memo: only 120 distinct (value, width) frames
+    # exist corpus-wide — cache the pure-Python JPEG encodes so the
+    # per-doc work the gate measures is container walk + real DECODE
+    jpg_memo: dict = {}
 
-        def frame(v, w):
-            key = (v, w)
-            if key not in jpg_memo:
-                jpg_memo[key] = encode_jpeg_gray(np.full((8, w), v, np.uint8))
-            return jpg_memo[key]
+    def frame(v, w):
+        key = (v, w)
+        if key not in jpg_memo:
+            jpg_memo[key] = encode_jpeg_gray(np.full((8, w), v, np.uint8))
+        return jpg_memo[key]
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w = 8 * (1 + did % 2)
-                vals = [68 + 2 * ((did + f) % 60) for f in range(3)]
-                rate = 10 + did % 20
-                try:
-                    avi = encode_avi(
-                        [frame(v, w) for v in vals],
-                        w, 8, rate=rate, scale=1,
-                    )
-                    frames, meta = decode_any(avi)
-                    ok = bool(
-                        frames.shape == (3, 8, w, 4)
-                        and meta["rate"] == rate
-                        and meta["scale"] == 1
-                        and all(
-                            (frames[f, :, :, :3] == v).all()
-                            and (frames[f, :, :, 3] == 255).all()
-                            for f, v in enumerate(vals)
-                        )
-                    )
-                    v0 = int(frames[0, 0, 0, 0])
-                    v1 = int(frames[1, 0, 0, 0])
-                    r = int(meta["rate"])
-                except Exception:
-                    ok, v0, v1, r = False, 0, 0, 0
-                rows.append((w, ok, v0, v1, r))
-            yield pd.DataFrame(
-                rows, columns=["width", "ok", "v0", "v1", "rate"]
+    def roundtrip(did):
+        w = 8 * (1 + did % 2)
+        vals = [68 + 2 * ((did + f) % 60) for f in range(3)]
+        rate = 10 + did % 20
+        try:
+            avi = encode_avi(
+                [frame(v, w) for v in vals],
+                w, 8, rate=rate, scale=1,
             )
+            frames, meta = decode_any(avi)
+            ok = bool(
+                frames.shape == (3, 8, w, 4)
+                and meta["rate"] == rate
+                and meta["scale"] == 1
+                and all(
+                    (frames[f, :, :, :3] == v).all()
+                    and (frames[f, :, :, 3] == 255).all()
+                    for f, v in enumerate(vals)
+                )
+            )
+            v0 = int(frames[0, 0, 0, 0])
+            v1 = int(frames[1, 0, 0, 0])
+            r = int(meta["rate"])
+        except Exception:
+            ok, v0, v1, r = False, 0, 0, 0
+        return w, ok, v0, v1, r
 
-    decoded = docs.mapInPandas(
-        roundtrip, "width int, ok boolean, v0 long, v1 long, rate long"
+    decoded = _fixture_rows(
+        docs, roundtrip, "width int, ok boolean, v0 long, v1 long, rate long"
     )
     return decoded.groupBy(F.col("width").cast("long").alias("width")).agg(
         F.count(F.lit(1)).alias("n_avis"),
@@ -1240,7 +1178,6 @@ GROUP BY 1
 )
 def ico_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     from ..functions.multimodal import (
         _ico_dib,
@@ -1257,49 +1194,44 @@ def ico_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoy[..., 3] = 255
     decoy_dib = _ico_dib(decoy)
 
-    def roundtrip(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 3 + did % 9, 2 + did % 7
-                ys, xs = np.mgrid[0:h, 0:w]
-                frame = np.empty((h, w, 4), np.uint8)
-                frame[..., 0] = (did + xs) % 256
-                frame[..., 1] = (did + ys) % 256
-                frame[..., 2] = (did + 2 * xs + 3 * ys) % 256
-                try:
-                    if did % 2:  # PNG entry with real per-pixel alpha
-                        frame[..., 3] = (did % 200 + 55 + xs + ys) % 256
-                        payload = encode_png(frame)
-                        exp = frame
-                    else:  # legacy zero-alpha DIB + AND mask transparency
-                        frame[..., 3] = 0
-                        mask = ((xs + ys + did) % 2).astype(np.uint8)
-                        payload = _ico_dib(frame, mask)
-                        exp = frame.copy()
-                        exp[..., 3] = np.where(mask == 1, 0, 255)
-                    ico = encode_ico(
-                        [(decoy_dib, (2, 2)), (payload, (w, h))]
-                    )
-                    d, meta = decode_any(ico)
-                    ok = bool(
-                        meta["width"] == w
-                        and meta["height"] == h
-                        and np.array_equal(d[0], exp)
-                    )
-                    val = int(d[0, 0, 0, 2])
-                    # PNG docs: per-pixel alpha at (0,0) = did%200+55;
-                    # DIB docs: pixel (0,1) is AND-masked (mask = (1+did)%2
-                    # = 1 for even did) -> alpha 0
-                    alpha = int(d[0, 0, 0 if did % 2 else 1, 3])
-                except Exception:
-                    ok, val, alpha = False, 0, -1
-                rows.append((w, ok, val, alpha))
-            yield pd.DataFrame(rows, columns=["width", "ok", "val", "alpha"])
+    def roundtrip(did):
+        w, h = 3 + did % 9, 2 + did % 7
+        ys, xs = np.mgrid[0:h, 0:w]
+        frame = np.empty((h, w, 4), np.uint8)
+        frame[..., 0] = (did + xs) % 256
+        frame[..., 1] = (did + ys) % 256
+        frame[..., 2] = (did + 2 * xs + 3 * ys) % 256
+        try:
+            if did % 2:  # PNG entry with real per-pixel alpha
+                frame[..., 3] = (did % 200 + 55 + xs + ys) % 256
+                payload = encode_png(frame)
+                exp = frame
+            else:  # legacy zero-alpha DIB + AND mask transparency
+                frame[..., 3] = 0
+                mask = ((xs + ys + did) % 2).astype(np.uint8)
+                payload = _ico_dib(frame, mask)
+                exp = frame.copy()
+                exp[..., 3] = np.where(mask == 1, 0, 255)
+            ico = encode_ico(
+                [(decoy_dib, (2, 2)), (payload, (w, h))]
+            )
+            d, meta = decode_any(ico)
+            ok = bool(
+                meta["width"] == w
+                and meta["height"] == h
+                and np.array_equal(d[0], exp)
+            )
+            val = int(d[0, 0, 0, 2])
+            # PNG docs: per-pixel alpha at (0,0) = did%200+55;
+            # DIB docs: pixel (0,1) is AND-masked (mask = (1+did)%2
+            # = 1 for even did) -> alpha 0
+            alpha = int(d[0, 0, 0 if did % 2 else 1, 3])
+        except Exception:
+            ok, val, alpha = False, 0, -1
+        return w, ok, val, alpha
 
-    decoded = docs.mapInPandas(
-        roundtrip, "width int, ok boolean, val long, alpha long"
+    decoded = _fixture_rows(
+        docs, roundtrip, "width int, ok boolean, val long, alpha long"
     )
     return decoded.groupBy(F.col("width").cast("long").alias("width")).agg(
         F.count(F.lit(1)).alias("n_icons"),
@@ -1350,33 +1282,20 @@ def media_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def build(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                w, h = 3 + did % 9, 2 + did % 7
-                ys, xs = np.mgrid[0:h, 0:w]
-                frame = np.empty((h, w, 4), np.uint8)
-                frame[..., 0] = (did + xs) % 256
-                frame[..., 1] = (did + ys) % 256
-                frame[..., 2] = (did + 2 * xs + 3 * ys) % 256
-                frame[..., 3] = 255
-                decoded, _ = decode_any(encode_bmp(frame, 24))
-                rows.append(
-                    (f"doc-{did}.bmp", "image", w, h, 4, 1,
-                     encode_rawm(decoded))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "path", "media_type", "width", "height", "channels",
-                    "n_frames", "content",
-                ],
-            )
+    def build(did):
+        w, h = 3 + did % 9, 2 + did % 7
+        ys, xs = np.mgrid[0:h, 0:w]
+        frame = np.empty((h, w, 4), np.uint8)
+        frame[..., 0] = (did + xs) % 256
+        frame[..., 1] = (did + ys) % 256
+        frame[..., 2] = (did + 2 * xs + 3 * ys) % 256
+        frame[..., 3] = 255
+        decoded, _ = decode_any(encode_bmp(frame, 24))
+        return (f"doc-{did}.bmp", "image", w, h, 4, 1,
+                encode_rawm(decoded))
 
-    media = docs.mapInPandas(
-        build,
+    media = _fixture_rows(
+        docs, build,
         "path string, media_type string, width int, height int,"
         " channels int, n_frames int, content binary",
     )
@@ -1460,40 +1379,26 @@ def video_frame_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         encode_rawm,
         sample_frames,
     )
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def build(batches):
-        jpg_memo: dict = {}
+    jpg_memo: dict = {}
 
-        def frame(v):
-            if v not in jpg_memo:
-                jpg_memo[v] = encode_jpeg_gray(np.full((8, 8), v, np.uint8))
-            return jpg_memo[v]
+    def frame(v):
+        if v not in jpg_memo:
+            jpg_memo[v] = encode_jpeg_gray(np.full((8, 8), v, np.uint8))
+        return jpg_memo[v]
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                vals = [68 + 2 * ((did + f) % 60) for f in range(5)]
-                rate = 10 + did % 20
-                avi = encode_avi([frame(v) for v in vals], 8, 8, rate=rate)
-                decoded, meta = decode_any(avi)
-                rows.append(
-                    (f"doc-{did}.avi", "video", 8, 8, 4, meta["n_frames"],
-                     encode_rawm(decoded))
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "path", "media_type", "width", "height", "channels",
-                    "n_frames", "content",
-                ],
-            )
+    def build(did):
+        vals = [68 + 2 * ((did + f) % 60) for f in range(5)]
+        rate = 10 + did % 20
+        avi = encode_avi([frame(v) for v in vals], 8, 8, rate=rate)
+        decoded, meta = decode_any(avi)
+        return (f"doc-{did}.avi", "video", 8, 8, 4, meta["n_frames"],
+                encode_rawm(decoded))
 
-    media = docs.mapInPandas(
-        build,
+    media = _fixture_rows(
+        docs, build,
         "path string, media_type string, width int, height int,"
         " channels int, n_frames int, content binary",
     )
@@ -1566,7 +1471,6 @@ GROUP BY 1
 )
 def jpeg_exif_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     from ..functions.exif import build_exif_app1, insert_exif, parse_exif
     from ..functions.jpeg import encode_jpeg_gray
@@ -1577,44 +1481,36 @@ def jpeg_exif_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         (np.arange(256).reshape(16, 16) % 256).astype(np.uint8)
     )
 
-    def roundtrip(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                fields = {
-                    "make": f"GraftCam-{did % 4}",
-                    "orientation": 1 + did % 8,
-                    "datetime": f"2026:08:{1 + did % 28:02d} "
-                    f"{did % 24:02d}:00:00",
-                    "exposure_time": (1, 1 + did % 1000),
-                    "iso": 100 * (1 + did % 32),
-                    "gps_latitude_ref": "N" if did % 2 else "S",
-                    "gps_latitude": [
-                        (did % 90, 1), (did % 60, 1), (did % 60, 2),
-                    ],
-                }
-                try:
-                    got = parse_exif(
-                        insert_exif(
-                            base,
-                            build_exif_app1(fields, big_endian=bool(did % 2)),
-                        )
-                    )
-                    ok = got == fields
-                    iso = int(got.get("iso", 0))
-                    exp_den = int(got.get("exposure_time", (0, 0))[1])
-                    gps_deg = int(got.get("gps_latitude", [(0, 0)])[0][0])
-                except Exception:
-                    ok, iso, exp_den, gps_deg = False, 0, 0, 0
-                rows.append((1 + did % 8, ok, iso, exp_den, gps_deg))
-            yield pd.DataFrame(
-                rows,
-                columns=["orientation", "ok", "iso", "exp_den", "gps_deg"],
+    def roundtrip(did):
+        fields = {
+            "make": f"GraftCam-{did % 4}",
+            "orientation": 1 + did % 8,
+            "datetime": f"2026:08:{1 + did % 28:02d} "
+            f"{did % 24:02d}:00:00",
+            "exposure_time": (1, 1 + did % 1000),
+            "iso": 100 * (1 + did % 32),
+            "gps_latitude_ref": "N" if did % 2 else "S",
+            "gps_latitude": [
+                (did % 90, 1), (did % 60, 1), (did % 60, 2),
+            ],
+        }
+        try:
+            got = parse_exif(
+                insert_exif(
+                    base,
+                    build_exif_app1(fields, big_endian=bool(did % 2)),
+                )
             )
+            ok = got == fields
+            iso = int(got.get("iso", 0))
+            exp_den = int(got.get("exposure_time", (0, 0))[1])
+            gps_deg = int(got.get("gps_latitude", [(0, 0)])[0][0])
+        except Exception:
+            ok, iso, exp_den, gps_deg = False, 0, 0, 0
+        return 1 + did % 8, ok, iso, exp_den, gps_deg
 
-    decoded = docs.mapInPandas(
-        roundtrip,
+    decoded = _fixture_rows(
+        docs, roundtrip,
         "orientation int, ok boolean, iso long, exp_den long, gps_deg long",
     )
     return decoded.groupBy(
@@ -1703,41 +1599,34 @@ def image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
     import numpy as np
-    import pandas as pd
 
     from ..functions.multimodal import encode_bmp
     from ..operators.imagehash import image_hashes
     from ..operators.imagehash import image_phash_pairs as phash_pairs
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                group, variant = did // 3, did % 3
-                n = 32 * 32 * 3
-                buf = np.frombuffer(
-                    b"".join(
-                        hashlib.md5(f"{group}-{i}".encode()).digest()
-                        for i in range(n // 16 + 1)
-                    )[:n],
-                    np.uint8,
-                )
-                frame = np.empty((32, 32, 4), np.uint8)
-                frame[:, :, :3] = 20 + (buf.reshape(32, 32, 3) % 196)
-                frame[:, :, 3] = 255
-                if variant == 1:  # brightness shift, clip-free (max 239)
-                    frame = frame.copy()
-                    frame[:, :, :3] += np.uint8(5 + group % 20)
-                elif variant == 2:  # 2x pixel-replication upscale
-                    frame = np.repeat(np.repeat(frame, 2, 0), 2, 1)
-                rows.append((did, encode_bmp(frame, 24)))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def make(did):
+        group, variant = did // 3, did % 3
+        n = 32 * 32 * 3
+        buf = np.frombuffer(
+            b"".join(
+                hashlib.md5(f"{group}-{i}".encode()).digest()
+                for i in range(n // 16 + 1)
+            )[:n],
+            np.uint8,
+        )
+        frame = np.empty((32, 32, 4), np.uint8)
+        frame[:, :, :3] = 20 + (buf.reshape(32, 32, 3) % 196)
+        frame[:, :, 3] = 255
+        if variant == 1:  # brightness shift, clip-free (max 239)
+            frame = frame.copy()
+            frame[:, :, :3] += np.uint8(5 + group % 20)
+        elif variant == 2:  # 2x pixel-replication upscale
+            frame = np.repeat(np.repeat(frame, 2, 0), 2, 1)
+        return did, encode_bmp(frame, 24)
 
-    media = docs.mapInPandas(make, "doc_id long, content binary")
+    media = _fixture_rows(docs, make, "doc_id long, content binary")
     hashes = image_hashes(media)
     return phash_pairs(hashes, radius=2, bands=3).select(
         "doc_a", "doc_b", F.col("hamming").cast("long").alias("hamming")
@@ -1775,39 +1664,33 @@ def audio_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
     import numpy as np
-    import pandas as pd
 
     from ..functions.multimodal import encode_wav
     from ..operators.imagehash import audio_hashes
     from ..operators.imagehash import audio_phash_pairs as aphash_pairs
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        n = 2048
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                group, variant = did // 3, did % 3
-                buf = b"".join(
-                    hashlib.md5(f"a{group}-{i}".encode()).digest()
-                    for i in range(n * 2 // 16 + 1)
-                )[: n * 2]
-                k = np.clip(
-                    np.frombuffer(buf, "<i2").astype(np.int64), -8191, 8191
-                )
-                if variant == 1:  # 2x gain + duplicated channel
-                    sig = np.stack([2 * k, 2 * k], axis=1)
-                elif variant == 2:  # 2x sample-duplication upsample
-                    sig = np.repeat(k, 2)
-                else:
-                    sig = k
-                rows.append((did, encode_wav(sig / 32767.0)))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    n = 2048
 
-    media = docs.mapInPandas(make, "doc_id long, content binary")
+    def make(did):
+        group, variant = did // 3, did % 3
+        buf = b"".join(
+            hashlib.md5(f"a{group}-{i}".encode()).digest()
+            for i in range(n * 2 // 16 + 1)
+        )[: n * 2]
+        k = np.clip(
+            np.frombuffer(buf, "<i2").astype(np.int64), -8191, 8191
+        )
+        if variant == 1:  # 2x gain + duplicated channel
+            sig = np.stack([2 * k, 2 * k], axis=1)
+        elif variant == 2:  # 2x sample-duplication upsample
+            sig = np.repeat(k, 2)
+        else:
+            sig = k
+        return did, encode_wav(sig / 32767.0)
+
+    media = _fixture_rows(docs, make, "doc_id long, content binary")
     hashes = audio_hashes(media)
     return aphash_pairs(hashes, radius=2, bands=3).select(
         "doc_a", "doc_b", F.col("hamming").cast("long").alias("hamming")
@@ -1845,55 +1728,48 @@ def video_phash_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
     import numpy as np
-    import pandas as pd
 
     from ..functions.multimodal import encode_rawm
     from ..operators.imagehash import video_dup_pairs, video_hashes
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        # one md5 seed + a vectorized PCG64 stream per frame (not an md5
-        # chain per 16 bytes), and the base clip memoized per group: the
-        # three variants of a group usually land in the same batch
-        base_memo: dict = {}
+    # one md5 seed + a vectorized PCG64 stream per frame (not an md5
+    # chain per 16 bytes), and the base clip memoized per group: the
+    # three variants of a group usually land in the same batch
+    base_memo: dict = {}
 
-        def base_clip(group: int) -> np.ndarray:
-            if group not in base_memo:
-                frames = []
-                for i in range(4):
-                    seed = int.from_bytes(
-                        hashlib.md5(f"v{group}-{i}".encode()).digest()[:8],
-                        "big",
-                    )
-                    rng = np.random.default_rng(seed)
-                    f = np.empty((32, 32, 4), np.uint8)
-                    f[:, :, :3] = 20 + rng.integers(
-                        0, 196, (32, 32, 3), dtype=np.uint8
-                    )
-                    f[:, :, 3] = 255
-                    frames.append(f)
-                if len(base_memo) > 4096:
-                    base_memo.clear()  # bound executor memory
-                base_memo[group] = np.stack(frames)
-            return base_memo[group]
+    def base_clip(group: int) -> np.ndarray:
+        if group not in base_memo:
+            frames = []
+            for i in range(4):
+                seed = int.from_bytes(
+                    hashlib.md5(f"v{group}-{i}".encode()).digest()[:8],
+                    "big",
+                )
+                rng = np.random.default_rng(seed)
+                f = np.empty((32, 32, 4), np.uint8)
+                f[:, :, :3] = 20 + rng.integers(
+                    0, 196, (32, 32, 3), dtype=np.uint8
+                )
+                f[:, :, 3] = 255
+                frames.append(f)
+            if len(base_memo) > 4096:
+                base_memo.clear()  # bound executor memory
+            base_memo[group] = np.stack(frames)
+        return base_memo[group]
 
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                group, variant = did // 3, did % 3
-                clip = base_clip(group)
-                if variant == 1:  # global brightness shift, clip-free
-                    clip = clip.copy()
-                    clip[:, :, :, :3] += np.uint8(5 + group % 20)
-                elif variant == 2:  # frame-rate double (dup every frame)
-                    clip = np.repeat(clip, 2, axis=0)
-                rows.append((did, encode_rawm(clip)))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def make(did):
+        group, variant = did // 3, did % 3
+        clip = base_clip(group)
+        if variant == 1:  # global brightness shift, clip-free
+            clip = clip.copy()
+            clip[:, :, :, :3] += np.uint8(5 + group % 20)
+        elif variant == 2:  # frame-rate double (dup every frame)
+            clip = np.repeat(clip, 2, axis=0)
+        return did, encode_rawm(clip)
 
-    media = docs.mapInPandas(make, "doc_id long, content binary")
+    media = _fixture_rows(docs, make, "doc_id long, content binary")
     return video_dup_pairs(video_hashes(media)).select(
         F.col("doc_a").cast("long"), F.col("doc_b").cast("long")
     )
@@ -1937,12 +1813,10 @@ def incremental_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import hashlib
 
     import numpy as np
-    import pandas as pd
 
     from ..functions.multimodal import encode_bmp
     from ..operators.imagehash import image_hashes
     from ..operators.imagehash import incremental_image_dedup as incr
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
@@ -1960,25 +1834,20 @@ def incremental_image_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         f[:, :, 3] = 255
         return f
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                group, variant = did // 3, did % 3
-                if variant == 2 and group % 5 == 0:
-                    frame = frame_from(f"novel-{did}")  # fresh content
-                else:
-                    frame = frame_from(str(group))
-                    if variant == 1:
-                        frame = frame.copy()
-                        frame[:, :, :3] += np.uint8(5 + group % 20)
-                    elif variant == 2:
-                        frame = np.repeat(np.repeat(frame, 2, 0), 2, 1)
-                rows.append((did, encode_bmp(frame, 24)))
-            yield pd.DataFrame(rows, columns=["doc_id", "content"])
+    def make(did):
+        group, variant = did // 3, did % 3
+        if variant == 2 and group % 5 == 0:
+            frame = frame_from(f"novel-{did}")  # fresh content
+        else:
+            frame = frame_from(str(group))
+            if variant == 1:
+                frame = frame.copy()
+                frame[:, :, :3] += np.uint8(5 + group % 20)
+            elif variant == 2:
+                frame = np.repeat(np.repeat(frame, 2, 0), 2, 1)
+        return did, encode_bmp(frame, 24)
 
-    media = docs.mapInPandas(make, "doc_id long, content binary")
+    media = _fixture_rows(docs, make, "doc_id long, content binary")
     # delta membership is a pure doc_id predicate — no join back to the
     # fixture subtree; the hash table is checkpointed ONCE (lazy) because
     # both the corpus and delta filters consume it (without this the
@@ -2033,48 +1902,41 @@ FROM documents
     "member iteration and HTTP status split arithmetically.",
 )
 def warc_crawl_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.warc import build_warc
     from ..sources import warc_records
     from ..tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                status = 200 + (did % 2) * 104
-                body = b"x" * (10 + did % 50)
-                recs = [
-                    (
-                        {"WARC-Type": "warcinfo", "WARC-Record-ID": f"<urn:uuid:{did}>"},
-                        b"software: graft\r\n",
-                    ),
-                    (
-                        {
-                            "WARC-Type": "request",
-                            "WARC-Target-URI": f"http://crawl.test/{did}",
-                            "Content-Type": "application/http;msgtype=request",
-                        },
-                        f"GET /{did} HTTP/1.1\r\nHost: crawl.test\r\n\r\n".encode(),
-                    ),
-                    (
-                        {
-                            "WARC-Type": "response",
-                            "WARC-Target-URI": f"http://crawl.test/{did}",
-                            "Content-Type": "application/http;msgtype=response",
-                        },
-                        f"HTTP/1.1 {status} OK\r\nContent-Type: text/plain\r\n\r\n".encode()
-                        + body,
-                    ),
-                ]
-                rows.append((did, build_warc(recs, gzip_members=bool(did % 2))))
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        status = 200 + (did % 2) * 104
+        body = b"x" * (10 + did % 50)
+        recs = [
+            (
+                {"WARC-Type": "warcinfo", "WARC-Record-ID": f"<urn:uuid:{did}>"},
+                b"software: graft\r\n",
+            ),
+            (
+                {
+                    "WARC-Type": "request",
+                    "WARC-Target-URI": f"http://crawl.test/{did}",
+                    "Content-Type": "application/http;msgtype=request",
+                },
+                f"GET /{did} HTTP/1.1\r\nHost: crawl.test\r\n\r\n".encode(),
+            ),
+            (
+                {
+                    "WARC-Type": "response",
+                    "WARC-Target-URI": f"http://crawl.test/{did}",
+                    "Content-Type": "application/http;msgtype=response",
+                },
+                f"HTTP/1.1 {status} OK\r\nContent-Type: text/plain\r\n\r\n".encode()
+                + body,
+            ),
+        ]
+        return did, build_warc(recs, gzip_members=bool(did % 2))
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     recs = warc_records(media)
     return (
         recs.filter("parse_ok")
@@ -2121,50 +1983,44 @@ GROUP BY 1
 )
 def ms_adpcm_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
-    import pandas as pd
 
     from ..functions.multimodal import decode_wav, encode_wav_ms_adpcm
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def roundtrip(batches):
-        # fixture-encode memo (the jpeg_decode_stats discipline): the WAV
-        # bytes depend on doc_id only through ((did*7)%256, did%4) — 1024
-        # distinct files vs a per-row per-nibble Python encode loop. The
-        # gated DECODE still runs per row.
-        memo: dict = {}
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                s0 = (did * 7) % 256 * 40 - 5000
-                slope = 1 + did % 4
-                sig = (s0 + slope * np.arange(80)).astype(np.int64)
-                try:
-                    key = (s0, slope)
-                    if key not in memo:
-                        memo[key] = encode_wav_ms_adpcm(
-                            sig[:, None], block_frames=32
-                        )
-                    dec, meta = decode_wav(memo[key])
-                    got = np.round(dec[:, 0] * 32768.0).astype(np.int64)
-                    ok = bool(
-                        meta["n_samples"] == 80
-                        and got[0] == sig[0]
-                        and got[1] == sig[1]
-                        and got[32] == sig[32]
-                        and got[33] == sig[33]
-                        and np.abs(got - sig).max() <= 160
-                    )
-                    v1, v2 = int(got[0]), int(got[32])
-                except Exception:
-                    ok, v1, v2 = False, 0, 0
-                rows.append((slope, ok, v1, v2))
-            yield pd.DataFrame(rows, columns=["slope", "ok", "v1", "v2"])
+    # fixture-encode memo (the jpeg_decode_stats discipline): the WAV
+    # bytes depend on doc_id only through ((did*7)%256, did%4) — 1024
+    # distinct files vs a per-row per-nibble Python encode loop. The
+    # gated DECODE still runs per row.
+    memo: dict = {}
 
-    decoded = docs.mapInPandas(
-        roundtrip, "slope int, ok boolean, v1 int, v2 int"
+    def roundtrip(did):
+        s0 = (did * 7) % 256 * 40 - 5000
+        slope = 1 + did % 4
+        sig = (s0 + slope * np.arange(80)).astype(np.int64)
+        try:
+            key = (s0, slope)
+            if key not in memo:
+                memo[key] = encode_wav_ms_adpcm(
+                    sig[:, None], block_frames=32
+                )
+            dec, meta = decode_wav(memo[key])
+            got = np.round(dec[:, 0] * 32768.0).astype(np.int64)
+            ok = bool(
+                meta["n_samples"] == 80
+                and got[0] == sig[0]
+                and got[1] == sig[1]
+                and got[32] == sig[32]
+                and got[33] == sig[33]
+                and np.abs(got - sig).max() <= 160
+            )
+            v1, v2 = int(got[0]), int(got[32])
+        except Exception:
+            ok, v1, v2 = False, 0, 0
+        return slope, ok, v1, v2
+
+    decoded = _fixture_rows(
+        docs, roundtrip, "slope int, ok boolean, v1 int, v2 int"
     )
     return decoded.groupBy(F.col("slope").cast("long").alias("slope")).agg(
         F.count(F.lit(1)).alias("n_wavs"),
@@ -2216,39 +2072,31 @@ def zip_archive_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import io
     import zipfile
 
-    import pandas as pd
-
     from ..sources import zip_members
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                buf = io.BytesIO()
-                with zipfile.ZipFile(buf, "w") as zf:
-                    zf.writestr(
-                        "doc.txt",
-                        bytes([65 + did % 26]) * (100 + did % 400),
-                        zipfile.ZIP_DEFLATED,
-                    )
-                    zf.writestr(
-                        "meta.json",
-                        b"{" + b" " * (18 + did % 10) + b"}",
-                        zipfile.ZIP_STORED,
-                    )
-                    if did % 3 == 0:
-                        # ZIP64 member layout even at tiny sizes:
-                        # zip64 extra field + 8-byte data descriptor
-                        with zf.open("big.bin", "w", force_zip64=True) as m:
-                            m.write(bytes([66 + did % 26]) * (50 + did % 50))
-                rows.append((did, buf.getvalue()))
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        buf = io.BytesIO()
+        with zipfile.ZipFile(buf, "w") as zf:
+            zf.writestr(
+                "doc.txt",
+                bytes([65 + did % 26]) * (100 + did % 400),
+                zipfile.ZIP_DEFLATED,
+            )
+            zf.writestr(
+                "meta.json",
+                b"{" + b" " * (18 + did % 10) + b"}",
+                zipfile.ZIP_STORED,
+            )
+            if did % 3 == 0:
+                # ZIP64 member layout even at tiny sizes:
+                # zip64 extra field + 8-byte data descriptor
+                with zf.open("big.bin", "w", force_zip64=True) as m:
+                    m.write(bytes([66 + did % 26]) * (50 + did % 50))
+        return did, buf.getvalue()
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     return (
         zip_members(media)
         .filter("parse_ok")
@@ -2327,25 +2175,13 @@ FROM t GROUP BY 1
     "Python hop; every stat is a JVM expression over the struct.",
 )
 def html_text_extract_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..operators.crawl import html_extract
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "html": [
-                        _fixture_html(int(d), int(d)) for d in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    media = docs.mapInPandas(make, "doc_id long, html string")
+    media = _fixture_rows(
+        docs, lambda did: (did, _fixture_html(did, did)), "doc_id long, html string"
+    )
     pages = html_extract(media, html_col="html")
     return (
         pages.select(
@@ -2396,8 +2232,6 @@ GROUP BY 1
     "sums / distinct paths are closed-form in doc_id.",
 )
 def warc_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.warc import build_warc
     from ..operators.crawl import (
         filter_blocked_hosts,
@@ -2409,30 +2243,25 @@ def warc_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                body = b"x" * (10 + did % 50)
-                recs = [
-                    (
-                        {
-                            "WARC-Type": "response",
-                            "WARC-Target-URI": (
-                                f"http://s{did % 7}.example/p/{did}"
-                                f"?ref={did % 3}"
-                            ),
-                            "Content-Type": "application/http;msgtype=response",
-                        },
-                        b"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n\r\n"
-                        + body,
-                    )
-                ]
-                rows.append((did, build_warc(recs, gzip_members=bool(did % 2))))
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        body = b"x" * (10 + did % 50)
+        recs = [
+            (
+                {
+                    "WARC-Type": "response",
+                    "WARC-Target-URI": (
+                        f"http://s{did % 7}.example/p/{did}"
+                        f"?ref={did % 3}"
+                    ),
+                    "Content-Type": "application/http;msgtype=response",
+                },
+                b"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n\r\n"
+                + body,
+            )
+        ]
+        return did, build_warc(recs, gzip_members=bool(did % 2))
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     recs = warc_records(media).filter("parse_ok AND warc_type = 'response'")
     pages = with_url_parts(recs).withColumn(
         "ref", url_query_param("target_uri", "ref").cast("long")
@@ -2471,37 +2300,29 @@ SELECT (SELECT COUNT(*) FROM t) AS n_pages,
     "closed-form in g; archives alternate plain/.warc.gz framing.",
 )
 def crawl_text_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.warc import build_warc
     from ..operators.crawl import html_extract
     from ..operators.dedup import exact_dedup
     from ..sources import warc_records
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                html = _fixture_html(did % 64, did).encode()
-                recs = [
-                    (
-                        {
-                            "WARC-Type": "response",
-                            "WARC-Target-URI": f"http://c.example/{did}",
-                            "Content-Type": "application/http;msgtype=response",
-                        },
-                        b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
-                        + html,
-                    )
-                ]
-                rows.append((did, build_warc(recs, gzip_members=bool(did % 2))))
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        html = _fixture_html(did % 64, did).encode()
+        recs = [
+            (
+                {
+                    "WARC-Type": "response",
+                    "WARC-Target-URI": f"http://c.example/{did}",
+                    "Content-Type": "application/http;msgtype=response",
+                },
+                b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
+                + html,
+            )
+        ]
+        return did, build_warc(recs, gzip_members=bool(did % 2))
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     recs = warc_records(media, include_body=True).filter(
         "parse_ok AND warc_type = 'response'"
     )
@@ -2687,36 +2508,28 @@ FROM q GROUP BY 1
     "machinery (no string reconstruction).",
 )
 def crawl_quality_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.warc import build_warc
     from ..operators.crawl import html_extract
     from ..operators.text import predict_lang, quality_score, token_count
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                html = _fixture_html(did, did, stopword=did % 7 != 0).encode()
-                recs = [
-                    (
-                        {
-                            "WARC-Type": "response",
-                            "WARC-Target-URI": f"http://q.example/{did}",
-                            "Content-Type": "application/http;msgtype=response",
-                        },
-                        b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
-                        + html,
-                    )
-                ]
-                rows.append((did, build_warc(recs, gzip_members=bool(did % 2))))
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        html = _fixture_html(did, did, stopword=did % 7 != 0).encode()
+        recs = [
+            (
+                {
+                    "WARC-Type": "response",
+                    "WARC-Target-URI": f"http://q.example/{did}",
+                    "Content-Type": "application/http;msgtype=response",
+                },
+                b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
+                + html,
+            )
+        ]
+        return did, build_warc(recs, gzip_members=bool(did % 2))
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     from ..sources import warc_records
 
     recs = warc_records(media, include_body=True).filter(
@@ -2779,7 +2592,6 @@ FROM t GROUP BY 1
 )
 def robots_crawl_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.crawl import robots_filter
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
     k = F.col("doc_id") % 4
@@ -2839,40 +2651,32 @@ FROM l GROUP BY 1
     "arithmetic in g, so every stage sits under one oracle hash.",
 )
 def crawl_to_wet_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.warc import build_warc
     from ..operators.crawl import html_extract, wet_export
     from ..operators.dedup import exact_dedup
     from ..operators.text import predict_lang
     from ..sources import warc_records
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                html = _fixture_html(
-                    did % 64, did, stopword=did % 7 != 0
-                ).encode()
-                recs = [
-                    (
-                        {
-                            "WARC-Type": "response",
-                            "WARC-Target-URI": f"http://c.example/{did}",
-                            "Content-Type": "application/http;msgtype=response",
-                        },
-                        b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
-                        + html,
-                    )
-                ]
-                rows.append((did, build_warc(recs, gzip_members=bool(did % 2))))
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        html = _fixture_html(
+            did % 64, did, stopword=did % 7 != 0
+        ).encode()
+        recs = [
+            (
+                {
+                    "WARC-Type": "response",
+                    "WARC-Target-URI": f"http://c.example/{did}",
+                    "Content-Type": "application/http;msgtype=response",
+                },
+                b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
+                + html,
+            )
+        ]
+        return did, build_warc(recs, gzip_members=bool(did % 2))
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     recs = warc_records(media, include_body=True).filter(
         "parse_ok AND warc_type = 'response'"
     )
@@ -2938,25 +2742,13 @@ FROM t GROUP BY 1
     "the oracle hash.",
 )
 def html_main_content_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..operators.crawl import html_extract
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "html": [
-                        _fixture_html(int(x), int(x)) for x in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    media = docs.mapInPandas(make, "doc_id long, html string")
+    media = _fixture_rows(
+        docs, lambda did: (did, _fixture_html(did, did)), "doc_id long, html string"
+    )
     pages = html_extract(media, html_col="html")
     return (
         pages.select(
@@ -3004,39 +2796,30 @@ FROM t GROUP BY 1
     "oracle hash.",
 )
 def html_charset_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..operators.crawl import html_extract
     from ..tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                v, k = did % 4, 1 + did % 5
-                body = f"<body><p>caf{'é' * k} ok</p></body>"
-                ctype = "text/html"
-                if v == 0:
-                    raw = body.encode("utf-8")
-                elif v == 1:
-                    raw = body.encode("latin-1")
-                    ctype = "text/html; charset=ISO-8859-1"
-                elif v == 2:
-                    raw = b"\xff\xfe" + body.encode("utf-16-le")
-                else:
-                    raw = (
-                        '<meta charset="iso-8859-1">' + body
-                    ).encode("latin-1")
-                rows.append((did, raw, ctype))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "http_body", "content_type"]
-            )
+    def make(did):
+        v, k = did % 4, 1 + did % 5
+        body = f"<body><p>caf{'é' * k} ok</p></body>"
+        ctype = "text/html"
+        if v == 0:
+            raw = body.encode("utf-8")
+        elif v == 1:
+            raw = body.encode("latin-1")
+            ctype = "text/html; charset=ISO-8859-1"
+        elif v == 2:
+            raw = b"\xff\xfe" + body.encode("utf-16-le")
+        else:
+            raw = (
+                '<meta charset="iso-8859-1">' + body
+            ).encode("latin-1")
+        return did, raw, ctype
 
-    media = docs.mapInPandas(
-        make, "doc_id long, http_body binary, content_type string"
+    media = _fixture_rows(
+        docs, make, "doc_id long, http_body binary, content_type string"
     )
     pages = html_extract(media, content_type_col="content_type")
     t = F.col("page.text")
@@ -3089,8 +2872,6 @@ FROM t
     "layers stay disjoint, lossless and attributable end-to-end.",
 )
 def crawl_health_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.warc import build_warc
     from ..operators.crawl import html_extract
     from ..sources import warc_records
@@ -3098,33 +2879,28 @@ def crawl_health_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                html = f"<p>page of doc {did}</p>".encode()
-                if did % 13 == 0:  # headless HTTP payload: no CRLFCRLF
-                    payload = b"HTTP/1.1 200 OK (no header break)" + html
-                else:
-                    payload = b"HTTP/1.1 200 OK\r\n\r\n" + html
-                recs = [
-                    (
-                        {
-                            "WARC-Type": "response",
-                            "WARC-Target-URI": f"http://h.example/{did}",
-                            "Content-Type": "application/http;msgtype=response",
-                        },
-                        payload,
-                    )
-                ]
-                blob = bytearray(build_warc(recs, gzip_members=True))
-                if did % 11 == 0:
-                    blob[14] ^= 0xFF  # corrupt the gzip member body
-                rows.append((did, bytes(blob)))
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        html = f"<p>page of doc {did}</p>".encode()
+        if did % 13 == 0:  # headless HTTP payload: no CRLFCRLF
+            payload = b"HTTP/1.1 200 OK (no header break)" + html
+        else:
+            payload = b"HTTP/1.1 200 OK\r\n\r\n" + html
+        recs = [
+            (
+                {
+                    "WARC-Type": "response",
+                    "WARC-Target-URI": f"http://h.example/{did}",
+                    "Content-Type": "application/http;msgtype=response",
+                },
+                payload,
+            )
+        ]
+        blob = bytearray(build_warc(recs, gzip_members=True))
+        if did % 11 == 0:
+            blob[14] ^= 0xFF  # corrupt the gzip member body
+        return did, bytes(blob)
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     recs = warc_records(media, include_body=True)
     pages = html_extract(recs)
     return pages.agg(
@@ -3254,25 +3030,13 @@ FROM t GROUP BY 1
     "class); every stat is a JVM expression over the struct.",
 )
 def pdf_text_extract_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..operators.crawl import pdf_extract
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "http_body": [
-                        _fixture_pdf(int(x)) for x in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    media = docs.mapInPandas(make, "doc_id long, http_body binary")
+    media = _fixture_rows(
+        docs, lambda did: (did, _fixture_pdf(did)), "doc_id long, http_body binary"
+    )
     out = pdf_extract(media)
     return (
         out.select(
@@ -3336,35 +3100,25 @@ FROM k GROUP BY 1
     "AND both extractors' outputs under one oracle hash.",
 )
 def doc_extract_dispatch_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..operators.crawl import document_extract
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                r = did % 5
-                if r in (0, 1):
-                    body = _fixture_html(did, did).encode()
-                    ctype = "text/html; charset=utf-8" if r == 0 else None
-                elif r in (2, 3):
-                    body = _fixture_pdf(did)
-                    ctype = "application/pdf" if r == 2 else None
-                else:
-                    body = b"\x00\x01" + str(did).encode()
-                    ctype = None
-                rows.append((did, body, ctype))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "http_body", "content_type"]
-            )
+    def make(did):
+        r = did % 5
+        if r in (0, 1):
+            body = _fixture_html(did, did).encode()
+            ctype = "text/html; charset=utf-8" if r == 0 else None
+        elif r in (2, 3):
+            body = _fixture_pdf(did)
+            ctype = "application/pdf" if r == 2 else None
+        else:
+            body = b"\x00\x01" + str(did).encode()
+            ctype = None
+        return did, body, ctype
 
-    media = docs.mapInPandas(
-        make, "doc_id long, http_body binary, content_type string"
+    media = _fixture_rows(
+        docs, make, "doc_id long, http_body binary, content_type string"
     )
     out = document_extract(media, content_type_col="content_type")
     return out.groupBy(F.col("doc.kind").alias("kind")).agg(
@@ -3428,47 +3182,39 @@ FROM k GROUP BY 1
     "one oracle hash.",
 )
 def mixed_crawl_extract_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.warc import build_warc
     from ..operators.crawl import document_extract
     from ..sources import warc_records
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                r = did % 5
-                if r in (0, 1):
-                    body = _fixture_html(did, did).encode()
-                    ctype = "text/html; charset=utf-8" if r == 0 else None
-                elif r in (2, 3):
-                    body = _fixture_pdf(did)
-                    ctype = "application/pdf" if r == 2 else None
-                else:
-                    body = b"\x00\x01" + str(did).encode()
-                    ctype = "application/octet-stream"
-                head = b"HTTP/1.1 200 OK\r\n"
-                if ctype is not None:
-                    head += b"Content-Type: " + ctype.encode() + b"\r\n"
-                recs = [
-                    (
-                        {
-                            "WARC-Type": "response",
-                            "WARC-Target-URI": f"http://m.example/{did}",
-                            "Content-Type": "application/http;msgtype=response",
-                        },
-                        head + b"\r\n" + body,
-                    )
-                ]
-                rows.append((did, build_warc(recs, gzip_members=bool(did % 2))))
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        r = did % 5
+        if r in (0, 1):
+            body = _fixture_html(did, did).encode()
+            ctype = "text/html; charset=utf-8" if r == 0 else None
+        elif r in (2, 3):
+            body = _fixture_pdf(did)
+            ctype = "application/pdf" if r == 2 else None
+        else:
+            body = b"\x00\x01" + str(did).encode()
+            ctype = "application/octet-stream"
+        head = b"HTTP/1.1 200 OK\r\n"
+        if ctype is not None:
+            head += b"Content-Type: " + ctype.encode() + b"\r\n"
+        recs = [
+            (
+                {
+                    "WARC-Type": "response",
+                    "WARC-Target-URI": f"http://m.example/{did}",
+                    "Content-Type": "application/http;msgtype=response",
+                },
+                head + b"\r\n" + body,
+            )
+        ]
+        return did, build_warc(recs, gzip_members=bool(did % 2))
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     recs = warc_records(media, include_body=True).filter(
         "parse_ok AND warc_type = 'response'"
     )
@@ -3538,12 +3284,9 @@ def http_encoding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import gzip as _gzip
     import zlib as _zlib
 
-    import pandas as pd
-
     from ..functions.warc import build_warc
     from ..operators.crawl import html_extract
     from ..sources import warc_records
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
@@ -3555,47 +3298,42 @@ def http_encoding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         out += b"0\r\n\r\n"
         return bytes(out)
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                html = _fixture_html(did, did).encode()
-                e = did % 4
-                if did % 13 == 0:
-                    hdrs = b"Content-Encoding: br\r\n"
-                    body = _zlib.compress(html)  # not actually brotli
-                elif e == 0:
-                    hdrs, body = b"", html
-                elif e == 1:
-                    hdrs = b"Content-Encoding: gzip\r\n"
-                    body = _gzip.compress(html, mtime=0)
-                elif e == 2:
-                    hdrs = b"Content-Encoding: deflate\r\n"
-                    body = _zlib.compress(html)
-                else:
-                    hdrs = (
-                        b"Transfer-Encoding: chunked\r\n"
-                        b"Content-Encoding: gzip\r\n"
-                    )
-                    body = chunked(_gzip.compress(html, mtime=0))
-                recs = [
-                    (
-                        {
-                            "WARC-Type": "response",
-                            "WARC-Target-URI": f"http://e.example/{did}",
-                            "Content-Type": "application/http;msgtype=response",
-                        },
-                        b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
-                        + hdrs
-                        + b"\r\n"
-                        + body,
-                    )
-                ]
-                rows.append((did, build_warc(recs, gzip_members=bool(did % 2))))
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        html = _fixture_html(did, did).encode()
+        e = did % 4
+        if did % 13 == 0:
+            hdrs = b"Content-Encoding: br\r\n"
+            body = _zlib.compress(html)  # not actually brotli
+        elif e == 0:
+            hdrs, body = b"", html
+        elif e == 1:
+            hdrs = b"Content-Encoding: gzip\r\n"
+            body = _gzip.compress(html, mtime=0)
+        elif e == 2:
+            hdrs = b"Content-Encoding: deflate\r\n"
+            body = _zlib.compress(html)
+        else:
+            hdrs = (
+                b"Transfer-Encoding: chunked\r\n"
+                b"Content-Encoding: gzip\r\n"
+            )
+            body = chunked(_gzip.compress(html, mtime=0))
+        recs = [
+            (
+                {
+                    "WARC-Type": "response",
+                    "WARC-Target-URI": f"http://e.example/{did}",
+                    "Content-Type": "application/http;msgtype=response",
+                },
+                b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n"
+                + hdrs
+                + b"\r\n"
+                + body,
+            )
+        ]
+        return did, build_warc(recs, gzip_members=bool(did % 2))
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     recs = warc_records(media, include_body=True).filter(
         "parse_ok AND warc_type = 'response'"
     )
@@ -3696,8 +3434,6 @@ ORDER BY r.pr DESC, host"""
     "sit under one hash.",
 )
 def crawl_link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..operators.crawl import (
         canonical_url,
         html_extract,
@@ -3705,33 +3441,23 @@ def crawl_link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_url_parts,
     )
     from ..operators.graphs import pagerank_integer
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                html = (
-                    "<html><body>"
-                    '<a href="/self">me</a> '
-                    f'<a href="http://s{(3 * did + 1) % 7}.example'
-                    f'/p/{did}">x</a> '
-                    f'<a href="//s{(5 * did + 2) % 7}.example'
-                    f'/q/{did}?b=2&a=1#f">y</a>'
-                    "</body></html>"
-                )
-                rows.append(
-                    (did, f"http://s{did % 7}.example/p/{did}", html)
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "target_uri", "html"]
-            )
+    def make(did):
+        html = (
+            "<html><body>"
+            '<a href="/self">me</a> '
+            f'<a href="http://s{(3 * did + 1) % 7}.example'
+            f'/p/{did}">x</a> '
+            f'<a href="//s{(5 * did + 2) % 7}.example'
+            f'/q/{did}?b=2&a=1#f">y</a>'
+            "</body></html>"
+        )
+        return did, f"http://s{did % 7}.example/p/{did}", html
 
-    media = docs.mapInPandas(
-        make, "doc_id long, target_uri string, html string"
+    media = _fixture_rows(
+        docs, make, "doc_id long, target_uri string, html string"
     )
     links = page_links(html_extract(media, html_col="html"))
     canon = links.withColumn("canon", canonical_url("resolved_url"))
@@ -3815,43 +3541,36 @@ FROM k GROUP BY 1
     "page bytes never enter the plan.",
 )
 def cdx_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.warc import build_warc
     from ..operators.crawl import cdx_index
     from ..tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                uri = f"http://s{did % 7}.example/p/{did}"
-                body = (
-                    b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
-                    + b"x" * (10 + did % 50)
-                )
-                blob = build_warc(
-                    [
-                        ({"WARC-Type": "warcinfo"}, b"software: graft\r\n"),
-                        (
-                            {
-                                "WARC-Type": "response",
-                                "WARC-Target-URI": uri,
-                                "Content-Type": (
-                                    "application/http;msgtype=response"
-                                ),
-                            },
-                            body,
+    def make(did):
+        uri = f"http://s{did % 7}.example/p/{did}"
+        body = (
+            b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
+            + b"x" * (10 + did % 50)
+        )
+        blob = build_warc(
+            [
+                ({"WARC-Type": "warcinfo"}, b"software: graft\r\n"),
+                (
+                    {
+                        "WARC-Type": "response",
+                        "WARC-Target-URI": uri,
+                        "Content-Type": (
+                            "application/http;msgtype=response"
                         ),
-                    ]
-                )
-                rows.append((did, blob))
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+                    },
+                    body,
+                ),
+            ]
+        )
+        return did, blob
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     idx = cdx_index(media)
     return idx.groupBy(
         F.substring_index("urlkey", ")", 1).alias("host_key")
@@ -3900,25 +3619,13 @@ FROM t GROUP BY 1
     "contract.",
 )
 def wat_export_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..operators.crawl import html_extract, wat_export
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "html": [
-                        _fixture_html(int(x), int(x)) for x in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    media = docs.mapInPandas(make, "doc_id long, html string")
+    media = _fixture_rows(
+        docs, lambda did: (did, _fixture_html(did, did)), "doc_id long, html string"
+    )
     pages = html_extract(media, html_col="html").select(
         (F.col("doc_id") % 8).alias("shard"),
         F.format_string("http://w.example/%d", "doc_id").alias("uri"),
@@ -3984,63 +3691,55 @@ FROM t GROUP BY 1
     "dead-letter, never a wrong terminal.",
 )
 def redirect_resolution_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.warc import build_warc
     from ..operators.crawl import resolve_redirects
     from ..sources import warc_records
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        def http(status_line: str, headers: list[str], body: bytes = b"") -> bytes:
-            head = "\r\n".join([status_line, *headers])
-            return head.encode("ascii") + b"\r\n\r\n" + body
+    def http(status_line: str, headers: list[str], body: bytes = b"") -> bytes:
+        head = "\r\n".join([status_line, *headers])
+        return head.encode("ascii") + b"\r\n\r\n" + body
 
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                url = lambda i: f"http://s{did % 7}.example/r/{did}/{i}"  # noqa: E731
-                cls = did % 6
-                recs = []
-                if cls == 5:
-                    hops = [(0, url(1)), (1, url(2)), (2, url(0))]
-                else:
-                    # odd hop index -> RELATIVE Location (urljoin pinned)
-                    hops = [
-                        (i, url(i + 1) if i % 2 == 0 else f"/r/{did}/{i + 1}")
-                        for i in range(cls)
-                    ] + [(cls, None)]
-                for i, loc in hops:
-                    if loc is None:
-                        body = http(
-                            "HTTP/1.1 200 OK",
-                            ["Content-Type: text/html"],
-                            b"<html>done</html>",
-                        )
-                    else:
-                        body = http(
-                            "HTTP/1.1 301 Moved Permanently",
-                            [f"Location: {loc}"],
-                        )
-                    recs.append(
-                        (
-                            {
-                                "WARC-Type": "response",
-                                "WARC-Target-URI": url(i),
-                                "Content-Type": (
-                                    "application/http;msgtype=response"
-                                ),
-                            },
-                            body,
-                        )
-                    )
-                rows.append((did, build_warc(recs)))
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        url = lambda i: f"http://s{did % 7}.example/r/{did}/{i}"  # noqa: E731
+        cls = did % 6
+        recs = []
+        if cls == 5:
+            hops = [(0, url(1)), (1, url(2)), (2, url(0))]
+        else:
+            # odd hop index -> RELATIVE Location (urljoin pinned)
+            hops = [
+                (i, url(i + 1) if i % 2 == 0 else f"/r/{did}/{i + 1}")
+                for i in range(cls)
+            ] + [(cls, None)]
+        for i, loc in hops:
+            if loc is None:
+                body = http(
+                    "HTTP/1.1 200 OK",
+                    ["Content-Type: text/html"],
+                    b"<html>done</html>",
+                )
+            else:
+                body = http(
+                    "HTTP/1.1 301 Moved Permanently",
+                    [f"Location: {loc}"],
+                )
+            recs.append(
+                (
+                    {
+                        "WARC-Type": "response",
+                        "WARC-Target-URI": url(i),
+                        "Content-Type": (
+                            "application/http;msgtype=response"
+                        ),
+                    },
+                    body,
+                )
+            )
+        return did, build_warc(recs)
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     res = resolve_redirects(warc_records(media), url_col="target_uri")
     d = F.regexp_extract("url", r"/r/(\d+)/", 1).cast("long")
     return res.groupBy((d % 6).alias("chain_class")).agg(
@@ -4113,84 +3812,74 @@ FROM t GROUP BY 1
     "hash.",
 )
 def sitemap_frontier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.sitemaps import build_sitemap
     from ..operators.crawl import canonical_url, sitemap_entries
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                h = did % 7
-                uri = f"http://s{h}.example/sitemap-{did}.xml"
-                gz = did % 3 == 0
-                if did % 11 == 0:
-                    blob = b"<urlset><url><loc>broken"
-                elif did % 5 == 0:
-                    blob = build_sitemap(
-                        [
-                            {"loc": f"http://s{h}.example/sitemap-{did}-{j}.xml"}
-                            for j in range(2)
-                        ],
-                        kind="sitemapindex",
-                        gzipped=gz,
-                    )
-                elif did % 5 == 1:
-                    import gzip as _gz
-
-                    k = (did % 9) + 1
-                    txt = (
-                        "\n".join(
-                            f"http://s{h}.example/p/{did}/{j}"
-                            for j in range(k)
-                        )
-                        + "\n"
-                    ).encode("utf-8")
-                    blob = _gz.compress(txt, 6) if gz else txt
-                else:
-                    k = (did % 9) + 1
-                    blob = build_sitemap(
-                        [
-                            {
-                                "loc": f"http://s{h}.example/p/{did}/{j}",
-                                "lastmod": f"2026-01-{(did % 28) + 1:02d}",
-                                "changefreq": "daily",
-                                "priority": f"0.{did % 10}",
-                                # Google media extensions (r15): per
-                                # entry, doc_id%3 images and — at
-                                # doc_id%4=0 — one video with an
-                                # integer duration
-                                "images": [
-                                    f"http://s{h}.example/i/{did}/{j}/{i}"
-                                    for i in range(did % 3)
-                                ],
-                                "videos": (
-                                    [
-                                        {
-                                            "title": f"v{did}",
-                                            "duration": 30 + did % 60,
-                                        }
-                                    ]
-                                    if did % 4 == 0
-                                    else []
-                                ),
-                            }
-                            for j in range(k)
-                        ],
-                        gzipped=gz,
-                    )
-                rows.append((did, uri, blob))
-            yield pd.DataFrame(
-                rows, columns=["archive_id", "target_uri", "content"]
+    def make(did):
+        h = did % 7
+        uri = f"http://s{h}.example/sitemap-{did}.xml"
+        gz = did % 3 == 0
+        if did % 11 == 0:
+            blob = b"<urlset><url><loc>broken"
+        elif did % 5 == 0:
+            blob = build_sitemap(
+                [
+                    {"loc": f"http://s{h}.example/sitemap-{did}-{j}.xml"}
+                    for j in range(2)
+                ],
+                kind="sitemapindex",
+                gzipped=gz,
             )
+        elif did % 5 == 1:
+            import gzip as _gz
 
-    sm = docs.mapInPandas(
-        make, "archive_id long, target_uri string, content binary"
+            k = (did % 9) + 1
+            txt = (
+                "\n".join(
+                    f"http://s{h}.example/p/{did}/{j}"
+                    for j in range(k)
+                )
+                + "\n"
+            ).encode("utf-8")
+            blob = _gz.compress(txt, 6) if gz else txt
+        else:
+            k = (did % 9) + 1
+            blob = build_sitemap(
+                [
+                    {
+                        "loc": f"http://s{h}.example/p/{did}/{j}",
+                        "lastmod": f"2026-01-{(did % 28) + 1:02d}",
+                        "changefreq": "daily",
+                        "priority": f"0.{did % 10}",
+                        # Google media extensions (r15): per
+                        # entry, doc_id%3 images and — at
+                        # doc_id%4=0 — one video with an
+                        # integer duration
+                        "images": [
+                            f"http://s{h}.example/i/{did}/{j}/{i}"
+                            for i in range(did % 3)
+                        ],
+                        "videos": (
+                            [
+                                {
+                                    "title": f"v{did}",
+                                    "duration": 30 + did % 60,
+                                }
+                            ]
+                            if did % 4 == 0
+                            else []
+                        ),
+                    }
+                    for j in range(k)
+                ],
+                gzipped=gz,
+            )
+        return did, uri, blob
+
+    sm = _fixture_rows(
+        docs, make, "archive_id long, target_uri string, content binary"
     )
     ent = sitemap_entries(sm, content_col="content")
     host = F.concat(
@@ -4281,7 +3970,6 @@ def cdx_recrawl_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.warc import build_warc
     from ..operators.crawl import cdx_index, cdx_snapshot_diff
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
@@ -4367,8 +4055,6 @@ FROM t GROUP BY h
     "operators from three modules compose under one hash.",
 )
 def crawl_discovery_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.sitemaps import build_sitemap
     from ..functions.warc import build_warc
     from ..operators.crawl import (
@@ -4379,70 +4065,64 @@ def crawl_discovery_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_url_parts,
     )
     from ..sources import warc_records
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        def http(body: bytes, ctype: str) -> bytes:
-            return (
-                f"HTTP/1.1 200 OK\r\nContent-Type: {ctype}\r\n\r\n".encode()
-                + body
+    def http(body: bytes, ctype: str) -> bytes:
+        return (
+            f"HTTP/1.1 200 OK\r\nContent-Type: {ctype}\r\n\r\n".encode()
+            + body
+        )
+
+    def make(did):
+        h = did % 7
+        recs = []
+        if did < 7:
+            robots = (
+                "User-agent: graft\n"
+                "Disallow: /private/\n"
+                f"Crawl-delay: {1 + did % 5}\n"
+                f"Sitemap: http://s{did}.example/sitemap-index.xml\n"
+            ).encode()
+            recs.append(
+                (
+                    {
+                        "WARC-Type": "response",
+                        "WARC-Target-URI": (
+                            f"http://s{did}.example/robots.txt"
+                        ),
+                        "Content-Type": (
+                            "application/http;msgtype=response"
+                        ),
+                    },
+                    http(robots, "text/plain"),
+                )
             )
+        k = (did % 6) + 2
+        sm = build_sitemap(
+            [
+                {"loc": f"http://s{h}.example/p/{did}/{j}"}
+                for j in range(k - 1)
+            ]
+            + [{"loc": f"http://s{h}.example/private/{did}"}]
+        )
+        recs.append(
+            (
+                {
+                    "WARC-Type": "response",
+                    "WARC-Target-URI": (
+                        f"http://s{h}.example/sitemap-{did}.xml"
+                    ),
+                    "Content-Type": (
+                        "application/http;msgtype=response"
+                    ),
+                },
+                http(sm, "application/xml"),
+            )
+        )
+        return did, build_warc(recs)
 
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                h = did % 7
-                recs = []
-                if did < 7:
-                    robots = (
-                        "User-agent: graft\n"
-                        "Disallow: /private/\n"
-                        f"Crawl-delay: {1 + did % 5}\n"
-                        f"Sitemap: http://s{did}.example/sitemap-index.xml\n"
-                    ).encode()
-                    recs.append(
-                        (
-                            {
-                                "WARC-Type": "response",
-                                "WARC-Target-URI": (
-                                    f"http://s{did}.example/robots.txt"
-                                ),
-                                "Content-Type": (
-                                    "application/http;msgtype=response"
-                                ),
-                            },
-                            http(robots, "text/plain"),
-                        )
-                    )
-                k = (did % 6) + 2
-                sm = build_sitemap(
-                    [
-                        {"loc": f"http://s{h}.example/p/{did}/{j}"}
-                        for j in range(k - 1)
-                    ]
-                    + [{"loc": f"http://s{h}.example/private/{did}"}]
-                )
-                recs.append(
-                    (
-                        {
-                            "WARC-Type": "response",
-                            "WARC-Target-URI": (
-                                f"http://s{h}.example/sitemap-{did}.xml"
-                            ),
-                            "Content-Type": (
-                                "application/http;msgtype=response"
-                            ),
-                        },
-                        http(sm, "application/xml"),
-                    )
-                )
-                rows.append((did, build_warc(recs)))
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
-
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     recs = warc_records(media, include_body=True).filter(
         "parse_ok AND warc_type = 'response'"
     )
@@ -4545,41 +4225,32 @@ def tar_archive_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     import io
     import tarfile
 
-    import pandas as pd
-
     from ..sources import tar_members
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                if did % 13 == 0:
-                    rows.append((did, b"not a tar archive at all"))
-                    continue
-                buf = io.BytesIO()
-                mode = "w:gz" if did % 2 == 1 else "w"
-                with tarfile.open(fileobj=buf, mode=mode) as tf:
-                    dirinfo = tarfile.TarInfo("sub")
-                    dirinfo.type = tarfile.DIRTYPE
-                    tf.addfile(dirinfo)
-                    for j in range((did % 4) + 1):
-                        body = b"x" * (5 + (did + j) % 9)
-                        info = tarfile.TarInfo(f"f{did}_{j}.txt")
-                        info.size = len(body)
-                        info.mtime = 1700000000 + did % 100
-                        tf.addfile(info, io.BytesIO(body))
-                    ln = tarfile.TarInfo(f"ln{did}")
-                    ln.type = tarfile.SYMTYPE
-                    ln.linkname = f"f{did}_0.txt"
-                    tf.addfile(ln)
-                rows.append((did, buf.getvalue()))
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        if did % 13 == 0:
+            return did, b"not a tar archive at all"
+        buf = io.BytesIO()
+        mode = "w:gz" if did % 2 == 1 else "w"
+        with tarfile.open(fileobj=buf, mode=mode) as tf:
+            dirinfo = tarfile.TarInfo("sub")
+            dirinfo.type = tarfile.DIRTYPE
+            tf.addfile(dirinfo)
+            for j in range((did % 4) + 1):
+                body = b"x" * (5 + (did + j) % 9)
+                info = tarfile.TarInfo(f"f{did}_{j}.txt")
+                info.size = len(body)
+                info.mtime = 1700000000 + did % 100
+                tf.addfile(info, io.BytesIO(body))
+            ln = tarfile.TarInfo(f"ln{did}")
+            ln.type = tarfile.SYMTYPE
+            ln.linkname = f"f{did}_0.txt"
+            tf.addfile(ln)
+        return did, buf.getvalue()
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     m = tar_members(media)
     aid = F.col("archive_id")
     container = (
@@ -4781,7 +4452,6 @@ FROM t JOIN f USING (body) GROUP BY 1
 def warc_revisit_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.crawl import warc_revisit_export
     from ..sources import warc_records
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
     d = F.col("doc_id")
@@ -4853,7 +4523,6 @@ def warc_revisit_resolve_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.warc import build_warc
     from ..operators.crawl import resolve_revisits, warc_revisit_export
     from ..sources import warc_records
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
     d = F.col("doc_id")
@@ -4940,89 +4609,78 @@ FROM t WHERE d % 7 = 0
     "for orphans — no content-key window, no corpus broadcast.",
 )
 def warc_request_pairing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
+    from ..functions.warc import build_warc
     from ..operators.crawl import orphan_requests, pair_requests
     from ..sources import warc_records
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        from ..functions.warc import build_warc
-
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                recs = [
+    def make(did):
+        recs = [
+            (
+                {
+                    "WARC-Type": "response",
+                    "WARC-Record-ID": f"<urn:uuid:r{did}>",
+                    "WARC-Target-URI": f"http://p.example/{did}",
+                    "Content-Type": "application/http;msgtype=response",
+                },
+                b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
+                b"<p>doc %d</p>" % did,
+            )
+        ]
+        if did % 5 != 0:
+            recs.append(
+                (
+                    {
+                        "WARC-Type": "request",
+                        "WARC-Record-ID": f"<urn:uuid:q{did}>",
+                        "WARC-Concurrent-To": f"<urn:uuid:r{did}>",
+                        "WARC-Target-URI": f"http://p.example/{did}",
+                        "Content-Type": "application/http;msgtype=request",
+                    },
                     (
-                        {
-                            "WARC-Type": "response",
-                            "WARC-Record-ID": f"<urn:uuid:r{did}>",
-                            "WARC-Target-URI": f"http://p.example/{did}",
-                            "Content-Type": "application/http;msgtype=response",
-                        },
-                        b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
-                        b"<p>doc %d</p>" % did,
-                    )
-                ]
-                if did % 5 != 0:
-                    recs.append(
-                        (
-                            {
-                                "WARC-Type": "request",
-                                "WARC-Record-ID": f"<urn:uuid:q{did}>",
-                                "WARC-Concurrent-To": f"<urn:uuid:r{did}>",
-                                "WARC-Target-URI": f"http://p.example/{did}",
-                                "Content-Type": "application/http;msgtype=request",
-                            },
-                            (
-                                f"GET /{did} HTTP/1.1\r\n"
-                                f"User-Agent: bot-{did % 4}\r\n"
-                                f"Referer: http://ref.example/{did % 6}\r\n"
-                                "\r\n"
-                            ).encode(),
-                        )
-                    )
-                if did % 11 == 0 and did % 5 != 0:
-                    # duplicate request naming the same response: the
-                    # min-struct (archive, rec_idx) rule keeps the FIRST,
-                    # so this decoy user-agent must never surface
-                    recs.append(
-                        (
-                            {
-                                "WARC-Type": "request",
-                                "WARC-Record-ID": f"<urn:uuid:q{did}dup>",
-                                "WARC-Concurrent-To": f"<urn:uuid:r{did}>",
-                                "Content-Type": "application/http;msgtype=request",
-                            },
-                            b"GET / HTTP/1.1\r\nUser-Agent: zz-decoy\r\n\r\n",
-                        )
-                    )
-                if did % 7 == 0:
-                    recs.append(
-                        (
-                            {
-                                "WARC-Type": "request",
-                                "WARC-Record-ID": f"<urn:uuid:o{did}>",
-                                "WARC-Concurrent-To": f"<urn:uuid:missing{did}>",
-                                "Content-Type": "application/http;msgtype=request",
-                            },
-                            (
-                                "GET /lost HTTP/1.1\r\n"
-                                f"User-Agent: ghost-{did % 2}\r\n"
-                                f"Referer: http://lost.example/{did}\r\n"
-                                "\r\n"
-                            ).encode(),
-                        )
-                    )
-                rows.append(
-                    (did, build_warc(recs, gzip_members=bool(did % 2)))
+                        f"GET /{did} HTTP/1.1\r\n"
+                        f"User-Agent: bot-{did % 4}\r\n"
+                        f"Referer: http://ref.example/{did % 6}\r\n"
+                        "\r\n"
+                    ).encode(),
                 )
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+            )
+        if did % 11 == 0 and did % 5 != 0:
+            # duplicate request naming the same response: the
+            # min-struct (archive, rec_idx) rule keeps the FIRST,
+            # so this decoy user-agent must never surface
+            recs.append(
+                (
+                    {
+                        "WARC-Type": "request",
+                        "WARC-Record-ID": f"<urn:uuid:q{did}dup>",
+                        "WARC-Concurrent-To": f"<urn:uuid:r{did}>",
+                        "Content-Type": "application/http;msgtype=request",
+                    },
+                    b"GET / HTTP/1.1\r\nUser-Agent: zz-decoy\r\n\r\n",
+                )
+            )
+        if did % 7 == 0:
+            recs.append(
+                (
+                    {
+                        "WARC-Type": "request",
+                        "WARC-Record-ID": f"<urn:uuid:o{did}>",
+                        "WARC-Concurrent-To": f"<urn:uuid:missing{did}>",
+                        "Content-Type": "application/http;msgtype=request",
+                    },
+                    (
+                        "GET /lost HTTP/1.1\r\n"
+                        f"User-Agent: ghost-{did % 2}\r\n"
+                        f"Referer: http://lost.example/{did}\r\n"
+                        "\r\n"
+                    ).encode(),
+                )
+            )
+        return did, build_warc(recs, gzip_members=bool(did % 2))
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     # four consumers of the Python parse chain (pair_requests reads recs
     # twice: request min-struct + response join; orphan_requests twice
     # more: response-id set + request anti side) — one checkpoint runs
@@ -5127,38 +4785,30 @@ FROM lbl GROUP BY 1
     "one integer aggregation on the page id).",
 )
 def crawl_lang_classifier_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.warc import build_warc
     from ..operators.crawl import html_extract
     from ..operators.llmprep import hashed_multiclass_scores
     from ..sources import warc_records
-    from ..tables import load
     from .catalog_llm import _LANG_WEIGHTS
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                html = _fixture_html(did, did, stopword=did % 7 != 0).encode()
-                recs = [
-                    (
-                        {
-                            "WARC-Type": "response",
-                            "WARC-Target-URI": f"http://q.example/{did}",
-                            "Content-Type": "application/http;msgtype=response",
-                        },
-                        b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
-                        + html,
-                    )
-                ]
-                rows.append((did, build_warc(recs, gzip_members=bool(did % 2))))
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        html = _fixture_html(did, did, stopword=did % 7 != 0).encode()
+        recs = [
+            (
+                {
+                    "WARC-Type": "response",
+                    "WARC-Target-URI": f"http://q.example/{did}",
+                    "Content-Type": "application/http;msgtype=response",
+                },
+                b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n"
+                + html,
+            )
+        ]
+        return did, build_warc(recs, gzip_members=bool(did % 2))
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     recs = warc_records(media, include_body=True).filter(
         "parse_ok AND warc_type = 'response'"
     )
@@ -5228,87 +4878,77 @@ FROM (SELECT * FROM seg UNION ALL SELECT * FROM plain)
     "— no content-key window, no corpus broadcast.",
 )
 def warc_segment_reassembly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.warc import build_warc
     from ..operators.crawl import reassemble_segments
     from ..sources import warc_records
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                k = 2 + did % 3
-                parts = [f"p{j}:doc {did} ".encode() for j in range(k)]
-                total = sum(len(p) for p in parts)
-                if did % 7 == 0:
-                    total += 1  # wrong declared total: length mismatch
-                recs = [
-                    (
-                        {
-                            "WARC-Type": "response",
-                            "WARC-Record-ID": f"<urn:plain{did}>",
-                            "Content-Type": "application/http",
-                        },
-                        f"u:doc {did}".encode(),
-                    ),
-                    (
-                        {
-                            "WARC-Type": "response",
-                            "WARC-Record-ID": f"<urn:seg{did}>",
-                            "WARC-Segment-Number": "1",
-                        },
-                        parts[0],
-                    ),
-                ]
-                for j in range(1, k):
-                    if did % 5 == 0 and j == 1:
-                        continue  # gap: first continuation dropped
-                    h = {
+    def make(did):
+        k = 2 + did % 3
+        parts = [f"p{j}:doc {did} ".encode() for j in range(k)]
+        total = sum(len(p) for p in parts)
+        if did % 7 == 0:
+            total += 1  # wrong declared total: length mismatch
+        recs = [
+            (
+                {
+                    "WARC-Type": "response",
+                    "WARC-Record-ID": f"<urn:plain{did}>",
+                    "Content-Type": "application/http",
+                },
+                f"u:doc {did}".encode(),
+            ),
+            (
+                {
+                    "WARC-Type": "response",
+                    "WARC-Record-ID": f"<urn:seg{did}>",
+                    "WARC-Segment-Number": "1",
+                },
+                parts[0],
+            ),
+        ]
+        for j in range(1, k):
+            if did % 5 == 0 and j == 1:
+                continue  # gap: first continuation dropped
+            h = {
+                "WARC-Type": "continuation",
+                "WARC-Record-ID": f"<urn:seg{did}c{j}>",
+                "WARC-Segment-Origin-ID": f"<urn:seg{did}>",
+                "WARC-Segment-Number": str(j + 1),
+            }
+            if j == k - 1:
+                h["WARC-Segment-Total-Length"] = str(total)
+            recs.append((h, parts[j]))
+        # duplicate decoy for segment 2 (lexicographically larger
+        # than any real part: must lose the min-struct tie)
+        if did % 5 != 0:
+            recs.append(
+                (
+                    {
                         "WARC-Type": "continuation",
-                        "WARC-Record-ID": f"<urn:seg{did}c{j}>",
                         "WARC-Segment-Origin-ID": f"<urn:seg{did}>",
-                        "WARC-Segment-Number": str(j + 1),
-                    }
-                    if j == k - 1:
-                        h["WARC-Segment-Total-Length"] = str(total)
-                    recs.append((h, parts[j]))
-                # duplicate decoy for segment 2 (lexicographically larger
-                # than any real part: must lose the min-struct tie)
-                if did % 5 != 0:
-                    recs.append(
-                        (
-                            {
-                                "WARC-Type": "continuation",
-                                "WARC-Segment-Origin-ID": f"<urn:seg{did}>",
-                                "WARC-Segment-Number": "2",
-                            },
-                            b"zz-decoy",
-                        )
-                    )
-                if did % 11 == 0:
-                    recs.append(
-                        (
-                            {
-                                "WARC-Type": "continuation",
-                                "WARC-Record-ID": f"<urn:orph{did}>",
-                                "WARC-Segment-Origin-ID": "<urn:nowhere>",
-                                "WARC-Segment-Number": "2",
-                                "WARC-Segment-Total-Length": "4",
-                            },
-                            b"NN",
-                        )
-                    )
-                rows.append(
-                    (did, build_warc(recs, gzip_members=bool(did % 2)))
+                        "WARC-Segment-Number": "2",
+                    },
+                    b"zz-decoy",
                 )
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+            )
+        if did % 11 == 0:
+            recs.append(
+                (
+                    {
+                        "WARC-Type": "continuation",
+                        "WARC-Record-ID": f"<urn:orph{did}>",
+                        "WARC-Segment-Origin-ID": "<urn:nowhere>",
+                        "WARC-Segment-Number": "2",
+                        "WARC-Segment-Total-Length": "4",
+                    },
+                    b"NN",
+                )
+            )
+        return did, build_warc(recs, gzip_members=bool(did % 2))
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     rows = warc_records(media, include_payload=True).filter("parse_ok")
     out = reassemble_segments(rows)
     return out.select(
@@ -5364,8 +5004,6 @@ _PDF_LINK_EDGES = """
     "iterations.",
 )
 def pdf_link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.pdf import build_pdf
     from ..operators.crawl import (
         canonical_url,
@@ -5374,49 +5012,40 @@ def pdf_link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         with_url_parts,
     )
     from ..operators.graphs import pagerank_integer
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                uri = f"http://s{did % 7}.example/p/{did}"
-                if did % 2 == 0:
-                    body = (
-                        "<html><body>"
-                        '<a href="/self">me</a> '
-                        f'<a href="http://s{(3 * did + 1) % 7}.example'
-                        f'/p/{did}">x</a> '
-                        f'<a href="//s{(5 * did + 2) % 7}.example'
-                        f'/q/{did}?b=2&a=1#f">y</a>'
-                        "</body></html>"
-                    ).encode()
-                    ctype = "text/html; charset=utf-8"
-                else:
-                    body = build_pdf(
-                        [[f"pdf doc {did}"]],
-                        links=[
-                            [
-                                "/self",
-                                f"http://s{(3 * did + 2) % 7}.example"
-                                f"/p/{did}",
-                                f"//s{(5 * did + 4) % 7}.example"
-                                f"/q/{did}?b=2&a=1#f",
-                            ]
-                        ],
-                    )
-                    ctype = None  # the %PDF- sniff must route it
-                rows.append((did, uri, body, ctype))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "target_uri", "http_body", "ctype"],
+    def make(did):
+        uri = f"http://s{did % 7}.example/p/{did}"
+        if did % 2 == 0:
+            body = (
+                "<html><body>"
+                '<a href="/self">me</a> '
+                f'<a href="http://s{(3 * did + 1) % 7}.example'
+                f'/p/{did}">x</a> '
+                f'<a href="//s{(5 * did + 2) % 7}.example'
+                f'/q/{did}?b=2&a=1#f">y</a>'
+                "</body></html>"
+            ).encode()
+            ctype = "text/html; charset=utf-8"
+        else:
+            body = build_pdf(
+                [[f"pdf doc {did}"]],
+                links=[
+                    [
+                        "/self",
+                        f"http://s{(3 * did + 2) % 7}.example"
+                        f"/p/{did}",
+                        f"//s{(5 * did + 4) % 7}.example"
+                        f"/q/{did}?b=2&a=1#f",
+                    ]
+                ],
             )
+            ctype = None  # the %PDF- sniff must route it
+        return did, uri, body, ctype
 
-    media = docs.mapInPandas(
-        make,
+    media = _fixture_rows(
+        docs, make,
         "doc_id long, target_uri string, http_body binary, ctype string",
     )
     extracted = document_extract(media, content_type_col="ctype")
@@ -5514,43 +5143,33 @@ FROM v GROUP BY 1
     "sit under one hash.",
 )
 def mp4_container_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.mp4 import build_mp4
     from ..sources import mp4_tracks
     from ..tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                if did % 13 == 0:
-                    rows.append((did, b"junk bytes, not an mp4 file"))
-                    continue
-                rows.append(
-                    (
-                        did,
-                        build_mp4(
-                            1 + did % 4,
-                            video=(
-                                "avc1" if did % 2 == 0 else "hev1",
-                                160 + 16 * (did % 5),
-                                96 + 16 * (did % 3),
-                                24,
-                            ),
-                            audio=("mp4a", 8000) if did % 3 == 0 else None,
-                            brand="mp42" if did % 5 == 0 else "isom",
-                            version1=did % 7 == 0,
-                            large_mdat=did % 11 == 0,
-                        ),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        if did % 13 == 0:
+            return did, b"junk bytes, not an mp4 file"
+        return (
+            did,
+            build_mp4(
+                1 + did % 4,
+                video=(
+                    "avc1" if did % 2 == 0 else "hev1",
+                    160 + 16 * (did % 5),
+                    96 + 16 * (did % 3),
+                    24,
+                ),
+                audio=("mp4a", 8000) if did % 3 == 0 else None,
+                brand="mp42" if did % 5 == 0 else "isom",
+                version1=did % 7 == 0,
+                large_mdat=did % 11 == 0,
+            ),
+        )
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     m = mp4_tracks(media)
     codec = F.coalesce(
         F.col("codec"),
@@ -5624,54 +5243,44 @@ FROM v GROUP BY 1
     "frame and duration sums sit under one hash.",
 )
 def webp_container_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.webp import build_webp
     from ..sources import webp_meta
     from ..tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                if did % 13 == 0:
-                    rows.append((did, b"junk bytes, not a webp file"))
-                    continue
-                fmt = ("VP8", "VP8L", "VP8X")[did % 3]
-                n = 1 + (did % 5) % 3
-                frames = (
-                    [30 * (i + 1 + did % 7) for i in range(n)]
-                    if fmt == "VP8X" and did % 4 == 0
+    def make(did):
+        if did % 13 == 0:
+            return did, b"junk bytes, not a webp file"
+        fmt = ("VP8", "VP8L", "VP8X")[did % 3]
+        n = 1 + (did % 5) % 3
+        frames = (
+            [30 * (i + 1 + did % 7) for i in range(n)]
+            if fmt == "VP8X" and did % 4 == 0
+            else None
+        )
+        return (
+            did,
+            build_webp(
+                32 + (did % 9) * 16,
+                16 + (did % 5) * 16,
+                fmt,
+                alpha=fmt != "VP8" and did % 2 == 1,
+                frames=frames,
+                exif=(
+                    b"Exif\x00\x00fixture"
+                    if fmt == "VP8X" and did % 5 == 0
                     else None
-                )
-                rows.append(
-                    (
-                        did,
-                        build_webp(
-                            32 + (did % 9) * 16,
-                            16 + (did % 5) * 16,
-                            fmt,
-                            alpha=fmt != "VP8" and did % 2 == 1,
-                            frames=frames,
-                            exif=(
-                                b"Exif\x00\x00fixture"
-                                if fmt == "VP8X" and did % 5 == 0
-                                else None
-                            ),
-                            icc=(
-                                b"fixture-icc-profile"
-                                if fmt == "VP8X" and did % 7 == 0
-                                else None
-                            ),
-                        ),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+                ),
+                icc=(
+                    b"fixture-icc-profile"
+                    if fmt == "VP8X" and did % 7 == 0
+                    else None
+                ),
+            ),
+        )
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     m = webp_meta(media)
     fmt = F.coalesce(F.col("format"), F.lit("dead"))
     return m.groupBy(fmt.alias("format")).agg(
@@ -5726,39 +5335,29 @@ FROM v GROUP BY 1
     "under one hash.",
 )
 def avif_container_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.mp4 import build_bmff_image
     from ..sources import bmff_image_meta
     from ..tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                if did % 13 == 0:
-                    rows.append((did, b"junk bytes, not a bmff image"))
-                    continue
-                rows.append(
-                    (
-                        did,
-                        build_bmff_image(
-                            64 + 8 * (did % 7),
-                            48 + 8 * (did % 4),
-                            brand="avif" if did % 2 == 0 else "heic",
-                            codec="av01" if did % 2 == 0 else "hvc1",
-                            with_alpha=did % 3 == 0,
-                            with_exif=did % 5 == 0,
-                            version1=did % 7 == 0,
-                        ),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        if did % 13 == 0:
+            return did, b"junk bytes, not a bmff image"
+        return (
+            did,
+            build_bmff_image(
+                64 + 8 * (did % 7),
+                48 + 8 * (did % 4),
+                brand="avif" if did % 2 == 0 else "heic",
+                codec="av01" if did % 2 == 0 else "hvc1",
+                with_alpha=did % 3 == 0,
+                with_exif=did % 5 == 0,
+                version1=did % 7 == 0,
+            ),
+        )
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     m = bmff_image_meta(media)
     brand = F.coalesce(F.col("major_brand"), F.lit("dead"))
     return m.groupBy(brand.alias("brand")).agg(
@@ -5810,56 +5409,44 @@ FROM v GROUP BY 1
     "published and id counts sit under one hash.",
 )
 def feed_frontier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.feeds import build_feed
     from ..operators.crawl import feed_entries
     from ..tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                uri = f"http://s{did % 7}.example/feed.xml?id={did}"
-                if did % 13 == 0:
-                    rows.append((did, uri, b"junk bytes, not a feed"))
-                    continue
-                n = 1 + did % 4
-                entries = [
-                    {
-                        "link": (
-                            f"http://s{(3 * did + j) % 7}.example"
-                            f"/feed/{did}/{j}"
-                        ),
-                        "title": f"item {did} {j}",
-                        "published": (
-                            f"2024-01-0{1 + j % 7}" if j % 2 == 0 else None
-                        ),
-                        "id": f"id-{did}-{j}" if j % 3 == 0 else None,
-                    }
-                    for j in range(n)
-                ]
-                rows.append(
-                    (
-                        did,
-                        uri,
-                        build_feed(
-                            entries,
-                            kind="rss" if did % 2 == 0 else "atom",
-                            title=f"feed {did}",
-                            gzipped=did % 5 == 0,
-                        ),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "target_uri", "http_body"]
-            )
+    def make(did):
+        uri = f"http://s{did % 7}.example/feed.xml?id={did}"
+        if did % 13 == 0:
+            return did, uri, b"junk bytes, not a feed"
+        n = 1 + did % 4
+        entries = [
+            {
+                "link": (
+                    f"http://s{(3 * did + j) % 7}.example"
+                    f"/feed/{did}/{j}"
+                ),
+                "title": f"item {did} {j}",
+                "published": (
+                    f"2024-01-0{1 + j % 7}" if j % 2 == 0 else None
+                ),
+                "id": f"id-{did}-{j}" if j % 3 == 0 else None,
+            }
+            for j in range(n)
+        ]
+        return (
+            did,
+            uri,
+            build_feed(
+                entries,
+                kind="rss" if did % 2 == 0 else "atom",
+                title=f"feed {did}",
+                gzipped=did % 5 == 0,
+            ),
+        )
 
-    media = docs.mapInPandas(
-        make, "doc_id long, target_uri string, http_body binary"
+    media = _fixture_rows(
+        docs, make, "doc_id long, target_uri string, http_body binary"
     )
     m = feed_entries(media)
     kind = F.coalesce(F.col("kind"), F.lit("dead"))
@@ -5921,45 +5508,34 @@ FROM v GROUP BY 1
     "the follow-able frontier-edge count sit under one hash.",
 )
 def robots_meta_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..operators.crawl import html_extract, page_links
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                uri = f"http://s{did % 7}.example/p/{did}"
-                if did % 13 == 0:
-                    rows.append((did, uri, None))
-                    continue
-                meta = (
-                    '<meta name="robots" content="noindex, nofollow">'
-                    if did % 4 == 0
-                    else '<meta name="robots" content="none">'
-                    if did % 4 == 1
-                    else '<meta name="robots" content="noarchive">'
-                    if did % 4 == 2
-                    else ""
-                )
-                html = (
-                    f"<html><head>{meta}</head><body>"
-                    f'<a href="/a/{did}">a</a> '
-                    f'<a href="/b/{did}" rel="nofollow">b</a> '
-                    f'<a href="/c/{did}" rel="ugc sponsored">c</a>'
-                    "</body></html>"
-                )
-                rows.append((did, uri, html))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "target_uri", "html"]
-            )
+    def make(did):
+        uri = f"http://s{did % 7}.example/p/{did}"
+        if did % 13 == 0:
+            return did, uri, None
+        meta = (
+            '<meta name="robots" content="noindex, nofollow">'
+            if did % 4 == 0
+            else '<meta name="robots" content="none">'
+            if did % 4 == 1
+            else '<meta name="robots" content="noarchive">'
+            if did % 4 == 2
+            else ""
+        )
+        html = (
+            f"<html><head>{meta}</head><body>"
+            f'<a href="/a/{did}">a</a> '
+            f'<a href="/b/{did}" rel="nofollow">b</a> '
+            f'<a href="/c/{did}" rel="ugc sponsored">c</a>'
+            "</body></html>"
+        )
+        return did, uri, html
 
-    media = docs.mapInPandas(
-        make, "doc_id long, target_uri string, html string"
+    media = _fixture_rows(
+        docs, make, "doc_id long, target_uri string, html string"
     )
     pages = html_extract(media, html_col="html")
     d = F.col("doc_id")
@@ -6038,41 +5614,31 @@ FROM v GROUP BY 1
     "under one hash.",
 )
 def fmp4_fragment_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.mp4 import build_mp4
     from ..sources import mp4_tracks
     from ..tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                if did % 13 == 0:
-                    rows.append((did, b"junk bytes, not an mp4"))
-                    continue
-                nf = 1 + did % 3
-                rows.append(
-                    (
-                        did,
-                        build_mp4(
-                            1 + did % 4,
-                            video=(
-                                "avc1" if did % 2 == 0 else "hev1",
-                                320, 240, 24,
-                            ),
-                            fragments=[
-                                8 * (j + 1) + did % 5 for j in range(nf)
-                            ],
-                        ),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        if did % 13 == 0:
+            return did, b"junk bytes, not an mp4"
+        nf = 1 + did % 3
+        return (
+            did,
+            build_mp4(
+                1 + did % 4,
+                video=(
+                    "avc1" if did % 2 == 0 else "hev1",
+                    320, 240, 24,
+                ),
+                fragments=[
+                    8 * (j + 1) + did % 5 for j in range(nf)
+                ],
+            ),
+        )
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     m = mp4_tracks(media)
     codec = F.coalesce(
         F.col("codec"),
@@ -6127,48 +5693,37 @@ FROM v GROUP BY 1
     "duplicate counts and description stats sit under one hash.",
 )
 def canonical_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..operators.crawl import html_extract, resolved_url_col
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                uri = f"http://s{did % 7}.example/p/{did}"
-                if did % 13 == 0:
-                    rows.append((did, uri, None))
-                    continue
-                canon = (
-                    f"http://canon.example/c/{did // 4}"
-                    if did % 2 == 0
-                    else f"/c/{did}"
-                )
-                metas = [f'<link rel="canonical" href="{canon}">']
-                if did % 3 == 0:
-                    metas.append(
-                        f'<meta name="description" content="meta desc {did}">'
-                    )
-                if did % 5 == 0:
-                    metas.append(
-                        '<meta property="og:description" '
-                        f'content="og desc {did}">'
-                    )
-                html = (
-                    f"<html><head>{''.join(metas)}</head>"
-                    f"<body><p>page {did}</p></body></html>"
-                )
-                rows.append((did, uri, html))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "target_uri", "html"]
+    def make(did):
+        uri = f"http://s{did % 7}.example/p/{did}"
+        if did % 13 == 0:
+            return did, uri, None
+        canon = (
+            f"http://canon.example/c/{did // 4}"
+            if did % 2 == 0
+            else f"/c/{did}"
+        )
+        metas = [f'<link rel="canonical" href="{canon}">']
+        if did % 3 == 0:
+            metas.append(
+                f'<meta name="description" content="meta desc {did}">'
             )
+        if did % 5 == 0:
+            metas.append(
+                '<meta property="og:description" '
+                f'content="og desc {did}">'
+            )
+        html = (
+            f"<html><head>{''.join(metas)}</head>"
+            f"<body><p>page {did}</p></body></html>"
+        )
+        return did, uri, html
 
-    media = docs.mapInPandas(
-        make, "doc_id long, target_uri string, html string"
+    media = _fixture_rows(
+        docs, make, "doc_id long, target_uri string, html string"
     )
     pages = html_extract(media, html_col="html").withColumn(
         "canon_url",
@@ -6234,42 +5789,31 @@ FROM v GROUP BY 1
     "one hash.",
 )
 def mp3_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.mp3 import build_mp3
     from ..sources import mp3_meta
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                if did % 13 == 0:
-                    rows.append((did, b"junk bytes, not an mp3"))
-                    continue
-                id3 = ("2.3", "2.4", "1", "none")[did % 4]
-                rows.append(
-                    (
-                        did,
-                        build_mp3(
-                            20 + did % 30,
-                            sample_rate=(44100, 48000, 32000)[did % 3],
-                            kbps=(96, 128, 160, 192, 256)[did % 5],
-                            title=(
-                                None if id3 == "none" else f"track {did}"
-                            ),
-                            id3=id3,
-                            vbr_every=4 if did % 7 == 0 else None,
-                            encoding=(0, 1, 3)[did % 3],
-                        ),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        if did % 13 == 0:
+            return did, b"junk bytes, not an mp3"
+        id3 = ("2.3", "2.4", "1", "none")[did % 4]
+        return (
+            did,
+            build_mp3(
+                20 + did % 30,
+                sample_rate=(44100, 48000, 32000)[did % 3],
+                kbps=(96, 128, 160, 192, 256)[did % 5],
+                title=(
+                    None if id3 == "none" else f"track {did}"
+                ),
+                id3=id3,
+                vbr_every=4 if did % 7 == 0 else None,
+                encoding=(0, 1, 3)[did % 3],
+            ),
+        )
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     m = mp3_meta(media)
     id3 = F.coalesce(
         F.col("id3_version"),
@@ -6328,49 +5872,39 @@ FROM v GROUP BY 1
     "counts sit under one hash.",
 )
 def svg_image_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.svg import build_svg
     from ..sources import svg_meta
     from ..tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                if did % 13 == 0:
-                    rows.append((did, b"junk bytes, not an svg"))
-                    continue
-                p = did % 3
-                if p == 0:
-                    width, height = 16 + did % 17, 9 + did % 11
-                    viewbox = None
-                elif p == 1:
-                    width = height = None
-                    viewbox = (0, 0, 24 + did % 13, 12 + did % 7)
-                else:
-                    width, height = f"{50 + did % 50}%", "100%"
-                    viewbox = (0, 0, 24 + did % 13, 12 + did % 7)
-                rows.append(
-                    (
-                        did,
-                        build_svg(
-                            width,
-                            height,
-                            viewbox=viewbox,
-                            n_shapes=1 + did % 5,
-                            script=did % 7 == 0,
-                            title=f"doc {did}" if did % 5 == 0 else None,
-                            gzipped=did % 4 == 0,
-                        ),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        if did % 13 == 0:
+            return did, b"junk bytes, not an svg"
+        p = did % 3
+        if p == 0:
+            width, height = 16 + did % 17, 9 + did % 11
+            viewbox = None
+        elif p == 1:
+            width = height = None
+            viewbox = (0, 0, 24 + did % 13, 12 + did % 7)
+        else:
+            width, height = f"{50 + did % 50}%", "100%"
+            viewbox = (0, 0, 24 + did % 13, 12 + did % 7)
+        return (
+            did,
+            build_svg(
+                width,
+                height,
+                viewbox=viewbox,
+                n_shapes=1 + did % 5,
+                script=did % 7 == 0,
+                title=f"doc {did}" if did % 5 == 0 else None,
+                gzipped=did % 4 == 0,
+            ),
+        )
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     m = svg_meta(media)
     kind = (
         F.when(~F.col("parse_ok"), F.lit("dead"))
@@ -6438,42 +5972,32 @@ FROM v GROUP BY 1
     "under one hash.",
 )
 def flac_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.flac import build_flac
     from ..sources import flac_meta
     from ..tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                if did % 13 == 0:
-                    rows.append((did, b"junk bytes, not a flac"))
-                    continue
-                sr = (44100, 48000, 96000)[did % 3]
-                rows.append(
-                    (
-                        did,
-                        build_flac(
-                            sr * (1 + did % 9) + did % 7,
-                            sample_rate=sr,
-                            channels=1 + did % 4,
-                            bits_per_sample=16 if did % 2 == 0 else 24,
-                            title=(
-                                None if did % 4 == 3 else f"track {did}"
-                            ),
-                            picture=did % 5 == 0,
-                            padding=did % 3 * 8,
-                        ),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        if did % 13 == 0:
+            return did, b"junk bytes, not a flac"
+        sr = (44100, 48000, 96000)[did % 3]
+        return (
+            did,
+            build_flac(
+                sr * (1 + did % 9) + did % 7,
+                sample_rate=sr,
+                channels=1 + did % 4,
+                bits_per_sample=16 if did % 2 == 0 else 24,
+                title=(
+                    None if did % 4 == 3 else f"track {did}"
+                ),
+                picture=did % 5 == 0,
+                padding=did % 3 * 8,
+            ),
+        )
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     m = flac_meta(media)
     rate = F.coalesce(
         F.col("sample_rate").cast("string"), F.lit("dead")
@@ -6539,48 +6063,38 @@ FROM v GROUP BY 1
     "extra_streams each add one BOS page.",
 )
 def ogg_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.ogg import build_ogg
     from ..sources import ogg_meta
     from ..tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                if did % 13 == 0:
-                    rows.append((did, b"junk bytes, not an ogg"))
-                    continue
-                codec = ("vorbis", "opus", "unknown")[did % 3]
-                if codec == "vorbis":
-                    sr = (44100, 48000, 32000, 22050, 8000)[did % 5]
-                    granule = sr * (1 + did % 6) + did % 11
-                    ps = 0
-                else:
-                    sr = 48000
-                    granule = 48000 * (1 + did % 6) + did % 11
-                    ps = did % 400
-                rows.append(
-                    (
-                        did,
-                        build_ogg(
-                            codec,
-                            granule,
-                            sample_rate=sr,
-                            channels=1 + did % 2,
-                            pre_skip=ps,
-                            n_audio_pages=1 + did % 4,
-                            extra_streams=did % 3,
-                        ),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        if did % 13 == 0:
+            return did, b"junk bytes, not an ogg"
+        codec = ("vorbis", "opus", "unknown")[did % 3]
+        if codec == "vorbis":
+            sr = (44100, 48000, 32000, 22050, 8000)[did % 5]
+            granule = sr * (1 + did % 6) + did % 11
+            ps = 0
+        else:
+            sr = 48000
+            granule = 48000 * (1 + did % 6) + did % 11
+            ps = did % 400
+        return (
+            did,
+            build_ogg(
+                codec,
+                granule,
+                sample_rate=sr,
+                channels=1 + did % 2,
+                pre_skip=ps,
+                n_audio_pages=1 + did % 4,
+                extra_streams=did % 3,
+            ),
+        )
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     m = ogg_meta(media)
     codec = F.coalesce(F.col("codec"), F.lit("dead"))
     return m.groupBy(codec.alias("codec")).agg(
@@ -6641,58 +6155,48 @@ FROM v GROUP BY 1
     "length sums (digit-arithmetic titles) sit under one hash.",
 )
 def structured_data_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..operators.crawl import html_extract
     from ..tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                if did % 13 == 0:
-                    rows.append((did, None))
-                    continue
-                k = did % 4
-                if k == 0:
-                    t = (
-                        '["Product","Offer"]' if did % 2 == 0
-                        else '"Article"'
-                    )
-                    body = (
-                        '<script type="application/ld+json">'
-                        f'{{"@type":{t}}}</script>'
-                        f'<meta property="og:title" content="t{did}">'
-                        '<meta property="og:type" content="article">'
-                    )
-                elif k == 1:
-                    ents = ",".join(
-                        f'{{"@type":"Thing{i}"}}'
-                        for i in range(1 + did % 3)
-                    )
-                    body = (
-                        '<script type="application/ld+json">'
-                        f'{{"@graph":[{ents}]}}</script>'
-                        f'<meta property="og:title" content="t{did}">'
-                    )
-                elif k == 2:
-                    body = (
-                        '<script type="application/ld+json">{not json'
-                        "</script>"
-                        '<meta property="og:image" content="img.png">'
-                        '<meta property="og:image" content="dup.png">'
-                    )
-                else:
-                    body = ""
-                rows.append(
-                    (did, f"<html><head>{body}</head><body>p</body></html>")
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "html"])
+    def make(did):
+        if did % 13 == 0:
+            return did, None
+        k = did % 4
+        if k == 0:
+            t = (
+                '["Product","Offer"]' if did % 2 == 0
+                else '"Article"'
+            )
+            body = (
+                '<script type="application/ld+json">'
+                f'{{"@type":{t}}}</script>'
+                f'<meta property="og:title" content="t{did}">'
+                '<meta property="og:type" content="article">'
+            )
+        elif k == 1:
+            ents = ",".join(
+                f'{{"@type":"Thing{i}"}}'
+                for i in range(1 + did % 3)
+            )
+            body = (
+                '<script type="application/ld+json">'
+                f'{{"@graph":[{ents}]}}</script>'
+                f'<meta property="og:title" content="t{did}">'
+            )
+        elif k == 2:
+            body = (
+                '<script type="application/ld+json">{not json'
+                "</script>"
+                '<meta property="og:image" content="img.png">'
+                '<meta property="og:image" content="dup.png">'
+            )
+        else:
+            body = ""
+        return did, f"<html><head>{body}</head><body>p</body></html>"
 
-    media = docs.mapInPandas(make, "doc_id long, html string")
+    media = _fixture_rows(docs, make, "doc_id long, html string")
     pages = html_extract(media, html_col="html")
     d = F.col("doc_id")
     kind = (
@@ -6761,44 +6265,36 @@ FROM v GROUP BY 1
     "lengths and cue-id counts sit under one hash.",
 )
 def subtitle_track_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.subtitles import build_srt, build_vtt
     from ..sources import subtitle_cues
     from ..tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                if did % 13 == 0:
-                    rows.append((did, b"\xff\xfejunk, not a subtitle"))
-                    continue
-                k = 1 + did % 6
-                per = 1000 + 100 * (did % 7)
-                cues = [
-                    {
-                        "start_ms": i * per,
-                        "end_ms": (i + 1) * per,
-                        "text": f"cue {i} of {did}",
-                        **(
-                            {"idx": f"c{i}"}
-                            if did % 2 == 1 and did % 3 == 0
-                            else {}
-                        ),
-                    }
-                    for i in range(k)
-                ]
-                raw = (
-                    build_srt(cues) if did % 2 == 0 else build_vtt(cues)
-                ).encode("utf-8")
-                rows.append((did, raw))
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        if did % 13 == 0:
+            return did, b"\xff\xfejunk, not a subtitle"
+        k = 1 + did % 6
+        per = 1000 + 100 * (did % 7)
+        cues = [
+            {
+                "start_ms": i * per,
+                "end_ms": (i + 1) * per,
+                "text": f"cue {i} of {did}",
+                **(
+                    {"idx": f"c{i}"}
+                    if did % 2 == 1 and did % 3 == 0
+                    else {}
+                ),
+            }
+            for i in range(k)
+        ]
+        raw = (
+            build_srt(cues) if did % 2 == 0 else build_vtt(cues)
+        ).encode("utf-8")
+        return did, raw
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     m = subtitle_cues(media)
     kind = F.coalesce(
         F.col("kind"),
@@ -6869,56 +6365,48 @@ FROM v GROUP BY 1
     "under one hash.",
 )
 def hls_playlist_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.hls import build_master, build_media
     from ..sources import hls_meta
     from ..tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                if did % 13 == 0:
-                    rows.append((did, b"junk bytes, not a playlist"))
-                    continue
-                if did % 3 == 0:
-                    nv = 1 + did % 4
-                    raw = build_master(
-                        [
+    def make(did):
+        if did % 13 == 0:
+            return did, b"junk bytes, not a playlist"
+        if did % 3 == 0:
+            nv = 1 + did % 4
+            raw = build_master(
+                [
+                    {
+                        "bandwidth": 100000 * (v + 1) + did,
+                        **(
                             {
-                                "bandwidth": 100000 * (v + 1) + did,
-                                **(
-                                    {
-                                        "width": 320 * (v + 1),
-                                        "height": 180 * (v + 1),
-                                    }
-                                    if v % 2 == 0
-                                    else {}
-                                ),
-                                "codecs": (
-                                    "avc1.64001f,mp4a.40.2"
-                                    if v == 0
-                                    else None
-                                ),
-                                "uri": f"v{v}.m3u8",
+                                "width": 320 * (v + 1),
+                                "height": 180 * (v + 1),
                             }
-                            for v in range(nv)
-                        ]
-                    )
-                else:
-                    k = 1 + did % 5
-                    per = 2000 + 100 * (did % 9)
-                    raw = build_media(
-                        [per] * k, endlist=did % 2 == 0
-                    )
-                rows.append((did, raw.encode("utf-8")))
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+                            if v % 2 == 0
+                            else {}
+                        ),
+                        "codecs": (
+                            "avc1.64001f,mp4a.40.2"
+                            if v == 0
+                            else None
+                        ),
+                        "uri": f"v{v}.m3u8",
+                    }
+                    for v in range(nv)
+                ]
+            )
+        else:
+            k = 1 + did % 5
+            per = 2000 + 100 * (did % 9)
+            raw = build_media(
+                [per] * k, endlist=did % 2 == 0
+            )
+        return did, raw.encode("utf-8")
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     m = hls_meta(media)
     kind = F.coalesce(F.col("kind"), F.lit("dead"))
     return m.groupBy(kind.alias("kind")).agg(
@@ -6983,54 +6471,43 @@ FROM v GROUP BY 1
     "plants junk -> one parse_ok=false row (grouped as 'dead').",
 )
 def eml_message_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.mime import build_eml
     from ..sources import eml_messages
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                if did % 13 == 0:
-                    rows.append((did, b"\x00\xffjunk, not an email"))
-                    continue
-                k = did % 4
-                subj = (f"ré {did}" if did % 5 == 0
-                        else f"re {did}")
-                atts = (
-                    [
-                        (f"f{i}.bin", bytes([65 + did % 26]) * (5 + did % 7))
-                        for i in range(1 + did % 3)
-                    ]
-                    if k >= 2
-                    else None
-                )
-                rows.append(
-                    (
-                        did,
-                        build_eml(
-                            from_addr=f"u{did}@example.org",
-                            to_addrs=", ".join(
-                                f"r{i}@example.org"
-                                for i in range(1 + did % 3)
-                            ),
-                            subject=subj,
-                            text=f"body {did} " * (1 + did % 5),
-                            html=(
-                                f"<p>{did}</p>" if k in (1, 3) else None
-                            ),
-                            attachments=atts,
-                        ),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        if did % 13 == 0:
+            return did, b"\x00\xffjunk, not an email"
+        k = did % 4
+        subj = (f"ré {did}" if did % 5 == 0
+                else f"re {did}")
+        atts = (
+            [
+                (f"f{i}.bin", bytes([65 + did % 26]) * (5 + did % 7))
+                for i in range(1 + did % 3)
+            ]
+            if k >= 2
+            else None
+        )
+        return (
+            did,
+            build_eml(
+                from_addr=f"u{did}@example.org",
+                to_addrs=", ".join(
+                    f"r{i}@example.org"
+                    for i in range(1 + did % 3)
+                ),
+                subject=subj,
+                text=f"body {did} " * (1 + did % 5),
+                html=(
+                    f"<p>{did}</p>" if k in (1, 3) else None
+                ),
+                attachments=atts,
+            ),
+        )
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     m = eml_messages(media)
     d = F.col("archive_id")
     kind = (
@@ -7107,68 +6584,53 @@ FROM v GROUP BY 1
     "in SQL.",
 )
 def markdown_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.markdown import build_markdown, parse_markdown
     from ..tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    cols = [
-        "paras", "n_lines", "n_words", "text_len", "n_headings",
-        "level_sum", "n_links", "url_len", "n_images", "n_code",
-        "code_chars",
-    ]
+    def norm(did):
+        md = build_markdown(
+            n_paras=1 + did % 3,
+            para_words=2 + did % 5,
+            headings=(
+                [(1 + did % 6, f"h {did}")]
+                if did % 2 == 0
+                else None
+            ),
+            links=(
+                [(f"l{did}", f"http://h{did % 7}.example/{did}")]
+                if did % 3 == 0
+                else None
+            ),
+            images=(
+                [(f"a{did}", f"http://i.example/{did}.png")]
+                if did % 4 == 0
+                else None
+            ),
+            code=(
+                [("py", ["x" * (1 + did % 4)])]
+                if did % 5 == 0
+                else None
+            ),
+        )
+        r = parse_markdown(md)
+        return (
+            1 + did % 3,
+            r["n_lines"],
+            r["n_words"],
+            len(r["text"]),
+            len(r["headings"]),
+            sum(lvl for lvl, _ in r["headings"]),
+            len(r["links"]),
+            sum(len(u) for _, u in r["links"]),
+            len(r["images"]),
+            len(r["code_blocks"]),
+            sum(c["n_chars"] for c in r["code_blocks"]),
+        )
 
-    def norm(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                md = build_markdown(
-                    n_paras=1 + did % 3,
-                    para_words=2 + did % 5,
-                    headings=(
-                        [(1 + did % 6, f"h {did}")]
-                        if did % 2 == 0
-                        else None
-                    ),
-                    links=(
-                        [(f"l{did}", f"http://h{did % 7}.example/{did}")]
-                        if did % 3 == 0
-                        else None
-                    ),
-                    images=(
-                        [(f"a{did}", f"http://i.example/{did}.png")]
-                        if did % 4 == 0
-                        else None
-                    ),
-                    code=(
-                        [("py", ["x" * (1 + did % 4)])]
-                        if did % 5 == 0
-                        else None
-                    ),
-                )
-                r = parse_markdown(md)
-                rows.append(
-                    (
-                        1 + did % 3,
-                        r["n_lines"],
-                        r["n_words"],
-                        len(r["text"]),
-                        len(r["headings"]),
-                        sum(lvl for lvl, _ in r["headings"]),
-                        len(r["links"]),
-                        sum(len(u) for _, u in r["links"]),
-                        len(r["images"]),
-                        len(r["code_blocks"]),
-                        sum(c["n_chars"] for c in r["code_blocks"]),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    stats = docs.mapInPandas(
-        norm,
+    stats = _fixture_rows(
+        docs, norm,
         "paras long, n_lines int, n_words int, text_len int,"
         " n_headings int, level_sum int, n_links int, url_len int,"
         " n_images int, n_code int, code_chars int",
@@ -7238,60 +6700,50 @@ FROM v GROUP BY 1
     "'dead').",
 )
 def png_metadata_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.pngmeta import build_png_meta
     from ..sources import png_text_meta
     from ..tables import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                if did % 13 == 0:
-                    rows.append((did, b"junk bytes, not a png"))
-                    continue
-                texts = [("Title", f"doc {did}", "text")]
-                if did % 3 == 0:
-                    texts.append(("Comment", f"c {did}", "ztxt"))
-                if did % 4 == 0:
-                    texts.append(
-                        ("Author", f"aé {did}",
-                         "itxtz" if did % 8 == 0 else "itxt")
-                    )
-                rows.append(
-                    (
-                        did,
-                        build_png_meta(
-                            2 + did % 3,
-                            2 + did % 2,
-                            texts=texts,
-                            exif=(
-                                b"II*\x00" + b"\x00" * (did % 16)
-                                if did % 5 == 0
-                                else None
-                            ),
-                            time=(
-                                (2020 + did % 6, 1 + did % 12,
-                                 1 + did % 28, did % 24, did % 60,
-                                 did % 60)
-                                if did % 2 == 0
-                                else None
-                            ),
-                            dpi=(
-                                (72, 96, 150)[did % 3]
-                                if did % 7 == 0
-                                else None
-                            ),
-                        ),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+    def make(did):
+        if did % 13 == 0:
+            return did, b"junk bytes, not a png"
+        texts = [("Title", f"doc {did}", "text")]
+        if did % 3 == 0:
+            texts.append(("Comment", f"c {did}", "ztxt"))
+        if did % 4 == 0:
+            texts.append(
+                ("Author", f"aé {did}",
+                 "itxtz" if did % 8 == 0 else "itxt")
+            )
+        return (
+            did,
+            build_png_meta(
+                2 + did % 3,
+                2 + did % 2,
+                texts=texts,
+                exif=(
+                    b"II*\x00" + b"\x00" * (did % 16)
+                    if did % 5 == 0
+                    else None
+                ),
+                time=(
+                    (2020 + did % 6, 1 + did % 12,
+                     1 + did % 28, did % 24, did % 60,
+                     did % 60)
+                    if did % 2 == 0
+                    else None
+                ),
+                dpi=(
+                    (72, 96, 150)[did % 3]
+                    if did % 7 == 0
+                    else None
+                ),
+            ),
+        )
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     m = png_text_meta(media)
     width = F.coalesce(F.col("width").cast("string"), F.lit("dead"))
     return m.groupBy(width.alias("width")).agg(
@@ -7357,55 +6809,44 @@ FROM v GROUP BY 1
     "plants junk -> one parse_ok=false row (grouped as 'dead').",
 )
 def ics_calendar_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     from ..functions.ics import build_ics
     from ..sources import ics_events
-    from ..tables import load
 
     docs = _doc_ids(spark, sf_dir)
 
-    def make(batches):
-        for pdf in batches:
-            rows = []
-            for x in pdf["doc_id"]:
-                did = int(x)
-                if did % 13 == 0:
-                    rows.append((did, b"junk bytes, not a calendar"))
-                    continue
-                k = 1 + did % 4
-                dur = 600 * (1 + did % 5)
-                events = []
-                for i in range(k):
-                    summary = (
-                        f"ev {i}, doc {did}" if did % 2 == 0
-                        else f"ev {i} of {did}"
-                    )
-                    e = {
-                        "uid": f"e{i}-{did}@x",
-                        "summary": summary,
-                        "dtstart": f"20260105T{10 + i:02d}0000Z",
-                        "rrule": i == 0 and did % 3 == 0,
-                        "attendees": did % 4,
-                    }
-                    if i % 2 == 0:
-                        # dur = (1+did%5)*10 minutes, same hour
-                        e["dtend"] = (
-                            f"20260105T{10 + i:02d}"
-                            f"{(1 + did % 5) * 10:02d}00Z"
-                        )
-                    else:
-                        e["duration_s"] = dur
-                    events.append(e)
-                rows.append(
-                    (
-                        did,
-                        build_ics(events, todos=did % 3).encode("utf-8"),
-                    )
+    def make(did):
+        if did % 13 == 0:
+            return did, b"junk bytes, not a calendar"
+        k = 1 + did % 4
+        dur = 600 * (1 + did % 5)
+        events = []
+        for i in range(k):
+            summary = (
+                f"ev {i}, doc {did}" if did % 2 == 0
+                else f"ev {i} of {did}"
+            )
+            e = {
+                "uid": f"e{i}-{did}@x",
+                "summary": summary,
+                "dtstart": f"20260105T{10 + i:02d}0000Z",
+                "rrule": i == 0 and did % 3 == 0,
+                "attendees": did % 4,
+            }
+            if i % 2 == 0:
+                # dur = (1+did%5)*10 minutes, same hour
+                e["dtend"] = (
+                    f"20260105T{10 + i:02d}"
+                    f"{(1 + did % 5) * 10:02d}00Z"
                 )
-            yield pd.DataFrame(rows, columns=["archive_id", "content"])
+            else:
+                e["duration_s"] = dur
+            events.append(e)
+        return (
+            did,
+            build_ics(events, todos=did % 3).encode("utf-8"),
+        )
 
-    media = docs.mapInPandas(make, "archive_id long, content binary")
+    media = _fixture_rows(docs, make, "archive_id long, content binary")
     m = ics_events(media)
     kind = (
         F.when(~F.col("parse_ok"), F.lit("dead"))

@@ -3,8 +3,8 @@
 The reference's scans, generalized: explicit-schema CSV (S1), parquet
 (S2-S4), binary files standing in for the Databricks-only ``image`` format
 (S5 — decode happens in ``functions.colors`` / ``functions.multimodal``
-UDFs), schema-inferred JSON Lines (S6), and local rows (S7). The engine adds
-a parquet sink (S8 — the reference only ever ``show()``s).
+UDFs) and schema-inferred JSON Lines (S6). The engine adds a parquet sink
+(S8 — the reference only ever ``show()``s).
 
 Scale notes: explicit schemas avoid inference scans; binaryFile reads
 parallelize per file and push ``pathGlobFilter`` down to the listing; the
@@ -174,11 +174,6 @@ def read_images(
         .option("dropInvalid", str(drop_invalid).lower())
         .load(path)
     )
-
-
-def local_rows(spark: SparkSession, rows: list, schema) -> DataFrame:
-    """S7: driver-local rows (:1010-1011)."""
-    return spark.createDataFrame(rows, schema)
 
 
 def write_sorted_parquet(
@@ -517,6 +512,24 @@ def tar_members(
     return df.mapInPandas(mapper, schema)
 
 
+def schema_field_names(schema: str) -> list[str]:
+    """Field names of a DDL schema string, split on TOP-LEVEL commas only:
+    decimal(p,s) / struct<...> / map<...> field types legally contain
+    commas, and a naive split would mis-derive the names (and any width
+    derived from them) and fail only at executor runtime."""
+    fields, depth, start = [], 0, 0
+    for i, ch in enumerate(schema):
+        if ch in "(<":
+            depth += 1
+        elif ch in ")>":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            fields.append(schema[start:i])
+            start = i + 1
+    fields.append(schema[start:])
+    return [f.strip().split()[0] for f in fields]
+
+
 def _binary_meta_source(
     df: DataFrame,
     content_col: str,
@@ -538,7 +551,8 @@ def _binary_meta_source(
 
     ``schema_tail`` is the scalar column list between the id and
     parse_ok (``"width int, height int"``); the dead-letter row width
-    and the pandas column names are derived from it, so a source can
+    and the pandas column names are derived from it
+    (:func:`schema_field_names`), so a source can
     never hand-count its Nones wrong (the r14 deferred review
     finding)."""
     from collections.abc import Iterator
@@ -546,21 +560,7 @@ def _binary_meta_source(
     import pandas as pd
 
     schema = f"{id_col} long, {schema_tail}, parse_ok boolean"
-    # split on TOP-LEVEL commas only — decimal(p,s) / struct<...> /
-    # map<...> field types legally contain commas (review finding:
-    # a naive split would mis-derive the dead-letter width and fail
-    # only at executor runtime)
-    fields, depth, start = [], 0, 0
-    for i, ch in enumerate(schema):
-        if ch in "(<":
-            depth += 1
-        elif ch in ")>":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            fields.append(schema[start:i])
-            start = i + 1
-    fields.append(schema[start:])
-    names = [f.strip().split()[0] for f in fields]
+    names = schema_field_names(schema)
     n_vals = len(names) - 2  # between id and parse_ok
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -3,9 +3,12 @@ evolution via mergeSchema."""
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from data_engineering_assignment_spark import sources
+from data_engineering_assignment_spark.queries.catalog_sources import _fixture_rows
 
 
 def test_jsonl_corrupt_records_quarantined(spark, tmp_path):
@@ -358,3 +361,53 @@ def test_zip_members_zip64(spark):
         )
         assert got == [("a.bin", 1000, True), ("b.txt", 10, True)]
     assert len(by_id[3]) == 1 and not by_id[3][0]["parse_ok"]
+
+
+# --- _fixture_rows: the one per-doc generator every fixture gate shares ---
+
+
+def test_fixture_rows_one_row_per_input_row_with_empty_partitions(spark):
+    docs = spark.range(5, numPartitions=8)  # 3 of the 8 partitions are empty
+    assert docs.rdd.glom().map(len).collect().count(0) == 3
+    out = _fixture_rows(docs, lambda did: (did, 10 * did), "doc_id long, v long")
+    assert sorted(map(tuple, out.collect())) == [(i, 10 * i) for i in range(5)]
+
+
+def test_fixture_rows_passes_did_as_python_int(spark):
+    out = _fixture_rows(
+        spark.range(4, numPartitions=2),
+        lambda did: (did, type(did).__name__),
+        "doc_id long, kind string",
+    )
+    assert {r["kind"] for r in out.collect()} == {"int"}
+
+
+def test_fixture_rows_names_split_on_top_level_commas(spark):
+    schema = (
+        "doc_id long, price decimal(10,2), s struct<a:int,b:string>, tag string"
+    )
+    assert sources.schema_field_names(schema) == ["doc_id", "price", "s", "tag"]
+    out = _fixture_rows(
+        spark.range(3, numPartitions=1),
+        lambda did: (did, Decimal(did) / 4, {"a": did, "b": f"b{did}"}, f"t{did}"),
+        schema,
+    )
+    got = sorted(
+        (r["doc_id"], r["price"], r["s"]["a"], r["s"]["b"], r["tag"])
+        for r in out.collect()
+    )
+    assert got == [
+        (i, Decimal(i) / 4, i, f"b{i}", f"t{i}") for i in range(3)
+    ]
+
+
+def test_fixture_rows_extra_columns_reach_the_builder_in_order(spark):
+    docs = spark.createDataFrame(
+        [(1, "a", 10), (2, "bb", 20)], "doc_id long, text string, k long"
+    )
+    out = _fixture_rows(
+        docs,
+        lambda did, text, k: (did, f"{text}:{k}"),
+        "doc_id long, joined string",
+    )
+    assert sorted(map(tuple, out.collect())) == [(1, "a:10"), (2, "bb:20")]

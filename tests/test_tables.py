@@ -17,10 +17,6 @@ import pyarrow.parquet as pq
 import pytest
 
 from data_engineering_assignment_spark import sources, tables
-from data_engineering_assignment_spark.operators.parallelism import (
-    ensure_min_parallelism,
-    parquet_rows,
-)
 
 _GROUPS = itertools.count()
 
@@ -128,24 +124,3 @@ def test_non_local_paths_are_not_memoized(spark, tmp_path):
     assert local is not None and uri is not None
     assert local[2] == uri[2]  # same file, same fingerprint
 
-
-def test_parquet_rows_after_rewrite(tmp_path):
-    path = tmp_path / "t.parquet"
-    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
-    assert parquet_rows(str(path)) == 3
-    pq.write_table(pa.table({"a": [1, 2, 3, 4, 5]}), path)
-    assert parquet_rows(str(path)) == 5
-    d = tmp_path / "d"
-    d.mkdir()
-    pq.write_table(pa.table({"a": [1]}), d / "part-0.parquet")
-    assert parquet_rows(str(d)) == 1
-    pq.write_table(pa.table({"a": [1, 2]}), d / "part-1.parquet")
-    assert parquet_rows(str(d)) == 3
-
-
-@pytest.mark.parametrize("rows_per_task", [0, -5])
-def test_rows_per_task_must_be_positive(spark, rows_per_task):
-    with pytest.raises(ValueError, match="rows_per_task"):
-        ensure_min_parallelism(
-            spark.range(10), rows_per_task=rows_per_task, rows_fn=lambda: 10
-        )
