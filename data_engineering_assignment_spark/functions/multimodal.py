@@ -1457,38 +1457,27 @@ def encode_wav(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
 
 
 def extract_audio_features(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """Audio feature extraction over WAV binary columns (mapInPandas; bytes
-    never leave the executor): duration, RMS energy, peak amplitude and
-    zero-crossing rate per row — the audio analog of
-    :func:`extract_mean_color`."""
-    schema = (
-        "path string, media_type string, sample_rate int, n_channels int,"
-        " duration_s double, rms double, peak double, zero_cross_rate double"
+    """Audio feature extraction over WAV binary columns, keyed by ``path``
+    (one ``sources._binary_meta_source`` pass; bytes never leave the
+    executor): sample rate, channels, duration, RMS energy, peak amplitude
+    and zero-crossing rate per row — the audio analog of
+    :func:`extract_mean_color`. An undecodable file survives as one
+    ``parse_ok = false`` row with NULL features."""
+    from ..sources import _binary_meta_source
+
+    def rows_fn(decoded):
+        samples, meta = decoded
+        mono = samples.mean(axis=1)
+        n = len(mono)
+        dur = n / meta["sample_rate"] if meta["sample_rate"] else 0.0
+        rms = float(np.sqrt(np.mean(mono**2))) if n else 0.0
+        peak = float(np.abs(mono).max()) if n else 0.0
+        zcr = float(np.mean(np.signbit(mono[1:]) != np.signbit(mono[:-1]))) if n > 1 else 0.0
+        return [(meta["sample_rate"], meta["n_channels"], dur, rms, peak, zcr)]
+
+    return _binary_meta_source(
+        df, content_col, "path", decode_wav,
+        "sample_rate int, n_channels int, duration_s double, rms double,"
+        " peak double, zero_cross_rate double",
+        rows_fn,
     )
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for path, mtype, content in zip(
-                pdf["path"], pdf["media_type"], pdf[content_col]
-            ):
-                samples, meta = decode_wav(bytes(content))
-                mono = samples.mean(axis=1)
-                n = len(mono)
-                dur = n / meta["sample_rate"] if meta["sample_rate"] else 0.0
-                rms = float(np.sqrt(np.mean(mono**2))) if n else 0.0
-                peak = float(np.abs(mono).max()) if n else 0.0
-                zcr = float(np.mean(np.signbit(mono[1:]) != np.signbit(mono[:-1]))) if n > 1 else 0.0
-                rows.append(
-                    (path, mtype, meta["sample_rate"], meta["n_channels"],
-                     dur, rms, peak, zcr)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "path", "media_type", "sample_rate", "n_channels",
-                    "duration_s", "rms", "peak", "zero_cross_rate",
-                ],
-            )
-
-    return df.mapInPandas(mapper, schema)

@@ -915,66 +915,42 @@ def sitemap_entries(
     integer duration, 0 for media-less parsed entries). A
     malformed document survives as ONE parse_ok = false row and an
     entry-less one as a (kind, NULL-loc) row — countable dead-letter /
-    census rows, never dropped. Arrow-batched mapInPandas: sitemap bytes
-    never leave the executor; each input row fans out independently
-    (embarrassingly parallel, zero shuffle)."""
+    census rows, never dropped. One ``sources._binary_meta_source``
+    pass (binary ``content_col`` only): sitemap bytes never leave the
+    executor; each input row fans out independently (embarrassingly
+    parallel, zero shuffle)."""
     from ..functions.sitemaps import parse_sitemap
+    from ..sources import _binary_meta_source
 
-    schema = (
-        "sitemap_uri string, kind string, loc string, lastmod string,"
-        " changefreq string, priority string, n_images int,"
-        " n_videos int, video_duration_sum long, parse_ok boolean"
+    def rows_fn(r):
+        if not r["entries"]:
+            return [(r["kind"], None, None, None, None, None, None, None)]
+        return [
+            (
+                r["kind"],
+                e["loc"],
+                e["lastmod"],
+                e["changefreq"],
+                e["priority"],
+                len(e["images"]),
+                len(e["videos"]),
+                sum(
+                    v["duration"]
+                    for v in e["videos"]
+                    if v["duration"] is not None
+                ),
+            )
+            for e in r["entries"]
+        ]
+
+    return _binary_meta_source(
+        df.select(F.col(uri_col).alias("sitemap_uri"), content_col),
+        content_col, "sitemap_uri", parse_sitemap,
+        "kind string, loc string, lastmod string, changefreq string,"
+        " priority string, n_images int, n_videos int,"
+        " video_duration_sum long",
+        rows_fn,
     )
-    cols = [
-        "sitemap_uri", "kind", "loc", "lastmod", "changefreq", "priority",
-        "n_images", "n_videos", "video_duration_sum", "parse_ok",
-    ]
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for uri, raw in zip(pdf[uri_col], pdf[content_col]):
-                uri = None if uri is None else str(uri)
-                try:
-                    if raw is None:
-                        raise ValueError("no content")
-                    r = parse_sitemap(
-                        bytes(raw)
-                        if isinstance(raw, (bytes, bytearray))
-                        else str(raw)
-                    )
-                    if not r["entries"]:
-                        rows.append(
-                            (uri, r["kind"], None, None, None, None,
-                             None, None, None, True)
-                        )
-                    for e in r["entries"]:
-                        rows.append(
-                            (
-                                uri,
-                                r["kind"],
-                                e["loc"],
-                                e["lastmod"],
-                                e["changefreq"],
-                                e["priority"],
-                                len(e["images"]),
-                                len(e["videos"]),
-                                sum(
-                                    v["duration"]
-                                    for v in e["videos"]
-                                    if v["duration"] is not None
-                                ),
-                                True,
-                            )
-                        )
-                except Exception:
-                    rows.append(
-                        (uri, None, None, None, None, None,
-                         None, None, None, False)
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(mapper, schema)
 
 
 def feed_entries(
@@ -991,57 +967,27 @@ def feed_entries(
     parse_ok) — ``published`` stays the verbatim string. A malformed
     document survives as ONE parse_ok = false row and an entry-less
     one as a (kind, NULL-link) row — countable dead-letter / census
-    rows, never dropped. Arrow-batched mapInPandas, zero shuffle."""
+    rows, never dropped. One ``sources._binary_meta_source`` pass
+    (binary ``content_col`` only), zero shuffle."""
     from ..functions.feeds import parse_feed
+    from ..sources import _binary_meta_source
 
-    schema = (
-        "feed_uri string, kind string, feed_title string, link string,"
-        " title string, published string, entry_id string,"
-        " parse_ok boolean"
+    def rows_fn(r):
+        if not r["entries"]:
+            return [(r["kind"], r["title"], None, None, None, None)]
+        return [
+            (r["kind"], r["title"], e["link"], e["title"], e["published"],
+             e["id"])
+            for e in r["entries"]
+        ]
+
+    return _binary_meta_source(
+        df.select(F.col(uri_col).alias("feed_uri"), content_col),
+        content_col, "feed_uri", parse_feed,
+        "kind string, feed_title string, link string, title string,"
+        " published string, entry_id string",
+        rows_fn,
     )
-    cols = [
-        "feed_uri", "kind", "feed_title", "link", "title", "published",
-        "entry_id", "parse_ok",
-    ]
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for uri, raw in zip(pdf[uri_col], pdf[content_col]):
-                uri = None if uri is None else str(uri)
-                try:
-                    if raw is None:
-                        raise ValueError("no content")
-                    r = parse_feed(
-                        bytes(raw)
-                        if isinstance(raw, (bytes, bytearray))
-                        else str(raw)
-                    )
-                    if not r["entries"]:
-                        rows.append(
-                            (uri, r["kind"], r["title"], None, None,
-                             None, None, True)
-                        )
-                    for e in r["entries"]:
-                        rows.append(
-                            (
-                                uri,
-                                r["kind"],
-                                r["title"],
-                                e["link"],
-                                e["title"],
-                                e["published"],
-                                e["id"],
-                                True,
-                            )
-                        )
-                except Exception:
-                    rows.append(
-                        (uri, None, None, None, None, None, None, False)
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(mapper, schema)
 
 
 def warc_revisit_export(

@@ -7,8 +7,9 @@ detection is additive LLM-pipeline surface (crawled media corpora are
 full of re-encodes, gain/brightness tweaks and resizes of the same
 asset that byte-exact dedup misses).
 
-Scale shape: hashing is an Arrow-batched mapInPandas pass (per-row numpy
-DCT, embarrassingly parallel, zero shuffle — the codec-gate class);
+Scale shape: hashing is an Arrow-batched mapInPandas pass through
+``sources._binary_meta_source`` (per-row numpy DCT, embarrassingly
+parallel, zero shuffle — the codec-gate class);
 pair generation reuses :func:`operators.dedup.simhash_band_pairs`
 verbatim, so the 100 TB discipline is inherited: exact pigeonhole
 bit-band LSH (radius r needs r+1 bands, zero recall loss), SHUFFLE_HASH
@@ -18,41 +19,29 @@ on both self-join sides (never broadcast the corpus), one
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..functions.multimodal import decode_any
 from ..functions.phash import dhash64, phash63
+from ..sources import _binary_meta_source
 from .dedup import simhash_band_pairs
 
 
 def image_hashes(
     df: DataFrame, content_col: str = "content", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(id, phash, dhash, hash_ok) per media row: decode the binary column
+    """(id, phash, dhash, parse_ok) per media row: decode the binary column
     (any supported codec via decode_any) and fingerprint the FIRST frame.
-    Undecodable rows survive with hash_ok = false and NULL hashes — the
+    Undecodable rows survive with parse_ok = false and NULL hashes — the
     dead-letter discipline, never a dropped row."""
-    schema = f"{id_col} long, phash long, dhash long, hash_ok boolean"
 
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, content in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    frames, _ = decode_any(bytes(content))
-                    rows.append(
-                        (int(did), phash63(frames[0]), dhash64(frames[0]), True)
-                    )
-                except Exception:
-                    rows.append((int(did), None, None, False))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "phash", "dhash", "hash_ok"]
-            )
+    def rows_fn(decoded):
+        first = decoded[0][0]
+        return [(phash63(first), dhash64(first))]
 
-    return df.mapInPandas(mapper, schema)
+    return _binary_meta_source(
+        df, content_col, id_col, decode_any, "phash long, dhash long", rows_fn
+    )
 
 
 def image_phash_pairs(
@@ -66,7 +55,7 @@ def image_phash_pairs(
     (doc_a, doc_b, hamming), hamming <= radius, doc_a < doc_b. Delegates
     to the proven SimHash band machinery with bits=63."""
     return simhash_band_pairs(
-        hashes.filter("hash_ok").select(id_col, "phash"),
+        hashes.filter("parse_ok").select(id_col, "phash"),
         bits=63,
         bands=bands,
         radius=radius,
@@ -79,27 +68,17 @@ def image_phash_pairs(
 def audio_hashes(
     df: DataFrame, content_col: str = "content", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(id, aphash, hash_ok) per WAV media row: decode the binary column
+    """(id, aphash, parse_ok) per WAV media row: decode the binary column
     (any :func:`multimodal.decode_wav` profile) and fingerprint the clip
     with :func:`phash.aphash63`. Undecodable rows survive with
-    hash_ok = false and a NULL hash — the dead-letter discipline."""
+    parse_ok = false and a NULL hash — the dead-letter discipline."""
     from ..functions.multimodal import decode_wav
     from ..functions.phash import aphash63
 
-    schema = f"{id_col} long, aphash long, hash_ok boolean"
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, content in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    samples, _ = decode_wav(bytes(content))
-                    rows.append((int(did), aphash63(samples), True))
-                except Exception:
-                    rows.append((int(did), None, False))
-            yield pd.DataFrame(rows, columns=[id_col, "aphash", "hash_ok"])
-
-    return df.mapInPandas(mapper, schema)
+    return _binary_meta_source(
+        df, content_col, id_col, decode_wav, "aphash long",
+        lambda decoded: [(aphash63(decoded[0]),)],
+    )
 
 
 def audio_phash_pairs(
@@ -113,7 +92,7 @@ def audio_phash_pairs(
     fingerprints (doc_a, doc_b, hamming) — same banded machinery as
     :func:`image_phash_pairs`."""
     return simhash_band_pairs(
-        hashes.filter("hash_ok").select(id_col, "aphash"),
+        hashes.filter("parse_ok").select(id_col, "aphash"),
         bits=63,
         bands=bands,
         radius=radius,
@@ -126,29 +105,15 @@ def audio_phash_pairs(
 def video_hashes(
     df: DataFrame, content_col: str = "content", id_col: str = "doc_id"
 ) -> DataFrame:
-    """(id, vphash, n_frames, hash_ok) per video media row: decode the
+    """(id, vphash, n_frames, parse_ok) per video media row: decode the
     binary column (any decode_any container) and fingerprint the clip
     with :func:`phash.vphash61`."""
     from ..functions.phash import vphash61
 
-    schema = f"{id_col} long, vphash long, n_frames int, hash_ok boolean"
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for did, content in zip(pdf[id_col], pdf[content_col]):
-                try:
-                    frames, _ = decode_any(bytes(content))
-                    rows.append(
-                        (int(did), vphash61(frames), frames.shape[0], True)
-                    )
-                except Exception:
-                    rows.append((int(did), None, None, False))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "vphash", "n_frames", "hash_ok"]
-            )
-
-    return df.mapInPandas(mapper, schema)
+    return _binary_meta_source(
+        df, content_col, id_col, decode_any, "vphash long, n_frames int",
+        lambda decoded: [(vphash61(decoded[0]), decoded[0].shape[0])],
+    )
 
 
 def video_dup_pairs(hashes: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -160,7 +125,7 @@ def video_dup_pairs(hashes: DataFrame, id_col: str = "doc_id") -> DataFrame:
     from pyspark.sql import functions as F
 
     groups = (
-        hashes.filter("hash_ok")
+        hashes.filter("parse_ok")
         .groupBy("vphash")
         .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
         .filter(F.size("ids") >= 2)
@@ -227,7 +192,7 @@ def incremental_image_dedup(
     against the STANDING corpus — (doc_id, n_dups, best_hamming, status)
     per delta row, status 'dup' when any corpus fingerprint lies within
     ``radius`` bit flips (exact by the pigeonhole band guarantee),
-    else 'novel'. Delta rows whose hash failed (hash_ok = false) are NOT
+    else 'novel'. Delta rows whose hash failed (parse_ok = false) are NOT
     dropped: they come back as status 'undecodable' with NULL n_dups /
     best_hamming, so the report reconciles 1:1 against the ingest batch
     (the module's dead-letter contract).
@@ -242,9 +207,9 @@ def incremental_image_dedup(
     if bands < radius + 1:
         raise ValueError("bands must be >= radius + 1 for exact recall")
     bits = 63
-    delta_all = delta_hashes.select(id_col, "hash_ok")
-    delta = delta_hashes.filter("hash_ok").select(id_col, fp_col)
-    corpus = corpus_hashes.filter("hash_ok").select(id_col, fp_col)
+    delta_all = delta_hashes.select(id_col, "parse_ok")
+    delta = delta_hashes.filter("parse_ok").select(id_col, fp_col)
+    corpus = corpus_hashes.filter("parse_ok").select(id_col, fp_col)
     db = _band_explode(delta, bits, bands, id_col, fp_col)
     cb = _band_explode(corpus, bits, bands, id_col, fp_col)
     cand = (
@@ -276,13 +241,13 @@ def incremental_image_dedup(
         .join(hits, id_col, "left")
         .select(
             id_col,
-            F.when(F.col("hash_ok"), F.coalesce("n_dups", F.lit(0))).alias(
+            F.when(F.col("parse_ok"), F.coalesce("n_dups", F.lit(0))).alias(
                 "n_dups"
             ),
-            F.when(F.col("hash_ok"), F.col("best_hamming")).alias(
+            F.when(F.col("parse_ok"), F.col("best_hamming")).alias(
                 "best_hamming"
             ),
-            F.when(~F.col("hash_ok"), F.lit("undecodable"))
+            F.when(~F.col("parse_ok"), F.lit("undecodable"))
             .when(F.col("n_dups").isNotNull(), F.lit("dup"))
             .otherwise(F.lit("novel"))
             .alias("status"),

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.aggregates import dround, dsum, o_davg, o_dround, o_dsum
+from ..operators.parallelism import scan_partitions
 from ..tables import load
 from . import register
 
@@ -1677,7 +1678,7 @@ def user_value_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale the shuffle is large, AQE keeps many partitions, and the extra
     # exchange would be pure cost. The probe is scan-rooted (no exchanges
     # below ev), so .rdd is a plan conversion, not a job.
-    if ev.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism:
+    if scan_partitions(ev) < spark.sparkContext.defaultParallelism:
         pts = pts.repartition(
             spark.sparkContext.defaultParallelism, "user_id"
         )

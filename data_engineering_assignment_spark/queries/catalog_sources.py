@@ -920,9 +920,9 @@ def wav_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         r = 1 + did % 3
         # 40 alternating runs of length r, amplitude +/-0.25
         wave = np.repeat(np.tile([0.25, -0.25], 20), r)
-        return f"doc-{did}.wav", "audio", encode_wav(wave, 8000)
+        return f"doc-{did}.wav", encode_wav(wave, 8000)
 
-    media = _fixture_rows(docs, make, "path string, media_type string, content binary")
+    media = _fixture_rows(docs, make, "path string, content binary")
     feats = extract_audio_features(media)
     # run_len recovered from the DECODED duration (duration*200 = r within
     # 1 ulp), so even the group key proves the codec round-trip

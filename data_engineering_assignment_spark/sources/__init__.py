@@ -343,11 +343,10 @@ def warc_records(
     ``http_body_ok = false`` means an unsupported coding (br/zstd) or a
     decode failure and the column carries the RAW bytes, a countable
     dead-letter. Opt-in because metadata-only scans shouldn't ship page
-    bytes through the rest of the plan."""
+    bytes through the rest of the plan. The opt-in columns sit between
+    ``rec_length`` and ``parse_ok``, which is always last (the
+    :func:`_binary_meta_source` layout)."""
     import hashlib
-    from collections.abc import Iterator
-
-    import pandas as pd
 
     from ..functions.warc import parse_warc
 
@@ -358,87 +357,52 @@ def warc_records(
         except ValueError:
             return None
 
-    schema = (
-        f"{id_col} long, rec_idx int, warc_type string, target_uri string,"
+    tail = (
+        "rec_idx int, warc_type string, target_uri string,"
         " content_type string, http_status int, http_content_type string,"
-        " http_location string,"
-        " record_id string, concurrent_to string,"
+        " http_location string, record_id string, concurrent_to string,"
         " http_user_agent string, http_referer string,"
         " segment_number int, segment_origin_id string,"
-        " segment_total_length long,"
-        " payload_len long, payload_digest string,"
-        " payload_digest_declared string,"
-        " rec_offset long, rec_length long,"
-        " parse_ok boolean"
+        " segment_total_length long, payload_len long,"
+        " payload_digest string, payload_digest_declared string,"
+        " rec_offset long, rec_length long"
     )
     if include_body:
-        schema += ", http_body binary, http_body_ok boolean"
+        tail += ", http_body binary, http_body_ok boolean"
     if include_payload:
-        schema += ", payload binary"
+        tail += ", payload binary"
 
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            id_col, "rec_idx", "warc_type", "target_uri", "content_type",
-            "http_status", "http_content_type", "http_location",
-            "record_id", "concurrent_to",
-            "http_user_agent", "http_referer",
-            "segment_number", "segment_origin_id", "segment_total_length",
-            "payload_len", "payload_digest", "payload_digest_declared",
-            "rec_offset", "rec_length", "parse_ok",
-        ]
-        if include_body:
-            cols += ["http_body", "http_body_ok"]
-        if include_payload:
-            cols += ["payload"]
-        for pdf in batches:
-            rows = []
-            for aid, content in zip(pdf[id_col], pdf[content_col]):
-                aid = int(aid)
-                try:
-                    recs = parse_warc(bytes(content))
-                    for i, r in enumerate(recs):
-                        h = r["headers"]
-                        row = (
-                            aid,
-                            i,
-                            h.get("WARC-Type"),
-                            h.get("WARC-Target-URI"),
-                            h.get("Content-Type"),
-                            r.get("http_status"),
-                            r.get("http_content_type"),
-                            r.get("http_location"),
-                            h.get("WARC-Record-ID"),
-                            h.get("WARC-Concurrent-To"),
-                            r.get("http_user_agent"),
-                            r.get("http_referer"),
-                            _int_or_none(h.get("WARC-Segment-Number")),
-                            h.get("WARC-Segment-Origin-ID"),
-                            _int_or_none(h.get("WARC-Segment-Total-Length")),
-                            len(r["payload"]),
-                            hashlib.md5(r["payload"]).hexdigest(),
-                            h.get("WARC-Payload-Digest"),
-                            r["rec_offset"],
-                            r["rec_length"],
-                            True,
-                        )
-                        if include_body:
-                            row += (
-                                r.get("http_body"),
-                                r.get("http_body_ok"),
-                            )
-                        if include_payload:
-                            row += (r["payload"],)
-                        rows.append(row)
-                except Exception:
-                    row = (aid,) + (None,) * 19 + (False,)
-                    if include_body:
-                        row += (None, None)
-                    if include_payload:
-                        row += (None,)
-                    rows.append(row)
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_fn(recs):
+        for i, r in enumerate(recs):
+            h = r["headers"]
+            row = (
+                i,
+                h.get("WARC-Type"),
+                h.get("WARC-Target-URI"),
+                h.get("Content-Type"),
+                r.get("http_status"),
+                r.get("http_content_type"),
+                r.get("http_location"),
+                h.get("WARC-Record-ID"),
+                h.get("WARC-Concurrent-To"),
+                r.get("http_user_agent"),
+                r.get("http_referer"),
+                _int_or_none(h.get("WARC-Segment-Number")),
+                h.get("WARC-Segment-Origin-ID"),
+                _int_or_none(h.get("WARC-Segment-Total-Length")),
+                len(r["payload"]),
+                hashlib.md5(r["payload"]).hexdigest(),
+                h.get("WARC-Payload-Digest"),
+                r["rec_offset"],
+                r["rec_length"],
+            )
+            if include_body:
+                row += (r.get("http_body"), r.get("http_body_ok"))
+            if include_payload:
+                row += (r["payload"],)
+            yield row
 
-    return df.mapInPandas(mapper, schema)
+    return _binary_meta_source(df, content_col, id_col, parse_warc, tail, rows_fn)
 
 
 def tar_members(
@@ -456,60 +420,36 @@ def tar_members(
     import hashlib
     import io
     import tarfile
-    from collections.abc import Iterator
 
-    import pandas as pd
+    def rows_fn(tf):
+        # a generator, so members read before a corrupt tail keep their
+        # rows ahead of the archive's dead-letter row
+        with tf:
+            for info in tf:
+                if info.isdir():
+                    continue
+                if info.isreg():
+                    kind = "file"
+                    fh = tf.extractfile(info)
+                    digest = hashlib.md5(fh.read()).hexdigest()
+                else:
+                    kind = (
+                        "sym"
+                        if info.issym()
+                        else "hard"
+                        if info.islnk()
+                        else "special"
+                    )
+                    digest = None
+                yield info.name, int(info.size), kind, int(info.mtime), digest
 
-    schema = (
-        f"{id_col} long, member string, size long, kind string,"
-        " mtime long, content_digest string, parse_ok boolean"
+    return _binary_meta_source(
+        df, content_col, id_col,
+        lambda b: tarfile.open(fileobj=io.BytesIO(b), mode="r:*"),
+        "member string, size long, kind string, mtime long,"
+        " content_digest string",
+        rows_fn,
     )
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            id_col, "member", "size", "kind", "mtime", "content_digest",
-            "parse_ok",
-        ]
-        for pdf in batches:
-            rows = []
-            for aid, content in zip(pdf[id_col], pdf[content_col]):
-                aid = int(aid)
-                try:
-                    with tarfile.open(
-                        fileobj=io.BytesIO(bytes(content)), mode="r:*"
-                    ) as tf:
-                        for info in tf:
-                            if info.isdir():
-                                continue
-                            if info.isreg():
-                                kind = "file"
-                                fh = tf.extractfile(info)
-                                digest = hashlib.md5(fh.read()).hexdigest()
-                            else:
-                                kind = (
-                                    "sym"
-                                    if info.issym()
-                                    else "hard"
-                                    if info.islnk()
-                                    else "special"
-                                )
-                                digest = None
-                            rows.append(
-                                (
-                                    aid,
-                                    info.name,
-                                    int(info.size),
-                                    kind,
-                                    int(info.mtime),
-                                    digest,
-                                    True,
-                                )
-                            )
-                except Exception:
-                    rows.append((aid, None, None, None, None, None, False))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return df.mapInPandas(mapper, schema)
 
 
 def schema_field_names(schema: str) -> list[str]:
@@ -538,28 +478,40 @@ def _binary_meta_source(
     schema_tail: str,
     rows_fn,
 ) -> DataFrame:
-    """Shared skeleton for the binary container-metadata sources
-    (mp3_meta / webp_meta / bmff_image_meta / mp4_tracks / svg_meta /
-    flac_meta / ogg_meta): Arrow-batched mapInPandas, zero shuffle,
-    one ``parse(bytes)`` per file, ``rows_fn(parsed)`` yielding the
-    value tuples (one per output row, WITHOUT id/parse_ok — most
-    sources emit exactly one; explode sources like mp4_tracks emit
-    one per track). Any exception — truncation ValueErrors from the
-    bounded walks, junk bytes, guarded-profile NotImplementedErrors —
-    survives as ONE all-None ``parse_ok = false`` row: the countable
-    dead-letter contract every codec gate aggregates on.
+    """Shared skeleton for every per-file parser (the container-metadata
+    and archive sources here, the media fingerprints, the sitemap/feed
+    explodes, audio features): Arrow-batched mapInPandas over
+    ``(id_col, content_col)`` only, zero shuffle, one ``parse(bytes)``
+    per file, ``rows_fn(parsed)`` yielding the value tuples (one per
+    output row, WITHOUT id/parse_ok — most sources emit exactly one;
+    explode sources like mp4_tracks emit one per track). Any exception
+    — truncation ValueErrors from the bounded walks, junk bytes, NULL
+    content, guarded-profile NotImplementedErrors — survives as ONE
+    all-None ``parse_ok = false`` row: the countable dead-letter
+    contract every codec gate aggregates on. Rows ``rows_fn`` yielded
+    before the exception are kept (an archive's readable members
+    precede its dead-letter row).
 
-    ``schema_tail`` is the scalar column list between the id and
-    parse_ok (``"width int, height int"``); the dead-letter row width
-    and the pandas column names are derived from it
-    (:func:`schema_field_names`), so a source can
-    never hand-count its Nones wrong (the r14 deferred review
-    finding)."""
+    The id column keeps its input type and values (NULL included).
+    ``content_col`` must be binary — a TypeError at build time, not a
+    per-row dead-letter at run time. ``schema_tail`` is the scalar
+    column list between the id and parse_ok (``"width int, height
+    int"``); the dead-letter row width and the pandas column names are
+    derived from it (:func:`schema_field_names`), so a source can never
+    hand-count its Nones wrong."""
     from collections.abc import Iterator
 
     import pandas as pd
+    from pyspark.sql.types import BinaryType
 
-    schema = f"{id_col} long, {schema_tail}, parse_ok boolean"
+    content_type = df.schema[content_col].dataType
+    if not isinstance(content_type, BinaryType):
+        raise TypeError(
+            f"content column {content_col!r} must be binary, got"
+            f" {content_type.simpleString()}"
+        )
+    id_type = df.schema[id_col].dataType.simpleString()
+    schema = f"{id_col} {id_type}, {schema_tail}, parse_ok boolean"
     names = schema_field_names(schema)
     n_vals = len(names) - 2  # between id and parse_ok
 
@@ -567,7 +519,6 @@ def _binary_meta_source(
         for pdf in batches:
             rows = []
             for aid, content in zip(pdf[id_col], pdf[content_col]):
-                aid = int(aid)
                 try:
                     for vals in rows_fn(parse(bytes(content))):
                         rows.append((aid, *vals, True))
@@ -575,7 +526,7 @@ def _binary_meta_source(
                     rows.append((aid,) + (None,) * n_vals + (False,))
             yield pd.DataFrame(rows, columns=names)
 
-    return df.mapInPandas(mapper, schema)
+    return df.select(id_col, content_col).mapInPandas(mapper, schema)
 
 
 def mp3_meta(df: DataFrame, content_col: str = "content", id_col: str = "archive_id") -> DataFrame:
@@ -910,54 +861,34 @@ def zip_members(df: DataFrame, content_col: str = "content", id_col: str = "arch
     only its own crc_ok (both dead-letter levels countable)."""
     import io
     import zipfile
-    from collections.abc import Iterator
 
-    import pandas as pd
+    methods = {zipfile.ZIP_STORED: "stored", zipfile.ZIP_DEFLATED: "deflate"}
 
-    schema = (
-        f"{id_col} long, member string, size_uncompressed long,"
-        " size_compressed long, method string, crc_ok boolean,"
-        " parse_ok boolean"
-    )
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [
-            id_col, "member", "size_uncompressed", "size_compressed",
-            "method", "crc_ok", "parse_ok",
-        ]
-        methods = {zipfile.ZIP_STORED: "stored", zipfile.ZIP_DEFLATED: "deflate"}
-        for pdf in batches:
-            rows = []
-            for aid, content in zip(pdf[id_col], pdf[content_col]):
-                aid = int(aid)
+    def rows_fn(zf):
+        with zf:
+            for info in zf.infolist():
+                if info.is_dir():
+                    continue
                 try:
-                    with zipfile.ZipFile(io.BytesIO(bytes(content))) as zf:
-                        infos = zf.infolist()
-                        for info in infos:
-                            if info.is_dir():
-                                continue
-                            try:
-                                # Read by ZipInfo, not name: duplicate member
-                                # names are legal in ZIP, and a name lookup
-                                # resolves to the FIRST match — by-object read
-                                # verifies THIS member's CRC.
-                                zf.read(info)
-                                crc_ok = True
-                            except Exception:
-                                crc_ok = False
-                            rows.append(
-                                (
-                                    aid,
-                                    info.filename,
-                                    info.file_size,
-                                    info.compress_size,
-                                    methods.get(info.compress_type, str(info.compress_type)),
-                                    crc_ok,
-                                    True,
-                                )
-                            )
+                    # Read by ZipInfo, not name: duplicate member names
+                    # are legal in ZIP, and a name lookup resolves to the
+                    # FIRST match — by-object read verifies THIS member's
+                    # CRC.
+                    zf.read(info)
+                    crc_ok = True
                 except Exception:
-                    rows.append((aid, None, None, None, None, None, False))
-            yield pd.DataFrame(rows, columns=cols)
+                    crc_ok = False
+                yield (
+                    info.filename,
+                    info.file_size,
+                    info.compress_size,
+                    methods.get(info.compress_type, str(info.compress_type)),
+                    crc_ok,
+                )
 
-    return df.mapInPandas(mapper, schema)
+    return _binary_meta_source(
+        df, content_col, id_col, lambda b: zipfile.ZipFile(io.BytesIO(b)),
+        "member string, size_uncompressed long, size_compressed long,"
+        " method string, crc_ok boolean",
+        rows_fn,
+    )

@@ -90,7 +90,7 @@ def test_banded_pairs_lossless_vs_brute_force(spark):
         hid += 1
     df = spark.createDataFrame(
         [(i, h, True) for i, h in hs.items()],  # < 2^63: fits a signed long
-        "doc_id long, phash long, hash_ok boolean",
+        "doc_id long, phash long, parse_ok boolean",
     )
     got = {
         (r.doc_a, r.doc_b, r.hamming)
@@ -105,7 +105,7 @@ def test_banded_pairs_lossless_vs_brute_force(spark):
 
 
 def test_image_hashes_dead_letter(spark):
-    """Undecodable bytes survive as hash_ok=false rows, never dropped."""
+    """Undecodable bytes survive as parse_ok=false rows, never dropped."""
     from data_engineering_assignment_spark.functions.multimodal import (
         encode_bmp,
     )
@@ -119,8 +119,8 @@ def test_image_hashes_dead_letter(spark):
         "doc_id long, content binary",
     )
     rows = {r.doc_id: r for r in image_hashes(df).collect()}
-    assert rows[1].hash_ok and rows[1].phash is not None
-    assert not rows[2].hash_ok and rows[2].phash is None
+    assert rows[1].parse_ok and rows[1].phash is not None
+    assert not rows[2].parse_ok and rows[2].phash is None
     assert rows[1].phash == phash63(_base(1))
 
 
@@ -185,8 +185,8 @@ def test_audio_hashes_dead_letter(spark):
         "doc_id long, content binary",
     )
     rows = {r.doc_id: r for r in audio_hashes(df).collect()}
-    assert rows[1].hash_ok and rows[1].aphash is not None
-    assert not rows[2].hash_ok and rows[2].aphash is None
+    assert rows[1].parse_ok and rows[1].aphash is not None
+    assert not rows[2].parse_ok and rows[2].aphash is None
 
 
 def _vclip(group: int, nf: int = 4) -> np.ndarray:
@@ -242,7 +242,7 @@ def test_video_dup_pairs_enumerates_groups(spark):
         (7, None, None, False),  # dead letter
     ]
     df = spark.createDataFrame(
-        rows, "doc_id long, vphash long, n_frames int, hash_ok boolean"
+        rows, "doc_id long, vphash long, n_frames int, parse_ok boolean"
     )
     got = {(r.doc_a, r.doc_b) for r in video_dup_pairs(df).collect()}
     assert got == {(1, 2), (1, 3), (2, 3), (4, 5)}
@@ -258,7 +258,7 @@ def test_incremental_image_dedup_statuses_and_broadcast_side(spark):
 
     corpus = spark.createDataFrame(
         [(1, 100, True), (2, 100 ^ 3, True), (3, 500, True), (4, None, False)],
-        "doc_id long, phash long, hash_ok boolean",
+        "doc_id long, phash long, parse_ok boolean",
     )
     delta = spark.createDataFrame(
         [
@@ -267,7 +267,7 @@ def test_incremental_image_dedup_statuses_and_broadcast_side(spark):
             (12, 500 ^ 1, True),
             (13, None, False),  # undecodable ingest image
         ],
-        "doc_id long, phash long, hash_ok boolean",
+        "doc_id long, phash long, parse_ok boolean",
     )
     out = incremental_image_dedup(corpus, delta, radius=2, bands=3)
     rows = {r.doc_id: r for r in out.collect()}

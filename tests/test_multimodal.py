@@ -543,6 +543,35 @@ def test_extract_audio_features(spark):
     assert silence["rms"] == 0.0 and silence["duration_s"] == 0.5
 
 
+def test_extract_audio_features_dead_letters_malformed_wav(spark):
+    """A junk WAV row becomes ONE parse_ok = false row with NULL features
+    instead of failing the task; the good rows are unchanged."""
+    from data_engineering_assignment_spark.functions.multimodal import (
+        encode_wav,
+        extract_audio_features,
+    )
+
+    good = bytearray(encode_wav(np.tile([0.25, -0.25], 20), 8000))
+    rows = [
+        ("good.wav", "audio", 0, 0, 0, 0, good),
+        ("junk.wav", "audio", 0, 0, 0, 0, bytearray(b"RIFX not a wav")),
+    ]
+    out = {r["path"]: r for r in extract_audio_features(media_df(spark, rows)).collect()}
+    assert set(out) == {"good.wav", "junk.wav"}
+    ok = out["good.wav"]
+    assert ok["parse_ok"] and (ok["sample_rate"], ok["n_channels"]) == (8000, 1)
+    assert (ok["duration_s"], ok["rms"], ok["peak"], ok["zero_cross_rate"]) == (
+        40 / 8000, 0.25, 0.25, 1.0,
+    )
+    junk = out["junk.wav"]
+    assert junk["parse_ok"] is False
+    assert all(
+        junk[c] is None
+        for c in ("sample_rate", "n_channels", "duration_s", "rms", "peak",
+                  "zero_cross_rate")
+    )
+
+
 def test_decode_media_wav(spark):
     """decode_any dispatches RIFF/WAVE: decode_media reports
     (n_samples, 1, n_channels) via the frame metadata fields."""

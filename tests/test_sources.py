@@ -411,3 +411,84 @@ def test_fixture_rows_extra_columns_reach_the_builder_in_order(spark):
         "doc_id long, joined string",
     )
     assert sorted(map(tuple, out.collect())) == [(1, "a:10"), (2, "bb:20")]
+
+
+# --- _binary_meta_source: the one skeleton every per-file parser shares ---
+
+
+def _zip_bytes(members: dict[str, bytes]) -> bytes:
+    import io
+    import zipfile
+
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w") as zf:
+        for name, body in members.items():
+            zf.writestr(name, body)
+    return buf.getvalue()
+
+
+def test_binary_meta_source_string_id_keeps_type_and_values(spark):
+    """A string id column comes back as a string column with its values
+    untouched — NULL included, on parsed and dead-letter rows alike."""
+    df = spark.createDataFrame(
+        [
+            ("u1", _zip_bytes({"a.txt": b"a"})),
+            ("u2", b"junk"),
+            (None, _zip_bytes({"b.txt": b"bb"})),
+        ],
+        "key string, content binary",
+    )
+    out = sources.zip_members(df, id_col="key")
+    assert out.schema["key"].dataType == StringType()
+    got = [(r["key"], r["member"], r["parse_ok"]) for r in out.collect()]
+    assert sorted(got, key=repr) == sorted(
+        [("u1", "a.txt", True), ("u2", None, False), (None, "b.txt", True)],
+        key=repr,
+    )
+
+
+def test_binary_meta_source_rejects_non_binary_content(spark):
+    import pytest
+
+    df = spark.createDataFrame([(1, "text")], "archive_id long, body string")
+    with pytest.raises(TypeError, match="'body'"):
+        sources.tar_members(df, content_col="body")
+
+
+def test_tar_members_keeps_readable_members_before_the_dead_letter(spark):
+    """A tarball whose second member's data is cut short by garbage emits
+    the first member's row, then ONE dead-letter row for the archive."""
+    import hashlib
+    import io
+    import tarfile
+
+    buf = io.BytesIO()
+    with tarfile.open(fileobj=buf, mode="w") as tf:
+        for name, body in (("a.txt", b"hello tar"), ("b.bin", b"x" * 4096)):
+            info = tarfile.TarInfo(name)
+            info.size, info.mtime = len(body), 1700000123
+            tf.addfile(info, io.BytesIO(body))
+    # a.txt header + data block, b.bin header, 100 bytes of its data
+    cut = buf.getvalue()[: 3 * 512 + 100] + b"\xff" * 200
+    df = spark.createDataFrame([(7, cut)], "archive_id long, content binary")
+    got = sorted(map(tuple, sources.tar_members(df).collect()), key=repr)
+    assert got == [
+        (7, "a.txt", 9, "file", 1700000123,
+         hashlib.md5(b"hello tar").hexdigest(), True),
+        (7, None, None, None, None, None, False),
+    ]
+
+
+def test_warc_records_dead_letter_has_full_width_with_both_flags(spark):
+    df = spark.createDataFrame(
+        [(3, b"not a warc"), (4, None)], "archive_id long, content binary"
+    )
+    out = sources.warc_records(df, include_body=True, include_payload=True)
+    cols = out.columns
+    assert len(cols) == 24 and cols[0] == "archive_id"
+    assert cols[-4:] == ["http_body", "http_body_ok", "payload", "parse_ok"]
+    rows = sorted(out.collect(), key=lambda r: r["archive_id"])
+    assert [r["archive_id"] for r in rows] == [3, 4]
+    for r in rows:
+        assert r["parse_ok"] is False
+        assert all(r[c] is None for c in cols if c not in ("archive_id", "parse_ok"))

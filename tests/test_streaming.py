@@ -883,7 +883,7 @@ def test_streaming_image_dedup_matches_batch_pairs(spark, tmp_path):
     )
     got = {(r.doc_a, r.doc_b, r.hamming) for r in out.collect()}
     batch_df = spark.createDataFrame(
-        [(i, h, True) for i, h in items], "doc_id long, phash long, hash_ok boolean"
+        [(i, h, True) for i, h in items], "doc_id long, phash long, parse_ok boolean"
     )
     want = {
         (r.doc_a, r.doc_b, r.hamming)
