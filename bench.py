@@ -12,7 +12,11 @@ Prints ONE compact summary line (guaranteed < 2000 chars so the driver's
 bounded tail parses):
   {"metric": "...", "value": <total sec>, "unit": "sec", "sf": <float>,
    "n_queries": N, "queries": {10 slowest only}, "full": "BENCH_LOCAL.json"}
-The complete per-query map is written to BENCH_LOCAL.json beside this file.
+The complete per-query map is written beside this file: to BENCH_LOCAL.json
+when that file is absent or records a run of the same shape (cpus, sf), else
+to BENCH_LOCAL.cpus<N>.sf<SF>.json (:func:`bench_local_path`), so a run of
+another shape never replaces the committed measurement. The summary line's
+"full" names the file written.
 """
 
 from __future__ import annotations
@@ -434,10 +438,26 @@ def contention_markers() -> tuple[float, float]:
     return round(st, 3), round(mt, 3)
 
 
+def bench_local_path(directory: str, cpus: int, sf: float) -> str:
+    """Where a run of shape (cpus, sf) writes its full per-query map: the
+    shared BENCH_LOCAL.json only if it is absent or holds a run of the same
+    shape, else a file keyed by the shape."""
+    shared = os.path.join(directory, "BENCH_LOCAL.json")
+    if os.path.exists(shared):
+        with open(shared) as f:
+            recorded = json.load(f)
+        if (recorded.get("cpus"), recorded.get("sf")) != (cpus, sf):
+            return os.path.join(directory, f"BENCH_LOCAL.cpus{cpus}.sf{sf:g}.json")
+    return shared
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 0)
+    # Chosen before the run, so an unreadable BENCH_LOCAL.json fails fast.
+    full_path = bench_local_path(os.path.dirname(os.path.abspath(__file__)), cpus, sf)
     # The driver keeps a bounded tail of COMBINED stdout+stderr: the console
     # progress bar (suppressed in get_spark) and any ERROR-level JVM log line
     # (r8: a harmless DAGScheduler updateAccumulators race printed a
@@ -524,7 +544,8 @@ def main() -> None:
         markers["n_retried"] = len(retried)
     # cpus + sf_dir recorded so a non-standard run (the driver's 8-core
     # scaling rerun overwrote BENCH_LOCAL.json in r15) can never be folded
-    # into the standing baseline: update_baseline.py refuses cpus != 32.
+    # into the standing baseline: update_baseline.py refuses cpus != 32, and
+    # bench_local_path keys the output file by (cpus, sf).
     full_line = json.dumps(
         {
             "metric": "headline_queries_total_wall",
@@ -532,7 +553,7 @@ def main() -> None:
             "unit": "sec",
             "queries": timings,
             "sf": sf,
-            "cpus": int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 0),
+            "cpus": cpus,
             "sf_dir": sf_dir,
             **markers,
             "retried": retried,
@@ -542,7 +563,7 @@ def main() -> None:
     # The driver parses the LAST stdout line and keeps only a 2000-char tail;
     # the full per-query map (~2.5k chars) does NOT fit, so the printed line is
     # a compact summary (total + the 10 slowest queries, ~500 chars) that always
-    # parses, while the complete map is mirrored to BENCH_LOCAL.json.
+    # parses, while the complete map is mirrored to full_path.
     slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
     summary_line = json.dumps(
         {
@@ -552,7 +573,7 @@ def main() -> None:
             "sf": sf,
             "n_queries": len(timings),
             "queries": slowest,
-            "full": "BENCH_LOCAL.json",
+            "full": os.path.basename(full_path),
             **markers,
         },
         separators=(",", ":"),
@@ -560,7 +581,7 @@ def main() -> None:
     # Stop Spark first (so no shutdown chatter can trail the result), mirror
     # the full line to a file, then print the summary alone.
     spark.stop()
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"), "w") as f:
+    with open(full_path, "w") as f:
         f.write(full_line + "\n")
     sys.stdout.flush()
     print(summary_line, flush=True)

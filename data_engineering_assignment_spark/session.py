@@ -6,7 +6,7 @@ runtime-settable SQL confs). Our own entry points build sessions with
 :func:`get_spark`.
 
 Scale notes (designed for a multi-executor cluster even though tests run
-local[32]): AQE is enabled so shuffle partition counts, broadcast conversion
+``cpus=4``): AQE is enabled so shuffle partition counts, broadcast conversion
 and skew-join splitting adapt to real data sizes at any scale factor; session
 timezone is pinned UTC so event-time semantics are machine-independent.
 """
@@ -16,6 +16,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# The directory holding this package. Executors import the package (UDF
+# modules, the worker daemon) from here whatever the caller's working
+# directory or PYTHONPATH.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # Runtime-settable confs every query depends on. Pinned defensively because
 # the driver owns the session our queries run in.
@@ -67,6 +72,11 @@ def get_spark(
         # tail) lose real content to it
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Python workers skip the per-task re-read of pyspark.zip unless it
+        # changed (worker_daemon). Both confs are static: the driver's own
+        # session keeps the stock daemon.
+        .config("spark.python.daemon.module", f"{__package__}.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
     for key, value in RUNTIME_CONF.items():
         builder = builder.config(key, value)
