@@ -341,13 +341,6 @@ def parse_html(html: str) -> dict:
     }
 
 
-def extract_text(html: str) -> str:
-    """FULL extracted text of an HTML string (see module contract) —
-    including nav/boilerplate lines; use ``parse_html(html)["main_text"]``
-    for the boilerplate/link-density-gated main content."""
-    return parse_html(html)["text"]
-
-
 def decode_html_bytes(raw: bytes, content_type: str | None = None) -> str:
     """Charset-aware decode of crawled HTML bytes — real crawls are not
     all UTF-8. Precedence per the WHATWG encoding sniff: a BOM wins

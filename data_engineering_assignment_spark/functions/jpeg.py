@@ -736,16 +736,6 @@ def decode_jpeg(content: bytes) -> np.ndarray:
     return ycbcr_to_rgb(np.stack([full[c[0]] for c in comps], axis=-1))
 
 
-def decode_jpeg_gray(content: bytes) -> np.ndarray:
-    """Back-compat wrapper: decode and REQUIRE a grayscale result — color
-    files raise NotImplementedError (callers wanting either shape use
-    :func:`decode_jpeg`)."""
-    out = decode_jpeg(content)
-    if out.ndim != 2:
-        raise NotImplementedError("JPEG: color file; use decode_jpeg")
-    return out
-
-
 # --------------------------------------------- progressive (T.81 Annex G)
 
 

@@ -20,15 +20,9 @@ contract.
   flows to the quality gates).
 * :func:`build_eml` — fixture twin (deterministic
   ``email.generator`` serialization).
-* :func:`split_mbox` — split an mbox archive into per-message bytes
-  on RFC 4155 ``From `` separator lines (the archive wire form).
 """
 
 from __future__ import annotations
-
-import re
-
-_MBOX_SEP = re.compile(rb"(?:^|\r?\n)(From [^\r\n]*\r?\n)")
 
 
 def parse_eml(content: bytes) -> dict:
@@ -248,22 +242,3 @@ def build_eml(
             )
         core = body + f"\n--{b}--\n"
     return ("\n".join(headers) + "\n" + core).encode("utf-8")
-
-
-def split_mbox(content: bytes) -> list[bytes]:
-    """Split RFC 4155 mbox bytes into per-message chunks (each
-    EXCLUDING its ``From `` separator line). Content that does not
-    start with a separator raises ValueError (dead-letter); an empty
-    archive returns []."""
-    data = bytes(content)
-    if not data.strip():
-        return []
-    if not data.startswith(b"From "):
-        raise ValueError("mbox: missing leading 'From ' separator")
-    out: list[bytes] = []
-    matches = list(_MBOX_SEP.finditer(data))
-    for i, m in enumerate(matches):
-        start = m.end()
-        end = matches[i + 1].start(1) if i + 1 < len(matches) else len(data)
-        out.append(data[start:end])
-    return out

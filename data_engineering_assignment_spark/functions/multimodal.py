@@ -955,26 +955,6 @@ def sample_frames(df: DataFrame, every_k: int) -> DataFrame:
     return df.mapInPandas(mapper, MEDIA_SCHEMA)
 
 
-def extract_mean_color(df: DataFrame) -> DataFrame:
-    """Feature extraction example: per-channel mean over all frames."""
-    schema = "path string, media_type string, mean_channels array<double>"
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            means = []
-            for content in pdf["content"]:
-                frames, _ = decode_rawm(bytes(content))
-                means.append(frames.reshape(-1, frames.shape[-1]).mean(axis=0).tolist())
-            yield pd.DataFrame(
-                {
-                    "path": pdf["path"],
-                    "media_type": pdf["media_type"],
-                    "mean_channels": means,
-                }
-            )
-
-    return df.mapInPandas(mapper, schema)
-
 # ---------------------------------------------------------------------------
 # Audio: RIFF/WAVE PCM codec (dependency-free, like decode_png) + features
 # ---------------------------------------------------------------------------
@@ -1460,8 +1440,7 @@ def extract_audio_features(df: DataFrame, content_col: str = "content") -> DataF
     """Audio feature extraction over WAV binary columns, keyed by ``path``
     (one ``sources._binary_meta_source`` pass; bytes never leave the
     executor): sample rate, channels, duration, RMS energy, peak amplitude
-    and zero-crossing rate per row — the audio analog of
-    :func:`extract_mean_color`. An undecodable file survives as one
+    and zero-crossing rate per row. An undecodable file survives as one
     ``parse_ok = false`` row with NULL features."""
     from ..sources import _binary_meta_source
 

@@ -11,10 +11,10 @@ sort + cumsum + searchsorted.
 
 Scale note: a grouped-agg pandas UDF materializes each group on one
 executor — right for group counts x group sizes that fit a worker (here:
-|returnflag| groups). For huge groups use
-``operators.quantiles.weighted_median_pruned`` — histogram pruning, every
-stage splittable, bit-identical result (the cumulative-window formulation
-the oracle uses also works but sorts each group in one window partition).
+|returnflag| groups). For huge groups the histogram-pruning pattern of
+``operators.quantiles.rank_values_pruned`` keeps every stage splittable
+(the cumulative-window formulation the oracle uses also works but sorts
+each group in one window partition).
 """
 
 from __future__ import annotations

@@ -206,12 +206,9 @@ def paragraph_stream(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """The (doc_id, para_idx, key, chars) paragraph-key stream — one row
-    per ``size``-token block, md5-keyed. Deliberately checkpoint-free so
-    it composes with Structured Streaming: the batch accounting
-    (:func:`paragraph_dedup_stats`) materializes it for its two-consumer
-    fan-out, while the streaming ingest path runs it straight into
-    ``dropDuplicates``/``dropDuplicatesWithinWatermark`` (parity test in
-    tests/test_streaming.py)."""
+    per ``size``-token block, md5-keyed. Checkpoint-free: the batch
+    accounting (:func:`paragraph_dedup_stats`) materializes it for its
+    two-consumer fan-out."""
     toks = tokens(text_col)
     starts = F.sequence(
         F.lit(0), F.greatest(F.size(F.col("_toks")) - 1, F.lit(0)), F.lit(size)

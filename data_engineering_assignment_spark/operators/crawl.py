@@ -1254,8 +1254,7 @@ def robots_rules(
     ``$`` anchor excluded). Hosts whose robots parse to no applicable
     rules emit nothing (no rules = allowed) — and so do hosts whose
     content RAISES during parsing: per-host parse health is deliberately
-    NOT recoverable from this table; use :func:`robots_census` when the
-    fleet needs to count fallthrough hosts (dead-letter discipline)."""
+    NOT recoverable from this table."""
     from collections.abc import Iterator
 
     from ..functions.robots import (
@@ -1289,56 +1288,6 @@ def robots_rules(
             )
 
     return robots.mapInPandas(mapper, schema)
-
-
-def robots_census(
-    robots: DataFrame,
-    agent: str,
-    host_col: str = "url_host",
-    content_col: str = "content",
-) -> DataFrame:
-    """Per-host robots.txt parse health — the dead-letter signal
-    :func:`robots_rules` deliberately omits from its rule table: one row
-    per input host with ``robots_ok`` (False = the content raised during
-    decode/parse, so the host fell through to the no-rules-=-allowed
-    default) and ``n_rules`` (applicable rules for ``agent`` after RFC
-    9309 group selection; 0 with ``robots_ok`` = a genuinely permissive
-    or irrelevant robots.txt). An operator fleet joins/aggregates this
-    beside the crawl so 'we obeyed zero rules because every robots.txt
-    was mojibake' is a countable condition, not a silent allow —
-    the same never-drop census discipline as crawl_health_stats."""
-    from collections.abc import Iterator
-
-    schema = f"{host_col} string, robots_ok boolean, n_rules int"
-
-    def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [
-                    (host,) + _robots_health(content, agent)
-                    for host, content in zip(
-                        pdf[host_col], pdf[content_col]
-                    )
-                ],
-                columns=[host_col, "robots_ok", "n_rules"],
-            )
-
-    return robots.mapInPandas(mapper, schema)
-
-
-def _robots_health(content, agent: str) -> tuple[bool, int]:
-    """(robots_ok, n_rules) for one host's robots.txt content — the
-    pure per-row body of :func:`robots_census` (unit-testable raise
-    path): False = decode/parse raised, the host falls through to
-    robots_rules' no-rules-=-allowed default."""
-    from ..functions.robots import rules_for_agent
-
-    try:
-        if isinstance(content, (bytes, bytearray)):
-            content = bytes(content).decode("utf-8", "replace")
-        return True, len(rules_for_agent(str(content), agent))
-    except Exception:
-        return False, 0
 
 
 # A bounded SAMPLE of publicsuffix.org rules covering every rule KIND
@@ -1501,7 +1450,7 @@ def robots_sitemaps(
     occurrence wins, duplicates dropped). The discovery half of the
     seed loop: feed the urls to the fetcher, then the captures to
     :func:`sitemap_entries`. Undecodable robots bodies contribute no
-    rows here — count them via :func:`robots_census`."""
+    rows here."""
     from collections.abc import Iterator
 
     from ..functions.robots import sitemap_urls
@@ -1533,8 +1482,7 @@ def robots_delays(
     """Per-host ``Crawl-delay`` seconds for ``agent`` — one row per
     input host, ``crawl_delay_s`` NULL when the host declares none (or
     its robots.txt fails to parse): the politeness interval table a
-    fetch scheduler joins stream-static into
-    :func:`streaming.frontier_politeness_gate(interval_col=...)`.
+    fetch scheduler joins onto its frontier by host.
     Semantics are :func:`functions.robots.crawl_delay` (group-scoped,
     exact-token beats '*', max across selected groups, ceil)."""
     from collections.abc import Iterator
@@ -1574,9 +1522,8 @@ def robots_filter(
     ``canonical_url``/``with_url_parts``, or whose parse NULLed) take
     the same no-matching-rule default: ``allowed = true``. That is
     deliberate — robots filtering is an etiquette gate, not a validity
-    gate; compose :func:`~..streaming.streaming_url_frontier` or a
-    NULL-canonical dead-letter split BEFORE this operator if malformed
-    URLs must not reach the fetcher.
+    gate; compose a NULL-canonical dead-letter split BEFORE this
+    operator if malformed URLs must not reach the fetcher.
 
     Scale shape: decisions are computed once per DISTINCT (host, path)
     against the host's rule table (an equi-join on host — a hot host is
@@ -1603,79 +1550,6 @@ def robots_filter(
     return urls.join(dec, [host_col, path_col], "left").withColumn(
         "allowed", F.coalesce("allowed", F.lit(True))
     )
-
-
-def robots_rule_arrays(
-    robots: DataFrame,
-    agent: str,
-    host_col: str = "url_host",
-    content_col: str = "content",
-) -> DataFrame:
-    """Per-host robots rules packed into ONE array row: (host,
-    robots_rules: array<struct<spec, a, rule_regex>>) — the static side
-    of the STREAMING robots gate (:func:`robots_filter_stream`). A
-    host's rule list is bounded by its robots.txt size, so the array is
-    small; the table scales with host count (it is NOT broadcast-hinted
-    — at crawl scale hosts are millions, the size-based planner
-    decides)."""
-    rules = robots_rules(robots, agent, host_col, content_col)
-    return rules.groupBy(host_col).agg(
-        F.collect_list(
-            F.struct(
-                F.col("spec"),
-                F.col("allow").cast("int").alias("a"),
-                F.col("rule_regex"),
-            )
-        ).alias("robots_rules")
-    )
-
-
-def robots_allowed_expr(path_col: str, rules_col: str = "robots_rules") -> Column:
-    """The RFC 9309 decision as ONE stateless column expression over a
-    packed rule array: HOF filter keeps the rules whose regex matches
-    the path, ``array_max`` over struct(spec, a) is the lexicographic
-    argmax (longest match wins, Allow wins ties — the same
-    max(struct) trick as the batch operator), no matching rule or NULL
-    array (no robots.txt) -> allowed. Row-local, aggregation-free —
-    legal in a streaming plan."""
-    matched = F.filter(
-        F.col(rules_col),
-        lambda r: F.regexp_like(F.col(path_col), r["rule_regex"]),
-    )
-    best = F.array_max(
-        F.transform(matched, lambda r: F.struct(r["spec"], r["a"]))
-    )
-    return F.when(
-        F.col(rules_col).isNull() | (F.size(matched) == 0), F.lit(True)
-    ).otherwise(best["a"] == 1)
-
-
-def robots_filter_stream(
-    urls: DataFrame,
-    robots: DataFrame,
-    agent: str,
-    host_col: str = "url_host",
-    path_col: str = "url_path",
-    content_col: str = "content",
-) -> DataFrame:
-    """Streaming twin of :func:`robots_filter` — output-identical
-    (property-tested) but built from streaming-legal pieces only: a
-    stream-static equi-join on host against the packed per-host rule
-    table (:func:`robots_rule_arrays`) plus the row-local
-    :func:`robots_allowed_expr` decision. No aggregation over the URL
-    stream, so it composes directly after ``streaming_url_frontier`` in
-    append mode.
-
-    Cost note: the decision re-evaluates the host's regexes PER URL ROW
-    (the price of statelessness); the batch operator decides once per
-    distinct (host, path) and stays the right choice for batch
-    frontiers. NULL host/path rows take the same allowed=true default
-    as the batch operator (see robots_filter's contract note)."""
-    per_host = robots_rule_arrays(robots, agent, host_col, content_col)
-    joined = urls.join(per_host, host_col, "left")
-    return joined.withColumn(
-        "allowed", robots_allowed_expr(path_col)
-    ).drop("robots_rules")
 
 
 def surt_key(url_col) -> Column:

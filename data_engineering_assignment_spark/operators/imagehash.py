@@ -148,11 +148,9 @@ def _band_explode(
     bands: int,
     id_col: str,
     fp_col: str,
-    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, fp, band, bucket[, carry...]) — the simhash_band_pairs
-    bit-band split for CROSS-table candidate joins (delta vs corpus) and
-    the streaming stateful group; ``carry`` columns ride along."""
+    """(id, fp, band, bucket) — the simhash_band_pairs bit-band split
+    for CROSS-table candidate joins (delta vs corpus)."""
     from pyspark.sql import functions as F
 
     base, rem = divmod(bits, bands)
@@ -162,7 +160,6 @@ def _band_explode(
     return fps.select(
         F.col(id_col).alias("_doc"),
         fp.alias("_fp"),
-        *[F.col(c) for c in carry],
         F.explode(
             F.array(
                 *[
@@ -177,7 +174,7 @@ def _band_explode(
                 ]
             )
         ).alias("bb"),
-    ).select("_doc", "_fp", *carry, "bb.band", "bb.bucket")
+    ).select("_doc", "_fp", "bb.band", "bb.bucket")
 
 
 def incremental_image_dedup(

@@ -3,24 +3,17 @@ plus-minus spec, Assignment-python.py:554-584 — goal-instant within a
 player's on-pitch interval).
 
 Spark has no native range-join optimization (the range-join hint is a
-Databricks-only feature, SURVEY.md §4), so two strategies:
-
-* :func:`point_in_interval_join` — when an equi key exists (matchId,
-  user_id, orderkey …), plan an equi-join with the range condition attached.
-  Catalyst executes broadcast/sort-merge on the key and evaluates the range
-  as part of the join condition; per-key fan-out bounds the work, which
-  is exactly the plus-minus shape and scales linearly in key cardinality.
-* :func:`bucketed_range_join` — no equi key: explode each interval into the
-  fixed-width buckets it covers and equi-join point-bucket to
-  interval-bucket. Turns an O(n·m) theta join into a shuffle join keyed by
-  bucket; bucket width trades replication (long intervals → many buckets)
-  against per-bucket fan-out. This is the 100 TB path for time-range
-  overlays (maintenance windows, calendar joins).
+Databricks-only feature, SURVEY.md §4), so :func:`point_in_interval_join`
+plans an equi-join on the key that exists (matchId, user_id, orderkey …)
+with the range condition attached. Catalyst executes broadcast/sort-merge on
+the key and evaluates the range as part of the join condition; per-key
+fan-out bounds the work, which is exactly the plus-minus shape and scales
+linearly in key cardinality.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -54,38 +47,3 @@ def point_in_interval_join(
     joined = p.join(iv, cond & rng, how)
     # drop the duplicate interval-side key columns
     return joined.drop(*[F.col(f"iv.{k}") for k in on])
-
-
-def bucketed_range_join(
-    points: DataFrame,
-    intervals: DataFrame,
-    point_col: str,
-    start_col: str,
-    end_col: str,
-    bucket_width: int,
-    point_is_epoch: bool = False,
-) -> DataFrame:
-    """Point-in-interval join with NO equi key, via bucket decomposition.
-
-    All of ``point_col``/``start_col``/``end_col`` must be numeric (e.g.
-    epoch seconds). Each interval row is exploded to one row per covered
-    bucket of ``bucket_width``; points join on their single bucket; the exact
-    range predicate filters false positives inside the bucket.
-    """
-    pt = F.col(point_col)
-    lo, hi = F.col(start_col), F.col(end_col)
-    iv_exploded = intervals.withColumn(
-        "_bucket",
-        F.explode(
-            F.sequence(
-                F.floor(lo / bucket_width).cast("long"),
-                F.floor((hi - F.lit(1e-9)) / bucket_width).cast("long"),
-            )
-        ),
-    )
-    p_bucketed = points.withColumn("_bucket", F.floor(pt / bucket_width).cast("long"))
-    return (
-        p_bucketed.join(iv_exploded, on="_bucket")
-        .filter((lo <= pt) & (pt < hi))
-        .drop("_bucket")
-    )

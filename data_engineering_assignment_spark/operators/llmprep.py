@@ -646,7 +646,7 @@ def quality_percentile_gate(
     production filters cut the worst X% *per source* so a uniformly-noisy
     source is trimmed rather than deleted.
 
-    Scale shape (the ``quantiles.weighted_median_pruned`` pattern): the
+    Scale shape (the ``quantiles.rank_values_pruned`` pattern): the
     output depends only on each group's quality MULTISET — ``n_kept`` is a
     count and ``min_kept_quality`` is the k-th largest quality — so no
     per-row rank is needed. A per-row window partitioned by ``group_col``

@@ -6,81 +6,16 @@ materializes the group on one worker, and the cumulative-window formulation
 (the oracle's) sorts the group in one unsplittable window partition. Both
 are right at bench scale and wrong at 100 TB for low-cardinality keys.
 
-``weighted_median_pruned`` is the scale path: one splittable histogram
-aggregation locates the median bucket per key, and only THAT bucket's rows
-(bounded by the bucket width) are sorted. All sums are exact (integer-valued
-weights in DECIMAL), so the selected value is bit-identical to the UDAF and
-window formulations — asserted in tests.
+``rank_values_pruned`` is the scale path: one splittable histogram
+aggregation locates the target bucket per key, and only THAT bucket's rows
+(bounded by the bucket width) are ranked, so the selected value is
+bit-identical to the window formulation — asserted in tests.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from .aggregates import DEC
-
-
-def weighted_median_pruned(
-    df: DataFrame,
-    value_col: str,
-    weight_col: str,
-    key_col: str,
-    bucket_width: float = 100.0,
-) -> DataFrame:
-    """Per-key weighted median (``percentile_disc(0.5)`` generalized to
-    weighted rows: the smallest value whose cumulative weight in ascending
-    value order reaches half the total), computed without ever sorting a
-    whole key group.
-
-    Three stages, every one splittable:
-
-      1. histogram — groupBy (key, floor(value / bucket_width)): exact
-         DECIMAL weight per bucket, map-side combinable;
-      2. locate — cumulative weights over the per-key BUCKET table (a
-         window, but over the aggregate whose row count per key is
-         value-range / bucket_width, not the data);
-      3. resolve — equi-join back only the median bucket's rows and take
-         the first cumulative crossing inside it (window partitioned by
-         (key, bucket) — bounded by bucket occupancy).
-
-    Output: (key, wmedian double).
-    """
-    v, w = F.col(value_col), F.col(weight_col).cast(DEC)
-    bucket = F.floor(v / F.lit(float(bucket_width))).alias("_qb")
-    e = df.select(F.col(key_col), v.alias("_qv"), w.alias("_qw"), bucket)
-
-    hist = e.groupBy(key_col, "_qb").agg(F.sum("_qw").alias("_bw"))
-    wcum = (
-        Window.partitionBy(key_col)
-        .orderBy("_qb")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    wtot = Window.partitionBy(key_col)
-    located = hist.select(
-        key_col,
-        "_qb",
-        F.coalesce(F.sum("_bw").over(wcum), F.lit(0).cast(DEC)).alias("_before"),
-        F.col("_bw"),
-        F.sum("_bw").over(wtot).alias("_total"),
-    )
-    # the median bucket: first bucket whose cumulative weight reaches W/2
-    # (comparisons doubled to stay in exact integer-decimal arithmetic)
-    median_bucket = located.filter(
-        (F.col("_before") * 2 < F.col("_total"))
-        & ((F.col("_before") + F.col("_bw")) * 2 >= F.col("_total"))
-    ).select(key_col, "_qb", "_before", "_total")
-
-    inb = e.join(median_bucket, [key_col, "_qb"])
-    wrow = (
-        Window.partitionBy(key_col, "_qb")
-        .orderBy("_qv")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    crossed = inb.withColumn("_cw", F.sum("_qw").over(wrow) + F.col("_before")).filter(
-        F.col("_cw") * 2 >= F.col("_total")
-    )
-    return crossed.groupBy(key_col).agg(F.min("_qv").alias("wmedian"))
 
 
 def rank_values_pruned(
@@ -98,7 +33,7 @@ def rank_values_pruned(
     count; integer arithmetic, so the index is engine-exact). E.g. median =
     ``("median", 1, 1, 2)`` → floor((n+1)/2); p90 = ``("p90", 9, 9, 10)``.
 
-    Same three splittable stages as :func:`weighted_median_pruned`:
+    Three splittable stages:
     histogram (one map-side-combinable agg), locate (windows over the
     per-key BUCKET aggregate, not the data), resolve (only target buckets'
     rows are ranked, each window bounded by one bucket's occupancy). Ties

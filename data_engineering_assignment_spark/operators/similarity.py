@@ -241,75 +241,6 @@ def cosine_pairs_grouped(
     )
 
 
-def cosine_pairs_blocked(
-    corpus: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 4,
-    max_rows: int = 1_000_000,
-) -> DataFrame:
-    """Small-N utility: exact all-pairs cosine via DRIVER-side collect +
-    broadcast matmul. NOT a scale path — the whole corpus is pulled to the
-    driver, so it should never back a catalog query; use
-    :func:`cosine_pairs_grouped` (distributed, same output) instead. Kept
-    for notebook-style exploration of small corpora where the
-    one-round-trip latency beats a shuffle.
-
-    Refuses to run above ``max_rows`` (a cheap count() precedes the
-    collect) so the one driver-collect utility in the tree can never be
-    pointed at a full-scale corpus by accident.
-    """
-    import numpy as np
-    import pandas as pd
-
-    n_rows = corpus.count()
-    if n_rows > max_rows:
-        raise ValueError(
-            f"cosine_pairs_blocked is a driver-collect utility capped at "
-            f"{max_rows} rows; got {n_rows}. Use cosine_pairs_grouped (the "
-            f"distributed equivalent) for corpora of this size."
-        )
-    rows = corpus.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    normed = mat / np.where(norms == 0, 1.0, norms)
-    spark = corpus.sparkSession
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(normed)
-
-    def mapper(batches):
-        all_ids, all_mat = b_ids.value, b_mat.value
-        for pdf in batches:
-            q_ids = pdf["qid"].to_numpy(dtype=np.int64)
-            q = np.array(pdf["qvec"].tolist(), dtype=np.float64)
-            qn = np.linalg.norm(q, axis=1, keepdims=True)
-            q = q / np.where(qn == 0, 1.0, qn)
-            sims = np.round(q @ all_mat.T, scale)
-            keep_i, keep_j = np.nonzero(
-                (sims >= threshold) & (q_ids[:, None] < all_ids[None, :])
-            )
-            yield pd.DataFrame(
-                {
-                    "id_a": q_ids[keep_i],
-                    "id_b": all_ids[keep_j],
-                    "sim": sims[keep_i, keep_j],
-                }
-            )
-
-    prepped = corpus.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).cast("array<double>").alias("qvec")
-    )
-    # a single parquet file would otherwise serialize the whole matmul into
-    # one task; block size ~1000 query rows balances task overhead (Python
-    # worker spin-up, broadcast fetch) against parallelism
-    n_part = max(1, min(spark.sparkContext.defaultParallelism, len(ids) // 1000))
-    return prepped.repartition(n_part).mapInPandas(
-        mapper, "id_a bigint, id_b bigint, sim double"
-    )
-
-
 def _normed(m):
     import numpy as np
 
@@ -432,63 +363,6 @@ def kmeans_centroids(
     return cents
 
 
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    n_iter: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 4,
-) -> DataFrame:
-    """IVF-style approximate top-k: corpus vectors are partitioned into
-    inverted lists by nearest centroid; each query scores only its ``n_probe``
-    nearest lists.
-
-    Centroids start as a deterministic corpus sample and are optionally
-    refined with ``n_iter`` distributed Lloyd iterations
-    (:func:`kmeans_centroids`) — data-adaptive cells concentrate each
-    cluster into fewer lists, buying recall at fixed ``n_probe``. The
-    candidate join is an equi-join on cell id — the same linear-scale shape
-    as LSH bucketing. Recall is tuned by ``n_probe``/``n_centroids``/
-    ``n_iter``.
-    """
-    spark = corpus.sparkSession
-    c_prep = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vec")
-    )
-    q_prep = queries.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vec")
-    )
-    if n_iter > 0:
-        cents = kmeans_centroids(
-            corpus, n_centroids, n_iter, id_col=id_col, vec_col=vec_col
-        )
-    else:
-        cents = _seed_centroids(c_prep, n_centroids)
-    b_cents = spark.sparkContext.broadcast(cents)
-    assigned = c_prep.mapInPandas(_cell_mapper(b_cents, 1), _VEC_SCHEMA).select(
-        F.col("id").alias("neighbor_id"), F.col("vec").alias("c_vec"), "cell"
-    )
-    probed = q_prep.mapInPandas(_cell_mapper(b_cents, n_probe), _VEC_SCHEMA).select(
-        F.col("id").alias("query_id"), F.col("vec").alias("q_vec"), "cell"
-    )
-    scored = assigned.join(F.broadcast(probed), on="cell").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    sim = F.round(cosine(F.col("q_vec"), F.col("c_vec")), scale)
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("sim", sim)
-        .dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rnk")
-    )
-
-
 def ivf_topk_portable(
     corpus: DataFrame,
     queries: DataFrame,
@@ -500,10 +374,10 @@ def ivf_topk_portable(
     scale: int = 4,
 ) -> DataFrame:
     """IVF top-k whose every step is SQL-expressible, so the operator is
-    exact-oracle-checkable end to end (the portable twin of :func:`ivf_topk`,
-    mirroring the ``dedup_minhash_lsh`` / ``dedup_lsh_portable`` split).
+    exact-oracle-checkable end to end (mirroring the ``dedup_minhash_lsh``
+    / ``dedup_lsh_portable`` split).
 
-    Differences from the numpy/k-means path that make it checkable:
+    What makes it checkable, where a numpy/k-means path would not be:
 
       * seeding — the ``n_centroids`` corpus rows with smallest Knuth
         multiplicative hash ``(id * 2654435761) % 2^32`` (pure integer
@@ -516,8 +390,7 @@ def ivf_topk_portable(
 
     The candidate join stays the linear-scale equi-join on cell id. The
     assignment uses a per-id window over a ``n_centroids``-fold fan-out —
-    fine at oracle scale; at 100 TB prefer :func:`ivf_topk`, whose
-    assignment is a narrow numpy argmax pass with no shuffle.
+    fine at oracle scale.
     """
     from .parallelism import ensure_min_parallelism
 
@@ -634,8 +507,8 @@ def semantic_dup_pairs(
     if target_cell_rows is not None and centroids is None:
         n_rows = c_prep.count()
         if n_rows == 0:
-            # match the pq_topk guard: fail loudly here, not opaquely in
-            # kmeans seeding on an empty frame (r7 advice)
+            # fail loudly here, not opaquely in kmeans seeding on an
+            # empty frame
             raise ValueError("semantic_dup_pairs: empty corpus")
         n_centroids = min(max(n_centroids, -(-n_rows // target_cell_rows)), n_rows)
     if centroids is not None:
@@ -1075,104 +948,6 @@ def incremental_semantic_dedup(
     )
 
 
-def incremental_semantic_dedup_stream(
-    corpus: DataFrame,
-    delta_stream: DataFrame,
-    threshold: float = 0.4,
-    n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 4,
-) -> DataFrame:
-    """STREAMING twin of :func:`incremental_semantic_dedup`: the delta
-    side arrives as a structured stream (the ingest path — availableNow
-    for catch-up batches, continuous for live feeds) and is judged
-    against the STANDING corpus cells, producing the same
-    (vec_id, cell, best_sim, n_dups, status) verdicts as the batch
-    operator (parity-asserted in tests/test_streaming.py).
-
-    Stream-legal reshaping of the batch plan, value-identical output:
-
-    * cell assignment — portable_cells' orderBy/window argmax is illegal
-      on a stream, so the delta assigns via a narrow FOLD over the
-      corpus-seeded centroids embedded as a LITERAL struct array
-      (bounded: n_centroids × dim doubles in the plan). Iterating cells
-      ascending with a strict ``>`` keeps the LOWER cell on ties —
-      exactly portable_cells' (desc sim, asc cell) rule — and the cosine
-      expression tree is the same JVM fold, so the doubles are
-      bit-identical.
-    * the corpus side joins stream-static LEFT on the cell id (the batch
-      inner-join → aggregate → attach-back shape is stream-illegal:
-      the attach-back would join the stream with its own aggregate);
-      unmatched deltas carry NULL sims and the per-id aggregate coalesces
-      them to (best_sim NULL, n_dups 0, 'novel') — the same verdicts the
-      batch attach-back produces.
-
-    The result is an unbounded aggregation keyed by delta id — run it
-    with ``outputMode("complete")`` under availableNow (the probe
-    pattern), or add a watermark upstream for continuous ingest.
-    """
-    cells_c = portable_cells(corpus, n_centroids, id_col=id_col, vec_col=vec_col)
-    c_prep = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vec")
-    )
-    h = (F.col("id") * F.lit(2654435761)) % F.lit(4294967296)
-    seeds = (
-        c_prep.select("id", "vec", h.alias("h"))
-        .orderBy("h", "id")
-        .limit(n_centroids)
-        .collect()
-    )
-    cents_arr = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("cell"),
-                F.array(*[F.lit(float(x)) for x in r["vec"]]).alias("cent"),
-            )
-            for i, r in enumerate(seeds)
-        ]
-    )
-    d = delta_stream.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vec")
-    )
-    vec = F.col("vec")
-    init = F.struct(
-        F.lit(float("-inf")).alias("s"), F.lit(-1).cast("int").alias("cell")
-    )
-    best = F.aggregate(
-        cents_arr,
-        init,
-        lambda acc, c: F.when(
-            cosine(vec, c.getField("cent")) > acc.getField("s"),
-            F.struct(
-                cosine(vec, c.getField("cent")).alias("s"),
-                c.getField("cell").cast("int").alias("cell"),
-            ),
-        ).otherwise(acc),
-    )
-    assigned = d.withColumn("cell", best.getField("cell"))
-    joined = assigned.join(
-        cells_c.select("cell", F.col("vec").alias("cvec")), "cell", "left"
-    )
-    sim = F.round(cosine(F.col("vec"), F.col("cvec")), scale)
-    return (
-        joined.groupBy("id", "cell")
-        .agg(
-            F.max(sim).alias("best_sim"),
-            F.sum((sim >= threshold).cast("long")).alias("_nd"),
-        )
-        .select(
-            F.col("id").alias("vec_id"),
-            "cell",
-            "best_sim",
-            F.coalesce("_nd", F.lit(0)).alias("n_dups"),
-            F.when(F.coalesce("_nd", F.lit(0)) > 0, F.lit("dup"))
-            .otherwise(F.lit("novel"))
-            .alias("status"),
-        )
-    )
-
-
 def semantic_survivor_stats(pairs: DataFrame, assigned_counts: DataFrame) -> DataFrame:
     """Per-cell SemDeDup keep/drop accounting from a duplicate-pair table.
 
@@ -1383,8 +1158,8 @@ def _pq_prep(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     # array so downstream element_at fold lambdas read a stored column
     # instead of inlining the normalization per access. Lazy: the
     # codebook collect / first action materializes it.
-    # Zero-norm guard matches the production pq_topk's
-    # np.where(n == 0, 1, n): a zero vector divides by 1 (stays zero)
+    # Zero-norm guard, np.where(n == 0, 1, n) in numpy terms: a zero
+    # vector divides by 1 (stays zero)
     # instead of producing NaNs that sort engine-dependently; the SQL
     # twin (_pq_oracle) writes the same CASE WHEN guard.
     vec = F.get(
@@ -1623,109 +1398,3 @@ def ivfpq_topk_portable(
         .withColumn("_s", _pq_adc(F.col("qvec"), F.col("codes"), FLAT, m, dim))
     )
     return _pq_rank(scored, k, scale)
-
-
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    m: int = 32,
-    n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 6,
-) -> DataFrame:
-    """Product-quantization ADC top-k, production path — the 100 TB PQ
-    scan: the codebook is the same bounded Knuth-hash seed pull as
-    :func:`pq_topk_portable`, queries are collected once (broadcast
-    discipline) with their per-subvector distance tables precomputed, and
-    each corpus partition does ONE vectorized numpy pass — normalize,
-    encode (argmin over codewords per subvector), ADC table-gather — and
-    emits only its per-query top-k under the (distance, id) total order.
-    The global merge ranks <= k x partitions x |queries| rows: the
-    compressed linear scan PQ is built for, with no corpus shuffle and no
-    Python row loop. numpy's pairwise summation differs from the
-    portable twin's pinned fold in final ulps, so this is the fast path;
-    the oracle-gated twin is the checkable one (recall parity asserted in
-    tests).
-
-    Output: (query_id, neighbor_id, approx_dist, rnk), rnk <= k.
-    """
-    import numpy as np
-    import pandas as pd
-
-    dim_row = corpus.select(F.size(F.col(vec_col)).alias("d")).first()
-    if dim_row is None:
-        raise ValueError("pq_topk: empty corpus — cannot infer vector dim")
-    dim = dim_row["d"]
-    if dim % m:
-        raise ValueError("dim must be divisible by m")
-    d_sub = dim // m
-
-    def norm_rows(rows):
-        mat = np.stack(rows).astype(np.float64)
-        n = np.linalg.norm(mat, axis=1, keepdims=True)
-        return mat / np.where(n == 0, 1.0, n)
-
-    h = (F.col(id_col) * F.lit(2654435761)) % F.lit(4294967296)
-    seed_rows = (
-        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"), h.alias("h"))
-        .orderBy("h", "id")
-        .limit(n_codes)
-        .collect()  # bounded: n_codes x dim (centroid-pull rule)
-    )
-    cb = norm_rows([r["v"] for r in seed_rows]).reshape(n_codes, m, d_sub)
-
-    q_rows = queries.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).collect()
-    q_ids = np.array([r["id"] for r in q_rows], dtype=np.int64)
-    q_sub = norm_rows([r["v"] for r in q_rows]).reshape(len(q_rows), m, d_sub)
-    # per-query distance tables (Q, m, n_codes)
-    dtab = ((q_sub[:, :, None, :] - cb.transpose(1, 0, 2)[None, :, :, :]) ** 2).sum(-1)
-
-    spark = corpus.sparkSession
-    b_cb = spark.sparkContext.broadcast(cb)
-    b_dt = spark.sparkContext.broadcast(dtab)
-    b_qi = spark.sparkContext.broadcast(q_ids)
-
-    def mapper(batches):
-        cbv, dtv, qiv = b_cb.value, b_dt.value, b_qi.value
-        jj = np.arange(m)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            sub = norm_rows(pdf["v"].to_numpy()).reshape(len(pdf), m, d_sub)
-            dists = ((sub[:, :, None, :] - cbv.transpose(1, 0, 2)[None, :, :, :]) ** 2).sum(-1)
-            codes = dists.argmin(axis=2)  # first index on ties
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(qiv)):
-                s = dtv[qi][jj[None, :], codes].sum(axis=1)
-                keep = ids != qiv[qi]
-                sk, ik = s[keep], ids[keep]
-                top = np.lexsort((ik, sk))[: min(k, len(ik))]
-                out_q.append(np.full(len(top), qiv[qi], dtype=np.int64))
-                out_n.append(ik[top])
-                out_s.append(sk[top])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "_s": np.concatenate(out_s),
-                }
-            )
-
-    prepped = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    cand = prepped.mapInPandas(mapper, "query_id long, neighbor_id long, _s double")
-    w = Window.partitionBy("query_id").orderBy(F.asc("_s"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("_s").cast("decimal(27,12)"), scale)
-            .cast("double")
-            .alias("approx_dist"),
-            "rnk",
-        )
-    )

@@ -10,8 +10,7 @@ properties for free:
     map-side-combinable aggregation — no per-key state, linear at any
     corpus size, never a vocabulary table;
   * sketches are MERGEABLE by union + re-aggregation (counters are sums),
-    so per-partition / per-day sketches combine exactly — asserted in
-    tests;
+    so per-partition / per-day sketches combine exactly;
   * estimates never undercount (CM guarantees est >= true), also asserted.
 
 Hashes are affine permutations of ``text.rolling_hash`` over a prime
@@ -148,14 +147,6 @@ def bloom_maybe_contains(
     return out.withColumn(flag_col, hit).drop(
         *[c for i in range(k) for c in (f"_p{i}", f"_s{i}")]
     )
-
-
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge sketches built with identical (depth, width): counters add."""
-    merged = sketches[0]
-    for s in sketches[1:]:
-        merged = merged.unionByName(s)
-    return merged.groupBy("d", "bucket").agg(F.sum("counter").alias("counter"))
 
 
 def cms_estimate(

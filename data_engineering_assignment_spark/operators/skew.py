@@ -1,17 +1,12 @@
 """Skew-mitigation operators.
 
 AQE's skew-join splitting (enabled in ``session.RUNTIME_CONF``) handles most
-skew at runtime; these operators cover the cases AQE cannot: a *broadcast-
-ineligible* dimension joined on a heavy-hitter key, and aggregations whose
+skew at runtime; this module covers the case AQE cannot: aggregations whose
 single hot group overwhelms one reducer.
 
-``salted_join`` replicates the (smaller) build side ``salt`` ways and
-scatters the probe side uniformly across the replicas, so a key holding 50%
-of the rows spreads over ``salt`` reducers instead of one.
-
-``two_phase_agg`` is the aggregation analog: pre-aggregate on (key, salt),
-then combine — the classic partial-aggregation rescue for hot group keys
-when the aggregate itself is algebraic.
+``two_phase_agg`` pre-aggregates on (key, salt), then combines — the classic
+partial-aggregation rescue for hot group keys when the aggregate itself is
+algebraic.
 """
 
 from __future__ import annotations
@@ -26,36 +21,13 @@ def scatter_salt(df: DataFrame, salt: int) -> Column:
     A content-only hash (xxhash64 of all columns) sends literal duplicate
     rows — the worst skew case — to one salt value, defeating the salting.
     Mixing in ``monotonically_increasing_id`` gives every physical row its
-    own salt draw. The id is partitioning-dependent, but join/agg results are
-    salt-value-independent (the build side carries ALL salt values; algebraic
-    partials combine the same under any split), so this stays deterministic
-    where it matters.
+    own salt draw. The id is partitioning-dependent, but aggregate results
+    are salt-value-independent (algebraic partials combine the same under any
+    split), so this stays deterministic where it matters.
     """
     return F.pmod(
         F.xxhash64(F.monotonically_increasing_id(), *df.columns), F.lit(salt)
     ).cast("int")
-
-
-def salted_join(
-    probe: DataFrame,
-    build: DataFrame,
-    on: str,
-    salt: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with the build side replicated ``salt`` ways.
-
-    ``probe`` (large, skewed) gets a per-physical-row salt (content hash +
-    row id — see :func:`scatter_salt`); ``build`` (smaller) is exploded once
-    per salt value. Join key becomes (on, _salt); output drops the salt.
-    """
-    probe_salted = probe.withColumn("_salt", scatter_salt(probe, salt))
-    build_salted = build.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-    )
-    return (
-        probe_salted.join(build_salted, on=[on, "_salt"], how=how).drop("_salt")
-    )
 
 
 def two_phase_agg(

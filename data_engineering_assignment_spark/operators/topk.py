@@ -61,9 +61,3 @@ def top_k_by_freq_agg(
         .withColumn("top_items", F.transform(F.col("_s"), lambda s: s.getField("item")))
         .drop("_s")
     )
-
-
-def argmax_row(df: DataFrame, order_cols: list, n: int = 1) -> DataFrame:
-    """Global top-n rows under a deterministic total order (sort + limit;
-    plans as TakeOrderedAndProject — the reference's argmax idiom, :64-65)."""
-    return df.orderBy(*order_cols).limit(n)

@@ -1,10 +1,8 @@
-"""Event-time window aggregation (batch semantics of Structured Streaming).
+"""Event-time window aggregation over a batch events table.
 
 The reference has no streaming surface (SURVEY.md section 2.12); these
 operators add tumbling/sliding event-time aggregation over an events table
-using ``F.window``, which is the exact operator Structured Streaming plans for
-``readStream`` inputs — the same code runs in streaming mode
-(see ``streaming/`` for the readStream wiring).
+using ``F.window``.
 
 Window starts are returned as epoch seconds (bigint) so results are
 timezone- and engine-representation-independent.

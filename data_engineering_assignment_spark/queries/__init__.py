@@ -35,92 +35,68 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 
 
 # The driver's correctness gate samples the FIRST 50 entries of ``queries()``
-# in registration order.  The head rotates every round so no query goes
-# unverified for long: never-driver-checked queries first, then anything
-# whose implementation changed this round (a green history does not cover
-# new code), then queries whose last green row is oldest.
-#
-# Round-16 head (catalog = 258, optimization round): everything whose
-# implementation changed THIS round first — the r16 optimization touched
-# the shingle-pair operators (small-file guard in ngram_jaccard_pairs /
-# containment_pairs), resolve_redirects (single-pass per-url aggregation
-# + checkpointed edge table), the two link-pagerank capstones (edge-list
-# checkpoint), user_value_theilsen (post-agg parallelism guard + Generate
-# boundary), cms_token_counts (sketch built from aggregated counts), and
-# the ANN family (in-row argmax_cell assignment, merged _pq_prep
-# checkpoint, let-bound codebook literal, probed-cell-pruned IVF-PQ
-# encode; dedup_semantic_hier rides its oracle-gated twins here per the
-# rows-only pairing rule);
-# then the OWED r15 cohort — the _doc_ids fan-out gates whose plans
-# changed in r15 but sat outside the r15 head (verdict finding #4:
-# png/jpeg/tiff decode, video frame sample, the three phash pairs,
-# incremental image dedup, MS-ADPCM, TAR, CDX recrawl, the four WARC
-# round-trip/pairing gates, robots filter, MP3, the two bigram-LM
-# consumers);
-# then the oldest 10 of the r9-stale cohort alphabetically, plus the
-# stalest catalog_intervals row (order_ship_lag_30d, r10) and the
-# stalest catalog_ml row (ml_eval_metrics, r13) holding the
-# module-coverage contract (every module in the first 50). The
-# remaining r9-stale queries (orders_profile, png_decode_stats,
-# pricing_summary ... winsorized_value_stats) rotate to the r17 head —
-# all verified locally in this round's FULL sf0.01 oracle run
-# (258/258).
+# in registration order.  The head rotates so no query goes unverified for
+# long: queries whose implementation changed since their last gate check
+# first, then the stalest, with at least one slot per catalog module.  Every
+# head entry has an oracle (tests/test_catalog_contract.py).
 DRIVER_SAMPLE_HEAD: tuple[str, ...] = (
-    # implementation changed this round (r16 optimizations)
-    "user_value_theilsen",
-    "cms_token_counts",
-    "redirect_resolution_stats",
-    "crawl_link_pagerank",
-    "pdf_link_pagerank",
-    "dedup_clusters_star",
-    "dedup_clusters_jaccard",
-    "dedup_ngram_jaccard",
-    "dedup_containment_pairs",
-    "cosine_topk_ivf",
-    "cosine_topk_pq",
-    "cosine_topk_ivfpq",
-    "ivf_recall_telemetry",
-    "dedup_semantic",
-    "dedup_semantic_survivors",
-    "semantic_recall_telemetry",
-    "incremental_semantic_dedup",
-    "dedup_semantic_hier",
-    # owed r15 cohort (plan changed by the _doc_ids fan-out, unchecked)
-    "png_profile_stats",
-    "jpeg_decode_stats",
-    "tiff_decode_stats",
-    "video_frame_sample_stats",
-    "image_phash_pairs",
-    "audio_phash_pairs",
-    "video_phash_dups",
-    "incremental_image_dedup",
-    "ms_adpcm_audio_stats",
-    "tar_archive_stats",
-    "cdx_recrawl_diff",
-    "warc_crawl_stats",
-    "warc_revisit_roundtrip",
-    "warc_revisit_resolve_stats",
-    "warc_segment_reassembly",
-    "warc_request_pairing_stats",
-    "robots_crawl_filter",
-    "mp3_audio_stats",
-    "doc_bigram_lm_quality",
-    "ccnet_bucket_split",
-    # r9-stale cohort (oldest 10, alphabetical)
-    "hll_distinct_portable",
-    "ico_decode_stats",
-    "jpeg_exif_stats",
-    "kmv_distinct_users",
-    "median_price_by_priority",
-    "nation_presence_full_outer",
-    "nation_rank_top2",
-    "order_price_histogram",
-    "orders_cdc_apply",
-    # module-coverage slots (catalog_intervals r10, catalog_ml r13,
-    # catalog_llm — sources held 24/50, llm had none)
+    # sources gates whose fixture generator moved to _fixture_rows or whose
+    # parser moved to _binary_meta_source, not in the previous head; oldest
+    # gate check first (zip_archive_stats, the 42nd, waits for the next
+    # rotation)
+    "media_resize_stats",
+    "png_decode_stats",
+    "wav_audio_stats",
+    "cdx_index_stats",
+    "wet_export_roundtrip",
+    "avif_container_stats",
+    "fmp4_fragment_stats",
+    "mp4_container_stats",
+    "avi_video_stats",
+    "bmp_decode_stats",
+    "canonical_dedup_stats",
+    "crawl_discovery_pipeline",
+    "crawl_health_stats",
+    "crawl_lang_classifier_mix",
+    "crawl_quality_mix",
+    "crawl_text_pipeline",
+    "crawl_to_wet_pipeline",
+    "doc_extract_dispatch_stats",
+    "eml_message_stats",
+    "feed_frontier_stats",
+    "flac_audio_stats",
+    "gif_decode_stats",
+    "hls_playlist_stats",
+    "html_charset_stats",
+    "html_main_content_stats",
+    "html_text_extract_stats",
+    "http_encoding_stats",
+    "ics_calendar_stats",
+    "markdown_corpus_stats",
+    "mixed_crawl_extract_stats",
+    "ogg_audio_stats",
+    "pdf_text_extract_stats",
+    "png_metadata_stats",
+    "robots_meta_gate",
+    "sitemap_frontier_stats",
+    "structured_data_stats",
+    "subtitle_track_stats",
+    "svg_image_stats",
+    "warc_domain_stats",
+    "wat_export_stats",
+    "webp_container_stats",
+    # one slot per remaining catalog module: the three kept from the
+    # previous head (intervals, ml, llm), then the stalest oracle-gated
+    # query of each other module
     "order_ship_lag_30d",
     "ml_eval_metrics",
     "gopher_quality_stats",
+    "pricing_summary",
+    "cosine_topk",
+    "top_tokens_per_lang",
+    "user_retention_cohorts",
+    "orders_profile",
+    "user_event_type_sets",
 )
 
 

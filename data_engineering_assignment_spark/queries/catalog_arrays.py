@@ -249,9 +249,7 @@ SELECT query_id, neighbor_id, sim, rnk FROM ranked WHERE rnk <= {k}
     doc="Additive similarity search, IVF variant — now oracle-gated end to "
     "end via the portable twin: Knuth-hash centroid seeding and order-pinned "
     "JVM dot-product folds round-trip into the SQL twin exactly "
-    "(ivf_topk_portable). The numpy/k-means scale path (ivf_topk, 2 Lloyd "
-    "iterations, narrow argmax assignment) remains recall-tested in "
-    "tests/test_similarity.py.",
+    "(ivf_topk_portable).",
 )
 def cosine_topk_ivf_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import ivf_topk_portable

@@ -1,14 +1,12 @@
-"""Typed sources and sinks (SURVEY.md §2.1 S1-S8).
+"""Typed sources (SURVEY.md §2.1 S1-S6).
 
-The reference's scans, generalized: explicit-schema CSV (S1), parquet
-(S2-S4), binary files standing in for the Databricks-only ``image`` format
-(S5 — decode happens in ``functions.colors`` / ``functions.multimodal``
-UDFs) and schema-inferred JSON Lines (S6). The engine adds a parquet sink
-(S8 — the reference only ever ``show()``s).
+The reference's scans, generalized: parquet (S2-S4), binary files standing
+in for the Databricks-only ``image`` format (S5 — decode happens in
+``functions.colors`` / ``functions.multimodal`` UDFs) and schema-inferred
+JSON Lines (S6).
 
 Scale notes: explicit schemas avoid inference scans; binaryFile reads
-parallelize per file and push ``pathGlobFilter`` down to the listing; the
-parquet sink partitions by caller-chosen columns so downstream scans prune.
+parallelize per file and push ``pathGlobFilter`` down to the listing.
 """
 
 from __future__ import annotations
@@ -19,21 +17,6 @@ from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    sep: str = ",",
-    header: bool = True,
-    date_format: str | None = None,
-) -> DataFrame:
-    """S1: explicit-schema CSV scan (Assignment-python.py:52)."""
-    reader = spark.read.schema(schema)
-    if date_format:
-        reader = reader.option("dateFormat", date_format)
-    return reader.csv(path, header=header, sep=sep)
 
 
 def file_fingerprint(path: str) -> tuple | None:
@@ -174,108 +157,6 @@ def read_images(
         .option("dropInvalid", str(drop_invalid).lower())
         .load(path)
     )
-
-
-def write_sorted_parquet(
-    df: DataFrame,
-    path: str,
-    sort_cols: list[str],
-    n_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Clustered layout sink: range-partition on ``sort_cols`` then sort
-    within each partition before writing. Every output file then covers a
-    disjoint key range, so parquet min/max statistics prune whole files /
-    row groups on key predicates — the single-key-prefix version of
-    clustering a 100 TB table for scan locality. (Partition-value
-    directories — ``write_parquet(partition_by=...)`` — prune on LOW-
-    cardinality columns; range-clustering handles the high-cardinality
-    keys a directory per value would shatter.)"""
-    part = (
-        df.repartitionByRange(n_files, *sort_cols)
-        if n_files
-        else df.repartitionByRange(*sort_cols)
-    )
-    part.sortWithinPartitions(*sort_cols).write.mode(mode).parquet(path)
-
-
-def write_parquet(
-    df: DataFrame, path: str, partition_by: list[str] | None = None, mode: str = "overwrite"
-) -> None:
-    """S8+: parquet sink with optional partition columns."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def zorder_key(cols: list, bits: int = 16):
-    """Morton (Z-order) key: interleaves the low ``bits`` bits of each
-    integer column so files clustered by the single key stay local in EVERY
-    dimension — the multi-column clustering technique behind lakehouse
-    OPTIMIZE ZORDER BY. Pure JVM bit arithmetic (shift/or per bit), no UDF.
-
-    Callers pre-scale columns into [0, 2^bits) rank/bucket space; values are
-    clamped here so outliers cannot corrupt the interleave."""
-    from pyspark.sql import functions as F
-
-    ndims = len(cols)
-    z = F.lit(0).cast("long")
-    top = (1 << bits) - 1
-    clamped = [
-        F.least(F.greatest(F.col(c) if isinstance(c, str) else c,
-                           F.lit(0)).cast("long"), F.lit(top))
-        for c in cols
-    ]
-    for i in range(bits):
-        for d, c in enumerate(clamped):
-            bit = F.shiftright(c, i).bitwiseAND(F.lit(1))
-            z = z.bitwiseOR(F.shiftleft(bit, i * ndims + d))
-    return z
-
-
-def write_zorder_parquet(
-    df: DataFrame,
-    path: str,
-    cols: list[str],
-    bits: int = 16,
-    n_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order clustered sink: range-partition + sort on the Morton key of
-    ``cols``, so every output file covers a small hyper-rectangle — parquet
-    min/max stats then prune files on predicates over ANY of the clustered
-    columns, where single-key range clustering (``write_sorted_parquet``)
-    only prunes on its leading column."""
-    z = zorder_key(cols, bits).alias("_zkey")
-    with_z = df.withColumn("_zkey", z)
-    part = (
-        with_z.repartitionByRange(n_files, "_zkey")
-        if n_files
-        else with_z.repartitionByRange("_zkey")
-    )
-    part.sortWithinPartitions("_zkey").drop("_zkey").write.mode(mode).parquet(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC scan — the columnar format family's second member, JVM-native
-    (predicate pushdown + column pruning like parquet; Spark's OrcFileFormat
-    keeps the same FileScan machinery, so every plan invariant in
-    tests/test_plans.py applies unchanged)."""
-    return spark.read.orc(path)
-
-
-def write_orc(
-    df: DataFrame, path: str, partition_by: list[str] | None = None, mode: str = "overwrite"
-) -> None:
-    """ORC sink with optional partition columns — parquet-sink parity for
-    pipelines whose downstream readers are ORC-native (Hive/Trino estates).
-    No DuckDB reader exists for ORC in this sandbox, so the round-trip is
-    test-gated (byte-identical dataframe content vs the parquet sink)."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
 
 
 def warc_records(

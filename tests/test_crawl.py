@@ -5,10 +5,7 @@ the crawl oracles rely on."""
 
 import pytest
 
-from data_engineering_assignment_spark.functions.html import (
-    extract_text,
-    parse_html,
-)
+from data_engineering_assignment_spark.functions.html import parse_html
 
 
 def test_extract_text_contract():
@@ -28,7 +25,7 @@ def test_extract_text_contract():
     assert r["title"] == "My Title"
     # entities in data decode; inline tags glue; &nbsp; is Unicode
     # whitespace so str.split() folds it into the single-space collapse
-    assert extract_text("<p>a&lt;b&gt;c&nbsp;&#65;</p>") == "a<b>c A"
+    assert parse_html("<p>a&lt;b&gt;c&nbsp;&#65;</p>")["text"] == "a<b>c A"
 
 
 def test_extract_text_malformed_soup_never_raises():
@@ -42,7 +39,7 @@ def test_extract_text_malformed_soup_never_raises():
         "<<<>>>",
         "\x00<p>nul</p>",
     ):
-        extract_text(junk)  # must not raise
+        parse_html(junk)["text"]  # must not raise
 
 
 def test_parse_html_links_and_first_title_wins():
@@ -312,20 +309,12 @@ def test_robots_unknown_fields_do_not_split_groups():
     assert rules_for_agent(txt, "b") == [(False, "/x")]
 
 
-def test_robots_census_counts_fallthrough_hosts(spark):
-    """robots_census emits per-host parse health: a host whose content
-    raises during parse is robots_ok=false (it fell through to the
-    no-rules-=-allowed default), never silently absent."""
-    from data_engineering_assignment_spark.operators.crawl import (
-        robots_census,
-        robots_rules,
-    )
-
-    class Boom:
-        def __str__(self):
-            raise RuntimeError("planted")
-
+def test_robots_rules_omit_hosts_without_applicable_rules(spark):
+    """A host whose robots.txt holds no rule for the agent emits nothing
+    into the rule table (documented robots_rules contract)."""
     import pandas as pd
+
+    from data_engineering_assignment_spark.operators.crawl import robots_rules
 
     robots = spark.createDataFrame(
         pd.DataFrame(
@@ -338,29 +327,11 @@ def test_robots_census_counts_fallthrough_hosts(spark):
             }
         )
     )
-    rows = {
-        r.url_host: (r.robots_ok, r.n_rules)
-        for r in robots_census(robots, "graftbot").collect()
-    }
-    assert rows == {
-        "good.example": (True, 2),
-        "empty.example": (True, 0),
-    }
-    # the rule table itself stays silent about health: empty.example
-    # emits nothing there (documented robots_rules contract)
     hosts = {
         r.url_host
         for r in robots_rules(robots, "graftbot").collect()
     }
     assert hosts == {"good.example"}
-    # the raise path: a planted object whose parse raises can't cross
-    # the Arrow boundary, so exercise the pure per-row body directly
-    from data_engineering_assignment_spark.operators.crawl import (
-        _robots_health,
-    )
-
-    assert _robots_health(Boom(), "graftbot") == (False, 0)
-    assert _robots_health(b"User-agent: *\nDisallow: /\n", "g") == (True, 1)
 
 
 def test_robots_filter_operator(spark):
@@ -481,15 +452,11 @@ def test_decode_html_bytes_precedence():
     assert "�" in decode_html_bytes(b"\xe9 bare latin-1 accent")
 
 
-def test_robots_filter_stream_matches_batch_operator(spark):
-    """The stateless row-wise variant (packed rule arrays + HOF argmax)
-    is output-identical to the batch decision-table operator across the
-    precedence surface: longest match, Allow tie-win, $ anchor, no-match
-    default, no-robots host, NULL path."""
-    from data_engineering_assignment_spark.operators.crawl import (
-        robots_filter,
-        robots_filter_stream,
-    )
+def test_robots_filter_precedence_surface(spark):
+    """The decision-table operator across the precedence surface:
+    longest match, Allow tie-win, $ anchor, no-match default, no-robots
+    host, NULL path."""
+    from data_engineering_assignment_spark.operators.crawl import robots_filter
 
     urls = spark.createDataFrame(
         [
@@ -521,8 +488,6 @@ def test_robots_filter_stream_matches_batch_operator(spark):
         }
 
     batch = rows(robots_filter(urls, robots, "graftbot"))
-    stream = rows(robots_filter_stream(urls, robots, "graftbot"))
-    assert batch == stream
     assert batch[("h1.example", "/d/a1")] is True
     assert batch[("h1.example", "/d/z")] is False
     assert batch[("h1.example", "/w/9/end")] is False

@@ -13,7 +13,7 @@ from data_engineering_assignment_spark.functions.exif import (
     parse_exif,
 )
 from data_engineering_assignment_spark.functions.jpeg import (
-    decode_jpeg_gray,
+    decode_jpeg,
     encode_jpeg_gray,
 )
 
@@ -48,7 +48,7 @@ def test_exif_roundtrip_both_byte_orders():
         got = parse_exif(jpg)
         assert got == FIELDS, be
         # the spliced segment must not disturb pixel decode
-        assert decode_jpeg_gray(jpg).shape == (16, 16)
+        assert decode_jpeg(jpg).shape == (16, 16)
 
 
 def test_exif_absent_and_subsets():

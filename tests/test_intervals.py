@@ -1,12 +1,8 @@
-"""Interval-join operator tests: keyed point-in-interval and the keyless
-bucketed range join (bucket-decomposition equivalence with a naive theta join)."""
+"""Interval-join operator tests: keyed point-in-interval."""
 
 from __future__ import annotations
 
-from data_engineering_assignment_spark.operators.intervals import (
-    bucketed_range_join,
-    point_in_interval_join,
-)
+from data_engineering_assignment_spark.operators.intervals import point_in_interval_join
 
 
 def test_point_in_interval_left_closed(spark):
@@ -22,26 +18,3 @@ def test_point_in_interval_left_closed(spark):
     got = sorted((r["t"], r["tag"]) for r in out)
     # t=10.0 excluded (right-open); k=2 point at 5.0 not in [6,8)
     assert got == [(0.0, "a"), (5.0, "a")]
-
-
-def test_bucketed_range_join_matches_naive(spark):
-    points = spark.createDataFrame(
-        [(float(t),) for t in range(0, 100, 7)], "t double"
-    )
-    intervals = spark.createDataFrame(
-        [(3.0, 25.0, "x"), (24.0, 31.0, "y"), (90.0, 200.0, "z"), (40.0, 41.0, "w")],
-        "lo double, hi double, tag string",
-    )
-    naive = sorted(
-        (p["t"], i["tag"])
-        for p in points.collect()
-        for i in intervals.collect()
-        if i["lo"] <= p["t"] < i["hi"]
-    )
-    bucketed = sorted(
-        (r["t"], r["tag"])
-        for r in bucketed_range_join(
-            points, intervals, "t", "lo", "hi", bucket_width=10
-        ).collect()
-    )
-    assert bucketed == naive

@@ -9,7 +9,6 @@ from hypothesis import strategies as st
 from data_engineering_assignment_spark.functions.mime import (
     build_eml,
     parse_eml,
-    split_mbox,
 )
 
 
@@ -71,25 +70,6 @@ def test_guards():
         parse_eml(b"\x00\xffnot mail at all")
     with pytest.raises(ValueError, match="no core headers"):
         parse_eml(b"")
-
-
-def test_mbox_split_and_roundtrip():
-    mb = (
-        b"From alice@example.org Mon Jan  5 12:00:00 2026\n"
-        + build_eml(text="first")
-        + b"\nFrom bob@example.org Tue Jan  6 12:00:00 2026\n"
-        + build_eml(text="second")
-    )
-    msgs = split_mbox(mb)
-    assert len(msgs) == 2
-    assert parse_eml(msgs[0])["text"].strip() == "first"
-    assert parse_eml(msgs[1])["text"].strip() == "second"
-    # a 'From ' inside a body does NOT split (only line-start after \n
-    # counts, and real archives From-stuff bodies; our fixture bodies
-    # never start lines with 'From ')
-    assert split_mbox(b"") == []
-    with pytest.raises(ValueError, match="separator"):
-        split_mbox(b"not an mbox")
 
 
 @settings(max_examples=150, deadline=None)

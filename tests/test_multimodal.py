@@ -11,7 +11,6 @@ from data_engineering_assignment_spark.functions.multimodal import (
     decode_media,
     decode_rawm,
     encode_rawm,
-    extract_mean_color,
     resize_media,
     sample_frames,
 )
@@ -68,14 +67,6 @@ def test_sample_frames(spark):
     decoded, meta = decode_rawm(bytes(out["content"]))
     assert meta["n_frames"] == 4  # frames 0,3,6,9
     assert np.array_equal(decoded, f[::3])
-
-
-def test_extract_mean_color(spark):
-    f = np.zeros((1, 2, 2, 4), dtype=np.uint8)
-    f[..., 2] = 200  # constant R channel (BGRA)
-    df = media_df(spark, [("i", "image", 2, 2, 4, 1, bytearray(encode_rawm(f)))])
-    out = extract_mean_color(df).collect()[0]
-    assert out["mean_channels"] == [0.0, 0.0, 200.0, 0.0]
 
 
 def test_binary_file_source_roundtrip(spark, tmp_path):
@@ -610,13 +601,13 @@ def test_jpeg_flat_even_offset_roundtrip_exact():
     import numpy as np
 
     from data_engineering_assignment_spark.functions.jpeg import (
-        decode_jpeg_gray,
+        decode_jpeg,
         encode_jpeg_gray,
     )
 
     for v in (68, 128, 130, 186, 246):
         img = np.full((8, 16), v, np.uint8)
-        dec = decode_jpeg_gray(encode_jpeg_gray(img))
+        dec = decode_jpeg(encode_jpeg_gray(img))
         assert dec.shape == (8, 16)
         assert np.array_equal(dec, img), f"flat value {v} drifted"
 
@@ -627,13 +618,13 @@ def test_jpeg_roundtrip_ac_and_padding():
     import numpy as np
 
     from data_engineering_assignment_spark.functions.jpeg import (
-        decode_jpeg_gray,
+        decode_jpeg,
         encode_jpeg_gray,
     )
 
     x, y = np.meshgrid(np.arange(21), np.arange(13))
     img = (128 + 70 * np.sin(x / 5.0) + 40 * np.cos(y / 4.0)).clip(0, 255).astype(np.uint8)
-    dec = decode_jpeg_gray(encode_jpeg_gray(img))
+    dec = decode_jpeg(encode_jpeg_gray(img))
     assert dec.shape == img.shape
     assert int(np.max(np.abs(dec.astype(int) - img.astype(int)))) <= 8
 
@@ -647,7 +638,7 @@ def test_jpeg_committed_fixtures_decode_to_named_goldens():
 
     import numpy as np
 
-    from data_engineering_assignment_spark.functions.jpeg import decode_jpeg_gray
+    from data_engineering_assignment_spark.functions.jpeg import decode_jpeg
 
     fdir = Path(__file__).parent / "fixtures" / "media"
     names = sorted(p.name for p in fdir.glob("jg_*.jpg"))
@@ -656,7 +647,7 @@ def test_jpeg_committed_fixtures_decode_to_named_goldens():
         m = re.fullmatch(r"jg_(\d+)x(\d+)_m(\d+)\.jpg", name)
         assert m, name
         w, h, mean = int(m.group(1)), int(m.group(2)), int(m.group(3))
-        dec = decode_jpeg_gray((fdir / name).read_bytes())
+        dec = decode_jpeg((fdir / name).read_bytes())
         assert dec.shape == (h, w)
         assert int(round(float(dec.mean()))) == mean
 
@@ -694,7 +685,7 @@ def test_jpeg_rejects_out_of_scope_profiles():
     import pytest
 
     from data_engineering_assignment_spark.functions.jpeg import (
-        decode_jpeg_gray,
+        decode_jpeg,
         encode_jpeg_gray,
     )
 
@@ -704,20 +695,20 @@ def test_jpeg_rejects_out_of_scope_profiles():
     # declare a full-band DC+AC scan, invalid for SOF2 (DC scan, Se != 0)
     mislabeled = bytes(enc[:sof_at + 1]) + b"\xc2" + bytes(enc[sof_at + 2:])
     with pytest.raises(ValueError):
-        decode_jpeg_gray(mislabeled)
+        decode_jpeg(mislabeled)
     # SOF0 claiming 12 bits is nonconformant (baseline is 8-bit only);
     # bogus precisions are guarded on both frame types. (SOF1/SOF2 at
     # 12 bits decode natively since round 10 — tested elsewhere.)
     twelve = bytearray(enc)
     twelve[sof_at + 4] = 12
     with pytest.raises(NotImplementedError):
-        decode_jpeg_gray(bytes(twelve))
+        decode_jpeg(bytes(twelve))
     for marker in (b"\xc0", b"\xc2"):
         ten = bytearray(enc)
         ten[sof_at + 1 : sof_at + 2] = marker
         ten[sof_at + 4] = 10
         with pytest.raises(NotImplementedError):
-            decode_jpeg_gray(bytes(ten))
+            decode_jpeg(bytes(ten))
 
 
 def test_wav_mulaw_decode():
@@ -771,16 +762,17 @@ def test_jpeg_fill_bytes_before_markers():
     skipped, not dispatched on — hardware encoders emit them (r7 review:
     previously raised 'no SOS marker' on conformant files)."""
     from data_engineering_assignment_spark.functions.jpeg import (
-        decode_jpeg_gray,
+        decode_jpeg,
         encode_jpeg_gray,
     )
 
     img = (np.arange(64, dtype=np.uint8).reshape(8, 8) * 3 + 10).astype(np.uint8)
     wav = encode_jpeg_gray(img)
-    base = decode_jpeg_gray(wav)
+    base = decode_jpeg(wav)
+    assert base.ndim == 2
     # inject fill-byte runs after SOI (before the first marker's 0xFF)
     padded = wav[:2] + b"\xff\xff\xff" + wav[2:]
-    assert np.array_equal(decode_jpeg_gray(padded), base)
+    assert np.array_equal(decode_jpeg(padded), base)
 
 
 def test_jpeg_color_roundtrip_all_subsamplings():

@@ -9,7 +9,6 @@ from pyspark.sql import functions as F
 from data_engineering_assignment_spark.operators.aggregates import dround, dsum
 from data_engineering_assignment_spark.operators.text import with_text_stats
 from data_engineering_assignment_spark.operators.topk import (
-    argmax_row,
     top_k_by_freq,
     top_k_by_freq_agg,
 )
@@ -32,12 +31,6 @@ def test_top_k_agg_ordered_array(spark):
     df = spark.createDataFrame(rows, "grp string, item string")
     out = top_k_by_freq_agg(df, ["grp"], "item", k=3).collect()[0]
     assert out["top_items"] == ["a", "b", "c"]  # Counter.most_common shape (D3)
-
-
-def test_argmax_row(spark):
-    df = spark.createDataFrame([("a", 3), ("b", 9), ("c", 9)], "k string, v int")
-    top = argmax_row(df, [F.desc("v"), F.asc("k")], 1).collect()
-    assert (top[0]["k"], top[0]["v"]) == ("b", 9)
 
 
 def test_text_stats_hand_computed(spark):

@@ -104,22 +104,6 @@ def test_scd2_is_single_shuffle(spark, sf_dir):
     assert plans.count_shuffles(build(spark, sf_dir, "user_state_scd2")) == 1
 
 
-def test_partitioned_sink_prunes_partitions(spark, sf_dir, tmp_path):
-    """write_parquet(partition_by=...) output must support partition pruning:
-    a filter on the partition column shows up as PartitionFilters, not a
-    data-file filter."""
-    from data_engineering_assignment_spark import sources
-    from data_engineering_assignment_spark.tables import load
-
-    out = str(tmp_path / "events_by_type")
-    ev = load(spark, sf_dir, "events")
-    sources.write_parquet(ev, out, partition_by=["event_type"])
-    back = spark.read.parquet(out).filter("event_type = 'purchase'")
-    plan = plans.formatted_plan(back)
-    assert "PartitionFilters" in plan and "event_type" in plan.split("PartitionFilters")[1].split("\n")[0]
-    assert back.count() > 0
-
-
 def test_gapfill_is_single_scan_no_join(spark, sf_dir):
     """The lead-owned slot explode must not scaffold-join: one event scan,
     no Join operator, at most the agg + window exchanges."""

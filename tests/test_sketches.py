@@ -1,5 +1,5 @@
 """Count-Min sketch: overestimate guarantee, exactness without collisions,
-mergeability, and partitioning-independence."""
+and partitioning-independence."""
 
 from __future__ import annotations
 
@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from data_engineering_assignment_spark.operators.sketches import (
     cms_estimate,
-    cms_merge,
     cms_sketch,
 )
 
@@ -39,17 +38,6 @@ def test_cms_never_undercounts_and_is_exact_when_wide(spark):
     assert estw["hot"] == exact["hot"]
 
 
-def test_cms_merge_equals_whole_sketch(spark):
-    a = _stream(spark, ["x"] * 10 + ["y"] * 3)
-    b = _stream(spark, ["x"] * 5 + ["z"] * 7)
-    whole = cms_sketch(a.unionByName(b), "tok", depth=3, width=64)
-    merged = cms_merge(
-        cms_sketch(a, "tok", depth=3, width=64),
-        cms_sketch(b, "tok", depth=3, width=64),
-    )
-    assert sorted(map(tuple, whole.collect())) == sorted(map(tuple, merged.collect()))
-
-
 def test_cms_partitioning_independent(spark):
     df = _stream(spark, ["a", "b", "a", "c"] * 100)
     s1 = sorted(map(tuple, cms_sketch(df, "tok").collect()))
@@ -65,26 +53,6 @@ def test_cms_weighted(spark):
         for r in cms_estimate(sk, df.select("tok").distinct(), "tok", 2, 128).collect()
     }
     assert est["a"] >= 12 and est["b"] >= 1
-
-
-def test_cms_sketch_streaming_matches_batch(spark, tmp_path):
-    """cms_sketch is a plain groupBy aggregation, so the SAME code runs as
-    a Structured Streaming query — the streamed sketch over a file source
-    must equal the batch sketch bit-for-bit."""
-    from data_engineering_assignment_spark import streaming as st
-
-    docs = spark.createDataFrame(
-        [("a b c a",), ("b b hot hot hot",), ("c a hot",)], "text string"
-    )
-    path = str(tmp_path / "toks")
-    docs.select(F.explode(F.split("text", " ")).alias("tok")).write.parquet(path)
-
-    batch = cms_sketch(spark.read.parquet(path), "tok", depth=3, width=64)
-    stream_in = st.read_parquet_stream(spark, path)
-    streamed = st.run_available_now(
-        cms_sketch(stream_in, "tok", depth=3, width=64)
-    )
-    assert sorted(map(tuple, batch.collect())) == sorted(map(tuple, streamed.collect()))
 
 
 def test_bloom_no_false_negatives_and_bounded_fps(spark):

@@ -1,40 +1,19 @@
-"""Skew-operator tests: salted join and two-phase aggregation must produce
-exactly the plain-operator results while spreading hot keys."""
+"""Skew-operator tests: two-phase aggregation must produce exactly the
+plain-operator results while spreading hot keys."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from data_engineering_assignment_spark.operators.skew import salted_join, two_phase_agg
+from data_engineering_assignment_spark.operators.skew import two_phase_agg
 
 
-def skewed_frames(spark):
-    # 90% of probe rows share key 1
-    probe = spark.createDataFrame(
+def skewed_probe(spark):
+    # 90% of rows share key 1
+    return spark.createDataFrame(
         [(1, i) for i in range(900)] + [(i % 7 + 2, i) for i in range(100)],
         "k bigint, v bigint",
     )
-    build = spark.createDataFrame([(i, f"dim{i}") for i in range(1, 9)], "k bigint, tag string")
-    return probe, build
-
-
-def test_salted_join_matches_plain(spark):
-    probe, build = skewed_frames(spark)
-    plain = sorted(
-        (r["k"], r["v"], r["tag"]) for r in probe.join(build, "k").collect()
-    )
-    salted = sorted(
-        (r["k"], r["v"], r["tag"]) for r in salted_join(probe, build, "k", salt=4).collect()
-    )
-    assert salted == plain and len(plain) == 1000
-
-
-def test_salted_left_join_keeps_unmatched(spark):
-    probe, build = skewed_frames(spark)
-    probe = probe.union(spark.createDataFrame([(99, 0)], "k bigint, v bigint"))
-    out = salted_join(probe, build, "k", salt=4, how="left").collect()
-    assert len(out) == 1001
-    assert [r["tag"] for r in out if r["k"] == 99] == [None]
 
 
 def test_scatter_salt_spreads_identical_rows(spark):
@@ -54,15 +33,8 @@ def test_scatter_salt_spreads_identical_rows(spark):
     assert max(counts.values()) < 3 * (1000 / 8)  # no salt hoards the rows
 
 
-def test_salted_join_correct_with_duplicate_rows(spark):
-    dups = spark.createDataFrame([(1, 7)] * 500, "k bigint, v bigint")
-    build = spark.createDataFrame([(1, "dim1")], "k bigint, tag string")
-    out = salted_join(dups, build, "k", salt=4).collect()
-    assert len(out) == 500 and all(r["tag"] == "dim1" for r in out)
-
-
 def test_two_phase_agg_matches_plain(spark):
-    probe, _ = skewed_frames(spark)
+    probe = skewed_probe(spark)
     plain = {
         (r["k"]): (r["n"], r["s"], r["mx"])
         for r in probe.groupBy("k")

@@ -56,36 +56,6 @@ def test_parquet_merge_schema_evolution(spark, tmp_path):
     assert rows == {1: None, 2: 9.5}
 
 
-def test_sorted_parquet_files_cover_disjoint_ranges(spark, sf_dir, tmp_path):
-    """write_sorted_parquet must produce files whose key ranges do not
-    overlap — the property that lets parquet min/max stats prune whole
-    files on key predicates at scale."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from data_engineering_assignment_spark.tables import load
-
-    out = str(tmp_path / "orders_sorted")
-    sources.write_sorted_parquet(
-        load(spark, sf_dir, "orders"), out, ["o_orderkey"], n_files=4
-    )
-    ranges = []
-    for f in glob.glob(f"{out}/*.parquet"):
-        md = pq.read_metadata(f)
-        idx = md.schema.names.index("o_orderkey")
-        lo = min(md.row_group(i).column(idx).statistics.min for i in range(md.num_row_groups))
-        hi = max(md.row_group(i).column(idx).statistics.max for i in range(md.num_row_groups))
-        ranges.append((lo, hi))
-    assert len(ranges) >= 2
-    ranges.sort()
-    for (a_lo, a_hi), (b_lo, b_hi) in zip(ranges, ranges[1:]):
-        assert a_hi < b_lo  # strictly disjoint, no interleaving
-    # and the clustered copy is read-identical to the source
-    n = spark.read.parquet(out).count()
-    assert n == load(spark, sf_dir, "orders").count()
-
-
 def test_profile_approx_variant_avoids_expand(spark, sf_dir):
     """Exact multi-column count_distinct plans an Expand (rows x columns);
     the approx variant must not — that is its reason to exist at scale."""
@@ -103,75 +73,6 @@ def test_profile_approx_variant_avoids_expand(spark, sf_dir):
     for c in cols:  # HLL estimates within a loose band of truth
         assert abs(got[c]["n_distinct"] - exact[c]["n_distinct"]) <= 0.1 * exact[c]["n_distinct"] + 5
         assert got[c]["n_nulls"] == exact[c]["n_nulls"]
-
-
-def test_synthetic_docs_datasource(spark):
-    """Spark 4 Python DataSource API: partition-parallel deterministic reads
-    through the normal spark.read.format path."""
-    from data_engineering_assignment_spark.sources.synthetic import (
-        make_doc,
-        register_synthetic_docs,
-    )
-
-    register_synthetic_docs(spark)
-    df = (
-        spark.read.format("synthetic_docs")
-        .option("n", 200)
-        .option("partitions", 4)
-        .load()
-    )
-    assert df.rdd.getNumPartitions() == 4
-    rows = df.collect()
-    assert len(rows) == 200
-    assert sorted(r["doc_id"] for r in rows) == list(range(200))
-    # executor rows match the shared row function exactly (determinism)
-    by_id = {r["doc_id"]: tuple(r) for r in rows}
-    for i in (0, 7, 199):
-        assert by_id[i] == make_doc(i)
-    # a second read is byte-identical
-    again = (
-        spark.read.format("synthetic_docs")
-        .option("n", 200)
-        .option("partitions", 4)
-        .load()
-        .collect()
-    )
-    assert sorted(map(tuple, again)) == sorted(map(tuple, rows))
-
-
-def test_zorder_sink_clusters_all_dimensions(spark, tmp_path):
-    """Z-order clustering: each output file covers a narrow range in BOTH
-    clustered columns (single-key range clustering only bounds the leading
-    one), so parquet min/max stats prune on either predicate."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from data_engineering_assignment_spark import sources
-
-    n = 1 << 12
-    grid = 1 << 6  # 64x64 grid, both coords in [0, 64)
-    df = spark.range(n).selectExpr(
-        "id % 64 AS x", "CAST(id / 64 AS long) AS y", "id AS payload"
-    )
-    out = str(tmp_path / "zorder")
-    sources.write_zorder_parquet(df, out, ["x", "y"], bits=6, n_files=16)
-
-    def spans(path):
-        xs, ys = [], []
-        for f in sorted(glob.glob(path + "/*.parquet")):
-            md = pq.read_metadata(f)
-            x_stats = [md.row_group(i).column(0).statistics for i in range(md.num_row_groups)]
-            y_stats = [md.row_group(i).column(1).statistics for i in range(md.num_row_groups)]
-            xs.append(max(s.max for s in x_stats) - min(s.min for s in x_stats))
-            ys.append(max(s.max for s in y_stats) - min(s.min for s in y_stats))
-        return xs, ys
-    xs, ys = spans(out)
-    assert len(xs) >= 8
-    # every file's x-span AND y-span is a fraction of the 64-wide domain
-    assert max(xs) <= 32 and max(ys) <= 32
-    # correctness: round trip preserves the data
-    assert spark.read.parquet(out).count() == n
 
 
 def test_native_image_source_matches_own_codec(spark):
@@ -207,40 +108,6 @@ def test_native_image_source_matches_own_codec(spark):
             meta["width"], meta["height"], meta["channels"],
         )
         assert n["data_md5"] == hashlib.md5(frames[0].tobytes()).hexdigest()
-
-
-def test_orc_roundtrip_matches_parquet(spark, sf_dir, tmp_path):
-    """ORC sink + scan must reproduce the exact rows the parquet sink
-    writes, including partitioned layout pruning."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_assignment_spark.sources import (
-        read_orc,
-        write_orc,
-        write_parquet,
-    )
-    from data_engineering_assignment_spark.tables import load
-
-    orders = load(spark, sf_dir, "orders").limit(500)
-    po, pp = str(tmp_path / "o.orc"), str(tmp_path / "o.parquet")
-    write_orc(orders, po, partition_by=["o_orderpriority"])
-    write_parquet(orders, pp, partition_by=["o_orderpriority"])
-
-    a = sorted(map(tuple, read_orc(spark, po).select(sorted(orders.columns)).collect()))
-    b = sorted(
-        map(tuple, spark.read.parquet(pp).select(sorted(orders.columns)).collect())
-    )
-    assert a == b and len(a) == 500
-
-    # partition pruning reaches the ORC scan like it does parquet
-    plan = (
-        read_orc(spark, po)
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters: [isnotnull(o_orderpriority" in plan
 
 
 def test_tar_members_contract(spark):

@@ -1,47 +1,5 @@
 
 
-def test_weighted_median_pruned_matches_udaf(spark):
-    """Histogram-pruned exact median must equal the grouped-agg UDAF
-    bit-for-bit — ties, skewed keys, negative values, bucket-edge values,
-    any partitioning."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from data_engineering_assignment_spark.functions.udafs import weighted_median
-    from data_engineering_assignment_spark.operators.quantiles import (
-        weighted_median_pruned,
-    )
-
-    rng = random.Random(3)
-    rows = []
-    for i in range(900):
-        rows.append(
-            (
-                "k%d" % (i % 4),
-                rng.choice(
-                    [round(rng.uniform(-500, 500), 2), 100.0, 200.0, -100.0]
-                ),
-                rng.randrange(1, 9),
-            )
-        )
-    df = spark.createDataFrame(rows, "key string, price double, qty long")
-    udaf = {
-        r["key"]: r["m"]
-        for r in df.groupBy("key").agg(weighted_median("price", "qty").alias("m")).collect()
-    }
-    pruned = {
-        r["key"]: r["wmedian"]
-        for r in weighted_median_pruned(df, "price", "qty", "key").collect()
-    }
-    assert udaf == pruned and len(pruned) == 4
-    again = {
-        r["key"]: r["wmedian"]
-        for r in weighted_median_pruned(df.repartition(17), "price", "qty", "key").collect()
-    }
-    assert udaf == again
-
-
 def test_rank_values_pruned_matches_window_formulation(spark):
     """rank_values_pruned must equal the whole-group row_number formulation
     bit-for-bit: same integer rank positions (floor((n+1)/2), floor((9n+9)/10)),
