@@ -50,13 +50,13 @@ def _round_digit(channel: np.ndarray) -> np.ndarray:
     return (channel >= 85).astype(np.int32) + (channel >= 170).astype(np.int32)
 
 
-def color_names_from_bgra(data: bytes, channels: int = 4) -> list[str]:
+def color_names_from_bgra(data: bytes) -> list[str]:
     """Per-pixel basic-color names for one image's raw BGRA bytes."""
     if data is None:
         return []
     arr = np.frombuffer(data, dtype=np.uint8)
-    n_px = len(arr) // channels
-    px = arr[: n_px * channels].reshape(n_px, channels)
+    n_px = len(arr) // 4
+    px = arr[: n_px * 4].reshape(n_px, 4)
     b, g, r, a = px[:, 0], px[:, 1], px[:, 2], px[:, 3]
     idx = _round_digit(r) * 9 + _round_digit(g) * 3 + _round_digit(b)
     names = _COLOR_TABLE[idx]

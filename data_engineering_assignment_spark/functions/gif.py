@@ -312,7 +312,6 @@ def encode_gif(
     disposals: list[int] | None = None,
     interlace: bool = False,
     offsets: list[tuple[int, int]] | None = None,
-    screen: tuple[int, int] | None = None,
     loop: int | None = None,
 ) -> bytes:
     """Serialize palette-index frames as a GIF89a.
@@ -320,8 +319,8 @@ def encode_gif(
     ``frames``: list of (h_i, w_i) uint8 index arrays (sizes may differ —
     animation sub-rectangles); ``palette``: (n, 3) uint8 RGB with n a
     power of two in 2..256; ``offsets``: per-frame (left, top) placement
-    on the logical screen (default (0, 0)); ``screen``: logical screen
-    (w, h), default the bounding box of every placed frame;
+    on the logical screen (default (0, 0)); the logical screen is the
+    bounding box of every placed frame;
     ``transparent``: one index for every frame, or a per-frame list
     (None = that frame is fully opaque). A graphic-control extension is
     written per frame whenever transparency, a disposal method or
@@ -341,8 +340,6 @@ def encode_gif(
         transparent = [transparent] * len(frames)
     sw = max(o[0] + f.shape[1] for o, f in zip(offsets, frames))
     sh = max(o[1] + f.shape[0] for o, f in zip(offsets, frames))
-    if screen is not None:
-        sw, sh = max(sw, screen[0]), max(sh, screen[1])
 
     out = bytearray(b"GIF89a")
     out += struct.pack("<HHBBB", sw, sh, 0x80 | (depth - 1), 0, 0)

@@ -164,10 +164,10 @@ def parse_m3u8(content: bytes | str) -> dict:
     }
 
 
-def build_master(variants: list[dict], version: int = 7) -> str:
+def build_master(variants: list[dict]) -> str:
     """Fixture twin: variant dicts (bandwidth, optional (width, height),
     codecs, uri) → master playlist text."""
-    out = ["#EXTM3U", f"#EXT-X-VERSION:{version}"]
+    out = ["#EXTM3U", "#EXT-X-VERSION:7"]
     for v in variants:
         attrs = [f"BANDWIDTH={v['bandwidth']}"]
         if v.get("width") is not None:
@@ -179,27 +179,19 @@ def build_master(variants: list[dict], version: int = 7) -> str:
     return "\n".join(out) + "\n"
 
 
-def build_media(
-    durations_ms: list[int],
-    target_s: int | None = None,
-    endlist: bool = True,
-    version: int = 7,
-    uri_prefix: str = "seg",
-) -> str:
+def build_media(durations_ms: list[int], endlist: bool = True) -> str:
     """Fixture twin: per-segment millisecond durations → media playlist
-    text (decimal-second EXTINF lines, optional ENDLIST)."""
-    if target_s is None:
-        target_s = max(
-            ((d + 999) // 1000 for d in durations_ms), default=1
-        )
+    text (decimal-second EXTINF lines, optional ENDLIST); the target
+    duration is the longest segment rounded up to whole seconds."""
+    target_s = max(((d + 999) // 1000 for d in durations_ms), default=1)
     out = [
         "#EXTM3U",
-        f"#EXT-X-VERSION:{version}",
+        "#EXT-X-VERSION:7",
         f"#EXT-X-TARGETDURATION:{target_s}",
     ]
     for n, d in enumerate(durations_ms):
         out.append(f"#EXTINF:{d // 1000}.{d % 1000:03d},")
-        out.append(f"{uri_prefix}{n}.m4s")
+        out.append(f"seg{n}.m4s")
     if endlist:
         out.append("#EXT-X-ENDLIST")
     return "\n".join(out) + "\n"

@@ -187,15 +187,11 @@ def parse_ics(content: bytes | str) -> dict:
     }
 
 
-def build_ics(
-    events: list[dict],
-    todos: int = 0,
-    prodid: str = "-//fixture//EN",
-) -> str:
+def build_ics(events: list[dict], todos: int = 0) -> str:
     """Fixture twin: event dicts (uid, summary, dtstart, dtend |
     duration_s, rrule bool, attendees int) → folded VCALENDAR text
     (long SUMMARY lines fold at 72 octets per §3.1)."""
-    out = ["BEGIN:VCALENDAR", "VERSION:2.0", f"PRODID:{prodid}"]
+    out = ["BEGIN:VCALENDAR", "VERSION:2.0", "PRODID:-//fixture//EN"]
     for e in events:
         out.append("BEGIN:VEVENT")
         if e.get("uid"):

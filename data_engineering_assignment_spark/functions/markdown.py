@@ -163,10 +163,9 @@ def build_markdown(
     links: list[tuple] | None = None,
     images: list[tuple] | None = None,
     code: list[tuple] | None = None,
-    seed_word: str = "w",
 ) -> str:
     """Fixture twin: ``n_paras`` paragraphs of ``para_words`` words
-    (``seed_word`` repeated), optional (level, text) headings,
+    (the word "w" repeated), optional (level, text) headings,
     (text, url) links, (alt, url) images, (lang, [lines]) fenced
     blocks — in a fixed order (heading_i, para_i, extras on the last
     paragraph)."""
@@ -177,7 +176,7 @@ def build_markdown(
             lvl, text = headings[i]
             lines.append("#" * lvl + " " + text)
             lines.append("")
-        words = [seed_word] * para_words
+        words = ["w"] * para_words
         if i == n_paras - 1:
             for t, u in links or []:
                 words.append(f"[{t}]({u})")

@@ -165,7 +165,6 @@ def build_eml(
     from_addr: str = "a@example.org",
     to_addrs: str = "b@example.org",
     subject: str = "subject",
-    date: str = "Mon, 05 Jan 2026 12:00:00 +0000",
     text: str = "body",
     html: str | None = None,
     attachments: list[tuple[str, bytes]] | None = None,
@@ -212,7 +211,7 @@ def build_eml(
     headers = [f"From: {enc_header(from_addr)}",
                f"To: {enc_header(to_addrs)}",
                f"Subject: {enc_header(subject)}",
-               f"Date: {date}"]
+               "Date: Mon, 05 Jan 2026 12:00:00 +0000"]
     if message_id is not None:
         headers.append(f"Message-ID: {message_id}")
     headers.append("MIME-Version: 1.0")

@@ -192,13 +192,13 @@ def parse_mp3(content: bytes) -> dict:
 # ---------------------------------------------------------------------------
 
 
-def _frame_bytes(kbps: int, sample_rate: int, padding: int = 0) -> bytes:
+def _frame_bytes(kbps: int, sample_rate: int) -> bytes:
     bi = _BITRATES.index(kbps)
     si = _SAMPLE_RATES.index(sample_rate)
     hdr = bytes(
-        [0xFF, 0xFB, (bi << 4) | (si << 2) | (padding << 1), 0x00]
+        [0xFF, 0xFB, (bi << 4) | (si << 2), 0x00]
     )
-    size = 144 * kbps * 1000 // sample_rate + padding
+    size = 144 * kbps * 1000 // sample_rate
     return hdr + b"\x00" * (size - 4)
 
 

@@ -24,8 +24,6 @@ from __future__ import annotations
 
 import struct
 
-_CONTAINERS = {b"moov", b"trak", b"mdia", b"minf", b"stbl", b"edts"}
-
 
 def _walk_boxes(data: bytes, start: int, end: int, depth: int = 0):
     """Yield (type, body_start, body_end) for sibling boxes in

@@ -891,7 +891,7 @@ def decode_any(content: bytes) -> tuple[np.ndarray, dict]:
     return decode_rawm(content)  # raises the canonical NotImplementedError
 
 
-def decode_media(df: DataFrame, content_col: str = "content") -> DataFrame:
+def decode_media(df: DataFrame) -> DataFrame:
     """Decode + verify metadata for each media row (mapInPandas; bytes never
     leave the executor). Output adds ``decoded_ok`` and refreshed metadata."""
     schema = MEDIA_SCHEMA + ", decoded_ok boolean"
@@ -899,7 +899,7 @@ def decode_media(df: DataFrame, content_col: str = "content") -> DataFrame:
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             meta = []
-            for content in pdf[content_col]:
+            for content in pdf["content"]:
                 try:
                     _, m = decode_any(bytes(content))
                     meta.append((m["width"], m["height"], m["channels"], m["n_frames"], True))
@@ -1147,17 +1147,12 @@ def _decode_ms_adpcm(
     return np.concatenate(parts)
 
 
-def encode_wav_ms_adpcm(
-    samples: np.ndarray,
-    sample_rate: int = 16000,
-    block_frames: int = 64,
-    predictor: int = 0,
-) -> bytes:
-    """Fixture generator: (n_frames, n_channels) int16 samples → an
+def encode_wav_ms_adpcm(samples: np.ndarray, block_frames: int = 64) -> bytes:
+    """Fixture generator: (n_frames, n_channels) int16 samples → a 16 kHz
     MS-ADPCM (format tag 2) WAV with ``block_frames`` frames per block.
     The first two frames of each block are stored VERBATIM in the block
     header (so they decode exactly); the rest quantize greedily against
-    the chosen predictor with the spec's delta adaptation. Emits the
+    the first predictor pair with the spec's delta adaptation. Emits the
     fmt extension (samples-per-block + the seven coefficient pairs) and
     a fact chunk with the true frame count."""
     import struct as _struct
@@ -1168,8 +1163,8 @@ def encode_wav_ms_adpcm(
     n_frames, n_ch = x.shape
     if block_frames < 2:
         raise ValueError("WAV: MS-ADPCM needs >= 2 frames per block")
-    c1 = int(_MS_COEF1[predictor])
-    c2 = int(_MS_COEF2[predictor])
+    c1 = int(_MS_COEF1[0])
+    c2 = int(_MS_COEF2[0])
     blocks = bytearray()
     for b0 in range(0, n_frames, block_frames):
         blk = x[b0 : b0 + block_frames]
@@ -1178,7 +1173,7 @@ def encode_wav_ms_adpcm(
         delta = [128] * n_ch
         s2 = blk[0].tolist()
         s1 = blk[1].tolist()
-        blocks += bytes([predictor] * n_ch)
+        blocks += bytes(n_ch)
         for d in delta:
             blocks += _struct.pack("<h", d)
         for v in s1:
@@ -1211,8 +1206,8 @@ def encode_wav_ms_adpcm(
         "<HHIIHHH",
         2,
         n_ch,
-        sample_rate,
-        sample_rate * block_align // block_frames,
+        16000,
+        16000 * block_align // block_frames,
         block_align,
         4,
         len(ext),
@@ -1436,7 +1431,7 @@ def encode_wav(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
     )
 
 
-def extract_audio_features(df: DataFrame, content_col: str = "content") -> DataFrame:
+def extract_audio_features(df: DataFrame) -> DataFrame:
     """Audio feature extraction over WAV binary columns, keyed by ``path``
     (one ``sources._binary_meta_source`` pass; bytes never leave the
     executor): sample rate, channels, duration, RMS energy, peak amplitude
@@ -1455,7 +1450,7 @@ def extract_audio_features(df: DataFrame, content_col: str = "content") -> DataF
         return [(meta["sample_rate"], meta["n_channels"], dur, rms, peak, zcr)]
 
     return _binary_meta_source(
-        df, content_col, "path", decode_wav,
+        df, "content", "path", decode_wav,
         "sample_rate int, n_channels int, duration_s double, rms double,"
         " peak double, zero_cross_rate double",
         rows_fn,

@@ -1463,9 +1463,7 @@ def _walk_pages(node_ref, values, visited, depth: int = 0) -> list[tuple]:
     raise ValueError(f"unexpected page-tree node type {t!r}")
 
 
-def _page_uri_links(
-    page_oid, page, values, crypt, objstm_members, depth: int = 0
-) -> list[str]:
+def _page_uri_links(page_oid, page, values, crypt, objstm_members) -> list[str]:
     """URI-action outlinks of one page (ISO 32000-1 §12.5.6.5 link
     annotations + §12.6.4.7 URI actions): /Annots entries whose
     /Subtype is /Link and whose action /S is /URI, in annotation-array

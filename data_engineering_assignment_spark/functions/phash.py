@@ -43,12 +43,12 @@ import numpy as np
 _N = 32  # downsample grid
 
 
-def _dct_rows(k: int, n: int = _N) -> np.ndarray:
-    """First ``k`` rows of the n-point DCT-II basis (orthonormality
+def _dct_rows(k: int) -> np.ndarray:
+    """First ``k`` rows of the ``_N``-point DCT-II basis (orthonormality
     irrelevant: thresholding against the median is scale-invariant)."""
-    j = np.arange(n, dtype=np.float64)
+    j = np.arange(_N, dtype=np.float64)
     u = np.arange(k, dtype=np.float64)[:, None]
-    return np.cos(np.pi * u * (2.0 * j + 1.0) / (2.0 * n))
+    return np.cos(np.pi * u * (2.0 * j + 1.0) / (2.0 * _N))
 
 
 _D8 = _dct_rows(8)  # (8, 32): C = _D8 @ X @ _D8.T is the low-freq block

@@ -24,7 +24,6 @@ import struct
 _VP8X_ICC = 0x20
 _VP8X_ALPHA = 0x10
 _VP8X_EXIF = 0x08
-_VP8X_XMP = 0x04
 _VP8X_ANIM = 0x02
 
 

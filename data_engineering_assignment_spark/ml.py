@@ -47,16 +47,13 @@ def train_random_forest(
     label_col: str,
     num_trees: int = 100,
     seed: int = 1,
-    train_fraction: float = 0.8,
 ):
     """M1-M4: assemble → seeded 80/20 split → RF fit → test predictions.
 
     Returns (model, test predictions with prediction/probability cols).
     """
     assembled = assemble_features(df, feature_cols)
-    train, test = assembled.randomSplit(
-        [train_fraction, 1.0 - train_fraction], seed=seed
-    )
+    train, test = assembled.randomSplit([0.8, 0.2], seed=seed)
     clf = RandomForestClassifier(
         labelCol=label_col, featuresCol="features", numTrees=num_trees, seed=seed
     )

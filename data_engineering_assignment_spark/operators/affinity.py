@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from .aggregates import dround
 
+TOP_K = 25  # rows each of association_rules / association_triples keeps
 
 def order_baskets(lineitem: DataFrame) -> DataFrame:
     """(l_orderkey, items) — sorted distinct parts per order, one shuffle.
@@ -63,9 +64,9 @@ def _pair_structs(items) -> F.Column:
 
 
 def association_rules(
-    lineitem: DataFrame, min_pair_count: int = 3, top_k: int = 25
+    lineitem: DataFrame, min_pair_count: int = 3
 ) -> DataFrame:
-    """Top-k item-pair association rules (p1 => p2, p1 < p2) by lift.
+    """Top-``TOP_K`` item-pair association rules (p1 => p2, p1 < p2) by lift.
 
     Columns: p1, p2, pair_cnt, cnt_p1, cnt_p2, support, confidence, lift.
     confidence is directional for the rule p1 => p2 (pair_cnt / cnt_p1);
@@ -112,7 +113,7 @@ def association_rules(
         .orderBy(
             F.col("lift").desc(), F.col("pair_cnt").desc(), "p1", "p2"
         )
-        .limit(top_k)
+        .limit(TOP_K)
     )
 
 
@@ -142,9 +143,9 @@ def _triple_structs(items) -> F.Column:
 
 
 def association_triples(
-    lineitem: DataFrame, min_count: int = 3, top_k: int = 25
+    lineitem: DataFrame, min_count: int = 3
 ) -> DataFrame:
-    """Top-k frequent item TRIPLES by basket co-occurrence — the apriori
+    """Top-``TOP_K`` frequent item TRIPLES by basket co-occurrence — the apriori
     level-3 itemsets, counted directly from in-row enumeration (exact; the
     level-wise candidate prune is unnecessary when baskets are bounded).
 
@@ -170,5 +171,5 @@ def association_triples(
             ).alias("support"),
         )
         .orderBy(F.col("triple_cnt").desc(), "p1", "p2", "p3")
-        .limit(top_k)
+        .limit(TOP_K)
     )

@@ -68,21 +68,19 @@ def dratio(num: Column | str, den: Column | str, alias: str, scale: int = 2, pct
     return dround(n / d, scale).alias(alias)
 
 
-def cond_sum(cond: Column, alias: str, value: Column | None = None) -> Column:
-    """``SUM(CASE WHEN cond THEN v ELSE 0)`` — the reference's conditional
+def cond_sum(cond: Column, alias: str) -> Column:
+    """``SUM(CASE WHEN cond THEN 1 ELSE 0)`` — the reference's conditional
     count idiom (goal attribution, Assignment-python.py:174-177; win/draw/loss
     sums, :257-265)."""
-    if value is None:
-        return F.sum(F.when(cond, 1).otherwise(0)).alias(alias)
-    return F.sum(F.when(cond, value).otherwise(F.lit(0))).alias(alias)
+    return F.sum(F.when(cond, 1).otherwise(0)).alias(alias)
 
 
 # ---------------------------------------------------------------------------
 # Oracle-SQL (DuckDB) twins — same arithmetic, same rounding, same names.
 # ---------------------------------------------------------------------------
 
-def o_dsum(expr: str, alias: str, scale: int = 2) -> str:
-    return f"ROUND(SUM(CAST({expr} AS DECIMAL(27,6))), {scale})::DOUBLE AS {alias}"
+def o_dsum(expr: str, alias: str) -> str:
+    return f"ROUND(SUM(CAST({expr} AS DECIMAL(27,6))), 2)::DOUBLE AS {alias}"
 
 
 def o_davg(expr: str, alias: str, scale: int = 6) -> str:

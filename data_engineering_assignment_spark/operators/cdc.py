@@ -19,19 +19,12 @@ from pyspark.sql import functions as F
 BASE_SEQ = -1  # sequence assigned to base-snapshot rows: below any change
 
 
-def apply_changes(
-    base: DataFrame,
-    changes: DataFrame,
-    keys: list[str],
-    seq_col: str = "seq",
-    op_col: str = "op",
-    delete_op: str = "D",
-) -> DataFrame:
+def apply_changes(base: DataFrame, changes: DataFrame, keys: list[str]) -> DataFrame:
     """Apply ``changes`` (upserts + deletes) onto ``base``.
 
-    ``changes`` must carry the base's columns plus ``seq_col`` (numeric,
-    ``>= 0``, higher = newer) and ``op_col`` (``delete_op`` rows remove the
-    key; anything else upserts). Per key, the newest row wins — a change
+    ``changes`` must carry the base's columns plus ``seq`` (numeric,
+    ``>= 0``, higher = newer) and ``op`` (``"D"`` rows remove the key;
+    anything else upserts). Per key, the newest row wins — a change
     with the same seq as another change falls back to input order only if
     seqs collide, so give changes distinct seqs for full determinism. A
     delete followed by a later upsert (higher seq) resurrects the key.
@@ -48,14 +41,14 @@ def apply_changes(
     c = changes.select(
         *keys,
         *value_cols,
-        F.col(seq_col).cast("long").alias("_seq"),
-        F.col(op_col).alias("_op"),
+        F.col("seq").cast("long").alias("_seq"),
+        F.col("op").alias("_op"),
         F.lit(1).alias("_chg"),
     )
     w = Window.partitionBy(*keys).orderBy(F.desc("_seq"), F.desc("_chg"))
     return (
         b.unionByName(c)
         .withColumn("_rn", F.row_number().over(w))
-        .filter((F.col("_rn") == 1) & (F.col("_op") != delete_op))
+        .filter((F.col("_rn") == 1) & (F.col("_op") != "D"))
         .select(*keys, *value_cols)
     )

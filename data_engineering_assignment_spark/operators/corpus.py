@@ -45,13 +45,11 @@ from .parallelism import ensure_min_parallelism
 from .text import tokens
 
 
-def tfidf_top_terms(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame) -> DataFrame:
     """Most corpus-salient term per document: the token maximizing
     ``tf * (n_docs/df)^2`` (ties broken by token, so the result is
     total-order deterministic). Output: (id, top_term, tf, df, rarity)."""
-    tok = df.select(F.col(id_col).alias("doc"), F.explode(tokens(text_col)).alias("tok"))
+    tok = df.select(F.col("doc_id").alias("doc"), F.explode(tokens("text")).alias("tok"))
     tf = tok.groupBy("doc", "tok").agg(F.count(F.lit(1)).alias("tf"))
     # (doc, tok) rows are unique post-aggregation, so a per-token row count
     # IS the document frequency. Aggregate it into a (tok, df) table and
@@ -75,7 +73,7 @@ def tfidf_top_terms(
         scored.withColumn("_rn", F.row_number().over(top))
         .filter(F.col("_rn") == 1)
         .select(
-            F.col("doc").alias(id_col),
+            F.col("doc").alias("doc_id"),
             F.col("tok").alias("top_term"),
             "tf",
             "df",
@@ -84,13 +82,7 @@ def tfidf_top_terms(
     )
 
 
-def token_chunks(
-    df: DataFrame,
-    size: int = 64,
-    stride: int = 48,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def token_chunks(df: DataFrame, size: int = 64, stride: int = 48) -> DataFrame:
     """Fixed-stride token chunks with overlap (``size - stride`` tokens),
     the RAG / context-window packing primitive. Narrow per-row explode —
     zero shuffles; every token lands in ≥1 chunk when ``stride <= size``.
@@ -98,17 +90,17 @@ def token_chunks(
     Output: (id, chunk_id, n_chunk_tokens, chunk_md5)."""
     if stride <= 0 or size <= 0:
         raise ValueError("size and stride must be positive")
-    toks = tokens(text_col)
+    toks = tokens("text")
     starts = F.sequence(
         F.lit(0), F.greatest(F.size(toks) - 1, F.lit(0)), F.lit(stride)
     )
     chunk = F.slice(F.col("_toks"), F.col("_start") + 1, size)
     return (
         df.select(
-            F.col(id_col), toks.alias("_toks"), F.explode(starts).alias("_start")
+            F.col("doc_id"), toks.alias("_toks"), F.explode(starts).alias("_start")
         )
         .select(
-            id_col,
+            "doc_id",
             (F.col("_start") / stride).cast("long").alias("chunk_id"),
             F.size(chunk).cast("long").alias("n_chunk_tokens"),
             F.md5(F.concat_ws(" ", chunk).cast("binary")).alias("chunk_md5"),
@@ -116,12 +108,7 @@ def token_chunks(
     )
 
 
-def paragraph_dedup_stats(
-    df: DataFrame,
-    size: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def paragraph_dedup_stats(df: DataFrame, size: int = 16) -> DataFrame:
     """CCNet-style paragraph-level exact dedup accounting (Wenzek et al.
     2020, "CCNet: Extracting high quality monolingual datasets from web
     crawl data" — dedup at paragraph granularity by content hash, keep the
@@ -155,7 +142,7 @@ def paragraph_dedup_stats(
     paragraph chars, the per-doc shrink a corpus-wide paragraph dedup
     would inflict.
     """
-    stream = paragraph_stream(df, size, text_col=text_col, id_col=id_col).localCheckpoint(
+    stream = paragraph_stream(df, size).localCheckpoint(
         eager=True
     )
     totals = stream.groupBy("doc_id").agg(
@@ -199,23 +186,18 @@ def paragraph_dedup_stats(
 _PIDX_CAP = 1 << 20  # paragraph-index headroom in the integer argmin code
 
 
-def paragraph_stream(
-    df: DataFrame,
-    size: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def paragraph_stream(df: DataFrame, size: int = 16) -> DataFrame:
     """The (doc_id, para_idx, key, chars) paragraph-key stream — one row
     per ``size``-token block, md5-keyed. Checkpoint-free: the batch
     accounting (:func:`paragraph_dedup_stats`) materializes it for its
     two-consumer fan-out."""
-    toks = tokens(text_col)
+    toks = tokens("text")
     starts = F.sequence(
         F.lit(0), F.greatest(F.size(F.col("_toks")) - 1, F.lit(0)), F.lit(size)
     )
     para = F.concat_ws(" ", F.slice(F.col("_toks"), F.col("_start") + 1, size))
     return (
-        df.select(F.col(id_col).alias("doc_id"), toks.alias("_toks"))
+        df.select("doc_id", toks.alias("_toks"))
         .select("doc_id", F.col("_toks"), F.explode(starts).alias("_start"))
         .select(
             "doc_id",
@@ -226,13 +208,7 @@ def paragraph_stream(
     )
 
 
-def boilerplate_ngrams(
-    df: DataFrame,
-    n: int = 3,
-    min_docs: int = 10,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def boilerplate_ngrams(df: DataFrame, n: int = 3, min_docs: int = 10) -> DataFrame:
     """CCNet-style boilerplate signal: per document, the fraction of its
     distinct word ``n``-grams that appear in ≥ ``min_docs`` documents
     corpus-wide (navigation chrome, license headers, templated text).
@@ -260,8 +236,8 @@ def boilerplate_ngrams(
     Output: (id, n_shingles, n_boiler, boiler_ratio)."""
     sh = (
         ensure_min_parallelism(df).select(
-            F.col(id_col).alias("doc"),
-            F.explode(word_shingles(text_col, n)).alias("shingle"),
+            F.col("doc_id").alias("doc"),
+            F.explode(word_shingles("text", n)).alias("shingle"),
         )
         .select("doc", F.xxhash64("shingle").alias("sh_h"))
         .localCheckpoint(eager=True)
@@ -274,13 +250,13 @@ def boilerplate_ngrams(
     )
     marked = sh.join(boiler_keys, "sh_h", "left")
     return (
-        marked.groupBy(F.col("doc").alias(id_col))
+        marked.groupBy(F.col("doc").alias("doc_id"))
         .agg(
             F.count(F.lit(1)).alias("n_shingles"),
             F.count("_boiler").alias("n_boiler"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_shingles",
             "n_boiler",
             dround(
@@ -290,12 +266,7 @@ def boilerplate_ngrams(
     )
 
 
-def dup_span_stats(
-    df: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dup_span_stats(df: DataFrame, n: int = 8) -> DataFrame:
     """Exact-substring-dedup signal (the n-gram approximation of Lee et
     al. 2022's suffix-array dedup): per document, the fraction of its word
     ``n``-gram START POSITIONS whose shingle also appears in at least one
@@ -318,7 +289,7 @@ def dup_span_stats(
     # inside the lambda re-splits the text once per position
     sh_pos = F.get(
         F.transform(
-            F.array(tokens(text_col)),
+            F.array(tokens("text")),
             lambda tk: F.when(
                 F.size(tk) >= n,
                 F.transform(
@@ -331,7 +302,7 @@ def dup_span_stats(
     )
     stream = (
         ensure_min_parallelism(df)
-        .select(F.col(id_col).alias("doc"), F.explode(sh_pos).alias("shingle"))
+        .select(F.col("doc_id").alias("doc"), F.explode(sh_pos).alias("shingle"))
         .select("doc", F.xxhash64("shingle").alias("sh_h"))
         .localCheckpoint(eager=True)
     )
@@ -344,13 +315,13 @@ def dup_span_stats(
     )
     marked = stream.join(dup_keys, "sh_h", "left")
     return (
-        marked.groupBy(F.col("doc").alias(id_col))
+        marked.groupBy(F.col("doc").alias("doc_id"))
         .agg(
             F.count(F.lit(1)).alias("n_positions"),
             F.count("_dup").alias("n_dup_positions"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_positions",
             "n_dup_positions",
             dround(
@@ -362,12 +333,7 @@ def dup_span_stats(
     )
 
 
-def dup_span_merged_stats(
-    df: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def dup_span_merged_stats(df: DataFrame, n: int = 8) -> DataFrame:
     """Span-MERGED exact-substring dedup accounting (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better" — the
     deduplicate-text-datasets output shape): per document, the maximal
@@ -396,11 +362,9 @@ def dup_span_merged_stats(
     stream = shingle_hash_stream(
         ensure_min_parallelism(df),
         n=n,
-        id_cols=(id_col,),
-        text_col=text_col,
         distinct=False,
         with_pos=True,
-    ).withColumnRenamed(id_col, "doc").localCheckpoint(eager=True)
+    ).withColumnRenamed("doc_id", "doc").localCheckpoint(eager=True)
     dup_keys = (
         stream.select("doc", "rh")
         .distinct()
@@ -440,7 +404,7 @@ def dup_span_merged_stats(
     return (
         totals.join(per_doc, "doc", "left")
         .select(
-            F.col("doc").alias(id_col),
+            F.col("doc").alias("doc_id"),
             "n_tokens",
             F.coalesce("n_spans", F.lit(0)).cast("long").alias("n_spans"),
             F.coalesce("dup_tokens", F.lit(0)).cast("long").alias("dup_tokens"),
@@ -461,16 +425,12 @@ def hybrid_rrf(
     query_vec_id: int = 0,
     k_each: int = 20,
     k: int = 10,
-    k0: int = 60,
-    id_col: str = "doc_id",
-    vec_id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Hybrid lexical+semantic retrieval fused with Reciprocal Rank Fusion
     (Cormack et al. 2009): the BM25 top-``k_each`` for a literal term set
     and the exact-cosine top-``k_each`` for a query embedding are merged by
 
-        rrf(d) = sum over legs of 1 / (k0 + rank_leg(d))
+        rrf(d) = sum over legs of 1 / (k0 + rank_leg(d)),   k0 = 60
 
     — the standard production pattern for RAG retrieval (rank-based fusion
     needs no score calibration between the two spaces, and each 1/(k0+r)
@@ -486,22 +446,22 @@ def hybrid_rrf(
     """
     from .similarity import cosine_topk
 
-    lex = bm25_topk(docs, terms, k=k_each, id_col=id_col).select(
-        F.col(id_col).alias("_id"), F.col("rank").alias("r_lex")
+    lex = bm25_topk(docs, terms, k=k_each).select(
+        F.col("doc_id").alias("_id"), F.col("rank").alias("r_lex")
     )
-    q = embeddings.filter(F.col(vec_id_col) == query_vec_id)
+    q = embeddings.filter(F.col("vec_id") == query_vec_id)
     sem = cosine_topk(
-        embeddings, q, k=k_each, id_col=vec_id_col, vec_col=vec_col
+        embeddings, q, k=k_each
     ).select(F.col("neighbor_id").alias("_id"), F.col("rnk").alias("r_sem"))
-    kk = F.lit(float(k0))
+    kk = F.lit(60.0)
     rrf = F.coalesce(F.lit(1.0) / (kk + F.col("r_lex")), F.lit(0.0)) + F.coalesce(
         F.lit(1.0) / (kk + F.col("r_sem")), F.lit(0.0)
     )
     fused = lex.join(sem, "_id", "full_outer").select(
-        F.col("_id").alias(id_col), "r_lex", "r_sem", dround(rrf, 6).alias("rrf")
+        F.col("_id").alias("doc_id"), "r_lex", "r_sem", dround(rrf, 6).alias("rrf")
     )
-    bounded = fused.orderBy(F.desc("rrf"), F.asc(id_col)).limit(k)
-    w = Window.orderBy(F.desc("rrf"), F.asc(id_col))
+    bounded = fused.orderBy(F.desc("rrf"), F.asc("doc_id")).limit(k)
+    w = Window.orderBy(F.desc("rrf"), F.asc("doc_id"))
     return bounded.withColumn("rnk", F.row_number().over(w).cast("long"))
 
 
@@ -540,13 +500,7 @@ def profile_table(
     return one.select(stacked.alias("p")).select("p.*")
 
 
-def build_vocab(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    top_v: int = 64,
-    min_count: int = 1,
-) -> DataFrame:
+def build_vocab(df: DataFrame, top_v: int = 64) -> DataFrame:
     """Tokenizer-style vocabulary: the ``top_v`` most frequent tokens with
     contiguous ids 0..V-1 under the deterministic (count DESC, token ASC)
     total order. Output: (token_id, token, n_occ, n_docs).
@@ -560,14 +514,14 @@ def build_vocab(
     global sort of the corpus vocabulary.
     """
     tok = df.select(
-        F.col(id_col).alias("doc"), F.explode(tokens(text_col)).alias("token")
+        F.col("doc_id").alias("doc"), F.explode(tokens("text")).alias("token")
     )
     td = tok.groupBy("token", "doc").agg(F.count(F.lit(1)).alias("_c"))
     counts = td.groupBy("token").agg(
         F.sum("_c").alias("n_occ"), F.count(F.lit(1)).alias("n_docs")
     )
     cand = (
-        counts.filter(F.col("n_occ") >= min_count)
+        counts.filter(F.col("n_occ") >= 1)
         .orderBy(F.desc("n_occ"), F.asc("token"))
         .limit(top_v)
     )
@@ -580,12 +534,7 @@ def build_vocab(
     )
 
 
-def bpe_merge_pairs(
-    df: DataFrame,
-    k: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bpe_merge_pairs(df: DataFrame, k: int = 32) -> DataFrame:
     """The BPE merge-step primitive (Sennrich et al. 2016, "Neural Machine
     Translation of Rare Words with Subword Units"): count adjacent symbol
     pairs across the corpus, weighted by word frequency, and rank the
@@ -606,7 +555,7 @@ def bpe_merge_pairs(
     Output: (pair, n, rnk), rnk 1..k under (n DESC, pair ASC).
     """
     words = (
-        df.select(F.explode(tokens(text_col)).alias("tok"))
+        df.select(F.explode(tokens("text")).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("freq"))
         .filter(F.length("tok") >= 2)
@@ -651,13 +600,7 @@ def _merge_adjacent(sym_col, left: str, right: str):
     return F.aggregate(sym_col, F.array().cast("array<string>"), step)
 
 
-def bpe_train(
-    df: DataFrame,
-    k: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    return_state: bool = False,
-):
+def bpe_train(df: DataFrame, k: int = 8, return_state: bool = False):
     """Iterated BPE training (Sennrich et al. 2016): run ``k`` merge steps,
     RECOUNTING adjacent symbol pairs after every merge, and return the
     ordered merge table — the artifact a tokenizer build ships. Extends the
@@ -685,7 +628,7 @@ def bpe_train(
     """
     spark = df.sparkSession
     state = (
-        df.select(F.explode(tokens(text_col)).alias("tok"))
+        df.select(F.explode(tokens("text")).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("freq"))
         .filter(F.length("tok") >= 2)
@@ -726,12 +669,7 @@ def bpe_train(
     return (table, state) if return_state else table
 
 
-def bpe_encode_stats(
-    df: DataFrame,
-    k: int = 6,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bpe_encode_stats(df: DataFrame, k: int = 6) -> DataFrame:
     """BPE ENCODE step over trained merges: train ``k`` merges
     (:func:`bpe_train`), then measure per document how the learned
     subword inventory compresses its character stream — the
@@ -747,23 +685,23 @@ def bpe_encode_stats(
 
     Output: (id, n_tokens, n_chars, n_syms, chars_per_sym) — chars_per_sym
     NULL for documents with no characters."""
-    _, state = bpe_train(df, k, text_col=text_col, id_col=id_col, return_state=True)
+    _, state = bpe_train(df, k, return_state=True)
     wsyms = state.select(F.col("tok"), F.size("syms").cast("long").alias("_ns"))
     stream = df.select(
-        F.col(id_col), F.explode(tokens(text_col)).alias("tok")
+        F.col("doc_id"), F.explode(tokens("text")).alias("tok")
     )
     joined = stream.join(wsyms, "tok", "left").select(
-        id_col,
+        "doc_id",
         F.length("tok").cast("long").alias("_nc"),
         F.coalesce(F.col("_ns"), F.length("tok").cast("long")).alias("_ns"),
     )
-    agg = joined.groupBy(id_col).agg(
+    agg = joined.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_tokens"),
         F.sum("_nc").alias("n_chars"),
         F.sum("_ns").alias("n_syms"),
     )
     return agg.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         "n_chars",
         "n_syms",
@@ -776,15 +714,9 @@ def bpe_encode_stats(
     )
 
 
-def encode_tokens(
-    df: DataFrame,
-    vocab: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    oov_id: int = -1,
-) -> DataFrame:
+def encode_tokens(df: DataFrame, vocab: DataFrame) -> DataFrame:
     """Encode each document's token stream as an array of vocabulary ids
-    (order-preserving; out-of-vocabulary tokens become ``oov_id``) — the
+    (order-preserving; out-of-vocabulary tokens become -1) — the
     text→ids step every training pipeline runs after vocab construction.
     Output: df columns + ``token_ids array<long>``.
 
@@ -795,8 +727,8 @@ def encode_tokens(
     shuffle keyed by the entity id, no content-key windows.
     """
     pos_tok = df.select(
-        F.col(id_col),
-        F.posexplode(tokens(text_col)).alias("_pos", "_tok"),
+        F.col("doc_id"),
+        F.posexplode(tokens("text")).alias("_pos", "_tok"),
     )
     looked = (
         pos_tok.join(
@@ -805,34 +737,31 @@ def encode_tokens(
             "left",
         )
         .select(
-            id_col,
+            "doc_id",
             "_pos",
-            F.coalesce(F.col("token_id"), F.lit(int(oov_id)).cast("long")).alias("_id"),
+            F.coalesce(F.col("token_id"), F.lit(-1).cast("long")).alias("_id"),
         )
     )
-    encoded = looked.groupBy(id_col).agg(
+    encoded = looked.groupBy("doc_id").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("_pos", "_id"))),
             lambda s: s.getField("_id"),
         ).alias("token_ids")
     )
-    return df.join(encoded, id_col, "left")
+    return df.join(encoded, "doc_id", "left")
 
 
 def bm25_topk(
     df: DataFrame,
     terms: list[str],
     k: int = 20,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k1: float = 1.2,
-    b: float = 0.75,
 ) -> DataFrame:
     """Log-free BM25 retrieval: top-``k`` documents for a literal term set
     under the rational BM25 weighting
 
         score = sum_t ((N - df + 0.5)/(df + 0.5))
-                      * (tf * (k1+1)) / (tf + k1*(1 - b + b*dl/avdl))
+                      * (tf * (k1+1)) / (tf + k1*(1 - b + b*dl/avdl)),
+        k1 = 1.2,  b = 0.75
 
     — the classic formula minus the ln() around the idf ratio (ln differs
     in the last ulp across libms; every operation here is IEEE +-*/ and
@@ -854,28 +783,29 @@ def bm25_topk(
 
     from .text import tokens
 
-    toks = tokens(text_col)
+    toks = tokens("text")
     base = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size(toks).alias("_dl"),
         F.explode_outer(
             F.filter(toks, lambda t: t.isin(*terms))
         ).alias("_t"),
     ).localCheckpoint(eager=True)
-    dl = base.groupBy(id_col).agg(F.first("_dl").alias("_dl"))
+    dl = base.groupBy("doc_id").agg(F.first("_dl").alias("_dl"))
     stats = dl.agg(
         F.count(F.lit(1)).alias("_n"), F.sum("_dl").alias("_sumdl")
     )
     tf = (
         base.filter(F.col("_t").isNotNull())
-        .groupBy(id_col, "_t")
+        .groupBy("doc_id", "_t")
         .agg(F.count(F.lit(1)).alias("_tf"))
     )
     dfreq = tf.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))
+    k1, b = 1.2, 0.75
     kp1 = k1 + 1.0
     one_b = 1.0 - b
     scored = (
-        tf.join(dl, id_col)
+        tf.join(dl, "doc_id")
         .join(F.broadcast(dfreq), "_t")
         .crossJoin(F.broadcast(stats))
         .withColumn(
@@ -903,17 +833,17 @@ def bm25_topk(
             ),
         )
     )
-    per_doc = scored.groupBy(id_col).agg(
+    per_doc = scored.groupBy("doc_id").agg(
         F.sum(F.col("_ts").cast("decimal(27,12)")).alias("_s"),
         F.count(F.lit(1)).alias("n_terms_matched"),
     )
-    bounded = per_doc.orderBy(F.desc("_s"), F.asc(id_col)).limit(k)
-    w = Window.orderBy(F.desc("_s"), F.asc(id_col))
+    bounded = per_doc.orderBy(F.desc("_s"), F.asc("doc_id")).limit(k)
+    w = Window.orderBy(F.desc("_s"), F.asc("doc_id"))
     return (
         bounded.withColumn("rank", F.row_number().over(w).cast("long"))
         .select(
             "rank",
-            id_col,
+            "doc_id",
             "n_terms_matched",
             F.round(F.col("_s"), 6).cast("double").alias("score"),
         )
@@ -923,11 +853,7 @@ def bm25_topk(
 LM_SCALE = 1_000_000  # fixed-point scale for the integer LM probability
 
 
-def bigram_lm_scores(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bigram_lm_scores(df: DataFrame) -> DataFrame:
     """CCNet-style language-model quality scoring, LOG-FREE: train a
     bigram LM on the corpus itself (occurrence counts) and score each
     document by its average scaled bigram probability — the perplexity
@@ -954,7 +880,7 @@ def bigram_lm_scores(
     from .parallelism import ensure_min_parallelism
     from .text import tokens
 
-    toks = tokens(text_col)
+    toks = tokens("text")
     # bigram building is the concat_ws word-shingle class the parallelism
     # guard was measured to help (operators/parallelism.py): narrow from
     # the scan, one task at small-file scale, per-bigram string building —
@@ -967,7 +893,7 @@ def bigram_lm_scores(
     # per token position — the CLAUDE.md HOF-inlining trap; r16 sf1
     # profile billed the bigram map stage 72 s of the query's 86 s CPU).
     big = ensure_min_parallelism(df).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.explode(
             F.when(
                 F.size(toks) >= 2,
@@ -981,13 +907,13 @@ def bigram_lm_scores(
                 ),
             ).otherwise(F.array().cast("array<struct<w1:string,bigram:string>>"))
         ).alias("b"),
-    ).select(id_col, "b.w1", "b.bigram")
+    ).select("doc_id", "b.w1", "b.bigram")
     # per-doc occurrence pre-aggregation shrinks the join input (map-side
     # combine) before the corpus-count equi-joins — and BOTH count tables
     # derive from it, so the tokenize+explode subtree runs ONCE, not
     # three times (measured 5.2 -> 4.4 s at sf0.1; the no-checkpoint variant re-runs the explode and measures 5.0 s), with c1 rolling up
     # from the much smaller distinct-bigram table
-    occ = big.groupBy(id_col, "w1", "bigram").agg(
+    occ = big.groupBy("doc_id", "w1", "bigram").agg(
         F.count(F.lit(1)).alias("n_occ")
     ).localCheckpoint(eager=False)
     c2 = occ.groupBy("w1", "bigram").agg(F.sum("n_occ").alias("c2"))
@@ -997,7 +923,7 @@ def bigram_lm_scores(
         occ.join(c2, "bigram")
         .join(c1, "w1")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             "n_occ",
             # `div`, not `/`+cast: integer floor division stays EXACT and
             # matches DuckDB's `//` (a double quotient within an ulp of an
@@ -1006,7 +932,7 @@ def bigram_lm_scores(
             F.expr(f"(c2 * {LM_SCALE}L) div c1").alias("pq"),
         )
     )
-    agg = scored.groupBy(id_col).agg(
+    agg = scored.groupBy("doc_id").agg(
         F.sum("n_occ").cast("long").alias("n_bigrams"),
         F.sum(F.col("n_occ") * F.col("pq")).cast("long").alias("lm_score_sum"),
         F.expr(f"sum(n_occ * pq) div sum(n_occ)").alias("lm_score_avg"),
@@ -1014,10 +940,10 @@ def bigram_lm_scores(
     # docs with < 2 tokens form no bigram: keep them (0, 0, NULL) — the
     # never-a-dropped-row contract callers reconcile row counts against
     return (
-        df.select(id_col)
-        .join(agg, id_col, "left")
+        df.select("doc_id")
+        .join(agg, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
             F.coalesce("lm_score_sum", F.lit(0)).alias("lm_score_sum"),
             F.col("lm_score_avg"),
@@ -1025,25 +951,18 @@ def bigram_lm_scores(
     )
 
 
-def c4_line_clean(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    min_words: int = 3,
-    min_sentences: int = 5,
-    checkpoint: bool = True,
-) -> DataFrame:
+def c4_line_clean(df: DataFrame) -> DataFrame:
     """C4-style page cleaning (Raffel et al. 2020 §2.2 — the published
     Common Crawl cleaning recipe T5 trained on) plus cross-document LINE
     dedup (the CCNet/RefinedWeb variant of C4's three-sentence-span
     rule, which ``dup_span_stats`` covers at span granularity):
 
     * line filters — keep lines ending in terminal punctuation
-      (``. ! ? "``), with >= ``min_words`` whitespace words, and not
+      (``. ! ? "``), with >= 3 whitespace words, and not
       mentioning ``javascript`` (case-insensitive);
     * page filters — drop pages containing ``{`` or ``lorem ipsum``
-      (raw text), or whose KEPT lines carry < ``min_sentences``
-      sentence enders;
+      (raw text), or whose KEPT lines carry < 5 sentence
+      enders;
     * cross-doc dedup — each surviving line is kept only at its FIRST
       occurrence corpus-wide (lexicographic min (doc, line-index): one
       min(struct) per line content, the arg-min invariant), then pages
@@ -1060,19 +979,19 @@ def c4_line_clean(
     boilerplate line is by definition a hot key); reassembly is a
     per-doc collect of the BOUNDED surviving lines. Page text crosses
     the shuffle once, as lines."""
-    c = F.col(text_col)
+    c = F.col("text")
     lines = F.split(c, "\n")
     line_ok = (
         lambda l: (
             l.endswith(".") | l.endswith("!") | l.endswith("?")
             | l.endswith('"')
         )
-        & (F.size(F.split(l, " ")) >= min_words)
+        & (F.size(F.split(l, " ")) >= 3)
         & ~F.lower(l).contains("javascript")
     )
     kept = F.filter(lines, line_ok)
     base = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         kept.alias("_kept"),
         (F.size(lines) - F.size(kept)).cast("long").alias("n_lines_dropped"),
         (
@@ -1084,32 +1003,31 @@ def c4_line_clean(
                     F.lit(0).cast("long"),
                     lambda acc, l: acc + F.regexp_count(l, F.lit(r"[.!?]")),
                 )
-                >= min_sentences
+                >= 5
             )
         ).alias("page_ok"),
     )
-    if checkpoint:  # the filtered line pass feeds the explode AND the
-        # final stats join — checkpoint (lazy) so the HOF pass runs once.
-        # checkpoint=False is the plan-test escape hatch (winnow pattern).
-        base = base.localCheckpoint(eager=False)
+    # the filtered line pass feeds the explode AND the final stats join —
+    # checkpoint (lazy) so the HOF pass runs once
+    base = base.localCheckpoint(eager=False)
     exploded = base.filter("page_ok").select(
-        id_col, F.posexplode("_kept").alias("idx", "line")
+        "doc_id", F.posexplode("_kept").alias("idx", "line")
     )
     first = exploded.groupBy("line").agg(
-        F.min(F.struct(id_col, "idx")).alias("_first")
+        F.min(F.struct("doc_id", "idx")).alias("_first")
     )
     survivors = (
         exploded.join(first, "line")
         .filter(
-            (F.col(id_col) == F.col(f"_first.{id_col}"))
+            (F.col("doc_id") == F.col("_first.doc_id"))
             & (F.col("idx") == F.col("_first.idx"))
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.array_sort(F.collect_list(F.struct("idx", "line"))).alias("_s")
         )
         .select(
-            id_col,
+            "doc_id",
             F.array_join(
                 F.transform("_s", lambda s: s.getField("line")), "\n"
             ).alias("clean_text"),
@@ -1117,9 +1035,9 @@ def c4_line_clean(
         )
     )
     out = (
-        base.join(survivors, id_col, "left")
+        base.join(survivors, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "page_ok",
             F.when(F.col("page_ok"), F.size("_kept"))
             .otherwise(F.lit(0))

@@ -65,10 +65,9 @@ def _html_struct():
 def html_extract(
     df: DataFrame,
     html_col: str = "http_body",
-    out_col: str = "page",
     content_type_col: str | None = None,
 ) -> DataFrame:
-    """Append ``out_col`` = struct<text, main_text, title, links,
+    """Append ``page`` = struct<text, main_text, title, links,
     noindex, nofollow, canonical, description, ld_types, ld_blocks,
     ld_errors, og, html_ok> extracted
     from an HTML string/binary column via :func:`functions.html.parse_html`
@@ -92,7 +91,7 @@ def html_extract(
     from ..functions.html import decode_html_bytes, parse_html
 
     out_schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, _html_struct())]
+        list(df.schema.fields) + [StructField("page", _html_struct())]
     )
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -149,18 +148,14 @@ def html_extract(
                          "html_ok": False}
                     )
             out = pdf.copy()
-            out[out_col] = vals
+            out["page"] = vals
             yield out
 
     return df.mapInPandas(mapper, out_schema)
 
 
-def pdf_extract(
-    df: DataFrame,
-    pdf_col: str = "http_body",
-    out_col: str = "doc",
-) -> DataFrame:
-    """Append ``out_col`` = struct<text, n_pages, links, pdf_ok>
+def pdf_extract(df: DataFrame) -> DataFrame:
+    """Append ``doc`` = struct<text, n_pages, links, pdf_ok>
     extracted from a PDF binary column via :func:`functions.pdf.pdf_text`
     (the full supported profile set: classic/1.5, filter chains, fonts,
     RC4/AES standard security; out-of-scope documents and structurally
@@ -191,13 +186,13 @@ def pdf_extract(
         ]
     )
     out_schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, doc_struct)]
+        list(df.schema.fields) + [StructField("doc", doc_struct)]
     )
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             vals = []
-            for raw in pdf[pdf_col]:
+            for raw in pdf["http_body"]:
                 try:
                     if raw is None:
                         raise ValueError("no content")
@@ -220,7 +215,7 @@ def pdf_extract(
                         }
                     )
             out = pdf.copy()
-            out[out_col] = vals
+            out["doc"] = vals
             yield out
 
     return df.mapInPandas(mapper, out_schema)
@@ -230,13 +225,12 @@ def document_extract(
     df: DataFrame,
     body_col: str = "http_body",
     content_type_col: str | None = None,
-    out_col: str = "doc",
 ) -> DataFrame:
     """Content-Type-dispatched text extraction — ONE operator a crawl
     pipeline points at its mixed-payload record stream: routes each row
     to the HTML extractor (``functions.html.parse_html``, charset-aware
     decode) or the PDF extractor (``functions.pdf.pdf_text``), appending
-    ``out_col`` = struct<text, main_text, title, n_pages, links, kind,
+    ``doc`` = struct<text, main_text, title, n_pages, links, kind,
     doc_ok> — ``links`` is the unresolved FOLLOW-ABLE outlink target
     list of either kind (HTML anchor hrefs with rel
     nofollow/ugc/sponsored anchors excluded — the tokens a link graph
@@ -283,7 +277,7 @@ def document_extract(
         ]
     )
     out_schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, doc_struct)]
+        list(df.schema.fields) + [StructField("doc", doc_struct)]
     )
     dead = {
         "text": None, "main_text": None, "title": None,
@@ -350,7 +344,7 @@ def document_extract(
                 else [None] * len(pdf)
             )
             out = pdf.copy()
-            out[out_col] = [
+            out["doc"] = [
                 extract_one(raw, ct) for raw, ct in zip(pdf[body_col], ctypes)
             ]
             yield out
@@ -429,17 +423,11 @@ def canonical_url(url_col) -> Column:
     )
 
 
-def wet_export(
-    df: DataFrame,
-    text_col: str = "text",
-    uri_col: str = "uri",
-    shard_col: str = "shard",
-    gzip_members: bool = False,
-) -> DataFrame:
+def wet_export(df: DataFrame, gzip_members: bool = False) -> DataFrame:
     """Serialize extracted page text as WET-style WARC files — the
     EXPORT side of the crawl pipeline (Common Crawl's WET derivative is
     exactly this: one ``conversion`` record per page, text/plain
-    payload). One WET blob per ``shard_col`` group, records in
+    payload). One WET blob per ``shard`` group, records in
     (uri, text) order so the bytes are deterministic under any
     partitioning; ``gzip_members=True`` emits the standard .warc.gz
     form. Output: (shard, wet binary, n_records, wet_len).
@@ -460,7 +448,7 @@ def wet_export(
 
     out_schema = StructType(
         [
-            StructField(shard_col, LongType()),
+            StructField("shard", LongType()),
             StructField("wet", BinaryType()),
             StructField("n_records", IntegerType()),
             StructField("wet_len", LongType()),
@@ -468,7 +456,7 @@ def wet_export(
     )
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([uri_col, text_col], kind="mergesort")
+        pdf = pdf.sort_values(["uri", "text"], kind="mergesort")
         recs = [
             (
                 {
@@ -478,20 +466,20 @@ def wet_export(
                 },
                 str(txt).encode("utf-8"),
             )
-            for uri, txt in zip(pdf[uri_col], pdf[text_col])
+            for uri, txt in zip(pdf["uri"], pdf["text"])
         ]
         blob = build_warc(recs, gzip_members=gzip_members)
-        shard = pdf[shard_col].iloc[0]
+        shard = pdf["shard"].iloc[0]
         return pd.DataFrame(
             {
-                shard_col: [shard],
+                "shard": [shard],
                 "wet": [blob],
                 "n_records": [len(recs)],
                 "wet_len": [len(blob)],
             }
         )
 
-    return df.groupBy(shard_col).applyInPandas(build, out_schema)
+    return df.groupBy("shard").applyInPandas(build, out_schema)
 
 
 def _url_resolve_udf():
@@ -613,14 +601,10 @@ def resolved_url_col(base, ref):
     return resolver(base, ref, resolve_url_fast_expr(base, ref))
 
 
-def resolve_redirects(
-    df: DataFrame,
-    url_col: str = "target_uri",
-    status_col: str = "http_status",
-    location_col: str = "http_location",
-    max_hops: int = 16,
-    checkpoint: bool = True,
-) -> DataFrame:
+MAX_REDIRECT_HOPS = 16  # longest chain resolve_redirects follows
+
+
+def resolve_redirects(df: DataFrame, url_col: str = "target_uri") -> DataFrame:
     """Resolve HTTP redirect chains to their terminal URLs — the frontier
     step between capture and canonical page identity (a crawl that stores
     ``/old -> 301 -> /new`` must credit content, links and dedup to the
@@ -634,16 +618,16 @@ def resolve_redirects(
     url with ``final_url`` / ``hops`` / ``resolved``:
 
     * a non-redirect capture is its own terminal: (url, url, 0, true);
-    * a redirect chain of length L <= ``max_hops`` ending at a
+    * a redirect chain of length L <= ``MAX_REDIRECT_HOPS`` ending at a
       non-redirecting url resolves with hops = remaining chain length;
-    * cycles (self-loops included) and chains longer than ``max_hops``
-      are ``resolved = false`` with NULL final_url/hops — countable
+    * cycles (self-loops included) and longer chains are
+      ``resolved = false`` with NULL final_url/hops — countable
       dead-letter, never a wrong terminal. A url captured BOTH as a
       redirect and a 200 (recrawl flip) counts as a redirect; duplicate
       redirect captures keep the lexicographically least absolute target
       (deterministic under any partitioning).
 
-    Scale shape: pointer doubling — ceil(log2(max_hops)) self-joins of
+    Scale shape: pointer doubling — ceil(log2(MAX_REDIRECT_HOPS)) self-joins of
     the redirect-EDGE table (edges only: the overwhelmingly non-redirect
     capture mass never enters the iteration), each a content-key
     equi-join AQE can split; never a window, never a driver loop. The
@@ -659,31 +643,28 @@ def resolve_redirects(
     physically evaluated in THREE 32-task stages, 38 MapInPandas nodes
     in the plan, ~200 s of task time for a 4 s query). The robots_filter
     checkpoint precedent: consumers differ, so the cut pays for itself.
-    ``checkpoint=False`` is the plan-test escape hatch (winnow_dup_pairs
-    pattern).
     """
     import math
 
     u = F.col(url_col)
     is_redirect = (
-        F.col(status_col).between(300, 399) & F.col(location_col).isNotNull()
+        F.col("http_status").between(300, 399) & F.col("http_location").isNotNull()
     )
     # NULL Location on non-redirect rows -> resolver returns NULL -> the
     # min(v) aggregate ignores it: one pass decides redirect-vs-terminal
     # per url with semantics identical to the old filter+anti-join pair
-    loc = F.when(is_redirect, F.col(location_col))
+    loc = F.when(is_redirect, F.col("http_location"))
     per_url = (
         df.filter(u.isNotNull())
         .select(u.alias("u"), resolved_url_col(u, loc).alias("v"))
         .groupBy("u")
         .agg(F.min("v").alias("v"))
     )
-    if checkpoint:
-        per_url = per_url.localCheckpoint(eager=False)
+    per_url = per_url.localCheckpoint(eager=False)
     edges = per_url.filter(F.col("v").isNotNull())
 
     ptr = edges.select("u", "v", F.lit(1).cast("long").alias("h"))
-    for _ in range(max(1, math.ceil(math.log2(max(2, max_hops))))):
+    for _ in range(math.ceil(math.log2(MAX_REDIRECT_HOPS))):
         nxt = ptr.select(
             F.col("u").alias("nu"), F.col("v").alias("nv"),
             F.col("h").alias("nh"),
@@ -695,9 +676,9 @@ def resolve_redirects(
         )
 
     # terminal test: the landing url must not itself redirect. Cycles
-    # always land on a redirecting url; over-long chains exceed max_hops.
+    # always land on a redirecting url; over-long chains exceed the cap.
     out_src = edges.select(F.col("u").alias("tu"))
-    ok = F.col("tu").isNull() & (F.col("h") <= F.lit(max_hops))
+    ok = F.col("tu").isNull() & (F.col("h") <= F.lit(MAX_REDIRECT_HOPS))
     redirected = ptr.join(out_src, ptr.v == F.col("tu"), "left").select(
         F.col("u").alias("url"),
         F.when(ok, F.col("v")).alias("final_url"),
@@ -713,12 +694,7 @@ def resolve_redirects(
     return redirected.unionByName(terminals)
 
 
-def pair_requests(
-    df: DataFrame,
-    id_col: str = "record_id",
-    concurrent_col: str = "concurrent_to",
-    type_col: str = "warc_type",
-) -> DataFrame:
+def pair_requests(df: DataFrame) -> DataFrame:
     """Join request-record metadata onto response records via
     ``WARC-Concurrent-To`` (ISO 28500 §5.7: a crawl that stores both
     sides writes the request as its own record naming the response's
@@ -740,13 +716,13 @@ def pair_requests(
     combinable min-struct), then ONE equi-join on the record-id content
     key — AQE-splittable, no window over a content key, no broadcast of
     an SF-scaled side."""
-    is_resp = F.col(type_col) == "response"
+    is_resp = F.col("warc_type") == "response"
     req = (
         df.filter(
-            (F.col(type_col) == "request")
-            & F.col(concurrent_col).isNotNull()
+            (F.col("warc_type") == "request")
+            & F.col("concurrent_to").isNotNull()
         )
-        .groupBy(F.col(concurrent_col).alias("_pair_id"))
+        .groupBy(F.col("concurrent_to").alias("_pair_id"))
         .agg(
             F.min(
                 F.struct(
@@ -765,39 +741,30 @@ def pair_requests(
     )
     return (
         df.filter(is_resp)
-        .join(req, F.col(id_col) == F.col("_pair_id"), "left")
+        .join(req, F.col("record_id") == F.col("_pair_id"), "left")
         .withColumn("paired", F.col("_pair_id").isNotNull())
         .drop("_pair_id")
     )
 
 
-def orphan_requests(
-    df: DataFrame,
-    id_col: str = "record_id",
-    concurrent_col: str = "concurrent_to",
-    type_col: str = "warc_type",
-) -> DataFrame:
+def orphan_requests(df: DataFrame) -> DataFrame:
     """Request records whose ``WARC-Concurrent-To`` names no response
     record in the corpus — the other half of the pairing census
     (truncated archives, mixed dumps). LEFT ANTI on the response-id
     set; same equi-join scale shape as :func:`pair_requests`."""
     resp_ids = (
         df.filter(
-            (F.col(type_col) == "response") & F.col(id_col).isNotNull()
+            (F.col("warc_type") == "response") & F.col("record_id").isNotNull()
         )
-        .select(F.col(id_col).alias("_resp_id"))
+        .select(F.col("record_id").alias("_resp_id"))
         .distinct()
     )
     return df.filter(
-        (F.col(type_col) == "request") & F.col(concurrent_col).isNotNull()
-    ).join(resp_ids, F.col(concurrent_col) == F.col("_resp_id"), "left_anti")
+        (F.col("warc_type") == "request") & F.col("concurrent_to").isNotNull()
+    ).join(resp_ids, F.col("concurrent_to") == F.col("_resp_id"), "left_anti")
 
 
-def reassemble_segments(
-    df: DataFrame,
-    payload_col: str = "payload",
-    id_col: str = "record_id",
-) -> DataFrame:
+def reassemble_segments(df: DataFrame) -> DataFrame:
     """Reassemble ISO 28500 §5.18-5.20 SEGMENTED records — the wire
     form of a record too large for one WARC file: segment 1 is a
     normal record with ``WARC-Segment-Number: 1``; the rest are
@@ -841,7 +808,7 @@ def reassemble_segments(
         F.col("segment_origin_id").alias("_oid"),
         seg_n.alias("_sn"),
     ).agg(
-        F.min(F.struct(F.col(payload_col).alias("p"))).alias("_dup"),
+        F.min(F.struct(F.col("payload").alias("p"))).alias("_dup"),
         F.max("segment_total_length").alias("_tot"),
     )
     segs = F.sort_array(
@@ -868,7 +835,7 @@ def reassemble_segments(
         F.max("_tot").alias("_declared_total"),
     )
     joined = heads.join(
-        agg, F.col(id_col) == F.col("_oid"), "left"
+        agg, F.col("record_id") == F.col("_oid"), "left"
     )
     is_seg_head = F.col("segment_number") == 1
     # ok avoids touching the bytes at all: length is additive
@@ -877,7 +844,7 @@ def reassemble_segments(
         & F.col("_contiguous")
         & F.col("_declared_total").isNotNull()
         & (
-            F.length(F.col(payload_col)) + F.length(F.col("_tail"))
+            F.length(F.col("payload")) + F.length(F.col("_tail"))
             == F.col("_declared_total")
         )
     )
@@ -890,17 +857,13 @@ def reassemble_segments(
         .when(ok, F.lit("reassembled"))
         .otherwise(F.lit("incomplete"))
         .alias("segment_status"),
-        F.when(~is_seg_head.eqNullSafe(True), F.col(payload_col))
-        .when(ok, F.concat(F.col(payload_col), F.col("_tail")))
+        F.when(~is_seg_head.eqNullSafe(True), F.col("payload"))
+        .when(ok, F.concat(F.col("payload"), F.col("_tail")))
         .alias("full_payload"),
     )
 
 
-def sitemap_entries(
-    df: DataFrame,
-    content_col: str = "http_body",
-    uri_col: str = "target_uri",
-) -> DataFrame:
+def sitemap_entries(df: DataFrame, content_col: str = "http_body") -> DataFrame:
     """Explode fetched sitemap documents into one row per entry — the
     frontier SEED step (discovery order: robots.txt ``Sitemap:`` lines
     via :func:`functions.robots.sitemap_urls` → fetch → this operator →
@@ -944,7 +907,7 @@ def sitemap_entries(
         ]
 
     return _binary_meta_source(
-        df.select(F.col(uri_col).alias("sitemap_uri"), content_col),
+        df.select(F.col("target_uri").alias("sitemap_uri"), content_col),
         content_col, "sitemap_uri", parse_sitemap,
         "kind string, loc string, lastmod string, changefreq string,"
         " priority string, n_images int, n_videos int,"
@@ -953,11 +916,7 @@ def sitemap_entries(
     )
 
 
-def feed_entries(
-    df: DataFrame,
-    content_col: str = "http_body",
-    uri_col: str = "target_uri",
-) -> DataFrame:
+def feed_entries(df: DataFrame) -> DataFrame:
     """Explode fetched RSS/Atom feed documents into one row per entry —
     the frontier's OTHER seed source beside :func:`sitemap_entries`
     (recency-sensitive crawls discover new URLs from feeds between
@@ -968,7 +927,7 @@ def feed_entries(
     document survives as ONE parse_ok = false row and an entry-less
     one as a (kind, NULL-link) row — countable dead-letter / census
     rows, never dropped. One ``sources._binary_meta_source`` pass
-    (binary ``content_col`` only), zero shuffle."""
+    (binary ``http_body`` only), zero shuffle."""
     from ..functions.feeds import parse_feed
     from ..sources import _binary_meta_source
 
@@ -982,21 +941,15 @@ def feed_entries(
         ]
 
     return _binary_meta_source(
-        df.select(F.col(uri_col).alias("feed_uri"), content_col),
-        content_col, "feed_uri", parse_feed,
+        df.select(F.col("target_uri").alias("feed_uri"), "http_body"),
+        "http_body", "feed_uri", parse_feed,
         "kind string, feed_title string, link string, title string,"
         " published string, entry_id string",
         rows_fn,
     )
 
 
-def warc_revisit_export(
-    df: DataFrame,
-    payload_col: str = "payload",
-    uri_col: str = "uri",
-    shard_col: str = "shard",
-    gzip_members: bool = False,
-) -> DataFrame:
+def warc_revisit_export(df: DataFrame) -> DataFrame:
     """Serialize captures as WARC with REVISIT deduplication (ISO 28500
     / WARC 1.1 §6.7.2 identical-payload-digest profile — what Heritrix
     and Common Crawl's dedup actually write: the first capture of a
@@ -1025,21 +978,21 @@ def warc_revisit_export(
 
     from ..functions.warc import build_warc
 
-    digest = F.md5(F.col(payload_col))
+    digest = F.md5(F.col("payload"))
     rows = df.select(
-        F.col(shard_col),
-        F.col(uri_col),
-        F.col(payload_col),
+        F.col("shard"),
+        F.col("uri"),
+        F.col("payload"),
         digest.alias("_rv_digest"),
     )
     firsts = rows.groupBy("_rv_digest").agg(
-        F.min(uri_col).alias("_rv_first_uri")
+        F.min("uri").alias("_rv_first_uri")
     )
     tagged = rows.join(firsts, "_rv_digest")
 
     out_schema = StructType(
         [
-            StructField(shard_col, LongType()),
+            StructField("shard", LongType()),
             StructField("warc", BinaryType()),
             StructField("n_records", IntegerType()),
             StructField("n_revisits", IntegerType()),
@@ -1048,10 +1001,10 @@ def warc_revisit_export(
     )
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([uri_col], kind="mergesort")
+        pdf = pdf.sort_values(["uri"], kind="mergesort")
         recs, n_rev = [], 0
         for _, row in pdf.iterrows():
-            uri, first = str(row[uri_col]), str(row["_rv_first_uri"])
+            uri, first = str(row["uri"]), str(row["_rv_first_uri"])
             dig = f"md5:{row['_rv_digest']}"
             if uri == first:
                 recs.append(
@@ -1062,7 +1015,7 @@ def warc_revisit_export(
                             "WARC-Payload-Digest": dig,
                             "Content-Type": "application/octet-stream",
                         },
-                        bytes(row[payload_col]),
+                        bytes(row["payload"]),
                     )
                 )
             else:
@@ -1082,10 +1035,10 @@ def warc_revisit_export(
                         b"",
                     )
                 )
-        blob = build_warc(recs, gzip_members=gzip_members)
+        blob = build_warc(recs)
         return pd.DataFrame(
             {
-                shard_col: [pdf[shard_col].iloc[0]],
+                "shard": [pdf["shard"].iloc[0]],
                 "warc": [blob],
                 "n_records": [len(recs)],
                 "n_revisits": [n_rev],
@@ -1093,7 +1046,7 @@ def warc_revisit_export(
             }
         )
 
-    return tagged.groupBy(shard_col).applyInPandas(build, out_schema)
+    return tagged.groupBy("shard").applyInPandas(build, out_schema)
 
 
 def resolve_revisits(recs: DataFrame) -> DataFrame:
@@ -1135,11 +1088,7 @@ def resolve_revisits(recs: DataFrame) -> DataFrame:
     )
 
 
-def page_links(
-    df: DataFrame,
-    page_col: str = "page",
-    base_col: str = "target_uri",
-) -> DataFrame:
+def page_links(df: DataFrame) -> DataFrame:
     """Explode an :func:`html_extract` struct's links into one row per
     anchor with the href RESOLVED against the page's base URI (RFC 3986
     reference resolution via stdlib ``urllib.parse.urljoin`` — relative
@@ -1155,7 +1104,7 @@ def page_links(
     link-graph use. Rows with NULL links explode away (a page with no
     anchors contributes no link rows — link analytics, not a page
     census)."""
-    link = F.explode(F.col(f"{page_col}.links")).alias("_link")
+    link = F.explode(F.col("page.links")).alias("_link")
     return (
         df.select("*", link)
         .select(
@@ -1167,25 +1116,18 @@ def page_links(
         .drop("_link")
         .withColumn(
             "resolved_url",
-            resolved_url_col(F.col(base_col), F.col("href")),
+            resolved_url_col(F.col("target_uri"), F.col("href")),
         )
     )
 
 
-def wat_export(
-    df: DataFrame,
-    uri_col: str = "uri",
-    title_col: str = "title",
-    links_col: str = "links",
-    text_len_col: str = "text_len",
-    shard_col: str = "shard",
-) -> DataFrame:
+def wat_export(df: DataFrame) -> DataFrame:
     """Serialize per-page METADATA as WAT-style JSONL shards — the
     metadata derivative beside :func:`wet_export` (text) and
     :func:`cdx_index` (capture spans); Common Crawl's WAT files carry
     exactly this envelope: per page one JSON object with the URI,
     title, outgoing link hrefs and content-length class stats. One
-    blob per ``shard_col`` group, records in uri order with sorted JSON
+    blob per ``shard`` group, records in uri order with sorted JSON
     keys and fixed separators, so the bytes are deterministic under any
     partitioning (the wet_export discipline). Output: (shard, wat
     binary, n_records, wat_len). Blob lines parse back with any JSON
@@ -1203,7 +1145,7 @@ def wat_export(
 
     out_schema = StructType(
         [
-            StructField(shard_col, LongType()),
+            StructField("shard", LongType()),
             StructField("wat", BinaryType()),
             StructField("n_records", IntegerType()),
             StructField("wat_len", LongType()),
@@ -1211,17 +1153,17 @@ def wat_export(
     )
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([uri_col], kind="mergesort")
+        pdf = pdf.sort_values(["uri"], kind="mergesort")
         lines = []
         for _, row in pdf.iterrows():
-            links = row[links_col]
+            links = row["links"]
             obj = {
-                "uri": str(row[uri_col]),
-                "title": None if row[title_col] is None else str(row[title_col]),
+                "uri": str(row["uri"]),
+                "title": None if row["title"] is None else str(row["title"]),
                 "links": [
                     str(lk["href"]) for lk in (links if links is not None else [])
                 ],
-                "text_len": int(row[text_len_col]),
+                "text_len": int(row["text_len"]),
             }
             lines.append(
                 json.dumps(obj, sort_keys=True, separators=(",", ":"))
@@ -1229,22 +1171,17 @@ def wat_export(
         blob = ("\n".join(lines) + "\n").encode("utf-8") if lines else b""
         return pd.DataFrame(
             {
-                shard_col: [pdf[shard_col].iloc[0]],
+                "shard": [pdf["shard"].iloc[0]],
                 "wat": [blob],
                 "n_records": [len(lines)],
                 "wat_len": [len(blob)],
             }
         )
 
-    return df.groupBy(shard_col).applyInPandas(build, out_schema)
+    return df.groupBy("shard").applyInPandas(build, out_schema)
 
 
-def robots_rules(
-    robots: DataFrame,
-    agent: str,
-    host_col: str = "url_host",
-    content_col: str = "content",
-) -> DataFrame:
+def robots_rules(robots: DataFrame, agent: str) -> DataFrame:
     """Parse per-host robots.txt content into the rule table the given
     crawler ``agent`` must obey (RFC 9309 group selection applied at
     parse time): (host, allow, rule_regex, spec). ``rule_regex`` is the
@@ -1263,12 +1200,12 @@ def robots_rules(
         rules_for_agent,
     )
 
-    schema = f"{host_col} string, allow boolean, rule_regex string, spec int"
+    schema = "url_host string, allow boolean, rule_regex string, spec int"
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for host, content in zip(pdf[host_col], pdf[content_col]):
+            for host, content in zip(pdf["url_host"], pdf["content"]):
                 try:
                     if isinstance(content, (bytes, bytearray)):
                         content = bytes(content).decode("utf-8", "replace")
@@ -1284,28 +1221,23 @@ def robots_rules(
                 except Exception:
                     continue  # unreadable robots = no rules = allowed
             yield pd.DataFrame(
-                rows, columns=[host_col, "allow", "rule_regex", "spec"]
+                rows, columns=["url_host", "allow", "rule_regex", "spec"]
             )
 
     return robots.mapInPandas(mapper, schema)
 
 
 # A bounded SAMPLE of publicsuffix.org rules covering every rule KIND
-# (normal, multi-label, wildcard, exception) — real deployments pass the
-# full list; the ALGORITHM below is the complete PSL decision.
-DEFAULT_PSL_SAMPLE = [
+# (normal, multi-label, wildcard, exception). The ALGORITHM below is the
+# complete PSL decision, so the full list is a drop-in replacement here.
+PSL_SAMPLE = [
     "com", "org", "net", "io", "uk", "co.uk", "org.uk", "au", "com.au",
     "jp", "co.jp", "github.io", "*.ck", "!www.ck", "de", "fr", "example",
 ]
 
 
-def registered_domain(
-    df: DataFrame,
-    host_col: str = "url_host",
-    rules: list[str] | None = None,
-    out_col: str = "registered_domain",
-) -> DataFrame:
-    """Append the REGISTERED domain (eTLD+1) of a host column — the
+def registered_domain(df: DataFrame) -> DataFrame:
+    """Append the ``registered_domain`` (eTLD+1) of ``url_host`` — the
     unit crawl analytics actually groups by (Common Crawl's domain
     ranks, per-site politeness, per-domain contribution caps): the
     public-suffix-list algorithm in full — the prevailing rule is the
@@ -1313,7 +1245,7 @@ def registered_domain(
     (wildcard ``*.ck`` counts its ``*`` label; exceptions strip their
     first label; no match falls back to the implicit ``*`` rule), and
     the registered domain is the public suffix plus one label. A host
-    that IS a public suffix (or NULL) gets a NULL ``out_col`` —
+    that IS a public suffix (or NULL) gets a NULL registered domain —
     countable, never a fabricated domain.
 
     Scale shape: per DISTINCT host, candidate suffixes (the last 1..max
@@ -1324,7 +1256,7 @@ def registered_domain(
     shape). Zero Python anywhere."""
     spark = df.sparkSession
     parsed = []
-    for r in rules if rules is not None else DEFAULT_PSL_SAMPLE:
+    for r in PSL_SAMPLE:
         exc, wc = r.startswith("!"), r.startswith("*.")
         key = r[1:] if exc else r[2:] if wc else r
         j = len(key.split("."))
@@ -1339,7 +1271,7 @@ def registered_domain(
     maxj = max(p[1] for p in parsed)
 
     hosts = (
-        df.select(F.col(host_col).alias("_rd_host"))
+        df.select(F.col("url_host").alias("_rd_host"))
         .filter(F.col("_rd_host").isNotNull())
         .distinct()
     )
@@ -1390,41 +1322,32 @@ def registered_domain(
                     ),
                     ".",
                 ),
-            ).alias(out_col),
+            ).alias("registered_domain"),
         )
     )
     return df.join(
-        dec, df[host_col] == dec._rd_host, "left"
+        dec, df["url_host"] == dec._rd_host, "left"
     ).drop("_rd_host")
 
 
-def recrawl_schedule(
-    diff: DataFrame,
-    prior_col: str = "prior_interval_s",
-    min_interval_s: int = 3600,
-    max_interval_s: int = 30 * 86400,
-    default_interval_s: int = 86400,
-) -> DataFrame:
+def recrawl_schedule(diff: DataFrame, max_interval_s: int = 30 * 86400) -> DataFrame:
     """Adaptive revisit intervals from a :func:`cdx_snapshot_diff`
     result — the classic multiplicative refresh policy (Cho &
     Garcia-Molina 2003 incremental-crawler shape): pages that CHANGED
-    since the last visit halve their interval (floor-clamped), pages
-    that did NOT double it (ceiling-clamped), newly-discovered pages
-    start at the default, and GONE pages leave the schedule
+    since the last visit halve their interval (floor 3600 s), pages
+    that did NOT double it (ceiling ``max_interval_s``), newly-discovered
+    pages start at one day (86400 s), and GONE pages leave the schedule
     (``next_interval_s`` NULL — a countable retirement, never a dropped
-    row). A NULL prior (first time through the scheduler) behaves as
-    the default. Appends ``next_interval_s``; all long floor division —
+    row). A NULL ``prior_interval_s`` (first time through the scheduler)
+    behaves as one day. Appends ``next_interval_s``; all long floor division —
     SQL-replayable, zero float surface, one stateless column map (the
     scale cost is wherever the diff came from)."""
-    prior = F.coalesce(F.col(prior_col), F.lit(default_interval_s)).cast(
-        "long"
-    )
+    prior = F.coalesce(F.col("prior_interval_s"), F.lit(86400)).cast("long")
     nxt = (
         F.when(
             F.col("change") == "changed",
-            F.greatest(F.lit(min_interval_s).cast("long"), F.expr(
-                f"CAST(coalesce({prior_col}, {default_interval_s}) AS BIGINT)"
-                " div 2"
+            F.greatest(F.lit(3600).cast("long"), F.expr(
+                "CAST(coalesce(prior_interval_s, 86400) AS BIGINT) div 2"
             )),
         )
         .when(
@@ -1433,17 +1356,13 @@ def recrawl_schedule(
         )
         .when(
             F.col("change") == "added",
-            F.lit(default_interval_s).cast("long"),
+            F.lit(86400).cast("long"),
         )
     )
     return diff.withColumn("next_interval_s", nxt)
 
 
-def robots_sitemaps(
-    robots: DataFrame,
-    host_col: str = "url_host",
-    content_col: str = "content",
-) -> DataFrame:
+def robots_sitemaps(robots: DataFrame) -> DataFrame:
     """Explode each host's robots.txt into its ``Sitemap:`` discovery
     lines — one row per (host, sitemap_url), nothing for hosts that
     declare none (:func:`functions.robots.sitemap_urls`: first
@@ -1455,12 +1374,12 @@ def robots_sitemaps(
 
     from ..functions.robots import sitemap_urls
 
-    schema = f"{host_col} string, sitemap_url string"
+    schema = "url_host string, sitemap_url string"
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for host, content in zip(pdf[host_col], pdf[content_col]):
+            for host, content in zip(pdf["url_host"], pdf["content"]):
                 try:
                     if isinstance(content, (bytes, bytearray)):
                         content = bytes(content).decode("utf-8", "replace")
@@ -1468,17 +1387,12 @@ def robots_sitemaps(
                         rows.append((host, u))
                 except Exception:
                     continue
-            yield pd.DataFrame(rows, columns=[host_col, "sitemap_url"])
+            yield pd.DataFrame(rows, columns=["url_host", "sitemap_url"])
 
     return robots.mapInPandas(mapper, schema)
 
 
-def robots_delays(
-    robots: DataFrame,
-    agent: str,
-    host_col: str = "url_host",
-    content_col: str = "content",
-) -> DataFrame:
+def robots_delays(robots: DataFrame, agent: str) -> DataFrame:
     """Per-host ``Crawl-delay`` seconds for ``agent`` — one row per
     input host, ``crawl_delay_s`` NULL when the host declares none (or
     its robots.txt fails to parse): the politeness interval table a
@@ -1489,31 +1403,24 @@ def robots_delays(
 
     from ..functions.robots import crawl_delay
 
-    schema = f"{host_col} string, crawl_delay_s int"
+    schema = "url_host string, crawl_delay_s int"
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for host, content in zip(pdf[host_col], pdf[content_col]):
+            for host, content in zip(pdf["url_host"], pdf["content"]):
                 try:
                     if isinstance(content, (bytes, bytearray)):
                         content = bytes(content).decode("utf-8", "replace")
                     rows.append((host, crawl_delay(str(content), agent)))
                 except Exception:
                     rows.append((host, None))
-            yield pd.DataFrame(rows, columns=[host_col, "crawl_delay_s"])
+            yield pd.DataFrame(rows, columns=["url_host", "crawl_delay_s"])
 
     return robots.mapInPandas(mapper, schema)
 
 
-def robots_filter(
-    urls: DataFrame,
-    robots: DataFrame,
-    agent: str,
-    host_col: str = "url_host",
-    path_col: str = "url_path",
-    content_col: str = "content",
-) -> DataFrame:
+def robots_filter(urls: DataFrame, robots: DataFrame, agent: str) -> DataFrame:
     """Append ``allowed`` (RFC 9309 decision for ``agent``) to a URL
     table: longest matching pattern wins, Allow wins ties, no matching
     rule or no robots.txt for the host -> allowed.
@@ -1531,13 +1438,13 @@ def robots_filter(
     matching rules is one map-side-combinable ``max(struct(spec,
     allow))`` (lexicographic: precedence then the Allow tie-win), and
     the bounded decision table joins back to the URL stream."""
-    rules = robots_rules(robots, agent, host_col, content_col)
-    cand = urls.select(host_col, path_col).distinct()
-    matched = cand.join(rules, host_col).filter(
-        F.expr(f"{path_col} rlike rule_regex")
+    rules = robots_rules(robots, agent)
+    cand = urls.select("url_host", "url_path").distinct()
+    matched = cand.join(rules, "url_host").filter(
+        F.expr("url_path rlike rule_regex")
     )
     dec = (
-        matched.groupBy(host_col, path_col)
+        matched.groupBy("url_host", "url_path")
         .agg(
             F.max(
                 F.struct(
@@ -1545,9 +1452,9 @@ def robots_filter(
                 )
             ).alias("best")
         )
-        .select(host_col, path_col, (F.col("best.a") == 1).alias("allowed"))
+        .select("url_host", "url_path", (F.col("best.a") == 1).alias("allowed"))
     )
-    return urls.join(dec, [host_col, path_col], "left").withColumn(
+    return urls.join(dec, ["url_host", "url_path"], "left").withColumn(
         "allowed", F.coalesce("allowed", F.lit(True))
     )
 
@@ -1575,11 +1482,7 @@ def surt_key(url_col) -> Column:
     )
 
 
-def cdx_index(
-    archives: DataFrame,
-    content_col: str = "content",
-    id_col: str = "archive_id",
-) -> DataFrame:
+def cdx_index(archives: DataFrame) -> DataFrame:
     """CDX-style capture index over WARC archives — the third Common
     Crawl derivative beside WET (:func:`wet_export`) and the metadata
     columns WAT carries: one row per HTTP response capture with
@@ -1593,7 +1496,7 @@ def cdx_index(
     plan (include_body stays off)."""
     from ..sources import warc_records
 
-    recs = warc_records(archives, content_col=content_col, id_col=id_col)
+    recs = warc_records(archives)
     resp = recs.filter("parse_ok AND warc_type = 'response'")
     return resp.select(
         surt_key(canonical_url("target_uri")).alias("urlkey"),
@@ -1603,16 +1506,11 @@ def cdx_index(
         F.col("payload_digest").alias("digest"),
         "rec_offset",
         "rec_length",
-        id_col,
+        "archive_id",
     )
 
 
-def cdx_snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    key_col: str = "urlkey",
-    digest_col: str = "digest",
-) -> DataFrame:
+def cdx_snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """Recrawl delta between two CDX snapshots — the incremental-crawl
     planning step (what must be refetched, what appeared, what vanished):
     one FULL OUTER equi-join on the SURT urlkey classifies every capture
@@ -1631,11 +1529,11 @@ def cdx_snapshot_diff(
     Scale shape: per-snapshot groupBy + one content-key equi-join, both
     AQE-splittable; no window, no broadcast of either snapshot (at 100 TB
     both sides are corpus-sized)."""
-    o = old.groupBy(F.col(key_col).alias("urlkey")).agg(
-        F.max(digest_col).alias("old_digest")
+    o = old.groupBy("urlkey").agg(
+        F.max("digest").alias("old_digest")
     )
-    n = new.groupBy(F.col(key_col).alias("urlkey")).agg(
-        F.max(digest_col).alias("new_digest")
+    n = new.groupBy("urlkey").agg(
+        F.max("digest").alias("new_digest")
     )
     j = o.join(n, "urlkey", "full_outer")
     change = (
@@ -1647,17 +1545,15 @@ def cdx_snapshot_diff(
     return j.select("urlkey", "old_digest", "new_digest", change.alias("change"))
 
 
-def filter_blocked_hosts(
-    df: DataFrame, blocklist: DataFrame | list[str], host_col: str = "url_host"
-) -> DataFrame:
+def filter_blocked_hosts(df: DataFrame, blocklist: DataFrame | list[str]) -> DataFrame:
     """Drop rows whose host is on a blocklist — broadcast LEFT ANTI on
     the (small, bounded) blocked set; the page corpus is never shuffled
     or broadcast. Accepts a one-column DataFrame or a literal list."""
     if isinstance(blocklist, list):
         spark = df.sparkSession
         blocked = spark.createDataFrame(
-            [(h,) for h in blocklist], f"{host_col} string"
+            [(h,) for h in blocklist], "url_host string"
         )
     else:
-        blocked = blocklist.toDF(host_col)
-    return df.join(F.broadcast(blocked), host_col, "left_anti")
+        blocked = blocklist.toDF("url_host")
+    return df.join(F.broadcast(blocked), "url_host", "left_anti")

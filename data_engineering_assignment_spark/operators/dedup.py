@@ -24,17 +24,17 @@ from .parallelism import ensure_min_parallelism
 from .text import tokens
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact duplicate groups by content hash: (text_hash, keep_id, n_copies).
 
     ``keep_id`` is the minimum id — the deterministic survivor.
     """
     return (
         df.select(
-            F.md5(F.col(text_col).cast("binary")).alias("text_hash"), F.col(id_col)
+            F.md5(F.col("text").cast("binary")).alias("text_hash"), F.col("doc_id")
         )
         .groupBy("text_hash")
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("n_copies"))
     )
 
 
@@ -65,8 +65,6 @@ def word_shingles(text_col: str = "text", n: int = 3) -> F.Column:
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.5,
     max_df: int | None = None,
@@ -105,7 +103,7 @@ def ngram_jaccard_pairs(
     # feeding dedup_clusters_star before the guard
     df = ensure_min_parallelism(df)
     sh = (
-        df.select(F.col(id_col).alias("doc"), F.explode(word_shingles(text_col, n)).alias("shingle"))
+        df.select(F.col("doc_id").alias("doc"), F.explode(word_shingles("text", n)).alias("shingle"))
     )
     if max_df is not None:
         # Broadcast the HOT side: shingles with df > max_df are few by
@@ -173,8 +171,6 @@ def minhash_signatures(
 
 def minhash_lsh_candidates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 24,
     bands: int = 6,
 ) -> DataFrame:
@@ -192,7 +188,7 @@ def minhash_lsh_candidates(
     NOT worth it: 5× false-positive candidates at the same cost.
     """
     rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes)
+    sigs = minhash_signatures(df, "text", "doc_id", num_hashes)
     banded = sigs.select(
         "doc",
         F.explode(
@@ -337,13 +333,7 @@ def simhash_band_pairs(
     )
 
 
-def jaccard_prefix_join(
-    df: DataFrame,
-    threshold: float = 0.5,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def jaccard_prefix_join(df: DataFrame, threshold: float = 0.5, n: int = 3) -> DataFrame:
     """EXACT Jaccard-threshold self-join via prefix filtering (Bayardo et
     al., "Scaling Up All Pairs Similarity Search") — the deterministic
     complement to MinHash-LSH: identical output to the full shingle
@@ -371,9 +361,9 @@ def jaccard_prefix_join(
     """
     from .text import shingle_hash_stream
 
-    sh = shingle_hash_stream(
-        ensure_min_parallelism(df), n, (id_col,), text_col, out_col="rh"
-    ).select(F.col(id_col).alias("doc"), "rh")
+    sh = shingle_hash_stream(ensure_min_parallelism(df), n).select(
+        F.col("doc_id").alias("doc"), "rh"
+    )
     freq = sh.groupBy("rh").agg(F.count(F.lit(1)).alias("_f"))
     arrs = (
         sh.join(freq, "rh")
@@ -493,8 +483,6 @@ def simhash_hamming_census(
     bits: int = 31,
     bands: int = 3,
     radius: int = 2,
-    id_col: str = "doc",
-    fp_col: str = "simhash31",
 ) -> DataFrame:
     """Per-distance census of Hamming-ball pairs: (hamming, n_pairs) for
     every distance <= ``radius`` that occurs, exact.
@@ -519,7 +507,7 @@ def simhash_hamming_census(
     the multiplicities ride the banded table as payload, so no weight
     back-joins.
     """
-    cnt = fps.groupBy(fp_col).agg(F.count(F.lit(1)).alias("_c")).localCheckpoint(
+    cnt = fps.groupBy("simhash31").agg(F.count(F.lit(1)).alias("_c")).localCheckpoint(
         eager=True
     )
     h0 = (
@@ -532,14 +520,13 @@ def simhash_hamming_census(
         .select(F.lit(0).cast("long").alias("hamming"), "n_pairs")
         .filter(F.col("n_pairs").isNotNull())
     )
-    dfp = cnt.select(F.col(fp_col).alias("doc"), F.col(fp_col), "_c")
+    dfp = cnt.select(F.col("simhash31").alias("doc"), F.col("simhash31"), "_c")
     pairs = simhash_band_pairs(
         dfp,
         bits=bits,
         bands=bands,
         radius=radius,
         id_col="doc",
-        fp_col=fp_col,
         payload_cols=("_c",),
         materialize=False,
     )
@@ -561,12 +548,10 @@ def keep_best(
     return out.select(*keep_cols) if keep_cols else out.drop("_rn")
 
 
-def dedup_clusters(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 10,
-) -> DataFrame:
+CLUSTER_ROUNDS = 10  # label-propagation rounds dedup_clusters may run
+
+
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
     """Connected components over candidate-pair edges → (node, cluster) with
     cluster = min node id of the component.
 
@@ -574,11 +559,14 @@ def dedup_clusters(
     plain DataFrames): each round every node takes the minimum label in its
     neighborhood; converges in O(diameter) rounds — near-dup clusters are
     tiny, so 2-3 rounds in practice. Each round is one shuffle join; lineage
-    is truncated with localCheckpoint so plans stay bounded.
+    is truncated with localCheckpoint so plans stay bounded. A node
+    ``CLUSTER_ROUNDS`` or more hops from its component's minimum id still
+    changes label in the last round; that raises ``RuntimeError`` rather
+    than returning wrong clusters.
     """
     sym = pairs.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-    ).union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    ).union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
     edges = sym.distinct().localCheckpoint(eager=True)
     labels = (
         edges.select(F.col("src").alias("node"))
@@ -586,7 +574,7 @@ def dedup_clusters(
         .withColumn("label", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+    for _ in range(CLUSTER_ROUNDS):
         neigh_min = (
             edges.join(labels.withColumnRenamed("node", "dst"), on="dst")
             .groupBy("src")
@@ -612,19 +600,26 @@ def dedup_clusters(
         labels = new_labels
         if changed == 0:
             break
+    else:
+        # a label still moved in the last round, so some node may not hold
+        # its component's minimum yet: the clusters would be silently WRONG
+        raise RuntimeError(
+            f"dedup_clusters: labels still changing after {CLUSTER_ROUNDS} "
+            "rounds (a node is too many hops from its component's minimum)"
+        )
     return labels.select("node", F.col("label").alias("cluster"))
 
 
-def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash64(df: DataFrame) -> DataFrame:
     """64-bit SimHash of the token stream (JVM-side bit accumulation).
 
     For each bit position, sums +1/-1 over tokens by that bit of
     xxhash64(token), then takes the sign. Near-identical token multisets give
     near-identical fingerprints (low Hamming distance).
     """
-    toks = tokens(text_col)
+    toks = tokens("text")
     h = F.explode(toks).alias("tok")
-    per_tok = df.select(F.col(id_col).alias("doc"), h).withColumn(
+    per_tok = df.select(F.col("doc_id").alias("doc"), h).withColumn(
         "th", F.xxhash64(F.col("tok"))
     )
     bit_cols = [
@@ -678,8 +673,6 @@ def minhash_signatures_portable(
 
 def minhash_lsh_candidates_portable(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_hashes: int = 12,
     bands: int = 4,
 ) -> DataFrame:
@@ -689,7 +682,7 @@ def minhash_lsh_candidates_portable(
     doc_b — deterministic, so it is oracle-gated end to end.
     """
     rows_per_band = num_hashes // bands
-    sigs = minhash_signatures_portable(df, text_col, id_col, num_hashes)
+    sigs = minhash_signatures_portable(df, "text", "doc_id", num_hashes)
     banded = sigs.select(
         "doc",
         F.explode(
@@ -713,9 +706,7 @@ def minhash_lsh_candidates_portable(
     return _bucket_self_join(banded)
 
 
-def simhash_portable(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 31
-) -> DataFrame:
+def simhash_portable(df: DataFrame) -> DataFrame:
     """31-bit SimHash over the portable rolling hash of each token — the
     verifiable twin of :func:`simhash64` (whose xxhash64 has no SQL twin).
     Same shape: token explode → one aggregation of per-bit +1/-1 sums →
@@ -726,17 +717,17 @@ def simhash_portable(
     from .text import rolling_hash
 
     per_tok = df.select(
-        F.col(id_col).alias("doc"), F.explode(tokens(text_col)).alias("tok")
+        F.col("doc_id").alias("doc"), F.explode(tokens("text")).alias("tok")
     ).select("doc", rolling_hash(F.col("tok")).alias("rh"))
     bit_cols = [
         F.sum(
             F.when(F.shiftright(F.col("rh"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
         ).alias(f"b{i}")
-        for i in range(bits)
+        for i in range(31)
     ]
     acc = per_tok.groupBy("doc").agg(*bit_cols)
     fp = None
-    for i in range(bits):
+    for i in range(31):
         bit = F.when(F.col(f"b{i}") > 0, F.lit(1).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
@@ -747,12 +738,9 @@ def simhash_portable(
 
 def containment_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 5,
     threshold: float = 0.6,
     max_df: int | None = 50,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """All-pairs ASYMMETRIC n-gram containment >= threshold.
 
@@ -771,10 +759,9 @@ def containment_pairs(
     """
     from .text import shingle_hash_stream
 
-    sh = shingle_hash_stream(
-        ensure_min_parallelism(df), n=n, id_cols=(id_col,), text_col=text_col,
-        out_col="rh",
-    ).select(F.col(id_col).alias("doc"), "rh")
+    sh = shingle_hash_stream(ensure_min_parallelism(df), n=n).select(
+        F.col("doc_id").alias("doc"), "rh"
+    )
     if max_df is not None:
         hot = (
             sh.groupBy("rh")
@@ -783,8 +770,7 @@ def containment_pairs(
             .select("rh")
         )
         sh = sh.join(F.broadcast(hot), "rh", "left_anti")
-    if checkpoint:
-        sh = sh.localCheckpoint(eager=False)
+    sh = sh.localCheckpoint(eager=False)
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
     a = sh.alias("a").hint("shuffle_hash")
     b = sh.alias("b").hint("shuffle_hash")

@@ -34,6 +34,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+PR_SCALE = 10**12  # pagerank_integer's fixed-point rank of 1.0
+PR_DAMP_NUM, PR_DAMP_DEN = 17, 20  # damping 0.85 as an exact ratio
+HITS_SCALE = 10**6  # hits_integer's fixed-point maximum hub/auth score
+CHECKPOINT_EVERY = 4  # loop rounds between lineage cuts
+
 
 def copurchase_edges(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     """Undirected customer—supplier bipartite edges, LONG-encoded.
@@ -86,22 +91,15 @@ def part_pair_edges(
     return pairs if keep_count else pairs.select("u", "v")
 
 
-def pagerank_integer(
-    edges: DataFrame,
-    iters: int = 3,
-    scale: int = 10**12,
-    damp_num: int = 17,
-    damp_den: int = 20,
-    checkpoint_every: int = 4,
-) -> DataFrame:
+def pagerank_integer(edges: DataFrame, iters: int = 3) -> DataFrame:
     """(node, pr) after ``iters`` integer power iterations.
 
     ``edges`` is an UNDIRECTED (u, v) edge list; contributions flow both
-    ways. pr_0 = scale for every node;
-    pr_{i+1}(v) = base + sum_{u~v} (pr_i(u) * damp_num)
-                                     div (damp_den * deg(u))
-    with base = scale * (damp_den - damp_num) div damp_den. All longs, all
-    floor division — bit-identical to the unrolled SQL oracle.
+    ways. pr_0 = PR_SCALE for every node;
+    pr_{i+1}(v) = base + sum_{u~v} (pr_i(u) * PR_DAMP_NUM)
+                                     div (PR_DAMP_DEN * deg(u))
+    with base = PR_SCALE * (PR_DAMP_DEN - PR_DAMP_NUM) div PR_DAMP_DEN.
+    All longs, all floor division — bit-identical to the unrolled SQL oracle.
     """
     bi = edges.select("u", "v").unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -120,14 +118,14 @@ def pagerank_integer(
     )
     ed = ed.localCheckpoint(eager=False)
 
-    base = scale * (damp_den - damp_num) // damp_den
+    base = PR_SCALE * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN
     ranks = ed.select(F.col("src").alias("node")).distinct().select(
-        "node", F.lit(scale).cast("long").alias("pr")
+        "node", F.lit(PR_SCALE).cast("long").alias("pr")
     )
     for i in range(iters):
         contrib = ed.join(ranks, ed.src == ranks.node).select(
             F.col("dst").alias("node"),
-            F.expr(f"(pr * {damp_num}) div ({damp_den} * deg)").alias("c"),
+            F.expr(f"(pr * {PR_DAMP_NUM}) div ({PR_DAMP_DEN} * deg)").alias("c"),
         )
         # every node of an undirected graph has an in-edge, so the
         # aggregation covers all nodes — no dangling-mass special case
@@ -140,7 +138,7 @@ def pagerank_integer(
         # full job barrier, and a few chained join+agg stages plan fine —
         # only deep loops need the lineage cut (measured: per-iteration
         # checkpointing cost ~2x wall at 3 iterations)
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < iters:
+        if (i + 1) % CHECKPOINT_EVERY == 0 and (i + 1) < iters:
             ranks = ranks.localCheckpoint(eager=False)
     return ranks
 
@@ -268,12 +266,7 @@ def kcore_peel_counts(
     return out
 
 
-def cc_star(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iter: int = 25,
-) -> DataFrame:
+def cc_star(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     """Connected components by alternating large-star / small-star rounds
     (Kiveris et al. 2014, "Connected Components in MapReduce and Beyond")
     → (node, cluster) with cluster = min node id of the component — the
@@ -302,8 +295,8 @@ def cc_star(
     """
     canon = (
         pairs.select(
-            F.greatest(F.col(a_col), F.col(b_col)).alias("hi"),
-            F.least(F.col(a_col), F.col(b_col)).alias("lo"),
+            F.greatest(F.col("doc_a"), F.col("doc_b")).alias("hi"),
+            F.least(F.col("doc_a"), F.col("doc_b")).alias("lo"),
         )
         .filter(F.col("hi") != F.col("lo"))
         .distinct()
@@ -383,7 +376,6 @@ def sssp_rounds(
     edges: DataFrame,
     sources: DataFrame,
     rounds: int = 4,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Multi-source shortest paths by ``rounds`` synchronous Bellman-Ford
     relaxations → (node, dist): the minimum total edge weight over paths
@@ -407,7 +399,7 @@ def sssp_rounds(
     Each round is one equi-join frontier⋈edges plus a map-side-combinable
     ``groupBy(node).min`` and an anti-ish left join to split out the
     improved rows; distance + frontier are checkpointed every
-    ``checkpoint_every`` rounds (job-barrier tradeoff documented at
+    ``CHECKPOINT_EVERY`` rounds (job-barrier tradeoff documented at
     :func:`pagerank_integer`). All longs, no floats — parallel-path ties
     resolve identically on any engine.
     """
@@ -451,26 +443,22 @@ def sssp_rounds(
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
         )
-        if (i + 1) % checkpoint_every == 0 and (i + 1) < rounds:
+        if (i + 1) % CHECKPOINT_EVERY == 0 and (i + 1) < rounds:
             dist = dist.localCheckpoint(eager=False)
             frontier = frontier.localCheckpoint(eager=False)
     return dist
 
 
-def hits_integer(
-    edges: DataFrame,
-    iters: int = 3,
-    scale: int = 10**6,
-) -> DataFrame:
+def hits_integer(edges: DataFrame, iters: int = 3) -> DataFrame:
     """(node, hub, auth) after ``iters`` integer HITS iterations
     (Kleinberg 1999 hubs-and-authorities — the web-graph ranking pair
     beside :func:`pagerank_integer`; on a crawl host graph, hubs are
     link-directory hosts and authorities are link targets).
 
     ``edges`` is a DIRECTED (src, dst) edge list (deduped internally).
-    hub_0 = ``scale`` for every node; each iteration computes
+    hub_0 = ``HITS_SCALE`` for every node; each iteration computes
     auth(v) = sum over in-edges of hub(u), hub(u) = sum over out-edges
-    of auth(v), each renormalized to [0, scale] by integer floor
+    of auth(v), each renormalized to [0, HITS_SCALE] by integer floor
     division by the current MAXIMUM (max-norm, not L2 — no sqrt, so the
     whole fixpoint is long arithmetic, bit-identical to the unrolled
     SQL oracle; same argmax ranking as the classic formulation on every
@@ -485,8 +473,8 @@ def hits_integer(
     per half-step — 4^iters recomputation, measured 188 s for a 7-node
     fixture at iters=3 before the cut vs seconds after (each cut is a
     small job, but the state table is one row per node — cheap relative
-    to the joins it feeds twice). Overflow bound: needs max_degree * scale^2 < 2^63 — at the default
-    scale any graph with in/out degree under ~9·10^6 is safe (host
+    to the joins it feeds twice). Overflow bound: needs
+    max_degree * HITS_SCALE^2 < 2^63 — at 10^6 any graph with in/out degree under ~9·10^6 is safe (host
     graphs qualify; raise consciously for denser universes)."""
     e = edges.select("src", "dst").distinct()
     e = e.localCheckpoint(eager=False)
@@ -495,7 +483,7 @@ def hits_integer(
         .unionAll(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    h = nodes.select("node", F.lit(scale).cast("long").alias("hub"))
+    h = nodes.select("node", F.lit(HITS_SCALE).cast("long").alias("hub"))
     a = None
     for _ in range(iters):
         raw_a = (
@@ -505,7 +493,7 @@ def hits_integer(
         ).localCheckpoint(eager=False)
         amax = raw_a.agg(F.max("raw").alias("mx"))
         a = raw_a.crossJoin(F.broadcast(amax)).select(
-            "node", F.expr(f"(raw * {scale}) div mx").alias("auth")
+            "node", F.expr(f"(raw * {HITS_SCALE}) div mx").alias("auth")
         )
         raw_h = (
             e.join(a, e.dst == a.node)
@@ -514,7 +502,7 @@ def hits_integer(
         ).localCheckpoint(eager=False)
         hmax = raw_h.agg(F.max("raw").alias("mx"))
         h = raw_h.crossJoin(F.broadcast(hmax)).select(
-            "node", F.expr(f"(raw * {scale}) div mx").alias("hub")
+            "node", F.expr(f"(raw * {HITS_SCALE}) div mx").alias("hub")
         )
     return (
         h.join(a, "node", "full_outer")

@@ -27,9 +27,7 @@ from ..sources import _binary_meta_source
 from .dedup import simhash_band_pairs
 
 
-def image_hashes(
-    df: DataFrame, content_col: str = "content", id_col: str = "doc_id"
-) -> DataFrame:
+def image_hashes(df: DataFrame) -> DataFrame:
     """(id, phash, dhash, parse_ok) per media row: decode the binary column
     (any supported codec via decode_any) and fingerprint the FIRST frame.
     Undecodable rows survive with parse_ok = false and NULL hashes — the
@@ -40,7 +38,7 @@ def image_hashes(
         return [(phash63(first), dhash64(first))]
 
     return _binary_meta_source(
-        df, content_col, id_col, decode_any, "phash long, dhash long", rows_fn
+        df, "content", "doc_id", decode_any, "phash long, dhash long", rows_fn
     )
 
 
@@ -48,26 +46,21 @@ def image_phash_pairs(
     hashes: DataFrame,
     radius: int = 2,
     bands: int = 3,
-    id_col: str = "doc_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """EXACT Hamming-ball near-duplicate image pairs over 63-bit pHashes
     (doc_a, doc_b, hamming), hamming <= radius, doc_a < doc_b. Delegates
     to the proven SimHash band machinery with bits=63."""
     return simhash_band_pairs(
-        hashes.filter("parse_ok").select(id_col, "phash"),
+        hashes.filter("parse_ok").select("doc_id", "phash"),
         bits=63,
         bands=bands,
         radius=radius,
-        id_col=id_col,
+        id_col="doc_id",
         fp_col="phash",
-        materialize=materialize,
     )
 
 
-def audio_hashes(
-    df: DataFrame, content_col: str = "content", id_col: str = "doc_id"
-) -> DataFrame:
+def audio_hashes(df: DataFrame) -> DataFrame:
     """(id, aphash, parse_ok) per WAV media row: decode the binary column
     (any :func:`multimodal.decode_wav` profile) and fingerprint the clip
     with :func:`phash.aphash63`. Undecodable rows survive with
@@ -76,7 +69,7 @@ def audio_hashes(
     from ..functions.phash import aphash63
 
     return _binary_meta_source(
-        df, content_col, id_col, decode_wav, "aphash long",
+        df, "content", "doc_id", decode_wav, "aphash long",
         lambda decoded: [(aphash63(decoded[0]),)],
     )
 
@@ -85,38 +78,33 @@ def audio_phash_pairs(
     hashes: DataFrame,
     radius: int = 2,
     bands: int = 3,
-    id_col: str = "doc_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """EXACT Hamming-ball near-duplicate audio pairs over 63-bit aphash
     fingerprints (doc_a, doc_b, hamming) — same banded machinery as
     :func:`image_phash_pairs`."""
     return simhash_band_pairs(
-        hashes.filter("parse_ok").select(id_col, "aphash"),
+        hashes.filter("parse_ok").select("doc_id", "aphash"),
         bits=63,
         bands=bands,
         radius=radius,
-        id_col=id_col,
+        id_col="doc_id",
         fp_col="aphash",
-        materialize=materialize,
     )
 
 
-def video_hashes(
-    df: DataFrame, content_col: str = "content", id_col: str = "doc_id"
-) -> DataFrame:
+def video_hashes(df: DataFrame) -> DataFrame:
     """(id, vphash, n_frames, parse_ok) per video media row: decode the
     binary column (any decode_any container) and fingerprint the clip
     with :func:`phash.vphash61`."""
     from ..functions.phash import vphash61
 
     return _binary_meta_source(
-        df, content_col, id_col, decode_any, "vphash long, n_frames int",
+        df, "content", "doc_id", decode_any, "vphash long, n_frames int",
         lambda decoded: [(vphash61(decoded[0]), decoded[0].shape[0])],
     )
 
 
-def video_dup_pairs(hashes: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def video_dup_pairs(hashes: DataFrame) -> DataFrame:
     """(doc_a, doc_b) pairs of clips with IDENTICAL vphash fingerprints —
     exact-clip dedup. One map-side-combinable collect_list per
     fingerprint plus an in-row pair enumeration (the affinity
@@ -127,7 +115,7 @@ def video_dup_pairs(hashes: DataFrame, id_col: str = "doc_id") -> DataFrame:
     groups = (
         hashes.filter("parse_ok")
         .groupBy("vphash")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") >= 2)
     )
     pairs = groups.select(
@@ -182,8 +170,6 @@ def incremental_image_dedup(
     delta_hashes: DataFrame,
     radius: int = 2,
     bands: int = 3,
-    id_col: str = "doc_id",
-    fp_col: str = "phash",
 ) -> DataFrame:
     """Daily-ingest image dedup: judge a DELTA batch of fingerprints
     against the STANDING corpus — (doc_id, n_dups, best_hamming, status)
@@ -204,11 +190,11 @@ def incremental_image_dedup(
     if bands < radius + 1:
         raise ValueError("bands must be >= radius + 1 for exact recall")
     bits = 63
-    delta_all = delta_hashes.select(id_col, "parse_ok")
-    delta = delta_hashes.filter("parse_ok").select(id_col, fp_col)
-    corpus = corpus_hashes.filter("parse_ok").select(id_col, fp_col)
-    db = _band_explode(delta, bits, bands, id_col, fp_col)
-    cb = _band_explode(corpus, bits, bands, id_col, fp_col)
+    delta_all = delta_hashes.select("doc_id", "parse_ok")
+    delta = delta_hashes.filter("parse_ok").select("doc_id", "phash")
+    corpus = corpus_hashes.filter("parse_ok").select("doc_id", "phash")
+    db = _band_explode(delta, bits, bands, "doc_id", "phash")
+    cb = _band_explode(corpus, bits, bands, "doc_id", "phash")
     cand = (
         cb.join(
             F.broadcast(db.select(
@@ -220,7 +206,7 @@ def incremental_image_dedup(
             ["band", "bucket"],
         )
         .select(
-            F.col("_d").alias(id_col),
+            F.col("_d").alias("doc_id"),
             F.col("_doc").alias("_c"),
             F.col("_fp").alias("_cfp"),
             F.col("_dfp"),
@@ -229,15 +215,15 @@ def incremental_image_dedup(
         .withColumn("hamming", F.bit_count(F.col("_cfp").bitwiseXOR(F.col("_dfp"))))
         .filter(F.col("hamming") <= radius)
     )
-    hits = cand.groupBy(id_col).agg(
+    hits = cand.groupBy("doc_id").agg(
         F.countDistinct("_c").cast("long").alias("n_dups"),
         F.min("hamming").cast("long").alias("best_hamming"),
     )
     return (
         delta_all  # UNFILTERED ids: undecodable rows must not vanish
-        .join(hits, id_col, "left")
+        .join(hits, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             F.when(F.col("parse_ok"), F.coalesce("n_dups", F.lit(0))).alias(
                 "n_dups"
             ),

@@ -24,12 +24,10 @@ def point_in_interval_join(
     point_col: str,
     start_col: str,
     end_col: str,
-    how: str = "inner",
-    closed: str = "left",
 ) -> DataFrame:
     """Join each point row to interval rows of the same ``on`` key that
-    contain it. ``closed='left'`` means start <= point < end (the reference's
-    substitution semantics: on from the start minute, off at the off minute).
+    contain it: start <= point < end (the reference's substitution
+    semantics: on from the start minute, off at the off minute).
     """
     p, iv = points.alias("p"), intervals.alias("iv")
     cond = None
@@ -38,12 +36,6 @@ def point_in_interval_join(
         cond = c if cond is None else cond & c
     pt = F.col(f"p.{point_col}")
     lo, hi = F.col(f"iv.{start_col}"), F.col(f"iv.{end_col}")
-    if closed == "left":
-        rng = (lo <= pt) & (pt < hi)
-    elif closed == "both":
-        rng = (lo <= pt) & (pt <= hi)
-    else:
-        raise ValueError(f"unsupported closed: {closed}")
-    joined = p.join(iv, cond & rng, how)
+    joined = p.join(iv, cond & (lo <= pt) & (pt < hi), "inner")
     # drop the duplicate interval-side key columns
     return joined.drop(*[F.col(f"iv.{k}") for k in on])

@@ -32,11 +32,10 @@ from pyspark.sql import functions as F
 def blocked_name_linkage(
     df: DataFrame,
     name_col: str,
-    max_dist: int = 2,
     max_block: int | None = 1000,
 ) -> DataFrame:
     """(name_a, name_b, dist, n_rows_a, n_rows_b), name_a < name_b —
-    distinct values of ``name_col`` within edit distance ``max_dist``,
+    distinct values of ``name_col`` within edit distance 2,
     candidates blocked by the value's last whitespace token."""
     vocab = df.groupBy(F.col(name_col).alias("name")).agg(
         F.count(F.lit(1)).alias("n_rows")
@@ -61,7 +60,7 @@ def blocked_name_linkage(
             & (F.col("a.name") < F.col("b.name")),
         )
         .withColumn("dist", F.levenshtein(F.col("a.name"), F.col("b.name")))
-        .where(F.col("dist") <= max_dist)
+        .where(F.col("dist") <= 2)
         .select(
             F.col("a.name").alias("name_a"),
             F.col("b.name").alias("name_b"),

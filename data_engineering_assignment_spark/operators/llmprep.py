@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .aggregates import dround
+from .sketches import HASH_BUCKET_WIDTH
 from .text import char_shingle_hash_stream, rolling_hash, tokens
 
 # Engine-portable PII patterns: a regex subset valid in both Java regex
@@ -34,18 +35,16 @@ EMAIL_PATTERN = r"[A-Za-z0-9._]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PHONE_PATTERN = r"\b555-[0-9]{2,8}\b"
 
 
-def hash_bucket(text_col: Column | str, buckets: int = 100) -> Column:
-    """Deterministic [0, buckets) bucket from document content — the
+def hash_bucket(text_col: Column | str) -> Column:
+    """Deterministic [0, 100) bucket from document content — the
     reproducible substitute for ``rand()`` sampling: the same document lands
     in the same bucket on every engine, every run, every partitioning."""
-    return rolling_hash(text_col) % buckets
+    return rolling_hash(text_col) % 100
 
 
-def hash_sample(
-    df: DataFrame, rate_pct: int, text_col: str = "text", buckets: int = 100
-) -> DataFrame:
+def hash_sample(df: DataFrame, rate_pct: int) -> DataFrame:
     """Keep ~rate_pct% of rows by content-hash bucket (narrow, no shuffle)."""
-    return df.filter(hash_bucket(text_col, buckets) < rate_pct)
+    return df.filter(hash_bucket("text") < rate_pct)
 
 
 def capped_per_key_sample(
@@ -53,7 +52,6 @@ def capped_per_key_sample(
     key_col: str,
     hash_col: str,
     cap: int,
-    bucket_width: float = 2_000_000.0,
 ) -> DataFrame:
     """Keep at most ``cap`` rows per key, chosen as the rows with the
     smallest values of ``hash_col`` — the per-DOMAIN contribution cap
@@ -80,7 +78,7 @@ def capped_per_key_sample(
         hash_col,
         key_col,
         [("_cap_kth", 0, cap, 1)],
-        bucket_width=bucket_width,
+        bucket_width=HASH_BUCKET_WIDTH,
     )
     return (
         df.join(kth.select(key_col, "_cap_kth"), key_col)
@@ -95,8 +93,6 @@ def capped_per_key_sample(
 def mix_sources(
     df: DataFrame,
     rates: dict[str, int],
-    source_col: str = "source",
-    text_col: str = "text",
     default_pct: int = 0,
 ) -> DataFrame:
     """Per-source sampling rates (data mixing): source s keeps ~rates[s]% of
@@ -107,18 +103,14 @@ def mix_sources(
     ``_bucket`` projection into three consumers, tripling the per-char fold;
     a rates table too large for a literal map would want that join back.)"""
     mapping = F.create_map(*[F.lit(x) for kv in rates.items() for x in kv])
-    rate = F.coalesce(mapping[F.col(source_col)], F.lit(default_pct))
-    return df.filter(hash_bucket(text_col) < rate)
+    rate = F.coalesce(mapping[F.col("source")], F.lit(default_pct))
+    return df.filter(hash_bucket("text") < rate)
 
 
 def token_budget_sample(
     df: DataFrame,
     budgets: dict[str, int],
     default_budget: int = 0,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    n_buckets: int = 4096,
 ) -> DataFrame:
     """Token-BUDGET data mixing: per source, keep documents in
     deterministic content-hash order until the source's token budget is
@@ -134,9 +126,9 @@ def token_budget_sample(
     dominant source would pin its whole history in one sort task).
     Instead: (1) histogram — token/doc sums per (source, hash-bucket),
     map-side combinable; (2) locate — cumulative over the per-source
-    BUCKET table (≤ ``n_buckets`` rows per source) finds the bucket where
-    the budget crossing lands; (3) resolve — only that bucket's rows
-    (expected corpus/n_buckets) get the exact within-bucket window.
+    BUCKET table (≤ 4096 rows per source) finds the bucket where the
+    budget crossing lands; (3) resolve — only that bucket's rows
+    (expected corpus/4096) get the exact within-bucket window.
     Bucket boundaries are monotone in the hash, so the bucket-prefix +
     within-bucket order equals the global (hash, id) order.
 
@@ -145,16 +137,16 @@ def token_budget_sample(
     keep nothing."""
     from .text import ROLLING_MOD, rolling_hash
 
-    width = -(-ROLLING_MOD // n_buckets)
+    width = -(-ROLLING_MOD // 4096)
     mapping = F.create_map(*[F.lit(x) for kv in budgets.items() for x in kv])
     budget = F.coalesce(mapping[F.col("_src")], F.lit(int(default_budget))).cast(
         "long"
     )
     e = df.select(
-        F.col(source_col).alias("_src"),
-        F.col(id_col).alias("_id"),
-        F.size(tokens(text_col)).cast("long").alias("_nt"),
-        rolling_hash(text_col).alias("_h"),
+        F.col("source").alias("_src"),
+        F.col("doc_id").alias("_id"),
+        F.size(tokens("text")).cast("long").alias("_nt"),
+        rolling_hash("text").alias("_h"),
     ).withColumn("_b", F.floor(F.col("_h") / F.lit(width)).cast("int"))
     hist = e.groupBy("_src", "_b").agg(
         F.sum("_nt").alias("_bt"), F.count(F.lit(1)).alias("_bc")
@@ -199,7 +191,7 @@ def token_budget_sample(
         totals.withColumn("_budget", budget)
         .join(resolved, "_src", "left")
         .select(
-            F.col("_src").alias(source_col),
+            F.col("_src").alias("source"),
             F.col("_budget").alias("budget"),
             "n_docs",
             "tokens_total",
@@ -219,13 +211,7 @@ def token_budget_sample(
     )
 
 
-def decontaminate(
-    train: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 5,
-) -> DataFrame:
+def decontaminate(train: DataFrame, benchmark: DataFrame, n: int = 5) -> DataFrame:
     """Benchmark decontamination: train docs sharing any word ``n``-gram with
     the benchmark set → (doc_id, n_shared_shingles). Both sides stream the
     shingle's PORTABLE rolling hash (text.shingle_hash_stream — one char
@@ -239,10 +225,10 @@ def decontaminate(
     from .parallelism import ensure_min_parallelism
     from .text import shingle_hash_stream
 
-    t_sh = shingle_hash_stream(
-        ensure_min_parallelism(train), n=n, id_cols=(id_col,), text_col=text_col
-    ).withColumnRenamed(id_col, "doc")
-    b_sh = shingle_hash_stream(benchmark, n=n, id_cols=(), text_col=text_col).select(
+    t_sh = shingle_hash_stream(ensure_min_parallelism(train), n=n).withColumnRenamed(
+        "doc_id", "doc"
+    )
+    b_sh = shingle_hash_stream(benchmark, n=n, id_cols=()).select(
         "rh"
     ).distinct()
     # plain count, not count_distinct: the stream is per-doc-distinct and
@@ -250,15 +236,15 @@ def decontaminate(
     # distinct-expansion shuffle would be pure waste
     return (
         t_sh.join(F.broadcast(b_sh), on="rh")
-        .groupBy(F.col("doc").alias(id_col))
+        .groupBy(F.col("doc").alias("doc_id"))
         .agg(F.count(F.lit(1)).alias("n_shared_shingles"))
     )
 
 
-def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
+def redact_pii(df: DataFrame) -> DataFrame:
     """Replace emails/phone numbers with typed placeholder tokens, keeping
     match counts for audit. Adds: n_emails, n_phones, redacted."""
-    c = F.col(text_col)
+    c = F.col("text")
     return (
         df.withColumn("n_emails", F.regexp_count(c, F.lit(EMAIL_PATTERN)))
         .withColumn("n_phones", F.regexp_count(c, F.lit(PHONE_PATTERN)))
@@ -278,19 +264,14 @@ def redact_pii(df: DataFrame, text_col: str = "text") -> DataFrame:
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
-def gopher_quality_flags(
-    df: DataFrame,
-    text_col: str = "text",
-    min_words: int = 50,
-    max_words: int = 100_000,
-) -> DataFrame:
+def gopher_quality_flags(df: DataFrame) -> DataFrame:
     """Append the Gopher quality-filter rule flags (Rae et al. 2021,
     appendix A1.1 — the published heuristic rule set every modern
     pretraining pipeline starts from; Dolma and DataTrove reproduce the
     same table). One boolean per rule plus the conjunction
     ``gopher_pass``:
 
-    * ``rule_word_count`` — word count in [min_words, max_words];
+    * ``rule_word_count`` — word count in [50, 100000];
     * ``rule_mean_word_len`` — mean word length in [3, 10];
     * ``rule_symbol_ratio`` — (# + ellipsis) per word <= 0.1;
     * ``rule_bullet_lines`` — <= 90% of lines start with a bullet;
@@ -307,7 +288,7 @@ def gopher_quality_flags(
     of whitespace / blank lines are separators, not zero-length
     "words" — matching the published Gopher whitespace tokenization);
     lines split on newlines."""
-    c = F.col(text_col)
+    c = F.col("text")
     words = F.filter(
         F.split(F.replace(c, F.lit("\n"), F.lit(" ")), " "),
         lambda w: w != "",
@@ -343,7 +324,7 @@ def gopher_quality_flags(
     return df.select(
         "*",
         n_words.alias("n_words"),
-        ((n_words >= min_words) & (n_words <= max_words)).alias(
+        ((n_words >= 50) & (n_words <= 100_000)).alias(
             "rule_word_count"
         ),
         (
@@ -370,8 +351,6 @@ def pack_sequences(
     df: DataFrame,
     capacity: int,
     group_col: str = "lang",
-    order_col: str = "doc_id",
-    text_col: str = "text",
     shards_per_group: int | None = None,
 ) -> DataFrame:
     """Contiguous sequence packing: within each group (ordered
@@ -383,7 +362,7 @@ def pack_sequences(
     unsplittable work. A language/source group key is a CONTENT key: at
     corpus scale one dominant language would pin its entire history in a
     single sort task. ``shards_per_group`` makes the key shardable — docs
-    are packed within ``(group, rolling_hash(order_col) % shards)``
+    are packed within ``(group, rolling_hash(doc_id) % shards)``
     subgroups, each a deterministic, capacity-exact packing of its own doc
     subset, and ``pack_id`` is offset by ``shard * 2^40`` so ids stay
     unique across shards (2^40 packs ≈ 10^12 × capacity tokens per shard,
@@ -394,18 +373,18 @@ def pack_sequences(
     Oversized docs (> capacity) still get a pack of their own rather than
     being dropped — filter upstream if truncation is the policy.
     """
-    n_tok = F.size(tokens(text_col)).cast("long")
+    n_tok = F.size(tokens("text")).cast("long")
     with_tok = df.withColumn("n_tokens", n_tok)
     part_cols: list = [group_col]
     if shards_per_group is not None:
         with_tok = with_tok.withColumn(
             "_shard",
-            F.pmod(rolling_hash(F.col(order_col).cast("string")), F.lit(int(shards_per_group))),
+            F.pmod(rolling_hash(F.col("doc_id").cast("string")), F.lit(int(shards_per_group))),
         )
         part_cols.append("_shard")
     w = (
         Window.partitionBy(*part_cols)
-        .orderBy(order_col)
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     local_pack = (F.coalesce(F.sum("n_tokens").over(w), F.lit(0)) / capacity).cast("long")
@@ -416,9 +395,7 @@ def pack_sequences(
     ).drop("_shard")
 
 
-def repetition_stats(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def repetition_stats(df: DataFrame) -> DataFrame:
     """Gopher-style repetition signals per document: token count, distinct
     tokens, distinct ratio, and the most-frequent token's share.
 
@@ -429,7 +406,7 @@ def repetition_stats(
     computed the same values through two shuffles of every token in the
     corpus; at 100 TB that shuffle IS the job, while this version is a pure
     map over documents."""
-    toks = tokens(text_col)
+    toks = tokens("text")
     init = F.struct(
         F.lit(None).cast("string").alias("prev"),
         F.lit(0).cast("long").alias("run"),
@@ -448,9 +425,9 @@ def repetition_stats(
 
     # project the token array once; every stat derives from the reference
     # (tokenizing per-stat would re-split the text several times per row)
-    t = df.select(F.col(id_col), toks.alias("_toks"))
+    t = df.select(F.col("doc_id"), toks.alias("_toks"))
     counted = t.select(
-        id_col,
+        "doc_id",
         F.size("_toks").cast("long").alias("n_tokens"),
         F.size(F.array_distinct("_toks")).cast("long").alias("n_uniq"),
         F.aggregate(F.array_sort("_toks"), init, step, lambda acc: acc.getField("mx")).alias(
@@ -458,7 +435,7 @@ def repetition_stats(
         ),
     )
     return counted.select(
-        id_col,
+        "doc_id",
         "n_tokens",
         "n_uniq",
         dround(F.col("n_uniq").cast("double") / F.col("n_tokens").cast("double"), 4).alias(
@@ -516,12 +493,7 @@ def _dup_run_fold(arr: Column) -> Column:
     return F.aggregate(arr, init, step, finish)
 
 
-def intra_doc_repetition(
-    df: DataFrame,
-    para_tokens: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def intra_doc_repetition(df: DataFrame, para_tokens: int = 16) -> DataFrame:
     """Gopher-style INTRA-document repetition signals (Rae et al. 2021,
     "Scaling Language Models: ... Gopher" Table A1's repetition filters):
     per document, the fraction of duplicate paragraphs (16-token blocks
@@ -599,10 +571,10 @@ def intra_doc_repetition(
             _dup_run_fold(keyed(grams(3))).alias("g3"),
         )
 
-    packed = F.get(F.transform(F.array(tokens(text_col)), build), 0)
+    packed = F.get(F.transform(F.array(tokens("text")), build), 0)
     d = df.select(
-        F.col(id_col),
-        F.length(text_col).cast("long").alias("_tc"),
+        F.col("doc_id"),
+        F.length("text").cast("long").alias("_tc"),
         F.explode(F.array(packed)).alias("_s"),  # Generate: collapse-proof
     )
     s = F.col("_s")
@@ -611,7 +583,7 @@ def intra_doc_repetition(
     ).otherwise(F.lit(0.0))
     para = s.getField("para")
     return d.select(
-        id_col,
+        "doc_id",
         para.getField("n_paras").alias("n_paras"),
         frac(
             para.getField("p").getField("dup_n"), para.getField("n_paras")
@@ -628,17 +600,10 @@ def intra_doc_repetition(
     )
 
 
-def quality_percentile_gate(
-    df: DataFrame,
-    keep_pct: int = 80,
-    quality_col: str = "quality",
-    group_col: str = "source",
-    id_col: str = "doc_id",
-    bucket_width: float = 0.01,
-) -> DataFrame:
-    """Per-group percentile quality gate: within each group, keep the top
-    ``keep_pct``% of documents by quality score. The cut is pure integer
-    arithmetic — ``n_kept = (n * keep_pct) div 100`` — never a
+def quality_percentile_gate(df: DataFrame, keep_pct: int = 80) -> DataFrame:
+    """Per-group percentile quality gate: within each ``source``, keep the
+    top ``keep_pct``% of documents by ``quality`` score. The cut is pure
+    integer arithmetic — ``n_kept = (n * keep_pct) div 100`` — never a
     floating-point percentile, so the kept set is identical on every engine
     and partitioning.
 
@@ -649,41 +614,40 @@ def quality_percentile_gate(
     Scale shape (the ``quantiles.rank_values_pruned`` pattern): the
     output depends only on each group's quality MULTISET — ``n_kept`` is a
     count and ``min_kept_quality`` is the k-th largest quality — so no
-    per-row rank is needed. A per-row window partitioned by ``group_col``
+    per-row rank is needed. A per-row window partitioned by ``source``
     (a low-cardinality content key) would pin one unsplittable sort task
     per source at corpus scale; instead:
 
-      1. histogram — groupBy (group, floor(quality / bucket_width)):
+      1. histogram — groupBy (group, floor(quality / 0.01)):
          splittable, map-side combinable;
       2. locate — descending cumulative counts over the per-group BUCKET
          table (a window, but over the aggregate: rows per group =
-         quality-range / bucket_width, not the corpus) finds the bucket
+         quality-range / 0.01, not the corpus) finds the bucket
          holding the k-th largest quality;
       3. resolve — join back only that bucket's rows, aggregate per
          (group, quality) value, and take the first descending crossing
          (window bounded by the bucket's distinct-value count).
 
-    ``id_col`` is kept for API compatibility: the rank tiebreak affects
-    which tied ROWS are kept, but not any of the outputs, which are
-    tie-invariant. NULL-quality documents are excluded — from ``n_docs``,
+    The outputs are tie-invariant, so no id tiebreak is needed.
+    NULL-quality documents are excluded — from ``n_docs``,
     the cut computation, and the kept set (the old window formulation's
     MIN skipped NULLs implicitly; unexcluded, a NULL bucket could absorb
     the target rank and then silently drop out of the resolve join). The
     exclusion happens on the AGGREGATED histogram (drop the NULL bucket),
-    not as a corpus-level pre-filter: ``quality_col`` is typically an
+    not as a corpus-level pre-filter: ``quality`` is typically an
     expensive derived expression (with_text_stats inlines token splits),
     and a separate Filter operator evaluates it once more per row on top
     of the projection — codegen subexpression elimination shares the
     evaluation within one Project, but not across Filter + Project (the
     r6 pre-filter measured ~1.8x on the catalog query; probed solo,
     uncontended). The resolve join on ``_qb`` drops NULL rows for free
-    (equi-join never matches NULL). Output: (group, n_docs, n_kept,
+    (equi-join never matches NULL). Output: (source, n_docs, n_kept,
     min_kept_quality)."""
-    bw = F.lit(float(bucket_width))
+    bw = F.lit(0.01)
     e = df.select(
-        F.col(group_col).alias("_g"),
-        F.col(quality_col).alias("_q"),
-        F.floor(F.col(quality_col) / bw).alias("_qb"),
+        F.col("source").alias("_g"),
+        F.col("quality").alias("_q"),
+        F.floor(F.col("quality") / bw).alias("_qb"),
     )
     hist = (
         e.groupBy("_g", "_qb")
@@ -730,7 +694,7 @@ def quality_percentile_gate(
         .withColumn("n_kept", F.expr(f"(n_docs * {int(keep_pct)}) div 100"))
     )
     return totals.join(qstar, "_g", "left").select(
-        F.col("_g").alias(group_col), "n_docs", "n_kept", "min_kept_quality"
+        F.col("_g").alias("source"), "n_docs", "n_kept", "min_kept_quality"
     )
 
 
@@ -738,11 +702,6 @@ def dsir_affinity_topk(
     docs: DataFrame,
     target_sources: list[str],
     k: int = 64,
-    n_buckets: int = 1024,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    source_col: str = "source",
-    scale: int = 6,
 ) -> DataFrame:
     """DSIR-inspired data selection (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score every document by
@@ -755,7 +714,7 @@ def dsir_affinity_topk(
 
         affinity(d) = sum_b  c_d[b] * (tgt[b] * T_raw) / (T_tgt * (raw[b]+1))
 
-    over ``n_buckets`` hashed unigram+bigram buckets — rank-equivalent to
+    over 1024 hashed unigram+bigram buckets — rank-equivalent to
     DSIR's estimator under a first-order expansion and exactly
     SQL-expressible. Hashes are the portable rolling hash via
     text.multi_shingle_hash_stream: ONE char fold per document feeds both
@@ -766,12 +725,12 @@ def dsir_affinity_topk(
 
     Shape: the feature stream is aggregated to (doc, source, bucket,
     count) FIRST — map-side combinable, the only shuffle of corpus-sized
-    data — and THAT bounded table (≤ n_buckets rows per doc) is
+    data — and THAT bounded table (≤ 1024 rows per doc) is
     localCheckpointed for its four consumers (per-doc-bucket counts,
     per-bucket raw and target counts, the two scalar totals). The r7
     formulation checkpointed the raw per-shingle stream and re-scanned it
     per consumer — 3 extra passes over ~2×tokens rows. Per-bucket weights
-    are a BOUNDED table (n_buckets rows) — broadcast to the per-doc
+    are a BOUNDED table (1024 rows) — broadcast to the per-doc
     counts; the corpus never shuffles on a content key beyond the one
     bucket-count aggregation (1024 keys, never a window). Top-k
     is bounded FIRST (orderBy + limit = TakeOrderedAndProject), then
@@ -787,13 +746,13 @@ def dsir_affinity_topk(
     from .text import multi_shingle_hash_stream
 
     stream = multi_shingle_hash_stream(
-        docs, ns=(1, 2), id_cols=(id_col, source_col), text_col=text_col
+        docs, ns=(1, 2), id_cols=("doc_id", "source")
     )
     feats = (
         stream.select(
-            F.col(id_col).alias("doc_id"),
-            F.col(source_col).alias("source"),
-            (F.col("rh") % n_buckets).cast("int").alias("bucket"),
+            "doc_id",
+            "source",
+            (F.col("rh") % 1024).cast("int").alias("bucket"),
         )
         .groupBy("doc_id", "source", "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -821,19 +780,14 @@ def dsir_affinity_topk(
     # doc_id determines source, so (doc_id, bucket) is already unique in feats
     db = feats.select("doc_id", "bucket", "c")
     scores = db.join(F.broadcast(weights), "bucket").groupBy("doc_id").agg(
-        dsum(F.col("c") * F.col("wt"), "affinity", scale)
+        dsum(F.col("c") * F.col("wt"), "affinity", 6)
     )
     bounded = scores.orderBy(F.desc("affinity"), F.asc("doc_id")).limit(k)
     w = Window.orderBy(F.desc("affinity"), F.asc("doc_id"))
     return bounded.withColumn("rnk", F.row_number().over(w).cast("long"))
 
 
-def hashed_linear_scores(
-    df: DataFrame,
-    weights: list[int],
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-) -> DataFrame:
+def hashed_linear_scores(df: DataFrame, weights: list[int]) -> DataFrame:
     """fastText-shape document quality classifier, engine-native: the
     model-based filter of the CCNet/RefinedWeb triple (beside the
     heuristic gates in operators/text.py and the bigram-LM perplexity
@@ -849,19 +803,19 @@ def hashed_linear_scores(
     order-free: an integer sum is identical under any partitioning and
     any engine, so the keep/drop margin (score >= 0) is deterministic —
     no float-accumulation-order surface at 1000 executors. Output:
-    (doc_col, score). One explode + one map-side-combinable integer
+    (doc_id, score). One explode + one map-side-combinable integer
     aggregation keyed by the document id (entity key, AQE-splittable);
     the weight table is a literal array in the plan, never a join."""
     n = len(weights)
     warr = F.array(*[F.lit(int(w)).cast("long") for w in weights])
-    tok = df.select(doc_col, F.explode(tokens(text_col)).alias("tok"))
+    tok = df.select("doc_id", F.explode(tokens("text")).alias("tok"))
     scored = tok.select(
-        doc_col,
+        "doc_id",
         F.element_at(
             warr, (rolling_hash("tok") % n + 1).cast("int")
         ).alias("wt"),
     )
-    return scored.groupBy(doc_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.sum("wt").cast("long").alias("score")
     )
 
@@ -869,10 +823,7 @@ def hashed_linear_scores(
 def hashed_multiclass_scores(
     df: DataFrame,
     class_weights: dict[str, list[int]],
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     features: str = "word",
-    char_ns: tuple[int, ...] = (2, 3),
 ) -> DataFrame:
     """Multi-class fastText-shape classifier — the language-ID /
     domain-ID generalization of :func:`hashed_linear_scores` (fastText's
@@ -888,13 +839,13 @@ def hashed_multiclass_scores(
 
     ``features`` selects the hashed feature family: ``"word"`` (the
     default — whitespace tokens, fine for space-segmented scripts) or
-    ``"char"`` — character ``char_ns``-gram hashes via
+    ``"char"`` — character 2- and 3-gram hashes via
     :func:`~.text.char_shingle_hash_stream`, fastText lid.176's actual
     feature set and the one that works on UNSEGMENTED scripts
     (Chinese/Japanese/Thai whitespace-tokenize as one giant "word" per
     line, making every word-bucket model structurally blind to them;
     the char stream sees their script's n-grams directly). Char mode
-    emits no rows for documents shorter than min(char_ns) chars, so
+    emits no rows for documents shorter than 2 chars, so
     such documents are absent from the output — mirror that in oracles.
 
     Scale shape: one explode, ONE rolling-hash evaluation per feature
@@ -914,12 +865,10 @@ def hashed_multiclass_scores(
         for c in classes
     }
     if features == "char":
-        stream = char_shingle_hash_stream(
-            df, ns=char_ns, id_cols=(doc_col,), text_col=text_col
-        )
+        stream = char_shingle_hash_stream(df, ns=(2, 3))
         bucket = (F.col("rh") % n + 1).cast("int")
         scored = stream.select(
-            doc_col,
+            "doc_id",
             F.struct(
                 *[F.element_at(arrs[c], bucket).alias(c) for c in classes]
             ).alias("wt"),
@@ -935,11 +884,11 @@ def hashed_multiclass_scores(
             ),
             0,
         )
-        tok = df.select(doc_col, F.explode(tokens(text_col)).alias("tok"))
-        scored = tok.select(doc_col, lookups.alias("wt"))
+        tok = df.select("doc_id", F.explode(tokens("text")).alias("tok"))
+        scored = tok.select("doc_id", lookups.alias("wt"))
     else:
         raise ValueError(f"unknown feature family {features!r}")
-    agg = scored.groupBy(doc_col).agg(
+    agg = scored.groupBy("doc_id").agg(
         *[
             F.sum(F.col(f"wt.{c}")).cast("long").alias(f"score_{c}")
             for c in classes
@@ -948,5 +897,5 @@ def hashed_multiclass_scores(
     label = F.greatest(
         *[F.struct(F.col(f"score_{c}").alias("s"), F.lit(c).alias("c")) for c in classes]
     )["c"] if len(classes) > 1 else F.lit(classes[0])
-    return agg.select(doc_col, *[f"score_{c}" for c in classes],
+    return agg.select("doc_id", *[f"score_{c}" for c in classes],
                       label.alias("label"))

@@ -42,20 +42,23 @@ from pyspark.sql import DataFrame
 _PART_COUNT_MEMO: dict[tuple, int] = {}
 
 
-def scan_partitions(df: DataFrame, memo_key: str | None = None) -> int:
-    """Partition count of a SCAN-ROOTED (or checkpointed) frame, memoized
-    under the same contract as :func:`ensure_min_parallelism` (stable scans
-    only; the probe converts the plan to an RDD, so never call it on a
-    frame that still contains exchanges)."""
+def small_scan(df: DataFrame, memo_key: str | None = None) -> bool:
+    """True in the small-scan regime: a SCAN-ROOTED (or checkpointed) frame
+    has fewer partitions than the session's default parallelism. The one
+    regime probe every "small scan" vs "at scale" branch goes through. The
+    partition count is memoized under the contract of
+    :func:`ensure_min_parallelism` (stable scans only; the probe converts
+    the plan to an RDD, so never call it on a frame that still contains
+    exchanges)."""
     sc = df.sparkSession.sparkContext
-    if memo_key is not None:
-        key = (sc.applicationId, memo_key, sc.defaultParallelism)
-        n = _PART_COUNT_MEMO.get(key)
-        if n is None:
-            n = df.rdd.getNumPartitions()
-            _PART_COUNT_MEMO[key] = n
-        return n
-    return df.rdd.getNumPartitions()
+    par = sc.defaultParallelism
+    if memo_key is None:
+        return df.rdd.getNumPartitions() < par
+    key = (sc.applicationId, memo_key, par)
+    n = _PART_COUNT_MEMO.get(key)
+    if n is None:
+        n = _PART_COUNT_MEMO[key] = df.rdd.getNumPartitions()
+    return n < par
 
 
 def ensure_min_parallelism(df: DataFrame, memo_key: str | None = None) -> DataFrame:
@@ -78,8 +81,6 @@ def ensure_min_parallelism(df: DataFrame, memo_key: str | None = None) -> DataFr
     frames only — ``.rdd`` on a plan that still contains exchanges
     materializes those shuffle stages eagerly at DataFrame-BUILD time
     under AQE, turning a plan probe into real job cost."""
-    n = scan_partitions(df, memo_key)
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if n >= par:
+    if not small_scan(df, memo_key):
         return df
-    return df.repartition(par)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)

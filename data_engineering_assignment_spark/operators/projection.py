@@ -11,7 +11,7 @@ O(sqrt(log n / k)).
 
 Cross-engine exactness discipline (the cosine_topk_lsh pattern): the sign
 matrix is generated ONCE in driver Python from a Knuth MMIX LCG — a pure
-function of (seed, j, i) — and inlined as LITERALS into both the Spark
+function of (j, i) under a fixed seed — and inlined as LITERALS into both the Spark
 expression tree and the SQL oracle, so there is no cross-engine RNG or
 libm surface. Every dot product is a left-to-right ``F.aggregate`` fold
 (DuckDB twin: ``list_reduce`` over the same prepend-0 order), so the
@@ -31,13 +31,14 @@ from .aggregates import dround
 _MMIX_MUL = 6364136223846793005
 _MMIX_ADD = 1442695040888963407
 _MASK = (1 << 64) - 1
+_SEED = 42
 
 
-def jl_signs(dim: int, row: int, seed: int = 42) -> list[float]:
+def jl_signs(dim: int, row: int) -> list[float]:
     """Deterministic ±1.0 signs for projected dimension ``row`` — a pure
-    function of (seed, row, i), identical on every executor and engine."""
+    function of (row, i), identical on every executor and engine."""
     out = []
-    state = (seed * _MMIX_MUL + row * _MMIX_ADD) & _MASK
+    state = (_SEED * _MMIX_MUL + row * _MMIX_ADD) & _MASK
     for _ in range(dim):
         state = (state * _MMIX_MUL + _MMIX_ADD) & _MASK
         out.append(1.0 if (state >> 62) & 1 else -1.0)
@@ -57,20 +58,13 @@ def _fold_dot(vec: Column, coeffs: list[float]) -> Column:
     )
 
 
-def project(vec: Column, dim: int, k: int, seed: int = 42) -> Column:
+def project(vec: Column, dim: int, k: int) -> Column:
     """array<double> of the k projected components (unscaled ±1 sums;
     divide by sqrt(k) for the isometry-normalized embedding)."""
-    return F.array(*[_fold_dot(vec, jl_signs(dim, j, seed)) for j in range(k)])
+    return F.array(*[_fold_dot(vec, jl_signs(dim, j)) for j in range(k)])
 
 
-def rp_norm_stats(
-    df: DataFrame,
-    dim: int,
-    k: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def rp_norm_stats(df: DataFrame, dim: int, k: int = 16) -> DataFrame:
     """Per-vector JL norm-preservation telemetry.
 
     E[||y||^2 / k] = ||x||^2 for the ±1 matrix, so ``distortion`` =
@@ -78,22 +72,22 @@ def rp_norm_stats(
     guarantee, per vector. Columns: id, x_norm2, y_norm2_over_k,
     distortion.
     """
-    x = F.col(vec_col)
+    x = F.col("embedding")
     x_norm2 = F.aggregate(
         F.transform(x, lambda v: v.cast("double") * v.cast("double")),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    y = project(x, dim, k, seed)
+    y = project(x, dim, k)
     y_norm2 = F.aggregate(
         F.transform(y, lambda v: v * v), F.lit(0.0), lambda acc, v: acc + v
     )
     return df.select(
-        F.col(id_col),
+        F.col("vec_id"),
         x_norm2.alias("_xn"),
         y_norm2.alias("_yn"),
     ).select(
-        id_col,
+        "vec_id",
         dround(F.col("_xn"), 6).alias("x_norm2"),
         dround(F.col("_yn") / F.lit(float(k)), 6).alias("y_norm2_over_k"),
         dround(F.col("_yn") / (F.lit(float(k)) * F.col("_xn")), 4).alias(

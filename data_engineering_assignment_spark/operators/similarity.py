@@ -18,6 +18,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+SIM_SCALE = 4  # decimal places every reported cosine similarity keeps
+PQ_DIST_SCALE = 6  # decimal places of the PQ / IVF-PQ approximate distances
+
 
 def _fold_sum(arr: Column) -> Column:
     """Left-fold double sum of an array (deterministic order)."""
@@ -86,9 +89,6 @@ def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 4,
 ) -> DataFrame:
     """Exact top-k cosine neighbors per query (self-matches excluded).
 
@@ -97,10 +97,10 @@ def cosine_topk(
     Output: (query_id, neighbor_id, sim, rnk).
     """
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
     )
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"))
-    sim = F.round(cosine(F.col("q_vec"), F.col("c_vec")), scale)
+    c = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_vec"))
+    sim = F.round(cosine(F.col("q_vec"), F.col("c_vec")), SIM_SCALE)
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .withColumn("sim", sim)
@@ -113,13 +113,7 @@ def cosine_topk(
     )
 
 
-def cosine_pairs(
-    corpus: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 4,
-) -> DataFrame:
+def cosine_pairs(corpus: DataFrame, threshold: float) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: all (a, b), a < b, with rounded
     cosine ≥ threshold.
 
@@ -129,9 +123,9 @@ def cosine_pairs(
     per side before the join, so the joined row does only the dot product.
     """
     prepped = corpus.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.sqrt(sq_norm(F.col(vec_col))).alias("norm"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("v"),
+        F.sqrt(sq_norm(F.col("embedding"))).alias("norm"),
     )
     a = prepped.select(
         F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("norm").alias("na")
@@ -139,7 +133,7 @@ def cosine_pairs(
     b = prepped.select(
         F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("norm").alias("nb")
     )
-    sim = F.round(dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), scale)
+    sim = F.round(dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), SIM_SCALE)
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
         .withColumn("sim", sim)
@@ -151,9 +145,6 @@ def cosine_pairs(
 def cosine_pairs_grouped(
     corpus: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 4,
     n_blocks: int = 16,
 ) -> DataFrame:
     """Exact all-pairs cosine ≥ threshold, fully distributed (no driver
@@ -176,9 +167,9 @@ def cosine_pairs_grouped(
     import pandas as pd
 
     prepped = corpus.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_blocks)).cast("int").alias("blk"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").cast("array<double>").alias("v"),
+        F.pmod(F.xxhash64(F.col("vec_id")), F.lit(n_blocks)).cast("int").alias("blk"),
     )
     # every unordered block pair (min(blk,j), max(blk,j)) this row's block is in
     pair_structs = F.array(
@@ -221,7 +212,7 @@ def cosine_pairs_grouped(
                 return _empty()
             ids_a, a = mat(pdf[in_a])
             ids_b, b = mat(pdf[~in_a])
-        sims = np.round(a @ b.T, scale)
+        sims = np.round(a @ b.T, SIM_SCALE)
         mask = sims >= threshold
         if ka == kb:
             mask &= ids_a[:, None] < ids_b[None, :]
@@ -238,6 +229,13 @@ def cosine_pairs_grouped(
 
     return exploded.groupBy("pa", "pb").applyInPandas(
         compute, "id_a bigint, id_b bigint, sim double"
+    )
+
+
+def _id_vec(df: DataFrame) -> DataFrame:
+    """(id, vec array<double>) of an embeddings frame."""
+    return df.select(
+        F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("vec")
     )
 
 
@@ -278,9 +276,9 @@ def _seed_centroids(prep: DataFrame, n_centroids: int):
     return _normed(np.array([r["vec"] for r in rows], dtype=np.float64))
 
 
-def _farthest_point_seeds(prep: DataFrame, n_centroids: int, oversample: int = 16):
+def _farthest_point_seeds(prep: DataFrame, n_centroids: int):
     """Deterministic k-means++-style init: pull a hash-ordered sample of
-    ``oversample × n_centroids`` rows (bounded, never the corpus), then
+    ``16 × n_centroids`` rows (bounded, never the corpus), then
     greedily pick seeds by farthest-point (max-min cosine distance). A
     plain uniform sample routinely drops two seeds into one cluster and
     leaves another cluster unserved — Lloyd cannot split a merged cell, so
@@ -290,7 +288,7 @@ def _farthest_point_seeds(prep: DataFrame, n_centroids: int, oversample: int = 1
 
     sample = (
         prep.orderBy(F.xxhash64(F.col("id")), F.col("id"))
-        .limit(max(256, oversample * n_centroids))
+        .limit(max(256, 16 * n_centroids))
         .collect()
     )
     pts = _normed(np.array([r["vec"] for r in sample], dtype=np.float64))
@@ -306,13 +304,7 @@ def _farthest_point_seeds(prep: DataFrame, n_centroids: int, oversample: int = 1
     return pts[chosen]
 
 
-def kmeans_centroids(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
+def kmeans_centroids(corpus: DataFrame, n_centroids: int = 16, n_iter: int = 2):
     """Distributed Lloyd refinement of the IVF centroids (spherical-k-means
     variant: cosine assignment, per-cell raw mean, renormalized each round).
 
@@ -333,9 +325,7 @@ def kmeans_centroids(
     from .aggregates import DEC
 
     spark = corpus.sparkSession
-    prep = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vec")
-    )
+    prep = _id_vec(corpus)
     cents = _farthest_point_seeds(prep, n_centroids)
     for _ in range(n_iter):
         b = spark.sparkContext.broadcast(cents)
@@ -369,9 +359,6 @@ def ivf_topk_portable(
     k: int = 5,
     n_centroids: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 4,
 ) -> DataFrame:
     """IVF top-k whose every step is SQL-expressible, so the operator is
     exact-oracle-checkable end to end (mirroring the ``dedup_minhash_lsh``
@@ -397,14 +384,8 @@ def ivf_topk_portable(
     # the per-row interpreted cosine folds below (corpus x n_centroids)
     # are narrow from the scan — one task at small-file scale without the
     # guard (operators/parallelism.py); queries are a bounded set, cheap
-    c_prep = ensure_min_parallelism(
-        corpus.select(
-            F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vec")
-        )
-    )
-    q_prep = queries.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vec")
-    )
+    c_prep = ensure_min_parallelism(_id_vec(corpus))
+    q_prep = _id_vec(queries)
     h = (F.col("id") * F.lit(2654435761)) % F.lit(4294967296)
     seeds = (
         c_prep.select("id", "vec", h.alias("h")).orderBy("h", "id").limit(n_centroids)
@@ -441,7 +422,7 @@ def ivf_topk_portable(
     scored = assigned.join(F.broadcast(probed), on="cell").filter(
         F.col("query_id") != F.col("neighbor_id")
     )
-    sim = F.round(cosine(F.col("q_vec"), F.col("c_vec")), scale)
+    sim = F.round(cosine(F.col("q_vec"), F.col("c_vec")), SIM_SCALE)
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("sim", sim)
@@ -456,9 +437,6 @@ def semantic_dup_pairs(
     threshold: float = 0.4,
     n_centroids: int = 16,
     n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 4,
     centroids=None,
     target_cell_rows: int | None = None,
 ) -> DataFrame:
@@ -501,9 +479,7 @@ def semantic_dup_pairs(
     Output: (id_a, id_b, cell, sim), id_a < id_b, sim >= threshold.
     """
     spark = corpus.sparkSession
-    c_prep = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vec")
-    )
+    c_prep = _id_vec(corpus)
     if target_cell_rows is not None and centroids is None:
         n_rows = c_prep.count()
         if n_rows == 0:
@@ -514,13 +490,13 @@ def semantic_dup_pairs(
     if centroids is not None:
         cents = centroids
     elif n_iter > 0:
-        cents = kmeans_centroids(corpus, n_centroids, n_iter, id_col=id_col, vec_col=vec_col)
+        cents = kmeans_centroids(corpus, n_centroids, n_iter)
     else:
         cents = _seed_centroids(c_prep, n_centroids)
     b_cents = spark.sparkContext.broadcast(cents)
     assigned = c_prep.mapInPandas(_cell_mapper(b_cents, 1), _VEC_SCHEMA)
     return assigned.groupBy("cell").applyInPandas(
-        _cell_pair_scanner(threshold, scale),
+        _cell_pair_scanner(threshold, SIM_SCALE),
         "id_a bigint, id_b bigint, cell int, sim double",
     )
 
@@ -530,9 +506,6 @@ def hierarchical_cells(
     n_coarse: int,
     n_fine: int,
     n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed_oversample: int = 4,
     n_rows: int | None = None,
 ) -> DataFrame:
     """Two-level (coarse→fine) spherical k-means cell assignment — the
@@ -547,7 +520,7 @@ def hierarchical_cells(
     stays distributed).
 
     Fine seeding is hash-deterministic and occupancy-adaptive: a rate-
-    filtered sample (expected ``seed_oversample × n_fine`` rows per coarse
+    filtered sample (expected ``4 × n_fine`` rows per coarse
     cell — the row_number window runs over this BOUNDED sample, never the
     cell) plus a per-cell argmin-hash guarantee row, so every nonempty
     coarse cell gets ≥ 1 sub-centroid and thin cells naturally get fewer
@@ -563,14 +536,12 @@ def hierarchical_cells(
 
     from .aggregates import DEC
 
-    prep = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vec")
-    )
+    prep = _id_vec(corpus)
     if n_rows is None:
         n_rows = prep.count()
     if n_rows == 0:
         raise ValueError("hierarchical_cells: empty corpus")
-    cents1 = kmeans_centroids(corpus, n_coarse, n_iter, id_col=id_col, vec_col=vec_col)
+    cents1 = kmeans_centroids(corpus, n_coarse, n_iter)
     b1 = corpus.sparkSession.sparkContext.broadcast(cents1)
     assigned1 = (
         prep.mapInPandas(_cell_mapper(b1, 1), _VEC_SCHEMA)
@@ -582,8 +553,8 @@ def hierarchical_cells(
     )
 
     h = F.xxhash64("id")
-    # expected seed_oversample * n_fine rows per coarse cell
-    rate_num = min(seed_oversample * n_fine * max(n_coarse, 1), n_rows)
+    # expected 4 * n_fine rows per coarse cell
+    rate_num = min(4 * n_fine * max(n_coarse, 1), n_rows)
     sample = assigned1.filter(
         F.pmod(h, F.lit(n_rows)) < F.lit(rate_num)
     )
@@ -679,9 +650,6 @@ def semantic_dup_pairs_hier(
     corpus: DataFrame,
     threshold: float = 0.4,
     n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 4,
     target_cell_rows: int = 125,
     n_coarse: int | None = None,
     n_fine: int | None = None,
@@ -695,15 +663,13 @@ def semantic_dup_pairs_hier(
     composite (cell1, sub) key.
 
     Output: (id_a, id_b, cell, sim) with cell = cell1 * 65536 + sub —
-    id_a < id_b, sim rounded to ``scale``, >= threshold.
+    id_a < id_b, sim rounded to ``SIM_SCALE``, >= threshold.
 
     ``n_coarse``/``n_fine`` override the √k split (parity tests pin a
     known cluster structure with them)."""
     import math
 
-    prep = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vec")
-    )
+    prep = _id_vec(corpus)
     n_rows = prep.count()
     if n_rows == 0:
         raise ValueError("semantic_dup_pairs_hier: empty corpus")
@@ -715,15 +681,14 @@ def semantic_dup_pairs_hier(
     if n_fine >= 65536:
         raise ValueError("semantic_dup_pairs_hier: n_fine exceeds cell encoding")
     assigned = hierarchical_cells(
-        corpus, n_coarse, n_fine, n_iter=n_iter, id_col=id_col,
-        vec_col=vec_col, n_rows=n_rows,
+        corpus, n_coarse, n_fine, n_iter=n_iter, n_rows=n_rows,
     )
     combined = assigned.select(
         "id", "vec",
         (F.col("cell1").cast("int") * 65536 + F.col("sub").cast("int")).alias("cell"),
     )
     return combined.groupBy("cell").applyInPandas(
-        _cell_pair_scanner(threshold, scale),
+        _cell_pair_scanner(threshold, SIM_SCALE),
         "id_a bigint, id_b bigint, cell int, sim double",
     )
 
@@ -794,8 +759,6 @@ def _cell_pair_scanner(threshold: float, scale: int):
 def portable_cells(
     corpus: DataFrame,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed_corpus: DataFrame | None = None,
 ) -> DataFrame:
     """SQL-expressible cell assignment: Knuth-hash seed centroids (the
@@ -807,16 +770,8 @@ def portable_cells(
     ``seed_corpus`` seeds the centroids from a DIFFERENT table than the
     one being assigned (the incremental-ingest shape: a delta batch is
     assigned into the standing corpus's cells, never its own)."""
-    c_prep = corpus.select(
-        F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vec")
-    )
-    s_prep = (
-        c_prep
-        if seed_corpus is None
-        else seed_corpus.select(
-            F.col(id_col).alias("id"), F.col(vec_col).cast("array<double>").alias("vec")
-        )
-    )
+    c_prep = _id_vec(corpus)
+    s_prep = c_prep if seed_corpus is None else _id_vec(seed_corpus)
     h = (F.col("id") * F.lit(2654435761)) % F.lit(4294967296)
     seeds = (
         s_prep.select("id", "vec", h.alias("h")).orderBy("h", "id").limit(n_centroids)
@@ -846,9 +801,6 @@ def semantic_dup_pairs_portable(
     corpus: DataFrame,
     threshold: float = 0.4,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 4,
     cells: DataFrame | None = None,
 ) -> DataFrame:
     """SQL-expressible twin of :func:`semantic_dup_pairs` (the
@@ -869,11 +821,11 @@ def semantic_dup_pairs_portable(
     assigned = (
         cells
         if cells is not None
-        else portable_cells(corpus, n_centroids, id_col=id_col, vec_col=vec_col)
+        else portable_cells(corpus, n_centroids)
     )
     a = assigned.alias("a").hint("shuffle_hash")
     b = assigned.alias("b").hint("shuffle_hash")
-    sim = F.round(cosine(F.col("a.vec"), F.col("b.vec")), scale)
+    sim = F.round(cosine(F.col("a.vec"), F.col("b.vec")), SIM_SCALE)
     return (
         a.join(
             b,
@@ -894,9 +846,6 @@ def incremental_semantic_dedup(
     delta: DataFrame,
     threshold: float = 0.4,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 4,
 ) -> DataFrame:
     """Incremental (delta-batch) semantic dedup — the embedding-modality
     twin of the exact ``incremental_dedup`` catalog query: assign the
@@ -919,11 +868,11 @@ def incremental_semantic_dedup(
     cell holds no corpus rows), n_dups = same-cell corpus rows at or
     above ``threshold``, status = 'dup'/'novel'. All tie-invariant.
     """
-    cells_c = portable_cells(corpus, n_centroids, id_col=id_col, vec_col=vec_col)
+    cells_c = portable_cells(corpus, n_centroids)
     cells_d = portable_cells(
-        delta, n_centroids, id_col=id_col, vec_col=vec_col, seed_corpus=corpus
+        delta, n_centroids, seed_corpus=corpus
     )
-    sim = F.round(cosine(F.col("d.vec"), F.col("c.vec")), scale)
+    sim = F.round(cosine(F.col("d.vec"), F.col("c.vec")), SIM_SCALE)
     scored = (
         cells_c.alias("c")
         .join(F.broadcast(cells_d.alias("d")), F.col("d.cell") == F.col("c.cell"))
@@ -978,21 +927,22 @@ def semantic_survivor_stats(pairs: DataFrame, assigned_counts: DataFrame) -> Dat
     )
 
 
-def _hyperplane(dim: int, plane: int, seed: int = 42) -> list[float]:
+def _hyperplane(dim: int, plane: int) -> list[float]:
     """Deterministic pseudo-random unit-free hyperplane (pure function of
-    (plane, dim, seed) — same on every executor, no RNG state)."""
+    (plane, dim) under the fixed seed 42 — same on every executor, no RNG
+    state)."""
     import math
 
     return [
-        math.sin(seed * 1000003.0 + plane * 10007.0 + i * 101.0) for i in range(dim)
+        math.sin(42 * 1000003.0 + plane * 10007.0 + i * 101.0) for i in range(dim)
     ]
 
 
-def lsh_signature(vec: Column, dim: int, planes: int = 16, seed: int = 42) -> Column:
+def lsh_signature(vec: Column, dim: int, planes: int = 16) -> Column:
     """Random-hyperplane (sign) LSH bucket id for a vector column."""
     sig = F.lit(0).cast("long")
     for p in range(planes):
-        coeffs = _hyperplane(dim, p, seed)
+        coeffs = _hyperplane(dim, p)
         proj = F.aggregate(
             F.zip_with(
                 vec,
@@ -1012,22 +962,20 @@ def lsh_bucketed_topk(
     dim: int,
     k: int = 5,
     planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: only corpus vectors in the query's LSH bucket are
     scored. Equi-join on bucket id → shuffle-partitioned by bucket, linear
     scale; recall traded via ``planes``.
     """
     c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        lsh_signature(F.col(vec_col), dim, planes).alias("bucket"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("c_vec"),
+        lsh_signature(F.col("embedding"), dim, planes).alias("bucket"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        lsh_signature(F.col(vec_col), dim, planes).alias("bucket"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_vec"),
+        lsh_signature(F.col("embedding"), dim, planes).alias("bucket"),
     )
     scored = c.join(F.broadcast(q), on="bucket").filter(
         F.col("query_id") != F.col("neighbor_id")
@@ -1042,11 +990,7 @@ def lsh_bucketed_topk(
     )
 
 
-def quantize_int8(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def quantize_int8(df: DataFrame) -> DataFrame:
     """Symmetric int8 scalar quantization of an embedding column — the
     standard 4× memory reduction for ANN indexes (float32 → int8 per
     dimension, one scale per vector).
@@ -1058,7 +1002,7 @@ def quantize_int8(
     q = 0. Entirely narrow (one projection, zero shuffles, JVM-side HOFs);
     adds ``q_scale double`` and ``q array<long>``.
     """
-    e = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     scale = F.array_max(F.transform(e, F.abs)) / F.lit(127.0)
     q = F.when(
         scale > 0,
@@ -1083,9 +1027,6 @@ def pq_topk_portable(
     m: int = 32,
     n_codes: int = 16,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 6,
 ) -> DataFrame:
     """Product-quantization ADC top-k, portable twin (the third
     oracle-checkable ANN index after the LSH and IVF twins): vectors are
@@ -1128,8 +1069,8 @@ def pq_topk_portable(
     # small-file scale — r16 measured it as ~1.5 s of the query's build
     # phase); repartitioning the raw scan makes the checkpointed
     # normalize itself run wide
-    c_prep = _pq_prep(ensure_min_parallelism(corpus), id_col, vec_col)
-    q_prep = _pq_prep(queries, id_col, vec_col)
+    c_prep = _pq_prep(ensure_min_parallelism(corpus), "vec_id", "embedding")
+    q_prep = _pq_prep(queries, "vec_id", "embedding")
     FLAT = _pq_flat_codebook(c_prep, n_codes)
     codes = _pq_encode(c_prep, FLAT, m, dim, n_codes)
     scored = (
@@ -1141,7 +1082,7 @@ def pq_topk_portable(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("_s", _pq_adc(F.col("qvec"), F.col("codes"), FLAT, m, dim))
     )
-    return _pq_rank(scored, k, scale)
+    return _pq_rank(scored, k, PQ_DIST_SCALE)
 
 
 def _pq_prep(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -1304,9 +1245,6 @@ def ivfpq_topk_portable(
     n_centroids: int = 16,
     n_probe: int = 4,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 6,
 ) -> DataFrame:
     """IVF-PQ composed index (the FAISS IVFADC shape — Jégou et al. 2011,
     "Product Quantization for Nearest Neighbor Search"): coarse IVF cells
@@ -1339,8 +1277,8 @@ def ivfpq_topk_portable(
     # small-file scale — r16 measured it as ~1.5 s of the query's build
     # phase); repartitioning the raw scan makes the checkpointed
     # normalize itself run wide
-    c_prep = _pq_prep(ensure_min_parallelism(corpus), id_col, vec_col)
-    q_prep = _pq_prep(queries, id_col, vec_col)
+    c_prep = _pq_prep(ensure_min_parallelism(corpus), "vec_id", "embedding")
+    q_prep = _pq_prep(queries, "vec_id", "embedding")
 
     h = (F.col("id") * F.lit(2654435761)) % F.lit(4294967296)
     seeds = (
@@ -1397,4 +1335,4 @@ def ivfpq_topk_portable(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("_s", _pq_adc(F.col("qvec"), F.col("codes"), FLAT, m, dim))
     )
-    return _pq_rank(scored, k, scale)
+    return _pq_rank(scored, k, PQ_DIST_SCALE)

@@ -27,6 +27,10 @@ from pyspark.sql import functions as F
 
 from .dedup import PORTABLE_MOD
 
+# rank_values_pruned histogram width over [0, PORTABLE_MOD) hashes: ~500
+# buckets, so each resolve step reads one narrow hash range
+HASH_BUCKET_WIDTH = 2_000_000.0
+
 
 def cms_bucket(rh: Column, i: int, width: int) -> Column:
     """Row-``i`` bucket of an item whose portable rolling hash is ``rh``."""
@@ -116,10 +120,9 @@ def bloom_maybe_contains(
     item_col: str,
     k: int = 4,
     m_bits: int = 1 << 14,
-    flag_col: str = "bloom_hit",
     hash_col: str | None = None,
 ) -> DataFrame:
-    """Probe each row's ``item_col`` against the filter: ``flag_col`` is
+    """Probe each row's ``item_col`` against the filter: ``bloom_hit`` is
     true iff ALL ``k`` probe positions are set (the Bloom "maybe present";
     false is a certainty). ``k`` chained BROADCAST left joins, one per
     probe position — fully NARROW: the probed stream is never exploded,
@@ -144,7 +147,7 @@ def bloom_maybe_contains(
     hit = F.lit(True)
     for i in range(k):
         hit = hit & F.col(f"_s{i}").isNotNull()
-    return out.withColumn(flag_col, hit).drop(
+    return out.withColumn("bloom_hit", hit).drop(
         *[c for i in range(k) for c in (f"_p{i}", f"_s{i}")]
     )
 
@@ -238,7 +241,6 @@ def kmv_kth_hash(
     item_col: str,
     key_col: str,
     k: int,
-    bucket_width: float = 2_000_000.0,
 ) -> DataFrame:
     """Per-key KMV sketch state: the k-th smallest distinct item hash.
 
@@ -263,7 +265,7 @@ def kmv_kth_hash(
 
     d = df.select(F.col(key_col), id_hash(item_col).alias("_kmv_h")).distinct()
     out = rank_values_pruned(
-        d, "_kmv_h", key_col, [("kth_hash", 0, k, 1)], bucket_width=bucket_width
+        d, "_kmv_h", key_col, [("kth_hash", 0, k, 1)], bucket_width=HASH_BUCKET_WIDTH
     )
     return out
 
@@ -364,7 +366,6 @@ def kmv_bottomk(
     item_col: str,
     key_col: str,
     k: int,
-    bucket_width: float = 2_000_000.0,
 ) -> DataFrame:
     """Per-key KMV bottom-k SET: the k smallest distinct item hashes as a
     sorted array — the sketch state that supports set OPERATIONS
@@ -381,7 +382,7 @@ def kmv_bottomk(
     flagged exact downstream). Output: (key, n_rows, sketch array<long>
     sorted ascending)."""
     d = df.select(F.col(key_col), id_hash(item_col).alias("_kmv_h")).distinct()
-    kth = kmv_kth_hash(df, item_col, key_col, k, bucket_width=bucket_width)
+    kth = kmv_kth_hash(df, item_col, key_col, k)
     kept = d.join(kth, key_col).filter(
         F.col("kth_hash").isNull() | (F.col("_kmv_h") <= F.col("kth_hash"))
     )

@@ -34,13 +34,12 @@ def two_phase_agg(
     df: DataFrame,
     keys: list[str],
     aggs: list[tuple[str, str, str]],
-    salt: int = 16,
 ) -> DataFrame:
     """Two-phase (salted) aggregation for hot group keys.
 
     ``aggs``: (column, fn, alias) with fn in {sum, count, min, max} — the
     algebraic aggregates that re-combine exactly. Phase 1 aggregates on
-    (keys, salt); phase 2 combines partials per key.
+    (keys, salt) over 16 salt values; phase 2 combines partials per key.
     """
     combiners = {"sum": F.sum, "count": F.sum, "min": F.min, "max": F.max}
     phase1_exprs = []
@@ -51,7 +50,7 @@ def two_phase_agg(
             phase1_exprs.append(getattr(F, fn)(col).alias(f"_p_{alias}"))
         else:
             raise ValueError(f"non-algebraic aggregate: {fn}")
-    salted = df.withColumn("_salt", scatter_salt(df, salt))
+    salted = df.withColumn("_salt", scatter_salt(df, 16))
     partial = salted.groupBy(*keys, "_salt").agg(*phase1_exprs)
     final_exprs = [
         combiners[fn](f"_p_{alias}").alias(alias) for _, fn, alias in aggs

@@ -73,10 +73,10 @@ def fingerprint(text: Column | str) -> Column:
 BPE_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def regex_tokens(text: Column | str, pattern: str = BPE_PATTERN) -> Column:
+def regex_tokens(text: Column | str) -> Column:
     """Regex (BPE-ish) tokens — JVM-side regexp_extract_all."""
     c = F.col(text) if isinstance(text, str) else text
-    return F.regexp_extract_all(c, F.lit(pattern), 0)
+    return F.regexp_extract_all(c, F.lit(BPE_PATTERN), 0)
 
 
 ROLLING_BASE = 31
@@ -226,8 +226,6 @@ def multi_shingle_hash_stream(
     df: DataFrame,
     ns: tuple[int, ...],
     id_cols: tuple[str, ...] = ("doc_id",),
-    text_col: str = "text",
-    out_col: str = "rh",
 ) -> DataFrame:
     """Fused multi-order shingle stream: one row per word ``n``-gram for
     EVERY ``n`` in ``ns``, all composed from a SINGLE per-document character
@@ -240,7 +238,7 @@ def multi_shingle_hash_stream(
     string hash family stay valid. Emission is multiset (no per-doc
     distinct): the fused consumers count occurrences."""
     step1 = _token_hash_projection(
-        df, id_cols, text_col, need_pow=max(ns) > 1
+        df, id_cols, "text", need_pow=max(ns) > 1
     )
     NT = F.col("__nt")
     parts = [
@@ -250,17 +248,10 @@ def multi_shingle_hash_stream(
         for n in ns
     ]
     out = parts[0] if len(parts) == 1 else F.concat(*parts)
-    return step1.select(*id_cols, F.explode(out).alias(out_col))
+    return step1.select(*id_cols, F.explode(out).alias("rh"))
 
 
-def char_shingle_hash_stream(
-    df: DataFrame,
-    ns: tuple[int, ...],
-    id_cols: tuple[str, ...] = ("doc_id",),
-    text_col: str = "text",
-    out_col: str = "rh",
-    space_marker: str = "_",
-) -> DataFrame:
+def char_shingle_hash_stream(df: DataFrame, ns: tuple[int, ...]) -> DataFrame:
     """Character n-gram hash stream — the unsegmented-script feature
     family (fastText's ACTUAL lid.176 features are char n-grams, not
     words: Chinese/Japanese/Thai pages whitespace-tokenize as one giant
@@ -269,7 +260,7 @@ def char_shingle_hash_stream(
     = the rolling hash of the n-gram's chars joined by ' ' — i.e. the
     stream is bit-identical to ``multi_shingle_hash_stream`` run over a
     text whose every character is its own token (spaces first replaced
-    by ``space_marker`` so word boundaries stay a feature), which is
+    by ``_`` so word boundaries stay a feature), which is
     exactly how it is built: each char-token's hash is its code point
     (BMP contract: Spark's ``ascii`` reads the first UTF-16 unit and
     DuckDB's the code point — equal on the Basic Multilingual Plane,
@@ -279,12 +270,12 @@ def char_shingle_hash_stream(
     composition remains. Emission is multiset (no per-doc distinct);
     documents shorter than min(ns) chars emit no rows."""
     chars = F.split(
-        F.regexp_replace(F.col(text_col), " ", space_marker), ""
+        F.regexp_replace(F.col("text"), " ", "_"), ""
     )
     hs = F.transform(chars, lambda ch: F.ascii(ch).cast("long"))
     pw = F.transform(chars, lambda ch: F.lit(ROLLING_BASE).cast("long"))
     step1 = df.select(
-        *id_cols,
+        "doc_id",
         hs.alias("__hs"),
         *([pw.alias("__pw")] if max(ns) > 1 else []),
         F.size(chars).alias("__nt"),
@@ -297,10 +288,10 @@ def char_shingle_hash_stream(
         for n in ns
     ]
     out = parts[0] if len(parts) == 1 else F.concat(*parts)
-    return step1.select(*id_cols, F.explode(out).alias(out_col))
+    return step1.select("doc_id", F.explode(out).alias("rh"))
 
 
-def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_text_stats(df: DataFrame) -> DataFrame:
     """Attach the full text-statistics column set (narrow, no shuffle).
 
     The token array is projected ONCE and every stat derives from it —
@@ -317,7 +308,7 @@ def with_text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
         F.transform(toks, lambda t: F.length(t)), F.lit(0), lambda acc, x: acc + x
     )
     out = (
-        df.withColumn("_toks", tokens(text_col))
+        df.withColumn("_toks", tokens("text"))
         .withColumn("token_count", n.cast("long"))
         .withColumn("uniq_tokens", F.size(F.array_distinct(toks)).cast("long"))
         .withColumn("stop_ratio", sr)

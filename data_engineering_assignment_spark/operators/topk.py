@@ -20,8 +20,6 @@ def top_k_by_freq(
     group_cols: list[str],
     item_col: str,
     k: int = 3,
-    count_col: str = "n",
-    rank_col: str = "rnk",
 ) -> DataFrame:
     """Top-k most frequent ``item_col`` values per ``group_cols`` group.
 
@@ -29,14 +27,14 @@ def top_k_by_freq(
     Output: group_cols + (item, n, rnk), rnk in 1..k.
     """
     counts = exploded.groupBy(*group_cols, item_col).agg(
-        F.count(F.lit(1)).alias(count_col)
+        F.count(F.lit(1)).alias("n")
     )
     w = Window.partitionBy(*group_cols).orderBy(
-        F.desc(count_col), F.asc(item_col)
+        F.desc("n"), F.asc(item_col)
     )
     return (
-        counts.withColumn(rank_col, F.row_number().over(w).cast("long"))
-        .filter(F.col(rank_col) <= k)
+        counts.withColumn("rnk", F.row_number().over(w).cast("long"))
+        .filter(F.col("rnk") <= k)
     )
 
 

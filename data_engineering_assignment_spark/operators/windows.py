@@ -39,12 +39,11 @@ def _interval_seconds(interval: str) -> int:
 def tumbling_agg(
     events: DataFrame,
     duration: str = "10 minutes",
-    ts_col: str = "ts",
     keys: list[str] | None = None,
 ) -> DataFrame:
     """Tumbling-window counts + exact value sums per (window, *keys)."""
     keys = keys or []
-    win = F.window(F.col(ts_col), duration)
+    win = F.window(F.col("ts"), duration)
     return (
         events.groupBy(win.alias("w"), *keys)
         .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
@@ -58,28 +57,17 @@ def sliding_agg(
     events: DataFrame,
     duration: str = "10 minutes",
     slide: str = "5 minutes",
-    ts_col: str = "ts",
-    keys: list[str] | None = None,
 ) -> DataFrame:
     """Sliding-window (duration, slide) counts + exact value sums."""
-    keys = keys or []
-    win = F.window(F.col(ts_col), duration, slide)
+    win = F.window(F.col("ts"), duration, slide)
     return (
-        events.groupBy(win.alias("w"), *keys)
+        events.groupBy(win.alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "total_value"))
-        .select(
-            _win_start_epoch(F.col("w")), *keys, "n_events", "total_value"
-        )
+        .select(_win_start_epoch(F.col("w")), "n_events", "total_value")
     )
 
 
-def gapfill(
-    events: DataFrame,
-    bucket: str = "5 minutes",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    key_col: str = "event_type",
-) -> DataFrame:
+def gapfill(events: DataFrame, bucket: str = "5 minutes") -> DataFrame:
     """Time-series gap fill with forward fill: per key, every ``bucket``-sized
     slot between the key's first and last event appears in the output —
     empty slots carry ``n_events = 0`` and the most recent non-empty slot's
@@ -99,14 +87,14 @@ def gapfill(
     from pyspark.sql import Window as W
 
     secs = _interval_seconds(bucket)
-    slot = F.window(F.col(ts_col), bucket)
+    slot = F.window(F.col("ts"), bucket)
     agg = (
-        events.groupBy(slot.alias("w"), key_col)
-        .agg(F.count(F.lit(1)).alias("n_events"), dsum(value_col, "_tv"))
-        .select(key_col, _win_start_epoch(F.col("w")).alias("bucket_start"),
+        events.groupBy(slot.alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "_tv"))
+        .select("event_type", _win_start_epoch(F.col("w")).alias("bucket_start"),
                 "n_events", "_tv")
     )
-    nxt = F.lead("bucket_start").over(W.partitionBy(key_col).orderBy("bucket_start"))
+    nxt = F.lead("bucket_start").over(W.partitionBy("event_type").orderBy("bucket_start"))
     owned = F.sequence(
         F.col("bucket_start"),
         F.coalesce(F.col("_nxt") - secs, F.col("bucket_start")),
@@ -116,7 +104,7 @@ def gapfill(
         agg.withColumn("_nxt", nxt)
         .withColumn("_slot", F.explode(owned))
         .select(
-            key_col,
+            "event_type",
             F.col("_slot").alias("bucket_start"),
             F.when(F.col("_slot") == F.col("bucket_start"), F.col("n_events"))
             .otherwise(0)
@@ -127,13 +115,7 @@ def gapfill(
     )
 
 
-def transition_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def transition_counts(events: DataFrame) -> DataFrame:
     """First-order transition matrix of the per-user event stream: counts of
     consecutive (event_type → next event_type) pairs, the Markov-chain /
     clickstream-path primitive. One per-user window (``lead``), one count
@@ -143,11 +125,11 @@ def transition_counts(
     Output: (from_type, to_type, n_transitions)."""
     from pyspark.sql import Window as W
 
-    w = W.partitionBy(user_col).orderBy(ts_col, tiebreak_col)
+    w = W.partitionBy("user_id").orderBy("ts", "event_id")
     return (
         events.select(
-            F.col(type_col).alias("from_type"),
-            F.lead(type_col).over(w).alias("to_type"),
+            F.col("event_type").alias("from_type"),
+            F.lead("event_type").over(w).alias("to_type"),
         )
         .filter(F.col("to_type").isNotNull())
         .groupBy("from_type", "to_type")
@@ -155,11 +137,7 @@ def transition_counts(
     )
 
 
-def retention_cohorts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-) -> DataFrame:
+def retention_cohorts(events: DataFrame) -> DataFrame:
     """Weekly retention cohorts: users are assigned to the ISO week (Monday
     truncation) of their first event; for each (cohort_week, week_offset) the
     output counts the distinct cohort users active that many weeks later —
@@ -174,9 +152,9 @@ def retention_cohorts(
     Output: (cohort_week epoch-sec, week_offset, n_users)."""
     from pyspark.sql import Window as W
 
-    week = F.unix_timestamp(F.date_trunc("week", F.col(ts_col)))
-    active = events.select(user_col, week.alias("_wk")).distinct()
-    cohort = F.min("_wk").over(W.partitionBy(user_col))
+    week = F.unix_timestamp(F.date_trunc("week", F.col("ts")))
+    active = events.select("user_id", week.alias("_wk")).distinct()
+    cohort = F.min("_wk").over(W.partitionBy("user_id"))
     return (
         active.select(
             cohort.alias("cohort_week"),
@@ -187,12 +165,7 @@ def retention_cohorts(
     )
 
 
-def sessionize(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-) -> DataFrame:
+def sessionize(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """Gap-based sessionization via analytic windows (batch equivalent of
     ``F.session_window``): a new session starts when the previous event of the
     same user is more than ``gap`` away.
@@ -203,8 +176,8 @@ def sessionize(
     from pyspark.sql import Window as W
 
     gap_secs = _interval_seconds(gap)
-    w = W.partitionBy(user_col).orderBy(ts_col)
-    ts_sec = F.unix_timestamp(F.col(ts_col))
+    w = W.partitionBy("user_id").orderBy("ts")
+    ts_sec = F.unix_timestamp(F.col("ts"))
     marked = events.withColumn(
         "new_session",
         F.when(
@@ -217,7 +190,7 @@ def sessionize(
         ),
     )
     return (
-        marked.groupBy(F.col(user_col).alias("user"), F.col("session_seq"))
+        marked.groupBy(F.col("user_id").alias("user"), F.col("session_seq"))
         .agg(
             F.min(ts_sec).alias("session_start"),
             F.max(ts_sec).alias("session_end"),

@@ -36,11 +36,8 @@ def winnow_fingerprints(
     df: DataFrame,
     k: int = 4,
     w: int = 4,
-    id_cols: tuple[str, ...] = ("doc_id",),
-    text_col: str = "text",
-    out_col: str = "rh",
 ) -> DataFrame:
-    """(*id_cols, ``out_col``, pos) — the distinct winnowing fingerprints.
+    """(doc_id, rh, pos) — the distinct winnowing fingerprints.
 
     ``pos`` is the 0-based token index of the selected k-gram. Documents
     with fewer than ``k + w - 1`` tokens emit no rows (no full window).
@@ -48,45 +45,40 @@ def winnow_fingerprints(
     stream = shingle_hash_stream(
         df,
         n=k,
-        id_cols=id_cols,
-        text_col=text_col,
-        out_col=out_col,
         distinct=False,
         with_pos=True,
     )
     win = (
-        Window.partitionBy(*id_cols)
+        Window.partitionBy("doc_id")
         .orderBy("pos")
         .rowsBetween(Window.currentRow, w - 1)
     )
     sel = F.min(
         F.struct(
-            F.col(out_col).alias("rh"),
+            F.col("rh").alias("rh"),
             (-F.col("pos").cast("long")).alias("np"),
         )
     ).over(win)
     full = F.count(F.lit(1)).over(win)
     return (
-        stream.select(*id_cols, sel.alias("_s"), full.alias("_c"))
+        stream.select("doc_id", sel.alias("_s"), full.alias("_c"))
         .where(F.col("_c") == w)
         .select(
-            *id_cols,
-            F.col("_s.rh").alias(out_col),
+            "doc_id",
+            F.col("_s.rh").alias("rh"),
             (-F.col("_s.np")).alias("pos"),
         )
         .distinct()
     )
 
 
-def winnow_stats(
-    df: DataFrame, k: int = 4, w: int = 4, text_col: str = "text"
-) -> DataFrame:
+def winnow_stats(df: DataFrame, k: int = 4, w: int = 4) -> DataFrame:
     """Per-document fingerprint telemetry: selected counts vs window count.
 
     density ~ 2/(w+1) on random text (the paper's expected density) — the
     measured column makes the sparsification factor auditable.
     """
-    fp = winnow_fingerprints(df, k=k, w=w, text_col=text_col)
+    fp = winnow_fingerprints(df, k=k, w=w)
     agg = fp.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_fp"),
         F.countDistinct("rh").alias("n_fp_hashes"),
@@ -94,7 +86,7 @@ def winnow_stats(
         F.max("rh").alias("fp_max"),
     )
     n_windows = (
-        F.size(F.split(F.col(text_col), " ")) - F.lit(k + w - 2)
+        F.size(F.split(F.col("text"), " ")) - F.lit(k + w - 2)
     ).cast("long")
     base = df.select("doc_id", n_windows.alias("n_windows")).where(
         F.col("n_windows") >= 1
@@ -117,12 +109,10 @@ def winnow_dup_pairs(
     df: DataFrame,
     k: int = 4,
     w: int = 4,
-    min_shared: int = 2,
     max_df: int | None = 50,
-    text_col: str = "text",
     checkpoint: bool = True,
 ) -> DataFrame:
-    """Document pairs sharing >= ``min_shared`` fingerprint hashes.
+    """Document pairs sharing >= 2 fingerprint hashes.
 
     coverage is the MOSS-style containment score: shared fingerprints over
     the SMALLER document's fingerprint-hash count. ``max_df`` drops
@@ -130,7 +120,7 @@ def winnow_dup_pairs(
     against the small hot set — never a filter that ships the kept corpus.
     """
     fp = (
-        winnow_fingerprints(df, k=k, w=w, text_col=text_col)
+        winnow_fingerprints(df, k=k, w=w)
         .select("doc_id", "rh")
         .distinct()
     )
@@ -160,7 +150,7 @@ def winnow_dup_pairs(
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
         .agg(F.count(F.lit(1)).alias("shared_fp"))
-        .where(F.col("shared_fp") >= min_shared)
+        .where(F.col("shared_fp") >= 2)
     )
     return (
         pairs.join(

@@ -135,12 +135,8 @@ def minutes_played(intervals: DataFrame) -> DataFrame:
     )
 
 
-def most_minutes_by_role(
-    intervals: DataFrame, players: DataFrame, season: str | None = None
-) -> DataFrame:
+def most_minutes_by_role(intervals: DataFrame, players: DataFrame) -> DataFrame:
     """Top player by total minutes for each role (spec output 1, :572-578)."""
-    if season is not None:
-        intervals = intervals.filter(F.col("season") == season)
     mins = minutes_played(intervals)
     joined = mins.join(F.broadcast(players), on="playerId")
     w = Window.partitionBy("role").orderBy(F.desc("minutes"), F.asc("playerId"))
@@ -195,11 +191,8 @@ def top_plus_minus(
     events: DataFrame,
     players: DataFrame,
     threshold: int = 65,
-    season: str | None = None,
 ) -> DataFrame:
     """Players above a plus-minus threshold (spec output 2, :579-584)."""
-    if season is not None:
-        intervals = intervals.filter(F.col("season") == season)
     pm = plus_minus(intervals, events)
     return (
         pm.filter(F.col("plusMinus") > threshold)

@@ -28,12 +28,13 @@ def read_sales_csv(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def sales_in_window(sales: DataFrame, start: int = 2006, end: int = 2015) -> DataFrame:
-    """Column-pruned, year-derived, year-filtered frame; cache before fan-out."""
+def sales_in_window(sales: DataFrame) -> DataFrame:
+    """Column-pruned, year-derived frame filtered to 2006-2015; cache before
+    fan-out."""
     return (
         sales.select("publisher", "na_sales", "total_sales", "release_date")
         .withColumn("year", F.year("release_date"))
-        .filter(F.col("year").between(start, end))
+        .filter(F.col("year").between(2006, 2015))
     )
 
 

@@ -17,7 +17,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.aggregates import dround, dsum, o_davg, o_dround, o_dsum
-from ..operators.parallelism import scan_partitions
+from ..operators.graphs import HITS_SCALE, PR_DAMP_DEN, PR_DAMP_NUM, PR_SCALE
+from ..operators.parallelism import small_scan
 from ..tables import load
 from . import register
 
@@ -1056,7 +1057,7 @@ def _pagerank_oracle(iters: int, scale: int, dn: int, dd: int) -> str:
 
 @register(
     "copurchase_pagerank",
-    oracle=_pagerank_oracle(3, 10**12, 17, 20),
+    oracle=_pagerank_oracle(3, PR_SCALE, PR_DAMP_NUM, PR_DAMP_DEN),
     doc="Integer-exact PageRank (Page et al. 1999; operators/graphs."
     "pagerank_integer) over the undirected customer—supplier trading "
     "graph: 3 power iterations with damping 17/20 in scaled-long floor "
@@ -1678,7 +1679,7 @@ def user_value_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scale the shuffle is large, AQE keeps many partitions, and the extra
     # exchange would be pure cost. The probe is scan-rooted (no exchanges
     # below ev), so .rdd is a plan conversion, not a job.
-    if scan_partitions(ev) < spark.sparkContext.defaultParallelism:
+    if small_scan(ev):
         pts = pts.repartition(
             spark.sparkContext.defaultParallelism, "user_id"
         )
@@ -1791,10 +1792,14 @@ def part_distance_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hits_oracle(iters: int = 3, scale: int = 10**6) -> str:
+_HITS_ITERS = 3  # host_graph_hits and its oracle replay the same count
+
+
+def _hits_oracle() -> str:
     """Unrolled-iteration HITS replay (the pagerank_integer oracle
     discipline): same edge derivation, same max-norm integer floor
     divisions, one CTE pair per half-step."""
+    iters = _HITS_ITERS
     parts = [
         """
 WITH e AS MATERIALIZED (
@@ -1804,7 +1809,7 @@ WITH e AS MATERIALIZED (
     AND (3 * (doc_id % 7) + 5 * ((doc_id // 7) % 7)) % 7 < 3
 ), n AS MATERIALIZED (SELECT src AS node FROM e UNION SELECT dst FROM e),
 h0 AS (SELECT node, """
-        + f"{scale}::BIGINT AS hub FROM n)"
+        + f"{HITS_SCALE}::BIGINT AS hub FROM n)"
     ]
     prev_h = "h0"
     for i in range(1, iters + 1):
@@ -1813,12 +1818,12 @@ h0 AS (SELECT node, """
 ra{i} AS MATERIALIZED (SELECT e.dst AS node, SUM({prev_h}.hub)::BIGINT AS raw
           FROM e JOIN {prev_h} ON e.src = {prev_h}.node GROUP BY 1),
 a{i} AS MATERIALIZED (SELECT node,
-           ((raw * {scale}) // (SELECT MAX(raw) FROM ra{i}))::BIGINT AS auth
+           ((raw * {HITS_SCALE}) // (SELECT MAX(raw) FROM ra{i}))::BIGINT AS auth
          FROM ra{i}),
 rh{i} AS MATERIALIZED (SELECT e.src AS node, SUM(a{i}.auth)::BIGINT AS raw
           FROM e JOIN a{i} ON e.dst = a{i}.node GROUP BY 1),
 h{i} AS MATERIALIZED (SELECT node,
-           ((raw * {scale}) // (SELECT MAX(raw) FROM rh{i}))::BIGINT AS hub
+           ((raw * {HITS_SCALE}) // (SELECT MAX(raw) FROM rh{i}))::BIGINT AS hub
          FROM rh{i})"""
         )
         prev_h = f"h{i}"
@@ -1859,4 +1864,4 @@ def host_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("src") != F.col("dst"))
         & ((3 * F.col("src") + 5 * F.col("dst")) % 7 < 3)
     )
-    return hits_integer(edges, iters=3)
+    return hits_integer(edges, iters=_HITS_ITERS)

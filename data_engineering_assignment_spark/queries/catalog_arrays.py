@@ -10,9 +10,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.aggregates import dround, o_davg, o_dround
-from ..operators.similarity import cosine_topk, lsh_bucketed_topk, sq_norm
+from ..operators.similarity import (
+    PQ_DIST_SCALE,
+    SIM_SCALE,
+    cosine_topk,
+    lsh_bucketed_topk,
+    sq_norm,
+)
 from ..tables import load
 from . import register
+
+# ANN and SemDeDup settings that a query passes to its operator and that
+# its SQL twin reads: one value each, so the two engines cannot drift apart
+_DIM = 64  # embedding width
+_TOP_K = 5  # neighbours reported per query
+_N_CELLS = 16  # IVF / SemDeDup cells
+_N_PROBE = 4  # IVF cells each query scores
+_LSH_PLANES = 4  # hyperplanes of the LSH bucket id
+_PQ_M = 32  # PQ sub-spaces
+_PQ_CODES = 16  # codewords per PQ sub-space
+_SEM_T = 0.4  # SemDeDup cosine threshold
 
 _EMB_STATS_ORACLE = f"""
 SELECT vec_id,
@@ -81,7 +98,7 @@ def cosine_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk(emb, queries, k=5)
 
 
-def _lsh_oracle(dim: int = 64, planes: int = 4) -> str:
+def _lsh_oracle() -> str:
     """SQL twin of lsh_bucketed_topk: the hyperplane coefficients are literal
     doubles baked into the plan on the Spark side, and ``repr(float)``
     round-trips exactly, so the SAME literals inline into the oracle — the
@@ -89,6 +106,7 @@ def _lsh_oracle(dim: int = 64, planes: int = 4) -> str:
     therefore exact-oracle-checkable."""
     from ..operators.similarity import _hyperplane
 
+    dim, planes = _DIM, _LSH_PLANES
     bucket_terms = []
     for p in range(planes):
         coeffs = ", ".join(repr(c) for c in _hyperplane(dim, p))
@@ -113,7 +131,7 @@ WITH v AS (
          (ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id ASC))::BIGINT AS rnk
   FROM scored
 )
-SELECT query_id, neighbor_id, sim, rnk FROM ranked WHERE rnk <= 5
+SELECT query_id, neighbor_id, sim, rnk FROM ranked WHERE rnk <= {_TOP_K}
 """
 
 
@@ -129,7 +147,7 @@ SELECT query_id, neighbor_id, sim, rnk FROM ranked WHERE rnk <= 5
 def cosine_topk_lsh_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return lsh_bucketed_topk(emb, queries, dim=64, k=5, planes=4)
+    return lsh_bucketed_topk(emb, queries, dim=_DIM, k=_TOP_K, planes=_LSH_PLANES)
 
 
 _IMG_COLOR_ORACLE = f"""
@@ -200,12 +218,13 @@ def image_color_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _ivf_oracle(dim: int = 64, k: int = 5, n_centroids: int = 16, n_probe: int = 4) -> str:
+def _ivf_oracle() -> str:
     """SQL twin of ivf_topk_portable: centroid seeding is pure integer
     arithmetic (Knuth multiplicative hash) and assignment/scoring use the
     same left-to-right dot-product folds as the Spark expressions, so the
     'approximate' IVF is a deterministic function of its inputs and
     exact-oracle-checkable — same argument as the LSH twin."""
+    dim, k, n_centroids, n_probe = _DIM, _TOP_K, _N_CELLS, _N_PROBE
     cos = (
         "list_sum(list_transform(range(1, {d}), i -> {a}[i] * {b}[i]))"
         " / sqrt(list_sum(list_transform({a}, x -> x * x))"
@@ -256,7 +275,9 @@ def cosine_topk_ivf_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return ivf_topk_portable(emb, queries, k=5, n_centroids=16, n_probe=4)
+    return ivf_topk_portable(
+        emb, queries, k=_TOP_K, n_centroids=_N_CELLS, n_probe=_N_PROBE
+    )
 
 
 _IVF_RECALL_ORACLE = f"""
@@ -292,7 +313,9 @@ def ivf_recall_telemetry(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     appr = (
-        ivf_topk_portable(emb, queries, k=5, n_centroids=16, n_probe=4)
+        ivf_topk_portable(
+            emb, queries, k=_TOP_K, n_centroids=_N_CELLS, n_probe=_N_PROBE
+        )
         .select("query_id", "neighbor_id")
         .withColumn("_c", F.lit(1))
     )
@@ -443,8 +466,7 @@ def embedding_quantize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_oracle(dim: int = 64, m: int = 32, n_codes: int = 16, k: int = 5,
-               scale: int = 6) -> str:
+def _pq_oracle() -> str:
     """SQL twin of pq_topk_portable: Knuth-hash sub-codebooks, sqrt
     normalization (IEEE-exact), unrolled left-associated squared-L2 terms
     over full-array indexing, an order-pinned list_sum ADC fold — every
@@ -452,6 +474,7 @@ def _pq_oracle(dim: int = 64, m: int = 32, n_codes: int = 16, k: int = 5,
     argument as the LSH/IVF twins. The Spark side inlines the COLLECTED
     codebook as literals; doubles round-trip exactly, so both engines
     subtract identical values."""
+    dim, m, n_codes, k = _DIM, _PQ_M, _PQ_CODES, _TOP_K
     d_sub = dim // m
 
     def unrolled(a: str, b_arr: str, b_base: str, j: str) -> str:
@@ -498,7 +521,7 @@ WITH v AS (
   WHERE q.vec_id <> cd.vec_id
 ), ranked AS (
   SELECT query_id, neighbor_id,
-         ROUND(CAST(s AS DECIMAL(27,12)), {scale})::DOUBLE AS approx_dist,
+         ROUND(CAST(s AS DECIMAL(27,12)), {PQ_DIST_SCALE})::DOUBLE AS approx_dist,
          (ROW_NUMBER() OVER (PARTITION BY query_id
                              ORDER BY s ASC, neighbor_id ASC))::BIGINT AS rnk
   FROM scored
@@ -527,16 +550,18 @@ def cosine_topk_pq_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return pq_topk_portable(emb, queries, k=5, m=32, n_codes=16, dim=64)
+    return pq_topk_portable(
+        emb, queries, k=_TOP_K, m=_PQ_M, n_codes=_PQ_CODES, dim=_DIM
+    )
 
 
-def _ivfpq_oracle(dim: int = 64, m: int = 32, n_codes: int = 16,
-                  n_centroids: int = 16, n_probe: int = 4, k: int = 5,
-                  scale: int = 6) -> str:
+def _ivfpq_oracle() -> str:
     """SQL twin of ivfpq_topk_portable: the IVF twin's normalized-vector
     cell assignment composed with the PQ twin's codebook/encode/ADC —
     the inverted list becomes a cell-id equi-join restricting which codes
     each query scores."""
+    dim, m, n_codes, k = _DIM, _PQ_M, _PQ_CODES, _TOP_K
+    n_centroids, n_probe = _N_CELLS, _N_PROBE
     d_sub = dim // m
     cos = (
         "list_sum(list_transform(range(1, {d}), i -> {a}[i] * {b}[i]))"
@@ -604,7 +629,7 @@ WITH v AS (
   WHERE p.query_id <> cd.vec_id
 ), ranked AS (
   SELECT query_id, neighbor_id,
-         ROUND(CAST(s AS DECIMAL(27,12)), {scale})::DOUBLE AS approx_dist,
+         ROUND(CAST(s AS DECIMAL(27,12)), {PQ_DIST_SCALE})::DOUBLE AS approx_dist,
          (ROW_NUMBER() OVER (PARTITION BY query_id
                              ORDER BY s ASC, neighbor_id ASC))::BIGINT AS rnk
   FROM scored
@@ -632,14 +657,22 @@ def cosine_topk_ivfpq_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return ivfpq_topk_portable(
-        emb, queries, k=5, m=32, n_codes=16, n_centroids=16, n_probe=4, dim=64
+        emb,
+        queries,
+        k=_TOP_K,
+        m=_PQ_M,
+        n_codes=_PQ_CODES,
+        n_centroids=_N_CELLS,
+        n_probe=_N_PROBE,
+        dim=_DIM,
     )
 
 
-def _semdedup_cells_cte(dim: int = 64, n_centroids: int = 16) -> str:
+def _semdedup_cells_cte() -> str:
     """Shared CTE chain for the SemDeDup oracles: Knuth-hash seed centroids
     + pinned-fold argmax assignment (the _ivf_oracle skeleton), ending in
     cells(vec_id, e, cell)."""
+    dim, n_centroids = _DIM, _N_CELLS
     cos = (
         "list_sum(list_transform(range(1, {d}), i -> {a}[i] * {b}[i]))"
         " / sqrt(list_sum(list_transform({a}, x -> x * x))"
@@ -671,13 +704,13 @@ _SEMDEDUP_PAIR_COS = (
 )
 
 
-def _semdedup_oracle(t: float = 0.4, scale: int = 4) -> str:
+def _semdedup_oracle() -> str:
     return f"""
 WITH {_semdedup_cells_cte()}
 SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.cell AS cell,
-       ROUND({_SEMDEDUP_PAIR_COS}, {scale}) AS sim
+       ROUND({_SEMDEDUP_PAIR_COS}, {SIM_SCALE}) AS sim
 FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
-WHERE ROUND({_SEMDEDUP_PAIR_COS}, {scale}) >= {t}
+WHERE ROUND({_SEMDEDUP_PAIR_COS}, {SIM_SCALE}) >= {_SEM_T}
 """
 
 
@@ -701,7 +734,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import semantic_dup_pairs_portable
 
     emb = load(spark, sf_dir, "embeddings")
-    return semantic_dup_pairs_portable(emb, threshold=0.4, n_centroids=16)
+    return semantic_dup_pairs_portable(emb, threshold=_SEM_T, n_centroids=_N_CELLS)
 
 
 _SEMDEDUP_SURV_ORACLE = f"""
@@ -742,8 +775,8 @@ def dedup_semantic_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     # one checkpointed assignment shared by the pair join and the
     # occupancy counts; the pair join itself has exactly one definition
-    cells = portable_cells(emb, n_centroids=16)
-    pairs = semantic_dup_pairs_portable(emb, threshold=0.4, cells=cells)
+    cells = portable_cells(emb, n_centroids=_N_CELLS)
+    pairs = semantic_dup_pairs_portable(emb, threshold=_SEM_T, cells=cells)
     occ = cells.groupBy("cell").agg(F.count(F.lit(1)).alias("n_points"))
     return semantic_survivor_stats(pairs, occ)
 
@@ -780,7 +813,7 @@ def semantic_recall_telemetry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     sem = (
-        semantic_dup_pairs_portable(emb, threshold=0.4, n_centroids=16)
+        semantic_dup_pairs_portable(emb, threshold=_SEM_T, n_centroids=_N_CELLS)
         .select("id_a", "id_b")
         .withColumn("_c", F.lit(1))
     )
@@ -857,12 +890,12 @@ def dedup_semantic_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semantic_dup_pairs_hier(emb, threshold=0.4, target_cell_rows=125)
 
 
-def _sem_assign_cte(src: str, out: str, dim: int = 64) -> str:
+def _sem_assign_cte(src: str, out: str) -> str:
     """Assignment CTE pair: rows of CTE ``src`` → (vec_id, e, cell) in CTE
     ``out``, argmax cosine over the corpus-seeded `cents` (must be in
     scope), ties to the lower cell index — the portable_cells twin."""
     cos = (
-        f"list_sum(list_transform(range(1, {dim + 1}), i -> v.e[i] * c.cent[i]))"
+        f"list_sum(list_transform(range(1, {_DIM + 1}), i -> v.e[i] * c.cent[i]))"
         " / sqrt(list_sum(list_transform(v.e, x -> x * x))"
         " * list_sum(list_transform(c.cent, x -> x * x)))"
     )
@@ -923,7 +956,7 @@ def incremental_semantic_dedup_query(spark: SparkSession, sf_dir: str) -> DataFr
     return incremental_semantic_dedup(corpus, delta, threshold=0.4, n_centroids=16)
 
 
-def _rp_oracle(dim: int, k: int, seed: int = 42) -> str:
+def _rp_oracle(dim: int, k: int) -> str:
     """SQL twin of rp_norm_stats: the ±1 sign rows are LITERAL lists (same
     driver-generated matrix as the Spark expression — no cross-engine RNG),
     every dot product a list_reduce fold in the identical prepend-0 order."""
@@ -939,7 +972,7 @@ def _rp_oracle(dim: int, k: int, seed: int = 42) -> str:
     )
     y_terms = []
     for j in range(k):
-        s = "[" + ", ".join(repr(c) for c in jl_signs(dim, j, seed)) + "]"
+        s = "[" + ", ".join(repr(c) for c in jl_signs(dim, j)) + "]"
         yj = fold(
             f"list_transform(range(1, {dim + 1}),"
             f" i -> CAST(embedding[i] AS DOUBLE) * ({s})[i])"
@@ -978,7 +1011,7 @@ def embedding_rp_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rp_norm_stats(load(spark, sf_dir, "embeddings"), dim=64, k=16)
 
 
-def _rp_recall_oracle(dim: int, kproj: int, topk: int, coarse_m: int, seed: int = 42) -> str:
+def _rp_recall_oracle(dim: int, kproj: int, topk: int, coarse_m: int) -> str:
     """SQL twin of rp_recall_telemetry: projected components from the same
     literal ±1 folds as _rp_oracle, then the cosine_topk ranking shape on
     both the projected and the original space, compared as pair sets."""
@@ -989,7 +1022,7 @@ def _rp_recall_oracle(dim: int, kproj: int, topk: int, coarse_m: int, seed: int 
 
     ys = []
     for j in range(kproj):
-        s = "[" + ", ".join(repr(c) for c in jl_signs(dim, j, seed)) + "]"
+        s = "[" + ", ".join(repr(c) for c in jl_signs(dim, j)) + "]"
         ys.append(
             fold(
                 f"list_transform(range(1, {dim + 1}),"

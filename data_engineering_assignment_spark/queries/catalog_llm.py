@@ -841,11 +841,11 @@ def dsir_affinity_top64(spark: SparkSession, sf_dir: str) -> DataFrame:
 # as fixed-point literals (micro-units) exactly like the JL projection
 # coefficients — generated once with a seeded RNG at import time and
 # inlined into BOTH engines, so the arrays cannot drift apart.
-def _classifier_weights(n: int = 64, seed: int = 1234) -> list[int]:
+def _classifier_weights() -> list[int]:
     import random
 
-    rng = random.Random(seed)
-    return [rng.randint(-1000, 1000) for _ in range(n)]
+    rng = random.Random(1234)
+    return [rng.randint(-1000, 1000) for _ in range(64)]
 
 
 _CLF_WEIGHTS = _classifier_weights()
@@ -1192,13 +1192,13 @@ def domain_capped_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Per-class weight arrays for the multi-class language-ID gate: one
 # seeded stream PER CLASS (the _classifier_weights discipline), inlined
 # identically into both engines.
-def _lang_weights(n: int = 64) -> dict[str, list[int]]:
+def _lang_weights() -> dict[str, list[int]]:
     import random
 
     out = {}
     for i, cls in enumerate(("de", "en", "unk")):
         rng = random.Random(4000 + i)
-        out[cls] = [rng.randint(-1000, 1000) for _ in range(n)]
+        out[cls] = [rng.randint(-1000, 1000) for _ in range(64)]
     return out
 
 
@@ -1296,7 +1296,8 @@ def _cjk_fixture_text(k: int, cls: str) -> str:
     }[cls]
 
 
-def _cjk_weights(n: int = 256) -> dict[str, list[int]]:
+def _cjk_weights() -> dict[str, list[int]]:
+    n = 256  # hash buckets
     p = 1_000_000_007
 
     def rh(s: str) -> int:

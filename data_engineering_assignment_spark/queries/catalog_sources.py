@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.aggregates import cond_sum, davg, dsum, o_davg, o_dround, o_dsum
+from ..operators.graphs import PR_DAMP_DEN, PR_DAMP_NUM, PR_SCALE
 from ..pipelines.sales import read_sales_csv, sales_in_window
 from ..session import tune
 from . import register
@@ -83,14 +84,13 @@ def _fixture_scan_small(spark: SparkSession, sf_dir: str) -> bool:
     short to overlap and the eager barrier only costs (measured +0.7 s),
     so the small regime stays lazy. Reuses the _doc_ids probe memo — no
     extra probe cost."""
-    from ..operators.parallelism import scan_partitions
+    from ..operators.parallelism import small_scan
     from ..tables import load
 
-    n = scan_partitions(
+    return small_scan(
         load(spark, sf_dir, "documents").select("doc_id"),
         memo_key=f"doc_ids:{sf_dir}",
     )
-    return n < spark.sparkContext.defaultParallelism
 
 
 _CSV_PATH = str(
@@ -3362,9 +3362,10 @@ def http_encoding_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _link_pagerank_oracle(iters: int = 3, scale: int = 10**12,
-                          dn: int = 17, dd: int = 20,
-                          edges_cte: str | None = None) -> str:
+_LINK_PR_ITERS = 3  # both link-PageRank gates and their oracle replay it
+
+
+def _link_pagerank_oracle(edges_cte: str | None = None) -> str:
     """Step-unrolled integer PageRank over the crawl host graph — the
     copurchase_pagerank oracle shape, with edges re-derived from the
     fixture's doc_id arithmetic (the Spark side must reach the SAME
@@ -3372,7 +3373,7 @@ def _link_pagerank_oracle(iters: int = 3, scale: int = 10**12,
     canonicalization -> host parsing). ``edges_cte`` overrides the
     edge-derivation SQL (body of ``edges AS (...)``) for fixtures with
     different link arithmetic (the mixed HTML+PDF gate)."""
-    base = scale * (dd - dn) // dd
+    base = PR_SCALE * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN
     if edges_cte is None:
         edges_cte = """
   SELECT DISTINCT (doc_id % 7)::BIGINT AS u,
@@ -3388,14 +3389,14 @@ def _link_pagerank_oracle(iters: int = 3, scale: int = 10**12,
 ), deg AS (
   SELECT u, COUNT(*)::BIGINT AS deg FROM bi GROUP BY u
 ), r0 AS (
-  SELECT u AS node, {scale}::BIGINT AS pr FROM deg
+  SELECT u AS node, {PR_SCALE}::BIGINT AS pr FROM deg
 )"""
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, _LINK_PR_ITERS + 1):
         ctes.append(
             f"""r{i} AS (
   SELECT b.v AS node,
-         ({base} + SUM((r.pr * {dn}) // ({dd} * d.deg)))::BIGINT AS pr
+         ({base} + SUM((r.pr * {PR_DAMP_NUM}) // ({PR_DAMP_DEN} * d.deg)))::BIGINT AS pr
   FROM bi b JOIN r{i - 1} r ON b.u = r.node JOIN deg d ON b.u = d.u
   GROUP BY b.v
 )"""
@@ -3408,7 +3409,7 @@ outd AS (
   SELECT u, COUNT(DISTINCT v)::BIGINT AS out_hosts FROM edges GROUP BY u
 )
 SELECT 's' || r.node::VARCHAR || '.example' AS host, r.pr, o.out_hosts
-FROM r{iters} r JOIN outd o ON o.u = r.node
+FROM r{_LINK_PR_ITERS} r JOIN outd o ON o.u = r.node
 ORDER BY r.pr DESC, host"""
     )
 
@@ -3482,7 +3483,7 @@ def crawl_link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~35 s-task-time 32-task stages per run). Consumers differ, so the
     # checkpoint pays (robots_filter precedent) — and it is kilobytes.
     edges = edges.localCheckpoint(eager=False)
-    ranks = pagerank_integer(edges, iters=3)
+    ranks = pagerank_integer(edges, iters=_LINK_PR_ITERS)
     outd = edges.groupBy("u").agg(
         F.countDistinct("v").cast("long").alias("out_hosts")
     )
@@ -5077,7 +5078,7 @@ def pdf_link_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~35 s-task-time 32-task stages per run). Consumers differ, so the
     # checkpoint pays (robots_filter precedent) — and it is kilobytes.
     edges = edges.localCheckpoint(eager=False)
-    ranks = pagerank_integer(edges, iters=3)
+    ranks = pagerank_integer(edges, iters=_LINK_PR_ITERS)
     outd = edges.groupBy("u").agg(
         F.countDistinct("v").cast("long").alias("out_hosts")
     )

@@ -10,7 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DateType,
     DoubleType,
     IntegerType,
@@ -21,8 +20,8 @@ from pyspark.sql.types import (
 )
 
 
-def _f(name, dtype, nullable=True):
-    return StructField(name, dtype, nullable)
+def _f(name, dtype):
+    return StructField(name, dtype, True)
 
 
 # Video-game sales CSV (pipe-delimited, header) — Assignment-python.py:38-51.
@@ -110,19 +109,6 @@ PLAYER_SCHEMA = StructType(
         _f("birthArea", StringType()),
         _f("role", StringType()),
         _f("foot", StringType()),
-    ]
-)
-
-# Spark image-format struct — Assignment-python.py:615,710-716. We read via
-# binaryFile for portability (SURVEY.md S5) and build this struct ourselves.
-IMAGE_SCHEMA = StructType(
-    [
-        _f("origin", StringType()),
-        _f("height", IntegerType()),
-        _f("width", IntegerType()),
-        _f("nChannels", IntegerType()),
-        _f("mode", IntegerType()),
-        _f("data", BinaryType()),
     ]
 )
 

@@ -138,13 +138,12 @@ def read_binary_files(
     return reader.load(path)
 
 
-def read_images(
-    spark: SparkSession, path: str, drop_invalid: bool = True
-) -> DataFrame:
+def read_images(spark: SparkSession, path: str) -> DataFrame:
     """S5, reference-exact surface (Assignment-python.py:710): Spark's native
     ``image`` source — one row per file with the ``image`` struct (origin,
     height, width, nChannels, mode, data), decoded JVM-side by Java ImageIO
-    in OpenCV BGR(A) byte order. Parallelizes per file like binaryFile.
+    in OpenCV BGR(A) byte order. Parallelizes per file like binaryFile;
+    files ImageIO cannot decode are dropped (``dropInvalid``).
 
     The binaryFile + own-codec path (:func:`read_binary_files` +
     functions/multimodal.decode_png) remains the production route — it
@@ -154,7 +153,7 @@ def read_images(
     reference-parity workloads."""
     return (
         spark.read.format("image")
-        .option("dropInvalid", str(drop_invalid).lower())
+        .option("dropInvalid", "true")
         .load(path)
     )
 
@@ -286,9 +285,7 @@ def warc_records(
     return _binary_meta_source(df, content_col, id_col, parse_warc, tail, rows_fn)
 
 
-def tar_members(
-    df: DataFrame, content_col: str = "content", id_col: str = "archive_id"
-) -> DataFrame:
+def tar_members(df: DataFrame, content_col: str = "content") -> DataFrame:
     """Explode TAR archive binary columns into one row per member — the
     other container crawl dumps and dataset drops ship in beside ZIPs
     and WARCs (plain tar and tar.gz/bz2/xz, compression sniffed by
@@ -325,7 +322,7 @@ def tar_members(
                 yield info.name, int(info.size), kind, int(info.mtime), digest
 
     return _binary_meta_source(
-        df, content_col, id_col,
+        df, content_col, "archive_id",
         lambda b: tarfile.open(fileobj=io.BytesIO(b), mode="r:*"),
         "member string, size long, kind string, mtime long,"
         " content_digest string",
@@ -410,7 +407,7 @@ def _binary_meta_source(
     return df.select(id_col, content_col).mapInPandas(mapper, schema)
 
 
-def mp3_meta(df: DataFrame, content_col: str = "content", id_col: str = "archive_id") -> DataFrame:
+def mp3_meta(df: DataFrame) -> DataFrame:
     """MP3 metadata, one row per file (``functions.mp3.parse_mp3``:
     ID3v2.3/2.4 + trailing ID3v1 tag walks, MPEG-1 Layer III frame
     census with exact integer duration; audio decode stays guarded).
@@ -422,7 +419,7 @@ def mp3_meta(df: DataFrame, content_col: str = "content", id_col: str = "archive
     keys = ("id3_version", "title", "artist", "album", "n_frames",
             "sample_rate", "bitrate_kbps", "cbr", "duration_ms")
     return _binary_meta_source(
-        df, content_col, id_col, parse_mp3,
+        df, "content", "archive_id", parse_mp3,
         "id3_version string, title string, artist string,"
         " album string, n_frames long, sample_rate int,"
         " bitrate_kbps int, cbr boolean, duration_ms long",
@@ -430,7 +427,7 @@ def mp3_meta(df: DataFrame, content_col: str = "content", id_col: str = "archive
     )
 
 
-def webp_meta(df: DataFrame, content_col: str = "content", id_col: str = "archive_id") -> DataFrame:
+def webp_meta(df: DataFrame) -> DataFrame:
     """WebP container metadata, one row per file
     (``functions.webp.parse_webp``: RIFF walk, VP8/VP8L bitstream
     headers, the VP8X extended profile with ANIM/ANMF animation frames
@@ -443,7 +440,7 @@ def webp_meta(df: DataFrame, content_col: str = "content", id_col: str = "archiv
     keys = ("format", "width", "height", "has_alpha", "is_animated",
             "n_frames", "duration_ms", "has_exif", "has_icc")
     return _binary_meta_source(
-        df, content_col, id_col, parse_webp,
+        df, "content", "archive_id", parse_webp,
         "format string, width int, height int, has_alpha boolean,"
         " is_animated boolean, n_frames int, duration_ms long,"
         " has_exif boolean, has_icc boolean",
@@ -451,7 +448,7 @@ def webp_meta(df: DataFrame, content_col: str = "content", id_col: str = "archiv
     )
 
 
-def bmff_image_meta(df: DataFrame, content_col: str = "content", id_col: str = "archive_id") -> DataFrame:
+def bmff_image_meta(df: DataFrame) -> DataFrame:
     """AVIF/HEIC image-container metadata, one row per file
     (``functions.mp4.parse_bmff_image``: ISO/IEC 23008-12 item
     structure — pitm -> ipma -> ispe so auxiliary/thumbnail items
@@ -464,14 +461,14 @@ def bmff_image_meta(df: DataFrame, content_col: str = "content", id_col: str = "
     keys = ("major_brand", "primary_item", "n_items", "codec",
             "width", "height", "has_exif")
     return _binary_meta_source(
-        df, content_col, id_col, parse_bmff_image,
+        df, "content", "archive_id", parse_bmff_image,
         "major_brand string, primary_item long, n_items int,"
         " codec string, width long, height long, has_exif boolean",
         lambda r: [tuple(r[k] for k in keys)],
     )
 
 
-def mp4_tracks(df: DataFrame, content_col: str = "content", id_col: str = "archive_id") -> DataFrame:
+def mp4_tracks(df: DataFrame) -> DataFrame:
     """Explode MP4/ISO-BMFF binary columns into one row per TRACK —
     container metadata for the dominant web video format, without any
     sample decode (``functions.mp4.parse_mp4``: box walk, mvhd/tkhd/
@@ -503,7 +500,7 @@ def mp4_tracks(df: DataFrame, content_col: str = "content", id_col: str = "archi
         ]
 
     return _binary_meta_source(
-        df, content_col, id_col, parse_mp4,
+        df, "content", "archive_id", parse_mp4,
         "major_brand string, movie_duration_ms long, n_tracks int,"
         " n_fragments int, track_id long, kind string, codec string,"
         " width int, height int, n_samples long, duration_ms long,"
@@ -512,7 +509,7 @@ def mp4_tracks(df: DataFrame, content_col: str = "content", id_col: str = "archi
     )
 
 
-def svg_meta(df: DataFrame, content_col: str = "content", id_col: str = "archive_id") -> DataFrame:
+def svg_meta(df: DataFrame) -> DataFrame:
     """SVG metadata, one row per file (``functions.svg.parse_svg``:
     intrinsic pixel size with the attribute→viewBox fallback ladder,
     declared units, viewBox extent, element count, script presence,
@@ -525,7 +522,7 @@ def svg_meta(df: DataFrame, content_col: str = "content", id_col: str = "archive
     keys = ("width", "height", "width_unit", "height_unit",
             "vb_width", "vb_height", "n_elements", "has_script", "title")
     return _binary_meta_source(
-        df, content_col, id_col, parse_svg,
+        df, "content", "archive_id", parse_svg,
         "width double, height double, width_unit string,"
         " height_unit string, vb_width double, vb_height double,"
         " n_elements int, has_script boolean, title string",
@@ -533,7 +530,7 @@ def svg_meta(df: DataFrame, content_col: str = "content", id_col: str = "archive
     )
 
 
-def flac_meta(df: DataFrame, content_col: str = "content", id_col: str = "archive_id") -> DataFrame:
+def flac_meta(df: DataFrame) -> DataFrame:
     """FLAC metadata, one row per file (``functions.flac.parse_flac``:
     STREAMINFO packed fields with exact integer duration,
     VORBIS_COMMENT tags, PICTURE presence, block census; audio decode
@@ -546,7 +543,7 @@ def flac_meta(df: DataFrame, content_col: str = "content", id_col: str = "archiv
             "total_samples", "duration_ms", "title", "artist", "album",
             "n_blocks", "has_picture")
     return _binary_meta_source(
-        df, content_col, id_col, parse_flac,
+        df, "content", "archive_id", parse_flac,
         "sample_rate int, channels int, bits_per_sample int,"
         " total_samples long, duration_ms long, title string,"
         " artist string, album string, n_blocks int,"
@@ -555,7 +552,7 @@ def flac_meta(df: DataFrame, content_col: str = "content", id_col: str = "archiv
     )
 
 
-def ogg_meta(df: DataFrame, content_col: str = "content", id_col: str = "archive_id") -> DataFrame:
+def ogg_meta(df: DataFrame) -> DataFrame:
     """Ogg container metadata, one row per file
     (``functions.ogg.parse_ogg``: page walk, BOS stream census,
     Vorbis/Opus/Theora identification headers, exact integer duration
@@ -569,14 +566,14 @@ def ogg_meta(df: DataFrame, content_col: str = "content", id_col: str = "archive
     keys = ("n_pages", "n_streams", "codec", "sample_rate", "channels",
             "duration_ms", "pre_skip")
     return _binary_meta_source(
-        df, content_col, id_col, parse_ogg,
+        df, "content", "archive_id", parse_ogg,
         "n_pages int, n_streams int, codec string, sample_rate int,"
         " channels int, duration_ms long, pre_skip int",
         lambda r: [tuple(r[k] for k in keys)],
     )
 
 
-def subtitle_cues(df: DataFrame, content_col: str = "content", id_col: str = "archive_id") -> DataFrame:
+def subtitle_cues(df: DataFrame) -> DataFrame:
     """Explode subtitle files (SRT / WebVTT, sniffed by the WEBVTT
     header — ``functions.subtitles.parse_subtitles``) into one row per
     CUE: kind, cue_id (SRT number / VTT identifier, as string),
@@ -600,14 +597,14 @@ def subtitle_cues(df: DataFrame, content_col: str = "content", id_col: str = "ar
         ]
 
     return _binary_meta_source(
-        df, content_col, id_col, parse_subtitles,
+        df, "content", "archive_id", parse_subtitles,
         "kind string, cue_id string, start_ms long, end_ms long,"
         " text string",
         rows_fn,
     )
 
 
-def hls_meta(df: DataFrame, content_col: str = "content", id_col: str = "archive_id") -> DataFrame:
+def hls_meta(df: DataFrame) -> DataFrame:
     """HLS playlist metadata, one row per file
     (``functions.hls.parse_m3u8``): master playlists report the
     variant census (count, max bandwidth, the max-bandwidth variant's
@@ -633,7 +630,7 @@ def hls_meta(df: DataFrame, content_col: str = "content", id_col: str = "archive
         )]
 
     return _binary_meta_source(
-        df, content_col, id_col, parse_m3u8,
+        df, "content", "archive_id", parse_m3u8,
         "kind string, n_variants int, max_bandwidth long,"
         " best_width int, best_height int, n_segments int,"
         " total_duration_ms long, target_duration_s int,"
@@ -642,7 +639,7 @@ def hls_meta(df: DataFrame, content_col: str = "content", id_col: str = "archive
     )
 
 
-def eml_messages(df: DataFrame, content_col: str = "content", id_col: str = "archive_id") -> DataFrame:
+def eml_messages(df: DataFrame) -> DataFrame:
     """E-mail metadata + first-text-body extraction, one row per
     message (``functions.mime.parse_eml``: RFC 5322 headers with
     encoded-words decoded, MIME part walk, attachment census).
@@ -664,7 +661,7 @@ def eml_messages(df: DataFrame, content_col: str = "content", id_col: str = "arc
         )]
 
     return _binary_meta_source(
-        df, content_col, id_col, parse_eml,
+        df, "content", "archive_id", parse_eml,
         "from_addr string, subject string, n_recipients int,"
         " n_parts int, max_depth int, text string, has_html boolean,"
         " n_attachments int, att_bytes long",
@@ -672,7 +669,7 @@ def eml_messages(df: DataFrame, content_col: str = "content", id_col: str = "arc
     )
 
 
-def png_text_meta(df: DataFrame, content_col: str = "content", id_col: str = "archive_id") -> DataFrame:
+def png_text_meta(df: DataFrame) -> DataFrame:
     """PNG ancillary-chunk metadata, one row per file
     (``functions.pngmeta.parse_png_meta``: tEXt/zTXt/iTXt census,
     eXIf presence, tIME stamp, pHYs dpi; chunk CRCs verified).
@@ -692,7 +689,7 @@ def png_text_meta(df: DataFrame, content_col: str = "content", id_col: str = "ar
         )]
 
     return _binary_meta_source(
-        df, content_col, id_col, parse_png_meta,
+        df, "content", "archive_id", parse_png_meta,
         "width long, height long, bit_depth int, color_type int,"
         " n_texts int, text_chars long, has_exif boolean,"
         " exif_bytes int, time string, dpi_x int, dpi_y int",
@@ -700,7 +697,7 @@ def png_text_meta(df: DataFrame, content_col: str = "content", id_col: str = "ar
     )
 
 
-def ics_events(df: DataFrame, content_col: str = "content", id_col: str = "archive_id") -> DataFrame:
+def ics_events(df: DataFrame) -> DataFrame:
     """Explode iCalendar files (``functions.ics.parse_ics``) into one
     row per VEVENT, calendar-level counts repeated on each row:
     n_events, n_todos, uid, summary (escapes decoded), duration_s
@@ -724,7 +721,7 @@ def ics_events(df: DataFrame, content_col: str = "content", id_col: str = "archi
         ]
 
     return _binary_meta_source(
-        df, content_col, id_col, parse_ics,
+        df, "content", "archive_id", parse_ics,
         "n_events int, n_todos int, uid string, summary string,"
         " duration_s long, recurring boolean, n_attendees int,"
         " all_day boolean",
@@ -732,7 +729,7 @@ def ics_events(df: DataFrame, content_col: str = "content", id_col: str = "archi
     )
 
 
-def zip_members(df: DataFrame, content_col: str = "content", id_col: str = "archive_id") -> DataFrame:
+def zip_members(df: DataFrame, id_col: str = "archive_id") -> DataFrame:
     """Explode ZIP archive binary columns into one row per member —
     crawl dumps and dataset drops ship as ZIPs next to WARCs. Stdlib
     ``zipfile`` over an in-memory buffer (stored + deflate members),
@@ -768,7 +765,7 @@ def zip_members(df: DataFrame, content_col: str = "content", id_col: str = "arch
                 )
 
     return _binary_meta_source(
-        df, content_col, id_col, lambda b: zipfile.ZipFile(io.BytesIO(b)),
+        df, "content", id_col, lambda b: zipfile.ZipFile(io.BytesIO(b)),
         "member string, size_uncompressed long, size_compressed long,"
         " method string, crc_ok boolean",
         rows_fn,

@@ -13,7 +13,12 @@ plan changes: expression, exchange-plan and RDD ids are masked, the checkout
 path is replaced by ``<checkout>``, and the distinct-aggregate rewrite's
 Expand is put in one order. Catalyst numbers its distinct groups (``gid``)
 and orders their child columns by hash order of expression ids, which
-changes with everything the JVM built before the query.
+changes with everything the JVM built before the query. For the same
+reason PySpark lambda variables (``lambda x_285``, numbered by a
+process-wide counter) are renumbered per plan in order of first use, and
+the call site of ``localCheckpoint`` RDDs (``<unknown>:0`` or
+``NativeMethodAccessorImpl.java:0``, depending on the calling frame) is
+masked.
 """
 
 from __future__ import annotations
@@ -133,12 +138,29 @@ def _canonical_expand(text: str) -> str:
     return "\n".join(lines)
 
 
+def _renumber_lambdas(text: str) -> str:
+    """``lambda x_285`` -> ``lambda x_1``: each lambda variable gets the
+    ordinal of its first use in the plan."""
+    seen: dict[str, str] = {}
+
+    def renumber(m: re.Match) -> str:
+        n = seen.setdefault(m.group(0), str(len(seen) + 1))
+        return f"lambda {m.group(1)}_{n}"
+
+    return re.sub(r"\blambda (\w+?)_(\d+)\b", renumber, text)
+
+
 def canonical(text: str) -> str:
     """The capture-independent form of a formatted plan (module docstring)."""
     text = text.replace(ROOT, "<checkout>")
-    for pattern, mask in ((r"#\d+", "#N"), (r"plan_id=\d+", "plan_id=N"), (r"RDD\[\d+\]", "RDD[N]")):
+    for pattern, mask in (
+        (r"#\d+", "#N"),
+        (r"plan_id=\d+", "plan_id=N"),
+        (r"RDD\[\d+\]", "RDD[N]"),
+        (r"( at localCheckpoint at )[^,\s]+:\d+", r"\1<call site>"),
+    ):
         text = re.sub(pattern, mask, text)
-    return _canonical_expand(text)
+    return _canonical_expand(_renumber_lambdas(text))
 
 
 def main() -> None:

@@ -51,3 +51,32 @@ def test_expand_order_and_ids_are_canonical():
 
 def test_a_real_plan_change_still_shows():
     assert canonical(A) != canonical(A.replace("partial_count(b#25L)", "partial_sum(b#25L)"))
+
+
+# One let-bound HOF and one checkpointed scan as two JVMs print them: the
+# lambda variables carry a process-wide counter, and the checkpoint RDD's
+# call site depends on the frame that called localCheckpoint.
+L1 = """(1) Scan ExistingRDD
+Arguments: [d#6L], MapPartitionsRDD[43] at localCheckpoint at NativeMethodAccessorImpl.java:0, ExistingRDD
+
+(2) Project
+Output [1]: [aggregate(v#7, 0.0, lambdafunction((lambda x_285#20 + lambda y_286#21), lambda x_285#20, lambda y_286#21, false)) AS s#9]
+"""
+
+L2 = """(1) Scan ExistingRDD
+Arguments: [d#16L], MapPartitionsRDD[7] at localCheckpoint at <unknown>:0, ExistingRDD
+
+(2) Project
+Output [1]: [aggregate(v#17, 0.0, lambdafunction((lambda x_18#40 + lambda y_19#41), lambda x_18#40, lambda y_19#41, false)) AS s#19]
+"""
+
+
+def test_lambda_numbers_and_checkpoint_call_sites_are_canonical():
+    assert canonical(L1) == canonical(L2)
+    assert "lambdafunction((lambda x_1#N + lambda y_2#N)" in canonical(L2)
+    assert "at localCheckpoint at <call site>, ExistingRDD" in canonical(L2)
+
+
+def test_a_real_lambda_body_change_still_shows():
+    changed = L2.replace("(lambda x_18#40 + lambda y_19#41)", "(lambda x_18#40 * lambda y_19#41)")
+    assert canonical(L1) != canonical(changed)

@@ -106,6 +106,20 @@ def test_dedup_clusters_connected_components(spark):
     assert {out[n] for n in (9, 10, 11)} == {9}
 
 
+def test_dedup_clusters_raises_when_labels_still_move(spark):
+    """Min-label propagation needs one round per hop: on a 12-node chain,
+    node 11 still holds label 1 after the 10-round cap. Returning those
+    labels would be a silently wrong cluster, so the operator raises (the
+    cc_star contract)."""
+    from data_engineering_assignment_spark.operators.dedup import dedup_clusters
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(11)], "doc_a bigint, doc_b bigint"
+    )
+    with pytest.raises(RuntimeError, match="still changing"):
+        dedup_clusters(pairs)
+
+
 def test_portable_lsh_recall_and_fast_path_agreement(spark):
     from data_engineering_assignment_spark.operators.dedup import (
         minhash_lsh_candidates_portable,

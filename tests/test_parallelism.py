@@ -14,26 +14,28 @@ from pyspark.sql import functions as F
 from data_engineering_assignment_spark.operators.parallelism import (
     _PART_COUNT_MEMO,
     ensure_min_parallelism,
-    scan_partitions,
+    small_scan,
 )
 
 
-def test_scan_partitions_matches_rdd(spark, sf_dir):
+def test_small_scan_compares_rdd_partitions_with_parallelism(spark, sf_dir):
     df = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    assert scan_partitions(df) == df.rdd.getNumPartitions()
+    par = spark.sparkContext.defaultParallelism
+    assert small_scan(df) is (df.rdd.getNumPartitions() < par)
+    assert small_scan(spark.range(10, numPartitions=par)) is False
 
 
-def test_scan_partitions_memoizes(spark, sf_dir):
+def test_small_scan_memoizes(spark, sf_dir):
     df = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    key = "test-scan-partitions-memo"
-    n = scan_partitions(df, memo_key=key)
+    key = "test-small-scan-memo"
+    small = small_scan(df, memo_key=key)
     sc = spark.sparkContext
     memo_key = (sc.applicationId, key, sc.defaultParallelism)
-    assert _PART_COUNT_MEMO[memo_key] == n
+    assert (_PART_COUNT_MEMO[memo_key] < sc.defaultParallelism) is small
     # a poisoned memo value must short-circuit the probe (proves the memo
     # is consulted, not re-probed)
-    _PART_COUNT_MEMO[memo_key] = n + 99
-    assert scan_partitions(df, memo_key=key) == n + 99
+    _PART_COUNT_MEMO[memo_key] = 0 if not small else sc.defaultParallelism
+    assert small_scan(df, memo_key=key) is not small
     del _PART_COUNT_MEMO[memo_key]
 
 
