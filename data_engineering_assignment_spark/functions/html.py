@@ -1,6 +1,6 @@
 """Dependency-free HTML -> text extraction for crawl pipelines — the
 step between WARC ingest (``sources.warc_records``) and every text
-operator the engine already has (quality_score, predict_lang, dedup,
+operator the engine already has (quality heuristics, predict_lang, dedup,
 decontaminate). Additive vs the reference, which has no crawl route
 (its media handling stops at image color analytics,
 Assignment-python.py:654-661); every real WARC-to-training-data

@@ -781,14 +781,15 @@ def _enc_dc_scan(wtr, coefs, comp_ids, factors, mcux, mcuy, Ah, Al):
                             wtr.write((zz0 >> Al) & 1, 1)
 
 
-def _enc_ac_first_scan(wtr, blocks, Ss, Se, Al):
-    """AC first scan (G.1.2.2) for one component's data-unit sequence.
+def _enc_ac_first_scan(wtr, blocks, Ss, Se):
+    """AC first scan (G.1.2.2) at Al=1 for one component's data-unit
+    sequence.
     This encoder caps every EOB run at 1 (emitting EOB0 per block), a
     conformant choice that keeps it within the Annex-K-shaped symbol set."""
     for zz in blocks:
         r = 0
         for k in range(Ss, Se + 1):
-            a = abs(int(zz[k])) >> Al  # AC point transform: |v| >> Al
+            a = abs(int(zz[k])) >> 1  # AC point transform: |v| >> Al
             if a == 0:
                 r += 1
                 continue
@@ -807,8 +808,8 @@ def _enc_ac_first_scan(wtr, blocks, Ss, Se, Al):
             wtr.write(c, ln)
 
 
-def _enc_ac_refine_scan(wtr, blocks, Ss, Se, Al):
-    """AC refinement scan (G.1.2.3): newly significant coefficients are
+def _enc_ac_refine_scan(wtr, blocks, Ss, Se):
+    """AC refinement scan (G.1.2.3) down to Al=0: newly significant coefficients are
     (run, 1) codes + a sign bit, where the run counts ZERO-HISTORY
     positions only; every history (already-nonzero) coefficient the
     decoder passes carries one correction bit, emitted at EXACTLY the
@@ -819,7 +820,7 @@ def _enc_ac_refine_scan(wtr, blocks, Ss, Se, Al):
     bits (EOB runs capped at 1, the encoder's conformant choice)."""
     for zz in blocks:
         vals = [
-            (abs(int(zz[k])) >> Al, int(zz[k])) for k in range(Ss, Se + 1)
+            (abs(int(zz[k])), int(zz[k])) for k in range(Ss, Se + 1)
         ]
         newly = [i for i, (t, _) in enumerate(vals) if t == 1]
         pos = 0
@@ -941,14 +942,14 @@ def encode_jpeg_progressive(
         for ss, se in ((1, 5), (6, 63)):
             sos([ci], ss, se, 0, 1,
                 lambda ci=ci, ss=ss, se=se: _enc_ac_first_scan(
-                    wtr, data_blocks(ci), ss, se, 1))
+                    wtr, data_blocks(ci), ss, se))
     sos(comp_ids, 0, 0, 1, 0,
         lambda: _enc_dc_scan(wtr, coefs, comp_ids, factors, mcux, mcuy, 1, 0))
     for ci in comp_ids:
         for ss, se in ((1, 5), (6, 63)):
             sos([ci], ss, se, 1, 0,
                 lambda ci=ci, ss=ss, se=se: _enc_ac_refine_scan(
-                    wtr, data_blocks(ci), ss, se, 0))
+                    wtr, data_blocks(ci), ss, se))
 
     zz = lambda t: bytes(int(t[i, j]) for (i, j) in _ZIGZAG)  # noqa: E731
     if gray:

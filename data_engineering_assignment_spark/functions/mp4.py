@@ -354,10 +354,10 @@ def build_mp4(
 _IMAGE_BRANDS = {"avif", "avis", "heic", "heix", "mif1", "msf1"}
 
 
-def _fullbox_children(data: bytes, body: int, end: int, depth: int):
+def _fullbox_children(data: bytes, body: int, end: int):
     """meta is a FULL box: children start after version/flags."""
     _fullbox_version(data, body, end)
-    return _walk_boxes(data, body + 4, end, depth)
+    return _walk_boxes(data, body + 4, end, 1)
 
 
 def parse_bmff_image(content: bytes) -> dict:
@@ -395,7 +395,7 @@ def parse_bmff_image(content: bytes) -> dict:
     ispes: list[tuple[int, int]] = []  # ipco order (1-based indexing)
     ipco_kinds: list[bytes] = []
     assoc: dict[int, list[int]] = {}  # item_id -> ipco property indices
-    for t, b, e in _fullbox_children(content, mb, me, 1):
+    for t, b, e in _fullbox_children(content, mb, me):
         if t == b"pitm":
             v = _fullbox_version(content, b, e)
             if b + 4 + (2 if v == 0 else 4) > e:

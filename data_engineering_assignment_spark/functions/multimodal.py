@@ -914,8 +914,10 @@ def decode_media(df: DataFrame) -> DataFrame:
     return df.mapInPandas(mapper, schema)
 
 
-def resize_media(df: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Nearest-neighbor resize of every frame (numpy index sampling)."""
+def resize_media(df: DataFrame, out_h: int) -> DataFrame:
+    """Nearest-neighbor resize of every frame to 4 pixels wide and
+    ``out_h`` high (numpy index sampling)."""
+    out_w = 4
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

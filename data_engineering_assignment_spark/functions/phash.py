@@ -43,15 +43,15 @@ import numpy as np
 _N = 32  # downsample grid
 
 
-def _dct_rows(k: int) -> np.ndarray:
-    """First ``k`` rows of the ``_N``-point DCT-II basis (orthonormality
-    irrelevant: thresholding against the median is scale-invariant)."""
-    j = np.arange(_N, dtype=np.float64)
-    u = np.arange(k, dtype=np.float64)[:, None]
-    return np.cos(np.pi * u * (2.0 * j + 1.0) / (2.0 * _N))
-
-
-_D8 = _dct_rows(8)  # (8, 32): C = _D8 @ X @ _D8.T is the low-freq block
+# First 8 rows of the _N-point DCT-II basis, (8, 32): C = _D8 @ X @ _D8.T is
+# the low-freq block (orthonormality irrelevant: thresholding against the
+# median is scale-invariant).
+_D8 = np.cos(
+    np.pi
+    * np.arange(8, dtype=np.float64)[:, None]
+    * (2.0 * np.arange(_N, dtype=np.float64) + 1.0)
+    / (2.0 * _N)
+)
 
 
 def gray_scaled(frame: np.ndarray) -> np.ndarray:

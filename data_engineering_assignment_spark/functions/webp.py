@@ -27,10 +27,11 @@ _VP8X_EXIF = 0x08
 _VP8X_ANIM = 0x02
 
 
-def _chunks(data: bytes, start: int, end: int):
-    """Yield (fourcc, payload_start, payload_end); RIFF sizes are LE
-    and payloads pad to even offsets."""
-    pos = start
+def _chunks(data: bytes, end: int):
+    """Yield (fourcc, payload_start, payload_end) of the chunks after the
+    12-byte RIFF/WEBP header; RIFF sizes are LE and payloads pad to even
+    offsets."""
+    pos = 12
     while pos < end:
         if pos + 8 > end:
             raise ValueError("truncated RIFF chunk header")
@@ -87,7 +88,7 @@ def parse_webp(content: bytes) -> dict:
         raise ValueError("not a WebP file (missing RIFF/WEBP header)")
     riff_end = min(len(content), 8 + struct.unpack("<I", content[4:8])[0])
     first = None
-    for four, b, e in _chunks(content, 12, riff_end):
+    for four, b, e in _chunks(content, riff_end):
         first = (four, b, e)
         break
     if first is None:
@@ -117,7 +118,7 @@ def parse_webp(content: bytes) -> dict:
     anim = bool(flags & _VP8X_ANIM)
     n_frames = 0 if anim else 1
     dur = 0
-    for c4, cb, ce in _chunks(content, 12, riff_end):
+    for c4, cb, ce in _chunks(content, riff_end):
         if c4 == b"ANMF":
             if ce - cb < 16:
                 raise ValueError("truncated ANMF chunk")

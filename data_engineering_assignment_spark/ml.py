@@ -85,19 +85,18 @@ def exact_accuracy(preds: DataFrame, label_col: str) -> float:
     return float(row["acc"])
 
 
-def cyclic_within(pred, label, modulus: int, tolerance: int = 1):
+def cyclic_within(pred, label, modulus: int):
     """P15/F14: boolean column — |pred−label| ≤ tol on the modular circle
     (months: Δ of 11 is distance 1; :962-977). Pure column arithmetic,
     shared by the ML evaluator and the oracle-gated catalog query."""
+    tolerance = 1
     diff = F.abs(pred - label)
     return (diff <= tolerance) | (diff >= modulus - tolerance)
 
 
-def cyclic_accuracy(
-    preds: DataFrame, label_col: str, modulus: int, tolerance: int = 1
-) -> float:
-    """M7: accuracy under cyclic label distance (:962-977)."""
-    ok = cyclic_within(F.col("prediction"), F.col(label_col), modulus, tolerance)
+def cyclic_accuracy(preds: DataFrame, label_col: str, modulus: int) -> float:
+    """M7: accuracy under cyclic label distance at most 1 (:962-977)."""
+    ok = cyclic_within(F.col("prediction"), F.col(label_col), modulus)
     row = preds.agg(F.avg(ok.cast("double")).alias("acc")).collect()[0]
     return float(row["acc"])
 
@@ -142,7 +141,7 @@ def classification_report(
         preds = preds.cache()
         acc = exact_accuracy(preds, label_col)
         cyc = (
-            cyclic_accuracy(preds, label_col, modulus, 1)
+            cyclic_accuracy(preds, label_col, modulus)
             if modulus is not None
             else acc
         )

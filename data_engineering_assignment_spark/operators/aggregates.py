@@ -58,16 +58,6 @@ def davg(col: Column | str, alias: str, scale: int = 6) -> Column:
     return dround(total / F.count(F.lit(1)), scale).alias(alias)
 
 
-def dratio(num: Column | str, den: Column | str, alias: str, scale: int = 2, pct: bool = False) -> Column:
-    """Ratio-of-sums (the reference's season pass-ratio semantics,
-    Assignment-python.py:386-388 — *not* avg-of-ratios, SURVEY.md Q4)."""
-    n = F.sum(_col(num).cast(DEC)).cast("double")
-    d = F.sum(_col(den).cast(DEC)).cast("double")
-    if pct:
-        n = n * F.lit(100.0)
-    return dround(n / d, scale).alias(alias)
-
-
 def cond_sum(cond: Column, alias: str) -> Column:
     """``SUM(CASE WHEN cond THEN 1 ELSE 0)`` — the reference's conditional
     count idiom (goal attribution, Assignment-python.py:174-177; win/draw/loss
@@ -85,13 +75,4 @@ def o_dsum(expr: str, alias: str) -> str:
 
 def o_davg(expr: str, alias: str, scale: int = 6) -> str:
     inner = f"SUM(CAST({expr} AS DECIMAL(27,6)))::DOUBLE / COUNT(*)"
-    return f"{o_dround(inner, scale)} AS {alias}"
-
-
-def o_dratio(num: str, den: str, alias: str, scale: int = 2, pct: bool = False) -> str:
-    mul = " * 100.0" if pct else ""
-    inner = (
-        f"SUM(CAST({num} AS DECIMAL(27,6)))::DOUBLE{mul} / "
-        f"SUM(CAST({den} AS DECIMAL(27,6)))::DOUBLE"
-    )
     return f"{o_dround(inner, scale)} AS {alias}"

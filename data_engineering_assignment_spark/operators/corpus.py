@@ -183,6 +183,7 @@ def paragraph_dedup_stats(df: DataFrame, size: int = 16) -> DataFrame:
     )
 
 
+DUP_SPAN_N = 8  # word n-gram width of the dup-span queries
 _PIDX_CAP = 1 << 20  # paragraph-index headroom in the integer argmin code
 
 
@@ -208,7 +209,7 @@ def paragraph_stream(df: DataFrame, size: int = 16) -> DataFrame:
     )
 
 
-def boilerplate_ngrams(df: DataFrame, n: int = 3, min_docs: int = 10) -> DataFrame:
+def boilerplate_ngrams(df: DataFrame, min_docs: int = 10) -> DataFrame:
     """CCNet-style boilerplate signal: per document, the fraction of its
     distinct word ``n``-grams that appear in ≥ ``min_docs`` documents
     corpus-wide (navigation chrome, license headers, templated text).
@@ -234,6 +235,7 @@ def boilerplate_ngrams(df: DataFrame, n: int = 3, min_docs: int = 10) -> DataFra
     output.
 
     Output: (id, n_shingles, n_boiler, boiler_ratio)."""
+    n = 3
     sh = (
         ensure_min_parallelism(df).select(
             F.col("doc_id").alias("doc"),
@@ -266,7 +268,7 @@ def boilerplate_ngrams(df: DataFrame, n: int = 3, min_docs: int = 10) -> DataFra
     )
 
 
-def dup_span_stats(df: DataFrame, n: int = 8) -> DataFrame:
+def dup_span_stats(df: DataFrame) -> DataFrame:
     """Exact-substring-dedup signal (the n-gram approximation of Lee et
     al. 2022's suffix-array dedup): per document, the fraction of its word
     ``n``-gram START POSITIONS whose shingle also appears in at least one
@@ -285,6 +287,7 @@ def dup_span_stats(df: DataFrame, n: int = 8) -> DataFrame:
     tokens have no positions and are absent from the output.
 
     Output: (id, n_positions, n_dup_positions, dup_ratio)."""
+    n = DUP_SPAN_N
     # token split LET-BOUND (word_shingles rationale): an inline `toks`
     # inside the lambda re-splits the text once per position
     sh_pos = F.get(
@@ -422,7 +425,6 @@ def hybrid_rrf(
     docs: DataFrame,
     embeddings: DataFrame,
     terms: list[str],
-    query_vec_id: int = 0,
     k_each: int = 20,
     k: int = 10,
 ) -> DataFrame:
@@ -446,6 +448,7 @@ def hybrid_rrf(
     """
     from .similarity import cosine_topk
 
+    query_vec_id = 0
     lex = bm25_topk(docs, terms, k=k_each).select(
         F.col("doc_id").alias("_id"), F.col("rank").alias("r_lex")
     )
@@ -520,11 +523,7 @@ def build_vocab(df: DataFrame, top_v: int = 64) -> DataFrame:
     counts = td.groupBy("token").agg(
         F.sum("_c").alias("n_occ"), F.count(F.lit(1)).alias("n_docs")
     )
-    cand = (
-        counts.filter(F.col("n_occ") >= 1)
-        .orderBy(F.desc("n_occ"), F.asc("token"))
-        .limit(top_v)
-    )
+    cand = counts.orderBy(F.desc("n_occ"), F.asc("token")).limit(top_v)
     w = Window.orderBy(F.desc("n_occ"), F.asc("token"))
     return cand.select(
         (F.row_number().over(w).cast("long") - 1).alias("token_id"),
@@ -611,7 +610,7 @@ def bpe_train(df: DataFrame, k: int = 8, return_state: bool = False):
     deterministic (n DESC, lhs ASC, rhs ASC) order; (3) merge that pair in
     every word's symbol sequence left-to-right non-overlapping
     (``_merge_adjacent``); (4) ``localCheckpoint`` the new state so lineage
-    stays flat across iterations (the dedup_clusters discipline).
+    stays flat across iterations (the cc_star discipline).
 
     Scale shape: the corpus is touched exactly ONCE (the word-frequency
     aggregation); all ``k`` iterations run on the BOUNDED distinct-word

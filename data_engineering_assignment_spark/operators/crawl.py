@@ -221,11 +221,7 @@ def pdf_extract(df: DataFrame) -> DataFrame:
     return df.mapInPandas(mapper, out_schema)
 
 
-def document_extract(
-    df: DataFrame,
-    body_col: str = "http_body",
-    content_type_col: str | None = None,
-) -> DataFrame:
+def document_extract(df: DataFrame, content_type_col: str | None = None) -> DataFrame:
     """Content-Type-dispatched text extraction — ONE operator a crawl
     pipeline points at its mixed-payload record stream: routes each row
     to the HTML extractor (``functions.html.parse_html``, charset-aware
@@ -265,6 +261,7 @@ def document_extract(
     from ..functions.html import decode_html_bytes, parse_html
     from ..functions.pdf import pdf_text
 
+    body_col = "http_body"
     doc_struct = StructType(
         [
             StructField("text", StringType()),
@@ -366,11 +363,6 @@ def with_url_parts(
         F.try_parse_url(u, F.lit("PATH")).alias(f"{prefix}path"),
         F.try_parse_url(u, F.lit("QUERY")).alias(f"{prefix}query"),
     )
-
-
-def url_query_param(url_col: str, key: str) -> Column:
-    """The value of one query parameter (JVM parse_url 3-arg form)."""
-    return F.try_parse_url(F.col(url_col), F.lit("QUERY"), F.lit(key))
 
 
 _TRACKING_PARAMS = ("fbclid", "gclid", "msclkid", "mc_eid")
@@ -604,7 +596,7 @@ def resolved_url_col(base, ref):
 MAX_REDIRECT_HOPS = 16  # longest chain resolve_redirects follows
 
 
-def resolve_redirects(df: DataFrame, url_col: str = "target_uri") -> DataFrame:
+def resolve_redirects(df: DataFrame) -> DataFrame:
     """Resolve HTTP redirect chains to their terminal URLs — the frontier
     step between capture and canonical page identity (a crawl that stores
     ``/old -> 301 -> /new`` must credit content, links and dedup to the
@@ -646,6 +638,7 @@ def resolve_redirects(df: DataFrame, url_col: str = "target_uri") -> DataFrame:
     """
     import math
 
+    url_col = "target_uri"
     u = F.col(url_col)
     is_redirect = (
         F.col("http_status").between(300, 399) & F.col("http_location").isNotNull()
@@ -1330,7 +1323,7 @@ def registered_domain(df: DataFrame) -> DataFrame:
     ).drop("_rd_host")
 
 
-def recrawl_schedule(diff: DataFrame, max_interval_s: int = 30 * 86400) -> DataFrame:
+def recrawl_schedule(diff: DataFrame) -> DataFrame:
     """Adaptive revisit intervals from a :func:`cdx_snapshot_diff`
     result — the classic multiplicative refresh policy (Cho &
     Garcia-Molina 2003 incremental-crawler shape): pages that CHANGED
@@ -1342,6 +1335,7 @@ def recrawl_schedule(diff: DataFrame, max_interval_s: int = 30 * 86400) -> DataF
     behaves as one day. Appends ``next_interval_s``; all long floor division —
     SQL-replayable, zero float surface, one stateless column map (the
     scale cost is wherever the diff came from)."""
+    max_interval_s = 172800
     prior = F.coalesce(F.col("prior_interval_s"), F.lit(86400)).cast("long")
     nxt = (
         F.when(
@@ -1392,7 +1386,7 @@ def robots_sitemaps(robots: DataFrame) -> DataFrame:
     return robots.mapInPandas(mapper, schema)
 
 
-def robots_delays(robots: DataFrame, agent: str) -> DataFrame:
+def robots_delays(robots: DataFrame) -> DataFrame:
     """Per-host ``Crawl-delay`` seconds for ``agent`` — one row per
     input host, ``crawl_delay_s`` NULL when the host declares none (or
     its robots.txt fails to parse): the politeness interval table a
@@ -1403,6 +1397,7 @@ def robots_delays(robots: DataFrame, agent: str) -> DataFrame:
 
     from ..functions.robots import crawl_delay
 
+    agent = "graft"
     schema = "url_host string, crawl_delay_s int"
 
     def mapper(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1545,15 +1540,9 @@ def cdx_snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     return j.select("urlkey", "old_digest", "new_digest", change.alias("change"))
 
 
-def filter_blocked_hosts(df: DataFrame, blocklist: DataFrame | list[str]) -> DataFrame:
-    """Drop rows whose host is on a blocklist — broadcast LEFT ANTI on
-    the (small, bounded) blocked set; the page corpus is never shuffled
-    or broadcast. Accepts a one-column DataFrame or a literal list."""
-    if isinstance(blocklist, list):
-        spark = df.sparkSession
-        blocked = spark.createDataFrame(
-            [(h,) for h in blocklist], "url_host string"
-        )
-    else:
-        blocked = blocklist.toDF("url_host")
+def filter_blocked_hosts(df: DataFrame) -> DataFrame:
+    """Drop rows whose host is on the blocklist (``s0.example``) —
+    broadcast LEFT ANTI on the (small, bounded) blocked set; the page
+    corpus is never shuffled or broadcast."""
+    blocked = df.sparkSession.createDataFrame([("s0.example",)], "url_host string")
     return df.join(F.broadcast(blocked), "url_host", "left_anti")

@@ -145,9 +145,7 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", num_hashes: int = 32
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, num_hashes: int = 32) -> DataFrame:
     """Per-document MinHash signature columns h0..h{k-1}.
 
     Shape: explode shingles once, then ONE hash aggregation computing all k
@@ -157,6 +155,8 @@ def minhash_signatures(
     times and blows up codegen — this relational shape is also the one that
     scales: one shuffle keyed by doc id.)
     """
+    text_col = "text"
+    id_col = "doc_id"
     df = ensure_min_parallelism(df)
     sh = df.select(
         F.col(id_col).alias("doc"), F.explode(word_shingles(text_col)).alias("shingle")
@@ -188,7 +188,7 @@ def minhash_lsh_candidates(
     NOT worth it: 5× false-positive candidates at the same cost.
     """
     rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, "text", "doc_id", num_hashes)
+    sigs = minhash_signatures(df, num_hashes)
     banded = sigs.select(
         "doc",
         F.explode(
@@ -478,12 +478,7 @@ def jaccard_prefix_join(df: DataFrame, threshold: float = 0.5, n: int = 3) -> Da
     )
 
 
-def simhash_hamming_census(
-    fps: DataFrame,
-    bits: int = 31,
-    bands: int = 3,
-    radius: int = 2,
-) -> DataFrame:
+def simhash_hamming_census(fps: DataFrame) -> DataFrame:
     """Per-distance census of Hamming-ball pairs: (hamming, n_pairs) for
     every distance <= ``radius`` that occurs, exact.
 
@@ -507,6 +502,9 @@ def simhash_hamming_census(
     the multiplicities ride the banded table as payload, so no weight
     back-joins.
     """
+    bits = 31
+    bands = 2
+    radius = 1
     cnt = fps.groupBy("simhash31").agg(F.count(F.lit(1)).alias("_c")).localCheckpoint(
         eager=True
     )
@@ -548,68 +546,6 @@ def keep_best(
     return out.select(*keep_cols) if keep_cols else out.drop("_rn")
 
 
-CLUSTER_ROUNDS = 10  # label-propagation rounds dedup_clusters may run
-
-
-def dedup_clusters(pairs: DataFrame) -> DataFrame:
-    """Connected components over candidate-pair edges → (node, cluster) with
-    cluster = min node id of the component.
-
-    Iterative min-label propagation (the GraphX/GraphFrames CC algorithm on
-    plain DataFrames): each round every node takes the minimum label in its
-    neighborhood; converges in O(diameter) rounds — near-dup clusters are
-    tiny, so 2-3 rounds in practice. Each round is one shuffle join; lineage
-    is truncated with localCheckpoint so plans stay bounded. A node
-    ``CLUSTER_ROUNDS`` or more hops from its component's minimum id still
-    changes label in the last round; that raises ``RuntimeError`` rather
-    than returning wrong clusters.
-    """
-    sym = pairs.select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
-    ).union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-    edges = sym.distinct().localCheckpoint(eager=True)
-    labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(CLUSTER_ROUNDS):
-        neigh_min = (
-            edges.join(labels.withColumnRenamed("node", "dst"), on="dst")
-            .groupBy("src")
-            .agg(F.min("label").alias("neigh_label"))
-            .withColumnRenamed("src", "node")
-        )
-        new_labels = (
-            labels.join(neigh_min, on="node", how="left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("neigh_label"), F.col("label"))
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), on="node")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # a label still moved in the last round, so some node may not hold
-        # its component's minimum yet: the clusters would be silently WRONG
-        raise RuntimeError(
-            f"dedup_clusters: labels still changing after {CLUSTER_ROUNDS} "
-            "rounds (a node is too many hops from its component's minimum)"
-        )
-    return labels.select("node", F.col("label").alias("cluster"))
-
-
 def simhash64(df: DataFrame) -> DataFrame:
     """64-bit SimHash of the token stream (JVM-side bit accumulation).
 
@@ -648,9 +584,7 @@ def _portable_perm(i: int, rh: F.Column) -> F.Column:
     return (F.lit(2 * i + 1) * rh + F.lit(7919 * i + 13)) % PORTABLE_MOD
 
 
-def minhash_signatures_portable(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", num_hashes: int = 12
-) -> DataFrame:
+def minhash_signatures_portable(df: DataFrame, num_hashes: int = 12) -> DataFrame:
     """MinHash signatures over k affine permutations of the portable rolling
     hash — same one-shuffle shape as :func:`minhash_signatures`, but every
     value has an exact SQL twin, so the whole LSH pipeline can be gated by
@@ -659,6 +593,8 @@ def minhash_signatures_portable(
     """
     from .text import shingle_hash_stream
 
+    text_col = "text"
+    id_col = "doc_id"
     df = ensure_min_parallelism(df)
     # composed shingle hashes (no shingle strings, one char fold per doc —
     # text.shingle_hash_stream); values equal rolling_hash(shingle), so
@@ -671,18 +607,16 @@ def minhash_signatures_portable(
     )
 
 
-def minhash_lsh_candidates_portable(
-    df: DataFrame,
-    num_hashes: int = 12,
-    bands: int = 4,
-) -> DataFrame:
+def minhash_lsh_candidates_portable(df: DataFrame) -> DataFrame:
     """LSH candidate pairs from portable signatures. Band buckets are the
     comma-joined slice values (a plain string both engines build identically)
     rather than an engine hash. Output: (doc_a, doc_b, n_bands), doc_a <
     doc_b — deterministic, so it is oracle-gated end to end.
     """
+    num_hashes = 12
+    bands = 4
     rows_per_band = num_hashes // bands
-    sigs = minhash_signatures_portable(df, "text", "doc_id", num_hashes)
+    sigs = minhash_signatures_portable(df, num_hashes)
     banded = sigs.select(
         "doc",
         F.explode(

@@ -38,6 +38,7 @@ PR_SCALE = 10**12  # pagerank_integer's fixed-point rank of 1.0
 PR_DAMP_NUM, PR_DAMP_DEN = 17, 20  # damping 0.85 as an exact ratio
 HITS_SCALE = 10**6  # hits_integer's fixed-point maximum hub/auth score
 CHECKPOINT_EVERY = 4  # loop rounds between lineage cuts
+MIN_PAIR_COUNT = 2  # order baskets two parts share to be co-purchase neighbours
 
 
 def copurchase_edges(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
@@ -48,7 +49,7 @@ def copurchase_edges(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     customer key*2, supplier key*2+1 — so every shuffle/join/aggregate in
     the downstream iteration runs on fixed-width longs; decode to the
     'c<key>'/'s<key>' labels only on the bounded final output
-    (:func:`decode_copurchase_node`). String keys measured ~2x slower
+    (``copurchase_pagerank``). String keys measured ~2x slower
     across the edge-build distinct + iteration joins at sf0.1.
     """
     return (
@@ -61,21 +62,9 @@ def copurchase_edges(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     )
 
 
-def decode_copurchase_node(node) -> F.Column:
-    """'c<key>' / 's<key>' label of a packed co-purchase node id."""
-    c = F.col(node) if isinstance(node, str) else node
-    # shiftright, not (c/2).cast: the long->double detour rounds past 2^53
-    # (CLAUDE.md argmin-decode invariant); shift stays exact at any key
-    return F.when(
-        c % 2 == 0, F.concat(F.lit("c"), F.shiftright(c, 1))
-    ).otherwise(F.concat(F.lit("s"), F.shiftright(c, 1)))
-
-
-def part_pair_edges(
-    lineitem: DataFrame, min_pair_count: int = 2, keep_count: bool = False
-) -> DataFrame:
+def part_pair_edges(lineitem: DataFrame, keep_count: bool = False) -> DataFrame:
     """Undirected part co-purchase edges (u < v): parts sharing >=
-    ``min_pair_count`` order baskets. In-row pair enumeration — see
+    :data:`MIN_PAIR_COUNT` order baskets. In-row pair enumeration — see
     operators.affinity for the no-self-join rationale. With
     ``keep_count`` the basket count survives as ``pair_cnt`` (weighted
     consumers: :func:`sssp_rounds` affinity distances)."""
@@ -86,7 +75,7 @@ def part_pair_edges(
         .select(F.explode(_pair_structs(F.col("items"))).alias("pr"))
         .groupBy(F.col("pr.p1").alias("u"), F.col("pr.p2").alias("v"))
         .agg(F.count(F.lit(1)).alias("pair_cnt"))
-        .where(F.col("pair_cnt") >= min_pair_count)
+        .where(F.col("pair_cnt") >= MIN_PAIR_COUNT)
     )
     return pairs if keep_count else pairs.select("u", "v")
 
@@ -270,7 +259,7 @@ def cc_star(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     """Connected components by alternating large-star / small-star rounds
     (Kiveris et al. 2014, "Connected Components in MapReduce and Beyond")
     → (node, cluster) with cluster = min node id of the component — the
-    same contract as :func:`operators.dedup.dedup_clusters`.
+    one connected-components operator of the dedup queries.
 
     Min-label propagation converges in O(component diameter) shuffle
     rounds — fine for near-dup clusters (diameter 2-3), quadratic-wall on

@@ -42,14 +42,12 @@ def image_hashes(df: DataFrame) -> DataFrame:
     )
 
 
-def image_phash_pairs(
-    hashes: DataFrame,
-    radius: int = 2,
-    bands: int = 3,
-) -> DataFrame:
+def image_phash_pairs(hashes: DataFrame) -> DataFrame:
     """EXACT Hamming-ball near-duplicate image pairs over 63-bit pHashes
     (doc_a, doc_b, hamming), hamming <= radius, doc_a < doc_b. Delegates
     to the proven SimHash band machinery with bits=63."""
+    radius = 2
+    bands = 3
     return simhash_band_pairs(
         hashes.filter("parse_ok").select("doc_id", "phash"),
         bits=63,
@@ -74,14 +72,12 @@ def audio_hashes(df: DataFrame) -> DataFrame:
     )
 
 
-def audio_phash_pairs(
-    hashes: DataFrame,
-    radius: int = 2,
-    bands: int = 3,
-) -> DataFrame:
+def audio_phash_pairs(hashes: DataFrame) -> DataFrame:
     """EXACT Hamming-ball near-duplicate audio pairs over 63-bit aphash
     fingerprints (doc_a, doc_b, hamming) — same banded machinery as
     :func:`image_phash_pairs`."""
+    radius = 2
+    bands = 3
     return simhash_band_pairs(
         hashes.filter("parse_ok").select("doc_id", "aphash"),
         bits=63,
@@ -130,17 +126,13 @@ def video_dup_pairs(hashes: DataFrame) -> DataFrame:
     return pairs.select("p.doc_a", "p.doc_b")
 
 
-def _band_explode(
-    fps: DataFrame,
-    bits: int,
-    bands: int,
-    id_col: str,
-    fp_col: str,
-) -> DataFrame:
+def _band_explode(fps: DataFrame, bits: int, bands: int) -> DataFrame:
     """(id, fp, band, bucket) — the simhash_band_pairs bit-band split
     for CROSS-table candidate joins (delta vs corpus)."""
     from pyspark.sql import functions as F
 
+    id_col = "doc_id"
+    fp_col = "phash"
     base, rem = divmod(bits, bands)
     widths = [base + 1 if b < rem else base for b in range(bands)]
     offsets = [sum(widths[:b]) for b in range(bands)]
@@ -169,7 +161,6 @@ def incremental_image_dedup(
     corpus_hashes: DataFrame,
     delta_hashes: DataFrame,
     radius: int = 2,
-    bands: int = 3,
 ) -> DataFrame:
     """Daily-ingest image dedup: judge a DELTA batch of fingerprints
     against the STANDING corpus — (doc_id, n_dups, best_hamming, status)
@@ -187,14 +178,15 @@ def incremental_image_dedup(
     O(corpus scan + batch). One bit_count(xor) verifies candidates."""
     from pyspark.sql import functions as F
 
+    bands = 3
     if bands < radius + 1:
         raise ValueError("bands must be >= radius + 1 for exact recall")
     bits = 63
     delta_all = delta_hashes.select("doc_id", "parse_ok")
     delta = delta_hashes.filter("parse_ok").select("doc_id", "phash")
     corpus = corpus_hashes.filter("parse_ok").select("doc_id", "phash")
-    db = _band_explode(delta, bits, bands, "doc_id", "phash")
-    cb = _band_explode(corpus, bits, bands, "doc_id", "phash")
+    db = _band_explode(delta, bits, bands)
+    cb = _band_explode(corpus, bits, bands)
     cand = (
         cb.join(
             F.broadcast(db.select(

@@ -29,14 +29,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def blocked_name_linkage(
-    df: DataFrame,
-    name_col: str,
-    max_block: int | None = 1000,
-) -> DataFrame:
+def blocked_name_linkage(df: DataFrame, max_block: int | None = 1000) -> DataFrame:
     """(name_a, name_b, dist, n_rows_a, n_rows_b), name_a < name_b —
     distinct values of ``name_col`` within edit distance 2,
     candidates blocked by the value's last whitespace token."""
+    name_col = "p_name"
     vocab = df.groupBy(F.col(name_col).alias("name")).agg(
         F.count(F.lit(1)).alias("n_rows")
     )

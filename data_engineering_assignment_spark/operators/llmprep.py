@@ -35,30 +35,26 @@ EMAIL_PATTERN = r"[A-Za-z0-9._]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PHONE_PATTERN = r"\b555-[0-9]{2,8}\b"
 
 
-def hash_bucket(text_col: Column | str) -> Column:
+def hash_bucket() -> Column:
     """Deterministic [0, 100) bucket from document content — the
     reproducible substitute for ``rand()`` sampling: the same document lands
-    in the same bucket on every engine, every run, every partitioning."""
-    return rolling_hash(text_col) % 100
+    in the same bucket on every engine, every run, every partitioning.
+    Reads ``text``."""
+    return rolling_hash("text") % 100
 
 
 def hash_sample(df: DataFrame, rate_pct: int) -> DataFrame:
     """Keep ~rate_pct% of rows by content-hash bucket (narrow, no shuffle)."""
-    return df.filter(hash_bucket("text") < rate_pct)
+    return df.filter(hash_bucket() < rate_pct)
 
 
-def capped_per_key_sample(
-    df: DataFrame,
-    key_col: str,
-    hash_col: str,
-    cap: int,
-) -> DataFrame:
+def capped_per_key_sample(df: DataFrame, key_col: str, cap: int) -> DataFrame:
     """Keep at most ``cap`` rows per key, chosen as the rows with the
-    smallest values of ``hash_col`` — the per-DOMAIN contribution cap
+    smallest values of ``h`` — the per-DOMAIN contribution cap
     every production corpus applies (C4/Dolma bound how much one host
     contributes) as a deterministic function of content, not a random
     sample: the same rows survive on every engine, every run, every
-    partitioning. ``hash_col`` is a caller-computed deterministic order
+    partitioning. ``h`` is a caller-computed deterministic order
     value (``sketches.id_hash`` for integer ids, ``text.rolling_hash``
     for strings).
 
@@ -73,6 +69,7 @@ def capped_per_key_sample(
     boundary hash collision cannot diverge engines)."""
     from .quantiles import rank_values_pruned
 
+    hash_col = "h"
     kth = rank_values_pruned(
         df.select(key_col, hash_col),
         hash_col,
@@ -104,7 +101,7 @@ def mix_sources(
     a rates table too large for a literal map would want that join back.)"""
     mapping = F.create_map(*[F.lit(x) for kv in rates.items() for x in kv])
     rate = F.coalesce(mapping[F.col("source")], F.lit(default_pct))
-    return df.filter(hash_bucket("text") < rate)
+    return df.filter(hash_bucket() < rate)
 
 
 def token_budget_sample(
@@ -211,7 +208,7 @@ def token_budget_sample(
     )
 
 
-def decontaminate(train: DataFrame, benchmark: DataFrame, n: int = 5) -> DataFrame:
+def decontaminate(train: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark decontamination: train docs sharing any word ``n``-gram with
     the benchmark set → (doc_id, n_shared_shingles). Both sides stream the
     shingle's PORTABLE rolling hash (text.shingle_hash_stream — one char
@@ -225,6 +222,7 @@ def decontaminate(train: DataFrame, benchmark: DataFrame, n: int = 5) -> DataFra
     from .parallelism import ensure_min_parallelism
     from .text import shingle_hash_stream
 
+    n = 5
     t_sh = shingle_hash_stream(ensure_min_parallelism(train), n=n).withColumnRenamed(
         "doc_id", "doc"
     )
@@ -348,10 +346,7 @@ def gopher_quality_flags(df: DataFrame) -> DataFrame:
 
 
 def pack_sequences(
-    df: DataFrame,
-    capacity: int,
-    group_col: str = "lang",
-    shards_per_group: int | None = None,
+    df: DataFrame, capacity: int, shards_per_group: int | None = None
 ) -> DataFrame:
     """Contiguous sequence packing: within each group (ordered
     deterministically), assign docs to fixed-capacity packs by running token
@@ -373,6 +368,7 @@ def pack_sequences(
     Oversized docs (> capacity) still get a pack of their own rather than
     being dropped — filter upstream if truncation is the policy.
     """
+    group_col = "lang"
     n_tok = F.size(tokens("text")).cast("long")
     with_tok = df.withColumn("n_tokens", n_tok)
     part_cols: list = [group_col]
@@ -600,7 +596,7 @@ def intra_doc_repetition(df: DataFrame, para_tokens: int = 16) -> DataFrame:
     )
 
 
-def quality_percentile_gate(df: DataFrame, keep_pct: int = 80) -> DataFrame:
+def quality_percentile_gate(df: DataFrame) -> DataFrame:
     """Per-group percentile quality gate: within each ``source``, keep the
     top ``keep_pct``% of documents by ``quality`` score. The cut is pure
     integer arithmetic — ``n_kept = (n * keep_pct) div 100`` — never a
@@ -643,6 +639,7 @@ def quality_percentile_gate(df: DataFrame, keep_pct: int = 80) -> DataFrame:
     uncontended). The resolve join on ``_qb`` drops NULL rows for free
     (equi-join never matches NULL). Output: (source, n_docs, n_kept,
     min_kept_quality)."""
+    keep_pct = 80
     bw = F.lit(0.01)
     e = df.select(
         F.col("source").alias("_g"),
@@ -865,7 +862,7 @@ def hashed_multiclass_scores(
         for c in classes
     }
     if features == "char":
-        stream = char_shingle_hash_stream(df, ns=(2, 3))
+        stream = char_shingle_hash_stream(df)
         bucket = (F.col("rh") % n + 1).cast("int")
         scored = stream.select(
             "doc_id",

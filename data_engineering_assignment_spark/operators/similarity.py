@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 SIM_SCALE = 4  # decimal places every reported cosine similarity keeps
 PQ_DIST_SCALE = 6  # decimal places of the PQ / IVF-PQ approximate distances
+INC_DUP_COSINE = 0.4  # incremental_semantic_dedup counts corpus rows at or above it
 
 
 def _fold_sum(arr: Column) -> Column:
@@ -246,9 +247,9 @@ def _normed(m):
     return m / np.where(n == 0, 1.0, n)
 
 
-def _cell_mapper(b_cents, n_cells: int):
-    """mapInPandas factory: append the ``n_cells`` nearest-centroid indices
-    (cosine, best first) to each row of (id, vec) batches."""
+def _cell_mapper(b_cents):
+    """mapInPandas factory: append the nearest-centroid index (cosine; the
+    first of tied centroids) to each row of (id, vec) batches."""
     import numpy as np
 
     def mapper(batches):
@@ -256,10 +257,7 @@ def _cell_mapper(b_cents, n_cells: int):
         for pdf in batches:
             block = np.array(pdf["vec"].tolist(), dtype=np.float64)
             sims = _normed(block) @ cmat.T
-            cells = np.argsort(-sims, axis=1)[:, :n_cells]
-            out = pdf.loc[pdf.index.repeat(n_cells)].reset_index(drop=True)
-            out["cell"] = cells.reshape(-1)
-            yield out
+            yield pdf.assign(cell=np.argsort(-sims, axis=1)[:, 0])
 
     return mapper
 
@@ -329,7 +327,7 @@ def kmeans_centroids(corpus: DataFrame, n_centroids: int = 16, n_iter: int = 2):
     cents = _farthest_point_seeds(prep, n_centroids)
     for _ in range(n_iter):
         b = spark.sparkContext.broadcast(cents)
-        assigned = prep.mapInPandas(_cell_mapper(b, 1), _VEC_SCHEMA)
+        assigned = prep.mapInPandas(_cell_mapper(b), _VEC_SCHEMA)
         stats = (
             assigned.select("cell", F.posexplode("vec").alias("pos", "val"))
             .groupBy("cell", "pos")
@@ -494,7 +492,7 @@ def semantic_dup_pairs(
     else:
         cents = _seed_centroids(c_prep, n_centroids)
     b_cents = spark.sparkContext.broadcast(cents)
-    assigned = c_prep.mapInPandas(_cell_mapper(b_cents, 1), _VEC_SCHEMA)
+    assigned = c_prep.mapInPandas(_cell_mapper(b_cents), _VEC_SCHEMA)
     return assigned.groupBy("cell").applyInPandas(
         _cell_pair_scanner(threshold, SIM_SCALE),
         "id_a bigint, id_b bigint, cell int, sim double",
@@ -544,7 +542,7 @@ def hierarchical_cells(
     cents1 = kmeans_centroids(corpus, n_coarse, n_iter)
     b1 = corpus.sparkSession.sparkContext.broadcast(cents1)
     assigned1 = (
-        prep.mapInPandas(_cell_mapper(b1, 1), _VEC_SCHEMA)
+        prep.mapInPandas(_cell_mapper(b1), _VEC_SCHEMA)
         .withColumnRenamed("cell", "cell1")
         # EAGER (a lazy flip was tried in r16 and reverted: the multiple
         # same-action consumers race to compute unpersisted partitions —
@@ -844,7 +842,6 @@ def semantic_dup_pairs_portable(
 def incremental_semantic_dedup(
     corpus: DataFrame,
     delta: DataFrame,
-    threshold: float = 0.4,
     n_centroids: int = 16,
 ) -> DataFrame:
     """Incremental (delta-batch) semantic dedup — the embedding-modality
@@ -866,7 +863,8 @@ def incremental_semantic_dedup(
     Output per delta row: (vec_id, cell, best_sim, n_dups, status) —
     best_sim = max rounded same-cell cosine vs the corpus (NULL when the
     cell holds no corpus rows), n_dups = same-cell corpus rows at or
-    above ``threshold``, status = 'dup'/'novel'. All tie-invariant.
+    above :data:`INC_DUP_COSINE`, status = 'dup'/'novel'. All
+    tie-invariant.
     """
     cells_c = portable_cells(corpus, n_centroids)
     cells_d = portable_cells(
@@ -880,7 +878,7 @@ def incremental_semantic_dedup(
     )
     agg = scored.groupBy("id").agg(
         F.max("sim").alias("best_sim"),
-        F.sum((F.col("sim") >= threshold).cast("long")).alias("n_dups"),
+        F.sum((F.col("sim") >= INC_DUP_COSINE).cast("long")).alias("n_dups"),
     )
     return (
         cells_d.select("id", "cell")
@@ -1069,8 +1067,8 @@ def pq_topk_portable(
     # small-file scale — r16 measured it as ~1.5 s of the query's build
     # phase); repartitioning the raw scan makes the checkpointed
     # normalize itself run wide
-    c_prep = _pq_prep(ensure_min_parallelism(corpus), "vec_id", "embedding")
-    q_prep = _pq_prep(queries, "vec_id", "embedding")
+    c_prep = _pq_prep(ensure_min_parallelism(corpus))
+    q_prep = _pq_prep(queries)
     FLAT = _pq_flat_codebook(c_prep, n_codes)
     codes = _pq_encode(c_prep, FLAT, m, dim, n_codes)
     scored = (
@@ -1085,8 +1083,10 @@ def pq_topk_portable(
     return _pq_rank(scored, k, PQ_DIST_SCALE)
 
 
-def _pq_prep(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def _pq_prep(df: DataFrame) -> DataFrame:
     """Normalize + checkpoint a vector frame for the PQ twins."""
+    id_col = "vec_id"
+    vec_col = "embedding"
     e = F.col(vec_col).cast("array<double>")
     nrm = F.sqrt(_fold_sum(F.transform(e, lambda x: x * x)))
     # LET-BIND the norm (single-element transform: a lambda variable is a
@@ -1277,8 +1277,8 @@ def ivfpq_topk_portable(
     # small-file scale — r16 measured it as ~1.5 s of the query's build
     # phase); repartitioning the raw scan makes the checkpointed
     # normalize itself run wide
-    c_prep = _pq_prep(ensure_min_parallelism(corpus), "vec_id", "embedding")
-    q_prep = _pq_prep(queries, "vec_id", "embedding")
+    c_prep = _pq_prep(ensure_min_parallelism(corpus))
+    q_prep = _pq_prep(queries)
 
     h = (F.col("id") * F.lit(2654435761)) % F.lit(4294967296)
     seeds = (

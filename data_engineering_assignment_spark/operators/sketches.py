@@ -39,7 +39,6 @@ def cms_bucket(rh: Column, i: int, width: int) -> Column:
 
 def cms_sketch(
     df: DataFrame,
-    item_col: str,
     depth: int = 4,
     width: int = 256,
     weight_col: str | None = None,
@@ -51,6 +50,7 @@ def cms_sketch(
     """
     from .text import rolling_hash
 
+    item_col = "tok"
     w = F.col(weight_col).cast("long") if weight_col else F.lit(1).cast("long")
     rh = rolling_hash(item_col)
     probes = df.select(
@@ -155,7 +155,6 @@ def bloom_maybe_contains(
 def cms_estimate(
     sketch: DataFrame,
     items: DataFrame,
-    item_col: str,
     depth: int = 4,
     width: int = 256,
 ) -> DataFrame:
@@ -167,6 +166,7 @@ def cms_estimate(
     """
     from .text import rolling_hash
 
+    item_col = "tok"
     rh = rolling_hash(item_col)
     probes = items.select(
         "*",
@@ -270,12 +270,13 @@ def kmv_kth_hash(
     return out
 
 
-def kmv_estimate(kth_hash_col: str, k: int) -> Column:
+def kmv_estimate(k: int) -> Column:
     """Distinct-count estimate from the k-th smallest hash — exact integer
     arithmetic (``(k-1) * M div h_(k)``; true integer ``div``, never a
     double divide + cast, which rounds across integer boundaries — the
     CLAUDE.md shiftright invariant's sibling), so the oracle's ``//`` twin
     is bit-exact."""
+    kth_hash_col = "kth_hash"
     num = (k - 1) * PORTABLE_MOD
     return F.when(
         F.col(kth_hash_col).isNotNull(),
@@ -559,13 +560,7 @@ def _qdigest_apply(df: DataFrame, group_cols, k: int, bits: int) -> DataFrame:
     return out if grouped else out.drop("_g")
 
 
-def qdigest_build(
-    df: DataFrame,
-    value_col: str,
-    k: int = 2048,
-    bits: int = 16,
-    group_cols=None,
-) -> DataFrame:
+def qdigest_build(df: DataFrame, k: int = 2048, bits: int = 16, group_cols=None) -> DataFrame:
     """Build per-group q-digests over an INTEGER column already mapped
     into [0, 2^bits) (the caller owns the value mapping — e.g. cents =
     floor(value * 100), an IEEE-exact double op). Output: group cols +
@@ -576,6 +571,7 @@ def qdigest_build(
     most 2^bits rows per group no matter how many input rows); the
     sweep then runs per group on that bounded table. Values outside
     the universe RAISE (never silently clamp)."""
+    value_col = "v"
     gcols = list(group_cols or [])
     v = F.col(value_col).cast("long")
     leaves = (

@@ -25,40 +25,28 @@ def tokens(text: Column | str) -> Column:
     return F.split(c, " ")
 
 
-def token_count(text: Column | str) -> Column:
-    return F.size(tokens(text)).cast("long")
+def token_count() -> Column:
+    """Number of whitespace tokens of ``text``."""
+    return F.size(tokens("text")).cast("long")
 
 
-def stopword_ratio(text: Column | str) -> Column:
-    """Fraction of tokens that are stopwords (language-ID signal).
+def stopword_ratio() -> Column:
+    """Fraction of the tokens of ``text`` that are stopwords (language-ID
+    signal).
 
     dround, not plain F.round: these ratios feed oracle-gated queries, and
     integer quotients land on exact .xxxx5 midpoints where Spark's
     round-exact-binary diverges from DuckDB's multiply-then-round.
     """
-    toks = tokens(text)
+    toks = tokens("text")
     stops = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS))).cast("double")
     return dround(stops / F.size(toks).cast("double"), 4)
 
 
-def quality_score(text: Column | str) -> Column:
-    """Deterministic [0,1] quality heuristic: length credit × stopword credit.
-
-    Mirrors the shape of production quality filters (length / stopword-density
-    gates); arithmetic kept to exact double ops so a SQL oracle reproduces it.
-    """
-    tc = token_count(text).cast("double")
-    sr = stopword_ratio(text)
-    length_credit = F.least(F.lit(1.0), tc / F.lit(100.0))
-    stop_credit = F.least(F.lit(1.0), sr * F.lit(10.0))
-    # products of rounded decimals land on exact .xxxx5 midpoints; dround
-    # keeps Spark and SQL oracles bit-identical there
-    return dround(length_credit * stop_credit, 4)
-
-
-def predict_lang(text: Column | str) -> Column:
-    """N-gram-free language ID heuristic: English iff stopword density high."""
-    return F.when(stopword_ratio(text) >= 0.05, F.lit("en")).otherwise(F.lit("unk"))
+def predict_lang() -> Column:
+    """N-gram-free language ID heuristic over ``text``: English iff
+    stopword density high."""
+    return F.when(stopword_ratio() >= 0.05, F.lit("en")).otherwise(F.lit("unk"))
 
 
 def fingerprint(text: Column | str) -> Column:
@@ -73,10 +61,9 @@ def fingerprint(text: Column | str) -> Column:
 BPE_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-def regex_tokens(text: Column | str) -> Column:
-    """Regex (BPE-ish) tokens — JVM-side regexp_extract_all."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.regexp_extract_all(c, F.lit(BPE_PATTERN), 0)
+def regex_tokens() -> Column:
+    """Regex (BPE-ish) tokens of ``text`` — JVM-side regexp_extract_all."""
+    return F.regexp_extract_all(F.col("text"), F.lit(BPE_PATTERN), 0)
 
 
 ROLLING_BASE = 31
@@ -251,7 +238,7 @@ def multi_shingle_hash_stream(
     return step1.select(*id_cols, F.explode(out).alias("rh"))
 
 
-def char_shingle_hash_stream(df: DataFrame, ns: tuple[int, ...]) -> DataFrame:
+def char_shingle_hash_stream(df: DataFrame) -> DataFrame:
     """Character n-gram hash stream — the unsegmented-script feature
     family (fastText's ACTUAL lid.176 features are char n-grams, not
     words: Chinese/Japanese/Thai pages whitespace-tokenize as one giant
@@ -269,6 +256,7 @@ def char_shingle_hash_stream(df: DataFrame, ns: tuple[int, ...]) -> DataFrame:
     so the per-token char folds collapse away and only the shingle
     composition remains. Emission is multiset (no per-doc distinct);
     documents shorter than min(ns) chars emit no rows."""
+    ns = (2, 3)
     chars = F.split(
         F.regexp_replace(F.col("text"), " ", "_"), ""
     )

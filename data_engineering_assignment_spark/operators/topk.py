@@ -38,16 +38,12 @@ def top_k_by_freq(
     )
 
 
-def top_k_by_freq_agg(
-    exploded: DataFrame,
-    group_cols: list[str],
-    item_col: str,
-    k: int = 3,
-) -> DataFrame:
+def top_k_by_freq_agg(exploded: DataFrame, group_cols: list[str], item_col: str) -> DataFrame:
     """Same as :func:`top_k_by_freq` but returns one row per group with the
     ordered top-k items as an array — the exact engine-side shape of
     ``Counter.most_common(k)`` (D3 semantics for the Blue-Yellow-Black
     predicate, Assignment-python.py:799-815)."""
+    k = 3
     ranked = top_k_by_freq(exploded, group_cols, item_col, k)
     return (
         ranked.groupBy(*group_cols)

@@ -36,12 +36,9 @@ def _interval_seconds(interval: str) -> int:
     return int(parts[0]) * _UNIT_SECONDS[parts[1].lower()]
 
 
-def tumbling_agg(
-    events: DataFrame,
-    duration: str = "10 minutes",
-    keys: list[str] | None = None,
-) -> DataFrame:
+def tumbling_agg(events: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """Tumbling-window counts + exact value sums per (window, *keys)."""
+    duration = "10 minutes"
     keys = keys or []
     win = F.window(F.col("ts"), duration)
     return (
@@ -53,12 +50,10 @@ def tumbling_agg(
     )
 
 
-def sliding_agg(
-    events: DataFrame,
-    duration: str = "10 minutes",
-    slide: str = "5 minutes",
-) -> DataFrame:
+def sliding_agg(events: DataFrame) -> DataFrame:
     """Sliding-window (duration, slide) counts + exact value sums."""
+    duration = "10 minutes"
+    slide = "5 minutes"
     win = F.window(F.col("ts"), duration, slide)
     return (
         events.groupBy(win.alias("w"))
@@ -67,7 +62,7 @@ def sliding_agg(
     )
 
 
-def gapfill(events: DataFrame, bucket: str = "5 minutes") -> DataFrame:
+def gapfill(events: DataFrame) -> DataFrame:
     """Time-series gap fill with forward fill: per key, every ``bucket``-sized
     slot between the key's first and last event appears in the output —
     empty slots carry ``n_events = 0`` and the most recent non-empty slot's
@@ -86,6 +81,7 @@ def gapfill(events: DataFrame, bucket: str = "5 minutes") -> DataFrame:
     """
     from pyspark.sql import Window as W
 
+    bucket = "5 minutes"
     secs = _interval_seconds(bucket)
     slot = F.window(F.col("ts"), bucket)
     agg = (
@@ -165,7 +161,7 @@ def retention_cohorts(events: DataFrame) -> DataFrame:
     )
 
 
-def sessionize(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Gap-based sessionization via analytic windows (batch equivalent of
     ``F.session_window``): a new session starts when the previous event of the
     same user is more than ``gap`` away.
@@ -175,6 +171,7 @@ def sessionize(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     """
     from pyspark.sql import Window as W
 
+    gap = "30 minutes"
     gap_secs = _interval_seconds(gap)
     w = W.partitionBy("user_id").orderBy("ts")
     ts_sec = F.unix_timestamp(F.col("ts"))
@@ -201,14 +198,7 @@ def sessionize(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
     )
 
 
-def trailing_agg_bucketed(
-    df: DataFrame,
-    window_s: int,
-    key_col: str = "event_type",
-    ts_col: str = "ts_s",
-    value_col: str | list[str] = "value",
-    n_buckets: int = 60,
-) -> DataFrame:
+def trailing_agg_bucketed(df: DataFrame, value_col: str | list[str] = "value") -> DataFrame:
     """Per-row trailing-window sum/count over event time — the 100 TB
     formulation of ``rangeBetween(-(window_s-1), 0)`` windows.
 
@@ -248,6 +238,10 @@ def trailing_agg_bucketed(
 
     from .aggregates import DEC
 
+    window_s = 3600
+    key_col = "event_type"
+    ts_col = "ts_s"
+    n_buckets = 60
     single = isinstance(value_col, str)
     vcols = [value_col] if single else list(value_col)
     sums = ["trail_sum"] if single else [f"trail_sum_{c}" for c in vcols]
@@ -364,13 +358,7 @@ def trailing_agg_bucketed(
     return out.drop(*drop)
 
 
-def lead_ts_bucketed(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    tie_cols: list[str],
-    bucket_s: int = 3600,
-) -> DataFrame:
+def lead_ts_bucketed(df: DataFrame, key_col: str, tie_cols: list[str]) -> DataFrame:
     """Per-row NEXT-event timestamp under the (ts, tie) total order — the
     100 TB formulation of ``F.lead(ts).over(partitionBy(key).orderBy(ts,
     tie))`` for LOW-CARDINALITY keys.
@@ -400,6 +388,8 @@ def lead_ts_bucketed(
     """
     from pyspark.sql import Window
 
+    ts_col = "ts_s"
+    bucket_s = 3600
     t = F.col(ts_col)
     e = df.withColumn(
         "_lb", (t - F.pmod(t, F.lit(bucket_s))) / bucket_s

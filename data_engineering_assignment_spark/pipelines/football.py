@@ -92,13 +92,14 @@ def season_table(matches: DataFrame) -> DataFrame:
     )
 
 
-def league_table(season: DataFrame, competition: str) -> DataFrame:
+def league_table(season: DataFrame) -> DataFrame:
     """Ranked league table with formatted GD (Basic 5, :300-332).
 
     Global (unpartitioned) row_number window ordered by points, GD, GF — a
     per-league table is small, so the single-partition window is fine at any
     input scale (the wide data was already aggregated away).
     """
+    competition = "L1"
     filtered = season.filter(F.col("competition") == competition)
     order = Window.orderBy(
         F.desc("points"),

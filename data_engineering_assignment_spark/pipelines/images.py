@@ -79,7 +79,7 @@ def count_images_with_top3(
     exploded = images.select("hexcode", F.explode("colors").alias("color")).filter(
         F.col("color") != "None"
     )
-    top3 = top_k_by_freq_agg(exploded, ["hexcode"], "color", k=3)
+    top3 = top_k_by_freq_agg(exploded, ["hexcode"], "color")
     matched = top3.filter(
         F.col("top_items") == F.array(*[F.lit(c) for c in expected])
     )

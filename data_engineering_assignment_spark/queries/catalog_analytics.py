@@ -17,7 +17,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.aggregates import dround, dsum, o_davg, o_dround, o_dsum
-from ..operators.graphs import HITS_SCALE, PR_DAMP_DEN, PR_DAMP_NUM, PR_SCALE
+from ..operators.graphs import (
+    HITS_SCALE,
+    MIN_PAIR_COUNT,
+    PR_DAMP_DEN,
+    PR_DAMP_NUM,
+    PR_SCALE,
+)
 from ..operators.parallelism import small_scan
 from ..tables import load
 from . import register
@@ -629,8 +635,8 @@ def events_anomaly_zscore_bucketed(spark: SparkSession, sf_dir: str) -> DataFram
         (F.col("value") * F.col("value")).alias("v2"),
     )
     tr = trailing_agg_bucketed(
-        ev, 3600, key_col="event_type", ts_col="ts_s",
-        value_col=["value", "v2"], n_buckets=60,
+        ev,
+        value_col=["value", "v2"],
     )
     v = F.col("value")
     # non-null value count, NOT trail_n (row count): the shared oracle and
@@ -1023,9 +1029,13 @@ def part_affinity_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     return association_rules(load(spark, sf_dir, "lineitem"))
 
 
-def _pagerank_oracle(iters: int, scale: int, dn: int, dd: int) -> str:
+_COPURCHASE_PR_ITERS = 3  # copurchase_pagerank and its oracle replay the same count
+
+
+def _pagerank_oracle() -> str:
     """Step-unrolled integer PageRank: every CTE repeats the engine's exact
     long arithmetic ((pr * dn) // (dd * deg), floor division of positives)."""
+    iters, scale, dn, dd = _COPURCHASE_PR_ITERS, PR_SCALE, PR_DAMP_NUM, PR_DAMP_DEN
     base = scale * (dd - dn) // dd
     ctes = [
         f"""edges AS (
@@ -1057,7 +1067,7 @@ def _pagerank_oracle(iters: int, scale: int, dn: int, dd: int) -> str:
 
 @register(
     "copurchase_pagerank",
-    oracle=_pagerank_oracle(3, PR_SCALE, PR_DAMP_NUM, PR_DAMP_DEN),
+    oracle=_pagerank_oracle(),
     doc="Integer-exact PageRank (Page et al. 1999; operators/graphs."
     "pagerank_integer) over the undirected customer—supplier trading "
     "graph: 3 power iterations with damping 17/20 in scaled-long floor "
@@ -1068,11 +1078,7 @@ def _pagerank_oracle(iters: int, scale: int, dn: int, dd: int) -> str:
     "TakeOrderedAndProject.",
 )
 def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.graphs import (
-        copurchase_edges,
-        decode_copurchase_node,
-        pagerank_integer,
-    )
+    from ..operators.graphs import copurchase_edges, pagerank_integer
 
     edges = copurchase_edges(
         load(spark, sf_dir, "orders"), load(spark, sf_dir, "lineitem")
@@ -1080,21 +1086,27 @@ def copurchase_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # iterate on packed longs; decode to the oracle's labels at the end.
     # The label order ('c…' < 's…' lexicographically) matches the oracle's
     # ORDER BY node, so ordering on the decoded column is safe.
+    # shiftright, not (c/2).cast: the long->double detour rounds past 2^53
+    # (CLAUDE.md argmin-decode invariant); shift stays exact at any key
+    c = F.col("node")
+    label = F.when(c % 2 == 0, F.concat(F.lit("c"), F.shiftright(c, 1))).otherwise(
+        F.concat(F.lit("s"), F.shiftright(c, 1))
+    )
     return (
-        pagerank_integer(edges, iters=3)
-        .select(decode_copurchase_node("node").alias("node"), "pr")
+        pagerank_integer(edges, iters=_COPURCHASE_PR_ITERS)
+        .select(label.alias("node"), "pr")
         .orderBy(F.col("pr").desc(), "node")
         .limit(20)
     )
 
 
-_TRIANGLE_ORACLE = """
+_TRIANGLE_ORACLE = f"""
 WITH baskets AS (
   SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
 ), pairs AS (
   SELECT a.p AS u, b.p AS v
   FROM baskets a JOIN baskets b ON a.o = b.o AND a.p < b.p
-  GROUP BY 1, 2 HAVING COUNT(*) >= 2
+  GROUP BY 1, 2 HAVING COUNT(*) >= {MIN_PAIR_COUNT}
 ), tri AS (
   SELECT e1.u AS a, e1.v AS b, e2.v AS c
   FROM pairs e1
@@ -1126,8 +1138,7 @@ def part_copurchase_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graphs import part_pair_edges, triangle_counts
 
     return triangle_counts(
-        part_pair_edges(load(spark, sf_dir, "lineitem"), min_pair_count=2),
-        top_k=15,
+        part_pair_edges(load(spark, sf_dir, "lineitem")), top_k=15
     )
 
 
@@ -1162,7 +1173,7 @@ WHERE levenshtein(a.name, b.name) <= 2
 def part_name_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.linkage import blocked_name_linkage
 
-    return blocked_name_linkage(load(spark, sf_dir, "part"), "p_name")
+    return blocked_name_linkage(load(spark, sf_dir, "part"))
 
 
 _TRIPLES_ORACLE = f"""
@@ -1296,7 +1307,7 @@ def event_value_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
     )
     g = (
-        lead_ts_bucketed(ev, "event_type", "ts_s", ["ts", "event_id"], 3600)
+        lead_ts_bucketed(ev, "event_type", ["ts", "event_id"])
         .withColumn("gap_s", F.col("_next_ts") - F.col("ts_s"))
         .filter(F.col("gap_s").isNotNull())
     )
@@ -1389,12 +1400,16 @@ def events_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _kcore_oracle(k: int, rounds: int, min_pair: int) -> str:
+_KCORE_K, _KCORE_ROUNDS = 4, 4  # part_copurchase_kcore and its oracle peel alike
+
+
+def _kcore_oracle() -> str:
     """Round-unrolled k-core peel over the part co-purchase graph — every
     CTE repeats the engine's exact integer degree counting (the
     _pagerank_oracle discipline). The pair CTE is the quadratic basket
     self-join the Spark side replaces with in-row enumeration
     (operators/affinity), doubling as that rewrite's cross-proof."""
+    k, rounds = _KCORE_K, _KCORE_ROUNDS
     ctes = [
         f"""pairs AS (
   SELECT a.l_orderkey, a.l_partkey AS p1, b.l_partkey AS p2
@@ -1402,7 +1417,7 @@ def _kcore_oracle(k: int, rounds: int, min_pair: int) -> str:
   JOIN (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) b
     ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
 ), edges AS (
-  SELECT p1 AS u, p2 AS v FROM pairs GROUP BY 1, 2 HAVING COUNT(*) >= {min_pair}
+  SELECT p1 AS u, p2 AS v FROM pairs GROUP BY 1, 2 HAVING COUNT(*) >= {MIN_PAIR_COUNT}
 ), bi AS (SELECT u, v FROM edges UNION ALL SELECT v, u FROM edges),
 n0 AS (SELECT DISTINCT u AS node FROM bi)"""
     ]
@@ -1436,7 +1451,7 @@ SELECT (SELECT COUNT(*) FROM n0)::BIGINT AS n_nodes_total, {sel},
 
 @register(
     "part_copurchase_kcore",
-    oracle=_kcore_oracle(4, 4, 2),
+    oracle=_kcore_oracle(),
     doc="k-core peeling (Seidman 1983; Batagelj-Zaversnik run as 4 "
     "synchronous distributed rounds) on the part co-purchase graph: each "
     "round keeps nodes with induced degree >= 4 (graphs.kcore_peel_counts "
@@ -1452,8 +1467,8 @@ SELECT (SELECT COUNT(*) FROM n0)::BIGINT AS n_nodes_total, {sel},
 def part_copurchase_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graphs import kcore_peel_counts, part_pair_edges
 
-    edges = part_pair_edges(load(spark, sf_dir, "lineitem"), min_pair_count=2)
-    return kcore_peel_counts(edges, k=4, rounds=4)
+    edges = part_pair_edges(load(spark, sf_dir, "lineitem"))
+    return kcore_peel_counts(edges, k=_KCORE_K, rounds=_KCORE_ROUNDS)
 
 
 _EWMA_ORACLE = """
@@ -1708,27 +1723,32 @@ def user_value_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sssp_oracle(rounds: int, min_pair: int, brand: str) -> str:
+_SSSP_ROUNDS = 4  # part_distance_sssp and its oracle relax alike
+_SSSP_BRAND = "Brand#13"  # the source parts
+
+
+def _sssp_oracle() -> str:
     """Round-unrolled multi-source Bellman-Ford over the weighted part
     co-purchase graph (the _pagerank_oracle / _kcore_oracle discipline:
     every CTE repeats the engine's exact integer relaxation, and the
     quadratic basket self-join doubles as the in-row pair-enumeration
     cross-proof). MIN over BIGINT stays BIGINT in DuckDB (only SUM takes
     the HUGEINT detour), so no casts beyond dist's seed."""
+    rounds = _SSSP_ROUNDS
     ctes = [
         f"""pairs AS (
   SELECT a.l_partkey AS p1, b.l_partkey AS p2, COUNT(*) AS cnt
   FROM (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) a
   JOIN (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem) b
     ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  GROUP BY 1, 2 HAVING COUNT(*) >= {min_pair}
+  GROUP BY 1, 2 HAVING COUNT(*) >= {MIN_PAIR_COUNT}
 ), edges AS (
   SELECT p1 AS u, p2 AS v, 11 - LEAST(cnt, 10) AS w FROM pairs
   UNION ALL
   SELECT p2, p1, 11 - LEAST(cnt, 10) FROM pairs
 ), d0 AS (
   SELECT p_partkey AS node, 0::BIGINT AS dist
-  FROM part WHERE p_brand = '{brand}'
+  FROM part WHERE p_brand = '{_SSSP_BRAND}'
 )"""
     ]
     prev = "d0"
@@ -1757,7 +1777,7 @@ FROM d{rounds} GROUP BY 1
 
 @register(
     "part_distance_sssp",
-    oracle=_sssp_oracle(4, 2, "Brand#13"),
+    oracle=_sssp_oracle(),
     doc="Multi-source weighted shortest paths (synchronous Bellman-Ford, "
     "4 relaxation rounds — graphs.sssp_rounds) over the part co-purchase "
     "graph: edge weight 11 - min(basket_count, 10), so strong affinities "
@@ -1772,19 +1792,17 @@ FROM d{rounds} GROUP BY 1
 def part_distance_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graphs import part_pair_edges, sssp_rounds
 
-    edges = part_pair_edges(
-        load(spark, sf_dir, "lineitem"), min_pair_count=2, keep_count=True
-    ).select(
+    edges = part_pair_edges(load(spark, sf_dir, "lineitem"), keep_count=True).select(
         "u",
         "v",
         (F.lit(11) - F.least("pair_cnt", F.lit(10))).cast("long").alias("w"),
     )
     sources = (
         load(spark, sf_dir, "part")
-        .where(F.col("p_brand") == "Brand#13")
+        .where(F.col("p_brand") == _SSSP_BRAND)
         .select(F.col("p_partkey").alias("node"))
     )
-    dist = sssp_rounds(edges, sources, rounds=4)
+    dist = sssp_rounds(edges, sources, rounds=_SSSP_ROUNDS)
     return dist.groupBy("dist").agg(
         F.count(F.lit(1)).alias("n_parts"),
         F.min("node").alias("min_part"),

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from ..operators.aggregates import dround, o_davg, o_dround
 from ..operators.similarity import (
+    INC_DUP_COSINE,
     PQ_DIST_SCALE,
     SIM_SCALE,
     cosine_topk,
@@ -30,6 +31,7 @@ _LSH_PLANES = 4  # hyperplanes of the LSH bucket id
 _PQ_M = 32  # PQ sub-spaces
 _PQ_CODES = 16  # codewords per PQ sub-space
 _SEM_T = 0.4  # SemDeDup cosine threshold
+_RP_COARSE_M = 100  # projected-space candidates per query in rp_recall_telemetry
 
 _EMB_STATS_ORACLE = f"""
 SELECT vec_id,
@@ -925,7 +927,7 @@ pairs AS (
   FROM cd d JOIN cc c ON d.cell = c.cell
 ), agg AS (
   SELECT vec_id, MAX(sim) AS best_sim,
-         SUM(CASE WHEN sim >= 0.4 THEN 1 ELSE 0 END)::BIGINT AS n_dups
+         SUM(CASE WHEN sim >= {INC_DUP_COSINE} THEN 1 ELSE 0 END)::BIGINT AS n_dups
   FROM pairs GROUP BY vec_id
 )
 SELECT d.vec_id, d.cell, a.best_sim,
@@ -953,14 +955,16 @@ def incremental_semantic_dedup_query(spark: SparkSession, sf_dir: str) -> DataFr
     emb = load(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") % 97 != 0)
     delta = emb.filter(F.col("vec_id") % 97 == 0)
-    return incremental_semantic_dedup(corpus, delta, threshold=0.4, n_centroids=16)
+    return incremental_semantic_dedup(corpus, delta, n_centroids=16)
 
 
-def _rp_oracle(dim: int, k: int) -> str:
+def _rp_oracle() -> str:
     """SQL twin of rp_norm_stats: the ±1 sign rows are LITERAL lists (same
     driver-generated matrix as the Spark expression — no cross-engine RNG),
     every dot product a list_reduce fold in the identical prepend-0 order."""
-    from ..operators.projection import jl_signs
+    from ..operators.projection import RP_K, jl_signs
+
+    dim, k = _DIM, RP_K
 
     def fold(expr: str) -> str:
         return (
@@ -993,7 +997,7 @@ FROM f
 
 @register(
     "embedding_rp_stats",
-    oracle=_rp_oracle(64, 16),
+    oracle=_rp_oracle(),
     doc="Johnson-Lindenstrauss random projection (Achlioptas 2001 ±1 "
     "database-friendly JL; operators/projection.rp_norm_stats): 64d -> "
     "16d with a driver-literal sign matrix, reporting per-vector norm "
@@ -1008,14 +1012,16 @@ FROM f
 def embedding_rp_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.projection import rp_norm_stats
 
-    return rp_norm_stats(load(spark, sf_dir, "embeddings"), dim=64, k=16)
+    return rp_norm_stats(load(spark, sf_dir, "embeddings"), dim=_DIM)
 
 
-def _rp_recall_oracle(dim: int, kproj: int, topk: int, coarse_m: int) -> str:
+def _rp_recall_oracle() -> str:
     """SQL twin of rp_recall_telemetry: projected components from the same
     literal ±1 folds as _rp_oracle, then the cosine_topk ranking shape on
     both the projected and the original space, compared as pair sets."""
-    from ..operators.projection import jl_signs
+    from ..operators.projection import RP_K, jl_signs
+
+    dim, kproj, topk, coarse_m = _DIM, RP_K, _TOP_K, _RP_COARSE_M
 
     def fold(expr: str) -> str:
         return f"list_reduce(list_prepend(0.0, {expr}), (a, b) -> a + b)"
@@ -1072,7 +1078,7 @@ FROM s
 
 @register(
     "rp_recall_telemetry",
-    oracle=_rp_recall_oracle(64, 16, 5, 100),
+    oracle=_rp_recall_oracle(),
     doc="Retrieval-recall telemetry for the JL coarse-then-rerank "
     "pipeline (compressed paths are MEASURED — the lsh/ivf/semantic/"
     "winnow discipline): the 16d projected space keeps a top-100 coarse "
@@ -1087,20 +1093,20 @@ FROM s
     "real embeddings concentrate far tighter (JL sigma ~ sqrt(2/k)).",
 )
 def rp_recall_telemetry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.projection import project
+    from ..operators.projection import RP_K, project
     from ..operators.similarity import cosine_topk
 
     emb = load(spark, sf_dir, "embeddings")
     proj = emb.select(
-        "vec_id", project(F.col("embedding"), 64, 16).alias("embedding")
+        "vec_id", project(F.col("embedding"), _DIM, RP_K).alias("embedding")
     )
     cand = (
-        cosine_topk(proj, proj.filter(F.col("vec_id") < 10), k=100)
+        cosine_topk(proj, proj.filter(F.col("vec_id") < 10), k=_RP_COARSE_M)
         .select("query_id", "neighbor_id")
         .withColumn("_c", F.lit(1))
     )
     truth = (
-        cosine_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
+        cosine_topk(emb, emb.filter(F.col("vec_id") < 10), k=_TOP_K)
         .select("query_id", "neighbor_id")
         .withColumn("_t", F.lit(1))
     )

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from ..operators.aggregates import o_dround
 from ..operators.corpus import (
+    DUP_SPAN_N,
     boilerplate_ngrams,
     profile_table,
     tfidf_top_terms,
@@ -107,7 +108,7 @@ GROUP BY doc_id
     "join), then a per-doc agg.",
 )
 def corpus_boilerplate_3gram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return boilerplate_ngrams(load(spark, sf_dir, "documents"), n=3, min_docs=10)
+    return boilerplate_ngrams(load(spark, sf_dir, "documents"), min_docs=10)
 
 
 _PROFILE_COLS = [
@@ -203,7 +204,7 @@ def cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # instead of once per token occurrence — and the corpus explode feeds
     # ONE aggregation instead of two (guide §2.3 "aggregate before you
     # shuffle"; the counts exchange is shared via ReusedExchange).
-    sketch = cms_sketch(counts, "tok", depth=4, width=256, weight_col="exact_n")
+    sketch = cms_sketch(counts, depth=4, width=256, weight_col="exact_n")
     # bound the rank's input first: orderBy+limit plans as a distributed
     # TakeOrderedAndProject over the vocabulary, so the unpartitioned
     # row_number window only ever sees a 100-row superset of the top 20
@@ -215,7 +216,7 @@ def cms_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand.withColumn("rnk", F.row_number().over(w).cast("long"))
         .filter(F.col("rnk") <= 20)
     )
-    return cms_estimate(sketch, top, "tok", depth=4, width=256)
+    return cms_estimate(sketch, top, depth=4, width=256)
 
 
 _VOCAB_ORACLE = """
@@ -302,9 +303,9 @@ _DUP_SPAN_ORACLE = f"""
 WITH toks AS (
   SELECT doc_id, string_split(text, ' ') AS t FROM documents
 ), pos AS (
-  SELECT doc_id, array_to_string(t[i:i+7], ' ') AS shingle
-  FROM (SELECT doc_id, t, unnest(range(1, len(t) - 6)) AS i
-        FROM toks WHERE len(t) >= 8)
+  SELECT doc_id, array_to_string(t[i:i+{DUP_SPAN_N - 1}], ' ') AS shingle
+  FROM (SELECT doc_id, t, unnest(range(1, len(t) - {DUP_SPAN_N - 2})) AS i
+        FROM toks WHERE len(t) >= {DUP_SPAN_N})
 ), dfreq AS (
   SELECT shingle, COUNT(DISTINCT doc_id) AS nd FROM pos GROUP BY shingle
 )
@@ -333,12 +334,13 @@ GROUP BY p.doc_id
 def doc_dup_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.corpus import dup_span_stats
 
-    return dup_span_stats(load(spark, sf_dir, "documents"), n=8)
+    return dup_span_stats(load(spark, sf_dir, "documents"))
 
 
-def _dup_spans_merged_oracle(n: int) -> str:
+def _dup_spans_merged_oracle() -> str:
     from .catalog_llm import _o_rhash
 
+    n = DUP_SPAN_N
     rh = _o_rhash(f"array_to_string(t[j + 1 : j + {n}], ' ')")
     return f"""
 WITH toks AS (
@@ -386,7 +388,7 @@ FROM tot t LEFT JOIN agg a USING (doc_id)
 
 @register(
     "doc_dup_spans_merged",
-    oracle=_dup_spans_merged_oracle(8),
+    oracle=_dup_spans_merged_oracle(),
     doc="LLM-prep: span-MERGED exact-substring dedup accounting (Lee et "
     "al. 2022's deduplicate-text-datasets output shape; operators/corpus."
     "dup_span_merged_stats) — per document, maximal duplicated regions "
@@ -400,7 +402,7 @@ FROM tot t LEFT JOIN agg a USING (doc_id)
 def doc_dup_spans_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.corpus import dup_span_merged_stats
 
-    return dup_span_merged_stats(load(spark, sf_dir, "documents"), n=8)
+    return dup_span_merged_stats(load(spark, sf_dir, "documents"), n=DUP_SPAN_N)
 
 
 _BM25_TERMS = ("spark", "query", "merge", "vector")
@@ -512,7 +514,6 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "documents"),
         load(spark, sf_dir, "embeddings"),
         list(_BM25_TERMS),
-        query_vec_id=0,
         k_each=20,
         k=10,
     )
@@ -618,7 +619,11 @@ WITH w AS (
     return ",\n".join(ctes)
 
 
-def _bpe_train_oracle(k: int) -> str:
+_BPE_MERGES = 6  # bpe_train_merges, bpe_encode_stats and their oracles
+
+
+def _bpe_train_oracle() -> str:
+    k = _BPE_MERGES
     unions = "\nUNION ALL ".join(
         f"SELECT {i}::BIGINT AS rnk, lhs, rhs, lhs || rhs AS pair, n FROM t{i}"
         for i in range(1, k + 1)
@@ -626,7 +631,8 @@ def _bpe_train_oracle(k: int) -> str:
     return _bpe_chain_ctes(k) + "\n" + unions
 
 
-def _bpe_encode_oracle(k: int) -> str:
+def _bpe_encode_oracle() -> str:
+    k = _BPE_MERGES
     return f"""{_bpe_chain_ctes(k)},
 wsyms AS (
   SELECT wid AS tok, len(syms)::BIGINT AS ns FROM s{k}
@@ -651,25 +657,25 @@ FROM agg
 
 @register(
     "bpe_train_merges",
-    oracle=_bpe_train_oracle(6),
+    oracle=_bpe_train_oracle(),
     doc="Tokenizer training: the ITERATED BPE loop (Sennrich et al. 2016) "
     "— 6 merge steps, pair counts recounted after every merge, greedy "
     "left-to-right non-overlapping application per word "
     "(operators/corpus.bpe_train). One corpus pass builds the distinct-"
     "word table; every iteration runs on that bounded state with a "
     "TakeOrderedAndProject argmax and localCheckpoint lineage (the "
-    "dedup_clusters discipline). Oracle: step-unrolled gaps-and-islands "
+    "cc_star discipline). Oracle: step-unrolled gaps-and-islands "
     "SQL, odd-island-offset merge parity.",
 )
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.corpus import bpe_train
 
-    return bpe_train(load(spark, sf_dir, "documents"), k=6)
+    return bpe_train(load(spark, sf_dir, "documents"), k=_BPE_MERGES)
 
 
 @register(
     "bpe_encode_stats",
-    oracle=_bpe_encode_oracle(6),
+    oracle=_bpe_encode_oracle(),
     doc="Tokenizer training: the BPE ENCODE step (operators/corpus."
     "bpe_encode_stats) — apply the 6 learned merges and report per-doc "
     "chars-per-symbol compression telemetry. Merges fold on the bounded "
@@ -682,7 +688,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 def bpe_encode_stats_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.corpus import bpe_encode_stats
 
-    return bpe_encode_stats(load(spark, sf_dir, "documents"), k=6)
+    return bpe_encode_stats(load(spark, sf_dir, "documents"), k=_BPE_MERGES)
 
 
 _BIGRAM_LM_ORACLE = """
@@ -885,7 +891,7 @@ def qdigest_event_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") * 100).cast("long").alias("v"),
     )
     per_type = qdigest_build(
-        cents, "v", k=_QD_K, bits=_QD_BITS, group_cols=["grp"]
+        cents, k=_QD_K, bits=_QD_BITS, group_cols=["grp"]
     )
     merged = qdigest_merge(
         per_type.withColumn("grp", F.lit("ALL")),

@@ -57,7 +57,7 @@ GROUP BY 1, 2
 )
 def events_tumbling_10m(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
-    return tumbling_agg(ev, "10 minutes", keys=["event_type"])
+    return tumbling_agg(ev, keys=["event_type"])
 
 
 _SLIDING_ORACLE = f"""
@@ -83,7 +83,7 @@ GROUP BY 1
 )
 def events_sliding_10m_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
-    return sliding_agg(ev, "10 minutes", "5 minutes")
+    return sliding_agg(ev)
 
 
 @register(
@@ -174,7 +174,7 @@ def kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         "day_bucket",
         "n_exact",
         F.col("kth_hash").cast("long").alias("kth_hash"),
-        kmv_estimate("kth_hash", _KMV_K).alias("kmv_est"),
+        kmv_estimate(_KMV_K).alias("kmv_est"),
     )
 
 
@@ -379,7 +379,7 @@ def cyclic_prediction_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     pred = F.pmod(h + F.col("event_id") % 5 - 2, 24)
     p = ev.select("event_type", h.alias("h"), pred.alias("pred"))
     exact = (F.col("pred") == F.col("h")).cast("int")
-    within1 = cyclic_within(F.col("pred"), F.col("h"), 24, 1).cast("int")
+    within1 = cyclic_within(F.col("pred"), F.col("h"), 24).cast("int")
     return p.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(exact).alias("n_exact"),
@@ -493,7 +493,7 @@ GROUP BY user_id, session_seq
 )
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events")
-    return sessionize(ev, "30 minutes")
+    return sessionize(ev)
 
 
 _GAPFILL_ORACLE = """
@@ -529,7 +529,7 @@ FROM r LEFT JOIN b USING (event_type, bucket_start)
 def events_gapfill_5m(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.windows import gapfill
 
-    return gapfill(load(spark, sf_dir, "events"), "5 minutes")
+    return gapfill(load(spark, sf_dir, "events"))
 
 
 _TRANSITIONS_ORACLE = """

@@ -55,7 +55,7 @@ def docs_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load(spark, sf_dir, "documents")
     return hash_sample(docs, 10).select(
-        "doc_id", "lang", "source", hash_bucket("text").alias("bucket")
+        "doc_id", "lang", "source", hash_bucket().alias("bucket")
     )
 
 
@@ -123,7 +123,7 @@ def decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     train = docs.filter(F.col("doc_id") % 97 != 0)
-    return decontaminate(train, bench, n=5)
+    return decontaminate(train, bench)
 
 
 _PII_ORACLE = f"""
@@ -244,7 +244,7 @@ def training_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(
             (F.col("rn") == 1)
             & (F.col("quality") >= 0.3)
-            & (hash_bucket("text") < 50)
+            & (hash_bucket() < 50)
         )
         .select("doc_id", "source", "quality")
     )
@@ -478,7 +478,7 @@ def quality_percentile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import with_text_stats
 
     docs = with_text_stats(load(spark, sf_dir, "documents"))
-    return qgate(docs, keep_pct=80)
+    return qgate(docs)
 
 
 _BLOOM_K = 4
@@ -1098,7 +1098,7 @@ def host_capped_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("host_id"),
         id_hash("doc_id").alias("h"),
     )
-    kept = capped_per_key_sample(t, "host_id", "h", 50)
+    kept = capped_per_key_sample(t, "host_id", 50)
     tot = t.groupBy("host_id").agg(F.count(F.lit(1)).alias("n_total"))
     agg = kept.groupBy("host_id").agg(
         F.count(F.lit(1)).alias("n_kept"),
@@ -1173,7 +1173,7 @@ def domain_capped_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     t = docs.select(host.alias("url_host"), id_hash("doc_id").alias("h"))
     reg = registered_domain(t)
-    kept = capped_per_key_sample(reg, "registered_domain", "h", 100)
+    kept = capped_per_key_sample(reg, "registered_domain", 100)
     cls = lambda c: F.when(  # noqa: E731
         c.startswith("site"), c
     ).otherwise(F.lit("unique"))

@@ -85,7 +85,7 @@ def ml_energy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exactly (fully-derivable labels), hour_all within_one .884/.958; the
     # day runs are label noise by construction — no floor.
     return enforce_report_floors(
-        run_all(energy, num_trees=5, seed=1),
+        run_all(energy),
         [
             ("month_weather", "accuracy", 0.9),
             ("peak_weather", "accuracy", 0.9),

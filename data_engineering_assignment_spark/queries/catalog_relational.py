@@ -15,13 +15,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.aggregates import (
+    DEC,
     cond_sum,
     davg,
-    dratio,
     dround,
     dsum,
     o_davg,
-    o_dratio,
     o_dround,
     o_dsum,
 )
@@ -824,8 +823,12 @@ def returned_items_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _PROMO_REVENUE_ORACLE = f"""
-SELECT {o_dratio("CASE WHEN p.p_type = 'PROMO' THEN l.l_extendedprice * (1 - l.l_discount) ELSE 0 END",
-                 'l.l_extendedprice * (1 - l.l_discount)', 'promo_revenue_pct', 4, pct=True)}
+SELECT {o_dround(
+    "SUM(CAST(CASE WHEN p.p_type = 'PROMO' THEN l.l_extendedprice * (1 - l.l_discount) "
+    "ELSE 0 END AS DECIMAL(27,6)))::DOUBLE * 100.0 / "
+    "SUM(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(27,6)))::DOUBLE",
+    4,
+)} AS promo_revenue_pct
 FROM lineitem l
 JOIN part p ON l.l_partkey = p.p_partkey
 WHERE l.l_shipdate >= TIMESTAMP '1997-09-01'
@@ -849,9 +852,13 @@ def promo_revenue_pct(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))
     promo = F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0))
-    return (
-        l.join(p, l.l_partkey == p.p_partkey)
-        .agg(dratio(promo, rev, "promo_revenue_pct", 4, pct=True))
+    # ratio of decimal sums (the Q4-semantics invariant), not avg of ratios
+    share = (
+        F.sum(promo.cast(DEC)).cast("double") * F.lit(100.0)
+        / F.sum(rev.cast(DEC)).cast("double")
+    )
+    return l.join(p, l.l_partkey == p.p_partkey).agg(
+        dround(share, 4).alias("promo_revenue_pct")
     )
 
 

@@ -15,7 +15,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.aggregates import cond_sum, davg, dsum, o_davg, o_dround, o_dsum
+from ..operators.aggregates import cond_sum, davg, dround, dsum, o_davg, o_dround, o_dsum
 from ..operators.graphs import PR_DAMP_DEN, PR_DAMP_NUM, PR_SCALE
 from ..pipelines.sales import read_sales_csv, sales_in_window
 from ..session import tune
@@ -1117,8 +1117,7 @@ def avi_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         rate = 10 + did % 20
         try:
             avi = encode_avi(
-                [frame(v, w) for v in vals],
-                w, 8, rate=rate, scale=1,
+                [frame(v, w) for v in vals], w, rate=rate, scale=1,
             )
             frames, meta = decode_any(avi)
             ok = bool(
@@ -1299,7 +1298,7 @@ def media_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "path string, media_type string, width int, height int,"
         " channels int, n_frames int, content binary",
     )
-    resized = resize_media(media, out_w=4, out_h=3)
+    resized = resize_media(media, out_h=3)
 
     def verify(batches):
         for pdf in batches:
@@ -1392,7 +1391,7 @@ def video_frame_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build(did):
         vals = [68 + 2 * ((did + f) % 60) for f in range(5)]
         rate = 10 + did % 20
-        avi = encode_avi([frame(v) for v in vals], 8, 8, rate=rate)
+        avi = encode_avi([frame(v) for v in vals], 8, rate=rate)
         decoded, meta = decode_any(avi)
         return (f"doc-{did}.avi", "video", 8, 8, 4, meta["n_frames"],
                 encode_rawm(decoded))
@@ -1628,7 +1627,7 @@ def image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = _fixture_rows(docs, make, "doc_id long, content binary")
     hashes = image_hashes(media)
-    return phash_pairs(hashes, radius=2, bands=3).select(
+    return phash_pairs(hashes).select(
         "doc_a", "doc_b", F.col("hamming").cast("long").alias("hamming")
     )
 
@@ -1692,7 +1691,7 @@ def audio_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = _fixture_rows(docs, make, "doc_id long, content binary")
     hashes = audio_hashes(media)
-    return aphash_pairs(hashes, radius=2, bands=3).select(
+    return aphash_pairs(hashes).select(
         "doc_a", "doc_b", F.col("hamming").cast("long").alias("hamming")
     )
 
@@ -2220,7 +2219,7 @@ GROUP BY 1
     "warc_domain_stats",
     oracle=_DOMAIN_ORACLE,
     doc="URL/domain analytics over WARC target URIs (operators/crawl.py "
-    "with_url_parts + url_query_param + filter_blocked_hosts; composes "
+    "with_url_parts + parse_url + filter_blocked_hosts; composes "
     "with warc_records — the per-domain accounting and blocklist "
     "filtering every crawl pipeline needs before mixing): each document "
     "becomes a one-response WARC targeting "
@@ -2233,11 +2232,7 @@ GROUP BY 1
 )
 def warc_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.warc import build_warc
-    from ..operators.crawl import (
-        filter_blocked_hosts,
-        url_query_param,
-        with_url_parts,
-    )
+    from ..operators.crawl import filter_blocked_hosts, with_url_parts
     from ..sources import warc_records
     from ..tables import load
 
@@ -2263,10 +2258,10 @@ def warc_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     media = _fixture_rows(docs, make, "archive_id long, content binary")
     recs = warc_records(media).filter("parse_ok AND warc_type = 'response'")
-    pages = with_url_parts(recs).withColumn(
-        "ref", url_query_param("target_uri", "ref").cast("long")
-    )
-    kept = filter_blocked_hosts(pages, ["s0.example"])
+    # the value of one query parameter (JVM parse_url 3-arg form)
+    ref = F.try_parse_url(F.col("target_uri"), F.lit("QUERY"), F.lit("ref"))
+    pages = with_url_parts(recs).withColumn("ref", ref.cast("long"))
+    kept = filter_blocked_hosts(pages)
     return kept.groupBy("url_host").agg(
         F.count(F.lit(1)).alias("n_pages"),
         F.sum("payload_len").cast("long").alias("payload_len_sum"),
@@ -2495,7 +2490,7 @@ FROM q GROUP BY 1
     "crawl_quality_mix",
     oracle=_crawl_quality_oracle(),
     doc="Crawl quality/language gating composition: WARC ingest -> HTML "
-    "extraction -> the ENGINE'S OWN quality_score / predict_lang / "
+    "extraction -> the ENGINE'S OWN quality heuristic / predict_lang / "
     "token_count heuristics (operators/text.py) over the extracted text "
     "-> per-language corpus accounting — the CCNet triage step between "
     "extraction and dedup/mixing. Fixture pages plant the language "
@@ -2510,7 +2505,7 @@ FROM q GROUP BY 1
 def crawl_quality_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.warc import build_warc
     from ..operators.crawl import html_extract
-    from ..operators.text import predict_lang, quality_score, token_count
+    from ..operators.text import predict_lang, stopword_ratio, token_count
 
     docs = _doc_ids(spark, sf_dir)
 
@@ -2538,10 +2533,17 @@ def crawl_quality_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     txt = html_extract(recs).select(
         F.translate(F.col("page.text"), "\n", " ").alias("text")
     )
+    # deterministic [0,1] quality heuristic, length credit x stopword
+    # credit (the shape of production length / stopword-density gates),
+    # in exact double ops; products of rounded decimals land on exact
+    # .xxxx5 midpoints, and dround keeps Spark and the SQL oracle
+    # bit-identical there
+    length_credit = F.least(F.lit(1.0), token_count().cast("double") / F.lit(100.0))
+    stop_credit = F.least(F.lit(1.0), stopword_ratio() * F.lit(10.0))
     stats = txt.select(
-        quality_score("text").alias("quality"),
-        predict_lang("text").alias("pred_lang"),
-        token_count("text").alias("tc"),
+        dround(length_credit * stop_credit, 4).alias("quality"),
+        predict_lang().alias("pred_lang"),
+        token_count().alias("tc"),
     )
     return stats.groupBy("pred_lang").agg(
         F.count(F.lit(1)).alias("n_pages"),
@@ -2691,7 +2693,7 @@ def crawl_to_wet_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         # join: one lazy checkpoint materializes ingest+extract once
         .localCheckpoint(eager=False)
     )
-    kept = pages.filter(predict_lang("text") == "en")
+    kept = pages.filter(predict_lang() == "en")
     keepers = exact_dedup(kept).select(F.col("keep_id").alias("doc_id"))
     survivors = kept.join(keepers, "doc_id").select(
         (F.col("doc_id") % 8).alias("shard"),
@@ -3219,7 +3221,7 @@ def mixed_crawl_extract_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "parse_ok AND warc_type = 'response'"
     )
     out = document_extract(
-        recs, body_col="http_body", content_type_col="http_content_type"
+        recs, content_type_col="http_content_type"
     )
     return out.groupBy(F.col("doc.kind").alias("kind")).agg(
         F.count(F.lit(1)).alias("n_pages"),
@@ -3741,7 +3743,7 @@ def redirect_resolution_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         return did, build_warc(recs)
 
     media = _fixture_rows(docs, make, "archive_id long, content binary")
-    res = resolve_redirects(warc_records(media), url_col="target_uri")
+    res = resolve_redirects(warc_records(media))
     d = F.regexp_extract("url", r"/r/(\d+)/", 1).cast("long")
     return res.groupBy((d % 6).alias("chain_class")).agg(
         F.count(F.lit(1)).alias("n_urls"),
@@ -4141,7 +4143,7 @@ def crawl_discovery_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     discovered = robots_sitemaps(robots_df).groupBy("url_host").agg(
         F.count(F.lit(1)).alias("n_sitemaps_discovered")
     )
-    delays = robots_delays(robots_df, "graft")
+    delays = robots_delays(robots_df)
     locs = sitemap_entries(
         recs.filter(F.col("target_uri").endswith(".xml")),
         content_col="http_body",
@@ -4334,7 +4336,6 @@ def recrawl_schedule_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sched = recrawl_schedule(
         cdx_snapshot_diff(old, new).join(priors, "urlkey", "left"),
-        max_interval_s=172800,
     )
     return sched.groupBy("change").agg(
         F.count(F.lit(1)).alias("n_urls"),

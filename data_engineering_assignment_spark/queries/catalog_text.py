@@ -233,15 +233,15 @@ def dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_clusters_lsh",
-    oracle=None,  # iterative label propagation — correctness via unit tests
-    doc="North-star dedup clustering: connected components (min-label "
-    "propagation) over MinHash-LSH candidate pairs.",
+    oracle=None,  # probabilistic candidates — correctness via unit tests
+    doc="North-star dedup clustering: connected components (graphs.cc_star "
+    "star contraction) over MinHash-LSH candidate pairs.",
 )
 def dedup_clusters_lsh_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import dedup_clusters
+    from ..operators.graphs import cc_star
 
     pairs = minhash_lsh_candidates(load(spark, sf_dir, "documents"))
-    return dedup_clusters(pairs)
+    return cc_star(pairs)
 
 
 @register(
@@ -319,7 +319,7 @@ def doc_regex_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import regex_tokens
 
     docs = load(spark, sf_dir, "documents")
-    toks = regex_tokens("text")
+    toks = regex_tokens()
     is_word = lambda x: x.rlike("^[A-Za-z]+$")  # noqa: E731
     is_num = lambda x: x.rlike("^[0-9]+$")  # noqa: E731
     return docs.select(
@@ -553,17 +553,14 @@ SELECT node, MIN(r) AS cluster FROM reach GROUP BY node
     "dedup_clusters_jaccard",
     oracle=_CLUSTERS_JACCARD_ORACLE,
     doc="North-star dedup clustering, oracle-gated: connected components "
-    "(min-label propagation) over EXACT 3-gram Jaccard >= 0.5 pairs, checked "
-    "against a recursive-CTE transitive closure in the oracle engine. "
-    "Label propagation converges in O(component diameter) shuffle rounds; "
-    "the recursive closure is the small-data cross-check, not the scale "
-    "algorithm.",
+    "(graphs.cc_star) over EXACT 3-gram Jaccard >= 0.5 pairs, checked "
+    "against a recursive-CTE transitive closure in the oracle engine; the "
+    "recursive closure is the small-data cross-check, not the scale "
+    "algorithm. Builds the same plan as dedup_clusters_star (the name "
+    "stays for the query catalog).",
 )
 def dedup_clusters_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import dedup_clusters, ngram_jaccard_pairs
-
-    pairs = ngram_jaccard_pairs(load(spark, sf_dir, "documents"), threshold=0.5)
-    return dedup_clusters(pairs)
+    return dedup_clusters_star(spark, sf_dir)
 
 
 @register(
@@ -572,13 +569,11 @@ def dedup_clusters_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="The SCALE path for dedup clustering: alternating large-star / "
     "small-star connected components (Kiveris et al. 2014) over the same "
     "exact 3-gram Jaccard >= 0.5 pairs, checked against the same "
-    "recursive-CTE transitive closure. Min-label propagation "
-    "(dedup_clusters_jaccard) needs O(component diameter) rounds — fine "
-    "for clique-ish near-dup clusters, a wall on chain-shaped components; "
-    "the two-rule star contraction converges in O(log n) rounds on any "
-    "shape (adversarial 200-node chain pinned in tests/test_graphs.py). "
-    "Same (node, cluster=component-min) contract, so the two operators "
-    "cross-check each other through one oracle.",
+    "recursive-CTE transitive closure. Min-label propagation needs "
+    "O(component diameter) rounds — fine for clique-ish near-dup "
+    "clusters, a wall on chain-shaped components; the two-rule star "
+    "contraction converges in O(log n) rounds on any shape (adversarial "
+    "200-node chain pinned in tests/test_graphs.py).",
 )
 def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import ngram_jaccard_pairs
@@ -668,7 +663,7 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import simhash_hamming_census, simhash_portable
 
     fps = simhash_portable(load(spark, sf_dir, "documents"))
-    return simhash_hamming_census(fps, bits=31, bands=2, radius=1)
+    return simhash_hamming_census(fps)
 
 
 _O_RH_SHINGLE = """list_reduce(
@@ -844,9 +839,15 @@ def winnow_dup_pairs_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _containment_oracle(n: int, max_df: int, threshold: float) -> str:
+# shingle width, df cap and containment cut of dedup_containment_pairs and
+# its oracle
+_CONTAINMENT_N, _CONTAINMENT_MAX_DF, _CONTAINMENT_T = 5, 50, 0.6
+
+
+def _containment_oracle() -> str:
     from .catalog_llm import _o_rhash
 
+    n, max_df, threshold = _CONTAINMENT_N, _CONTAINMENT_MAX_DF, _CONTAINMENT_T
     rh = _o_rhash(f"array_to_string(t[j + 1 : j + {n}], ' ')")
     return f"""
 WITH toks AS (
@@ -881,7 +882,7 @@ SELECT * FROM scored WHERE containment >= {threshold}
 
 @register(
     "dedup_containment_pairs",
-    oracle=_containment_oracle(5, 50, 0.6),
+    oracle=_containment_oracle(),
     doc="Asymmetric n-gram containment pairs (Broder 1997's second "
     "resemblance measure — quote/excerpt detection Jaccard misses because "
     "a subset's union is large; operators/dedup.containment_pairs): "
@@ -895,7 +896,12 @@ SELECT * FROM scored WHERE containment >= {threshold}
 def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import containment_pairs
 
-    return containment_pairs(load(spark, sf_dir, "documents"), n=5)
+    return containment_pairs(
+        load(spark, sf_dir, "documents"),
+        n=_CONTAINMENT_N,
+        threshold=_CONTAINMENT_T,
+        max_df=_CONTAINMENT_MAX_DF,
+    )
 
 
 def _winnow_recall_oracle() -> str:

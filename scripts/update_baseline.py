@@ -189,8 +189,8 @@ EXCLUDED = {
     "dedup_semantic": "portable oracle twin of the benched dedup_semantic_kmeans",
     "dedup_semantic_survivors": "portable oracle twin of the benched dedup_semantic_kmeans",
     "events_anomaly_zscore": "flat-window cross-proof; the bucketed scale formulation is benched (demoted r7, SCALE.md 5.40x vs 1.41x/decade)",
-    "dedup_clusters_lsh": "min-label-propagation CC twin; the star-contraction scale path dedup_clusters_star is benched",
-    "dedup_clusters_jaccard": "min-label-propagation CC twin; the star-contraction scale path dedup_clusters_star is benched",
+    "dedup_clusters_lsh": "cc_star over MinHash-LSH candidates, the CC operator of dedup_clusters_star, which is benched",
+    "dedup_clusters_jaccard": "same cc_star plan as dedup_clusters_star, which is benched",
     "ml_energy_report": "MLlib TRAINING pipeline (8 RF fits, ~28 s dominated by fitting); bench measures query/operator throughput - the eval-query surface is benched via ml_eval_metrics",
     "ml_peak_classification": "MLlib TRAINING pipeline (RF fit); eval-query surface benched via ml_eval_metrics",
 }

@@ -123,9 +123,9 @@ def test_blocked_linkage_finds_typo_and_caps_blocks(spark):
 
     rows = [("cold bolt",), ("old bolt",), ("blue rod",), ("cold bolt",)]
     df = spark.createDataFrame(rows, "p_name string")
-    out = blocked_name_linkage(df, "p_name").collect()
+    out = blocked_name_linkage(df).collect()
     assert [(r.name_a, r.name_b, r.dist, r.n_rows_a, r.n_rows_b) for r in out] == [
         ("cold bolt", "old bolt", 1, 2, 1)
     ]
     # block cap: with max_block=1 every block is over-sized -> no pairs
-    assert blocked_name_linkage(df, "p_name", max_block=1).count() == 0
+    assert blocked_name_linkage(df, max_block=1).count() == 0

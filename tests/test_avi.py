@@ -23,7 +23,7 @@ def _flat(v, h=8, w=8):
 
 def test_avi_roundtrip_flat_frames():
     vals = [68, 100, 186]  # even level-shift offsets: DC-exact
-    avi = encode_avi([_flat(v) for v in vals], 8, 8, rate=24, scale=1)
+    avi = encode_avi([_flat(v) for v in vals], 8, rate=24, scale=1)
     frames, meta = decode_any(avi)
     assert frames.shape == (3, 8, 8, 4)
     assert meta == {
@@ -39,7 +39,7 @@ def test_avi_odd_sized_frames_word_aligned():
     """JPEG chunks of odd length force the RIFF pad byte on every frame."""
     vals = [70, 72, 74, 76]
     jpegs = [_flat(v, 8, 16) for v in vals]
-    avi = encode_avi(jpegs, 16, 8, rate=30000, scale=1001)  # NTSC pair
+    avi = encode_avi(jpegs, 16, rate=30000, scale=1001)  # NTSC pair
     odd = [len(j) % 2 for j in jpegs]
     frames, meta = decode_avi(avi)
     assert meta["n_frames"] == 4 and meta["width"] == 16
@@ -52,7 +52,7 @@ def test_avi_odd_sized_frames_word_aligned():
 def test_avi_error_paths():
     with pytest.raises(ValueError, match="signature"):
         decode_avi(b"RIFF\x00\x00\x00\x00WAVE")
-    good = encode_avi([_flat(90)], 8, 8)
+    good = encode_avi([_flat(90)], 8)
     # strip the movi frames: find and blank the 00dc fourcc
     broken = good.replace(b"00dc", b"00xx")
     with pytest.raises(ValueError, match="frame chunks"):
@@ -62,7 +62,7 @@ def test_avi_error_paths():
     with pytest.raises(NotImplementedError, match="MJPG"):
         decode_avi(bad)
     # varying frame dims
-    mixed = encode_avi([_flat(90, 8, 8), _flat(90, 8, 16)], 8, 8)
+    mixed = encode_avi([_flat(90, 8, 8), _flat(90, 8, 16)], 8)
     with pytest.raises(ValueError, match="dimensions vary"):
         decode_avi(mixed)
 
@@ -70,7 +70,7 @@ def test_avi_error_paths():
 def test_avi_idx1_offsets_point_at_frames():
     """The written idx1 entries resolve to the 00dc chunk headers when
     interpreted per spec (offsets from the 'movi' fourcc)."""
-    avi = encode_avi([_flat(80), _flat(82)], 8, 8)
+    avi = encode_avi([_flat(80), _flat(82)], 8)
     movi_at = avi.index(b"movi")
     i = avi.index(b"idx1")
     (isz,) = struct.unpack_from("<I", avi, i + 4)
@@ -89,7 +89,7 @@ def test_avi_idx1_offsets_point_at_frames():
 def test_avi_ignores_other_stream_chunks():
     """movi chunks of a different stream number must not join the video
     frame list (the vids stream index comes from strh order in hdrl)."""
-    a = encode_avi([_flat(90), _flat(92)], 8, 8)
+    a = encode_avi([_flat(90), _flat(92)], 8)
     movi_at = a.index(b"movi")
     i = a.index(b"00dc", a.index(b"00dc", movi_at) + 4)
     patched = a[:i] + b"01dc" + a[i + 4 :]

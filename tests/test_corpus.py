@@ -62,7 +62,7 @@ def test_boilerplate_ngrams_flags_shared_shingles(spark):
     rows = [(i, f"{shared} unique{i} tail{i} end{i}") for i in range(5)]
     rows.append((99, "completely fresh content here today"))
     df = docs(spark, rows)
-    out = {r["doc_id"]: r for r in boilerplate_ngrams(df, n=3, min_docs=5).collect()}
+    out = {r["doc_id"]: r for r in boilerplate_ngrams(df, min_docs=5).collect()}
     assert out[0]["n_boiler"] == 1  # only the shared 3-gram crosses min_docs
     assert out[0]["n_shingles"] == 4
     assert out[0]["boiler_ratio"] == 0.25
@@ -71,7 +71,7 @@ def test_boilerplate_ngrams_flags_shared_shingles(spark):
 
 def test_boilerplate_short_docs_absent(spark):
     df = docs(spark, [(1, "just two"), (2, "one two three")])
-    ids = {r["doc_id"] for r in boilerplate_ngrams(df, n=3, min_docs=1).collect()}
+    ids = {r["doc_id"] for r in boilerplate_ngrams(df, min_docs=1).collect()}
     assert ids == {2}  # doc 1 has < n tokens → no shingles → absent
 
 
@@ -169,7 +169,7 @@ def test_dup_span_stats_counts_positions_with_multiplicity(spark):
         (5, "too short"),               # < 8 tokens -> absent
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"]: r for r in dup_span_stats(df, n=8).collect()}
+    got = {r["doc_id"]: r for r in dup_span_stats(df).collect()}
 
     assert set(got) == {1, 2, 3, 4}
     assert (got[1]["n_positions"], got[1]["n_dup_positions"]) == (4, 1)

@@ -108,7 +108,7 @@ def test_filter_blocked_hosts_broadcasts_blocked_side(spark):
             F_concat_uri("id").alias("target_uri")
         )
     )
-    out = filter_blocked_hosts(pages, ["s0.example"])
+    out = filter_blocked_hosts(pages)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
     assert out.count() > 0
@@ -1221,7 +1221,7 @@ def test_robots_sitemaps_and_delays_operators(spark):
         ("a.example", "http://a.example/s2.xml"),
     }
     dl = {
-        r.url_host: r.crawl_delay_s for r in robots_delays(robots, "graft").collect()
+        r.url_host: r.crawl_delay_s for r in robots_delays(robots).collect()
     }
     assert dl == {"a.example": 3, "b.example": None, "c.example": None}
 

@@ -3,8 +3,6 @@ recall against exact Jaccard, SimHash locality."""
 
 from __future__ import annotations
 
-import pytest
-
 from data_engineering_assignment_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_candidates,
@@ -92,34 +90,6 @@ def test_keep_best_survivor(spark):
     assert got == [("g1", 2), ("g2", 4)]  # score tie broken by smaller id
 
 
-def test_dedup_clusters_connected_components(spark):
-    from data_engineering_assignment_spark.operators.dedup import dedup_clusters
-
-    # components: {1,2,3,4} (chain), {7,8}, {9,10,11} (star)
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (7, 8), (10, 9), (10, 11)],
-        "doc_a bigint, doc_b bigint",
-    )
-    out = {r["node"]: r["cluster"] for r in dedup_clusters(pairs).collect()}
-    assert {out[n] for n in (1, 2, 3, 4)} == {1}
-    assert {out[n] for n in (7, 8)} == {7}
-    assert {out[n] for n in (9, 10, 11)} == {9}
-
-
-def test_dedup_clusters_raises_when_labels_still_move(spark):
-    """Min-label propagation needs one round per hop: on a 12-node chain,
-    node 11 still holds label 1 after the 10-round cap. Returning those
-    labels would be a silently wrong cluster, so the operator raises (the
-    cc_star contract)."""
-    from data_engineering_assignment_spark.operators.dedup import dedup_clusters
-
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(11)], "doc_a bigint, doc_b bigint"
-    )
-    with pytest.raises(RuntimeError, match="still changing"):
-        dedup_clusters(pairs)
-
-
 def test_portable_lsh_recall_and_fast_path_agreement(spark):
     from data_engineering_assignment_spark.operators.dedup import (
         minhash_lsh_candidates_portable,
@@ -191,7 +161,7 @@ def test_twin_drift_production_vs_portable_on_fixture_corpus(spark, sf_dir):
     }
     port = {
         (r["doc_a"], r["doc_b"])
-        for r in minhash_lsh_candidates_portable(docs, num_hashes=12, bands=4).collect()
+        for r in minhash_lsh_candidates_portable(docs).collect()
     }
     assert exact <= prod <= port
 

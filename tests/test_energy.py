@@ -45,7 +45,7 @@ def test_prepare_labels_and_dropna(spark, energy_df):
 def test_peak_runs_beat_chance(spark, energy_df):
     report = {
         r["run"]: r
-        for r in en.run_all(energy_df, num_trees=5).collect()
+        for r in en.run_all(energy_df).collect()
     }
     assert len(report) == 8
     # hour-encoding features → peak-hour classification must be near-perfect

@@ -84,7 +84,7 @@ def test_season_table_invariants_and_values(events):
 
 
 def test_league_table_order_and_gd_format_q2(events):
-    lt = fb.league_table(fb.season_table(fb.match_results(events)), "L1").collect()
+    lt = fb.league_table(fb.season_table(fb.match_results(events))).collect()
     assert [r["Team"] for r in lt] == ["A", "C", "B"]
     gd = {r["Team"]: r["GD"] for r in lt}
     assert gd["A"] == "+1"

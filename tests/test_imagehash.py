@@ -94,7 +94,7 @@ def test_banded_pairs_lossless_vs_brute_force(spark):
     )
     got = {
         (r.doc_a, r.doc_b, r.hamming)
-        for r in image_phash_pairs(df, radius=2, bands=3).collect()
+        for r in image_phash_pairs(df).collect()
     }
     want = {
         (a, b, bin(hs[a] ^ hs[b]).count("1"))
@@ -269,7 +269,7 @@ def test_incremental_image_dedup_statuses_and_broadcast_side(spark):
         ],
         "doc_id long, phash long, parse_ok boolean",
     )
-    out = incremental_image_dedup(corpus, delta, radius=2, bands=3)
+    out = incremental_image_dedup(corpus, delta, radius=2)
     rows = {r.doc_id: r for r in out.collect()}
     assert len(rows) == 4  # the report reconciles 1:1 with the ingest batch
     assert rows[10].status == "dup" and rows[10].n_dups == 2
@@ -285,7 +285,7 @@ def test_incremental_image_dedup_statuses_and_broadcast_side(spark):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="bands"):
-        incremental_image_dedup(corpus, delta, radius=3, bands=3)
+        incremental_image_dedup(corpus, delta, radius=3)
 
 
 def test_phash63_batch_bit_identical_to_per_frame():

@@ -30,7 +30,7 @@ def test_hash_sample_deterministic_and_proportional(spark):
 
 def test_hash_bucket_range(spark):
     df = docs(spark, [(i, "s", f"text {i}") for i in range(50)])
-    buckets = [r["b"] for r in df.select(hash_bucket("text").alias("b")).collect()]
+    buckets = [r["b"] for r in df.select(hash_bucket().alias("b")).collect()]
     assert all(0 <= b < 100 for b in buckets)
 
 
@@ -75,14 +75,14 @@ def test_pack_sequences_capacity_bins(spark):
     # 5 docs of 4 tokens each, capacity 8 → packs of 2 docs (contiguous)
     rows = [(i, "en", "w x y z") for i in range(5)]
     df = spark.createDataFrame(rows, "doc_id bigint, lang string, text string")
-    out = {r["doc_id"]: r["pack_id"] for r in pack_sequences(df, 8, group_col="lang").collect()}
+    out = {r["doc_id"]: r["pack_id"] for r in pack_sequences(df, 8).collect()}
     assert out == {0: 0, 1: 0, 2: 1, 3: 1, 4: 2}
 
 
 def test_pack_sequences_oversized_doc_gets_own_pack(spark):
     rows = [(0, "en", " ".join(["t"] * 20)), (1, "en", "a b")]
     df = spark.createDataFrame(rows, "doc_id bigint, lang string, text string")
-    out = {r["doc_id"]: r["pack_id"] for r in pack_sequences(df, 8, group_col="lang").collect()}
+    out = {r["doc_id"]: r["pack_id"] for r in pack_sequences(df, 8).collect()}
     assert out[0] == 0 and out[1] == 2  # 20 tokens before doc 1 → bin 2
 
 
@@ -105,7 +105,7 @@ def test_quality_percentile_gate_integer_cut(spark):
     rows = [(i, "s1", q) for i, q in enumerate([0.9, 0.8, 0.7, 0.6, 0.5])]
     rows += [(10, "s2", 0.3)]  # singleton source: 1*100 <= 1*80 is false → kept 0
     df = spark.createDataFrame(rows, "doc_id bigint, source string, quality double")
-    out = {r["source"]: r for r in quality_percentile_gate(df, 80).collect()}
+    out = {r["source"]: r for r in quality_percentile_gate(df).collect()}
     assert out["s1"]["n_docs"] == 5 and out["s1"]["n_kept"] == 4
     assert out["s1"]["min_kept_quality"] == 0.6
     assert out["s2"]["n_kept"] == 0 and out["s2"]["min_kept_quality"] is None
@@ -122,7 +122,7 @@ def test_quality_percentile_gate_ties_and_bucket_edges(spark):
     rows = [(i, "t", 0.5) for i in range(10)]  # all tied: k=8, q* = 0.5
     rows += [(100 + i, "e", q) for i, q in enumerate([0.01, 0.01, 0.02, 0.02, 0.03])]
     df = spark.createDataFrame(rows, "doc_id bigint, source string, quality double")
-    out = {r["source"]: r for r in quality_percentile_gate(df, 80).collect()}
+    out = {r["source"]: r for r in quality_percentile_gate(df).collect()}
     assert out["t"]["n_kept"] == 8 and out["t"]["min_kept_quality"] == 0.5
     # "e": 5 docs, k=4, desc order (.03,.02,.02,.01,.01) → 4th largest = 0.01
     assert out["e"]["n_kept"] == 4 and out["e"]["min_kept_quality"] == 0.01
@@ -139,7 +139,7 @@ def test_quality_percentile_gate_excludes_null_quality(spark):
     rows = [(i, "s", q) for i, q in enumerate([0.9, 0.8, 0.7, 0.6, 0.5])]
     rows += [(10 + i, "s", None) for i in range(5)]  # half the source is NULL
     df = spark.createDataFrame(rows, "doc_id bigint, source string, quality double")
-    out = {r["source"]: r for r in quality_percentile_gate(df, 80).collect()}
+    out = {r["source"]: r for r in quality_percentile_gate(df).collect()}
     # identical to the 5-doc non-null case: NULLs invisible to every output
     assert out["s"]["n_docs"] == 5 and out["s"]["n_kept"] == 4
     assert out["s"]["min_kept_quality"] == 0.6

@@ -48,7 +48,7 @@ def test_cyclic_accuracy_hand_computed(spark):
         (5.0, 5.0),    # exact → ok
     ]
     preds = spark.createDataFrame(rows, "label double, prediction double")
-    assert ml.cyclic_accuracy(preds, "label", modulus=12, tolerance=1) == 0.75
+    assert ml.cyclic_accuracy(preds, "label", modulus=12) == 0.75
     assert ml.exact_accuracy(preds, "label") == 0.25
 
 

@@ -53,7 +53,7 @@ def test_decode_media_flags_bad_content(spark):
 def test_resize_nearest_neighbor(spark):
     f = frames(2, 8, 8)
     df = media_df(spark, [("v", "video", 8, 8, 4, 2, bytearray(encode_rawm(f)))])
-    out = resize_media(df, 4, 4).collect()[0]
+    out = resize_media(df, 4).collect()[0]
     decoded, meta = decode_rawm(bytes(out["content"]))
     assert meta["width"] == 4 and meta["height"] == 4 and meta["n_frames"] == 2
     # nearest-neighbor with integer stride 2 → every other pixel
@@ -1163,10 +1163,10 @@ def test_jpeg_progressive_ac_scan_coefficient_roundtrip_property():
                 yield target[b, 0]
 
         w1 = _BitWriter()
-        _enc_ac_first_scan(w1, blk_iter(), ss, se, 1)
+        _enc_ac_first_scan(w1, blk_iter(), ss, se)
         w1.flush()
         w2 = _BitWriter()
-        _enc_ac_refine_scan(w2, blk_iter(), ss, se, 0)
+        _enc_ac_refine_scan(w2, blk_iter(), ss, se)
         w2.flush()
 
         got = np.zeros_like(blocks)

@@ -450,7 +450,7 @@ def test_incremental_semantic_dedup_statuses(spark):
     corpus = rows([(1, [1, 0, 0, 0]), (2, [0.9, 0.1, 0, 0]), (3, [0, 1, 0, 0])])
     delta = rows([(100, [1, 0.05, 0, 0]), (101, [0, 0, 1, 0])])
     got = {r["vec_id"]: r for r in incremental_semantic_dedup(
-        corpus, delta, threshold=0.4, n_centroids=2
+        corpus, delta, n_centroids=2
     ).collect()}
     assert set(got) == {100, 101}
     assert got[100]["status"] == "dup" and got[100]["n_dups"] >= 1
@@ -459,8 +459,7 @@ def test_incremental_semantic_dedup_statuses(spark):
 
     again = {r["vec_id"]: (r["cell"], r["best_sim"], r["n_dups"], r["status"])
              for r in incremental_semantic_dedup(
-                 corpus.repartition(5), delta.repartition(3),
-                 threshold=0.4, n_centroids=2).collect()}
+                 corpus.repartition(5), delta.repartition(3), n_centroids=2).collect()}
     assert again == {k: (v["cell"], v["best_sim"], v["n_dups"], v["status"])
                      for k, v in got.items()}
 
@@ -651,8 +650,8 @@ def test_ivfpq_candidates_only_from_probed_cells(spark, sf_dir):
     )
     from pyspark.sql import Window
 
-    qp = _pq_prep(q, "vec_id", "embedding")
-    cp = _pq_prep(emb, "vec_id", "embedding")
+    qp = _pq_prep(q)
+    cp = _pq_prep(emb)
     h = (F.col("id") * F.lit(2654435761)) % F.lit(4294967296)
     seeds = cp.select("id", "vec", h.alias("h")).orderBy("h", "id").limit(16)
     w = Window.orderBy("h", "id")
@@ -709,7 +708,7 @@ def test_rp_distortion_concentrates(spark, sf_dir):
     from data_engineering_assignment_spark.operators.projection import rp_norm_stats
     from data_engineering_assignment_spark.tables import load
 
-    rows = rp_norm_stats(load(spark, sf_dir, "embeddings"), dim=64, k=16).collect()
+    rows = rp_norm_stats(load(spark, sf_dir, "embeddings"), dim=64).collect()
     assert rows
     ds = [r.distortion for r in rows]
     mean = sum(ds) / len(ds)
@@ -723,7 +722,7 @@ def test_rp_stats_plan_no_shuffle(spark, sf_dir):
     from data_engineering_assignment_spark.tables import load
 
     plan = (
-        rp_norm_stats(load(spark, sf_dir, "embeddings"), dim=64, k=16)
+        rp_norm_stats(load(spark, sf_dir, "embeddings"), dim=64)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

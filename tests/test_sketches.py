@@ -25,32 +25,32 @@ def test_cms_never_undercounts_and_is_exact_when_wide(spark):
     exact = {r["tok"]: r["n"] for r in df.groupBy("tok").agg(F.count("*").alias("n")).collect()}
 
     # narrow sketch: must never undercount
-    sk = cms_sketch(df, "tok", depth=4, width=32)
+    sk = cms_sketch(df, depth=4, width=32)
     items = df.select("tok").distinct()
-    est = {r["tok"]: r["cms_est"] for r in cms_estimate(sk, items, "tok", 4, 32).collect()}
+    est = {r["tok"]: r["cms_est"] for r in cms_estimate(sk, items, 4, 32).collect()}
     assert all(est[t] >= exact[t] for t in exact)
     assert est["hot"] >= 500
 
     # wide sketch: with |vocab| << width, the hot key is almost surely
     # collision-free in at least one of 4 rows → exact
-    skw = cms_sketch(df, "tok", depth=4, width=4096)
-    estw = {r["tok"]: r["cms_est"] for r in cms_estimate(skw, items, "tok", 4, 4096).collect()}
+    skw = cms_sketch(df, depth=4, width=4096)
+    estw = {r["tok"]: r["cms_est"] for r in cms_estimate(skw, items, 4, 4096).collect()}
     assert estw["hot"] == exact["hot"]
 
 
 def test_cms_partitioning_independent(spark):
     df = _stream(spark, ["a", "b", "a", "c"] * 100)
-    s1 = sorted(map(tuple, cms_sketch(df, "tok").collect()))
-    s2 = sorted(map(tuple, cms_sketch(df.repartition(13), "tok").collect()))
+    s1 = sorted(map(tuple, cms_sketch(df).collect()))
+    s2 = sorted(map(tuple, cms_sketch(df.repartition(13)).collect()))
     assert s1 == s2
 
 
 def test_cms_weighted(spark):
     df = spark.createDataFrame([("a", 5), ("a", 7), ("b", 1)], "tok string, w long")
-    sk = cms_sketch(df, "tok", depth=2, width=128, weight_col="w")
+    sk = cms_sketch(df, depth=2, width=128, weight_col="w")
     est = {
         r["tok"]: r["cms_est"]
-        for r in cms_estimate(sk, df.select("tok").distinct(), "tok", 2, 128).collect()
+        for r in cms_estimate(sk, df.select("tok").distinct(), 2, 128).collect()
     }
     assert est["a"] >= 12 and est["b"] >= 1
 
@@ -167,7 +167,7 @@ def test_kmv_estimate_within_relative_error(spark):
     n, k = 5000, 64
     df = _ids(spark, range(1, n + 1))
     kth = kmv_kth_hash(df, "item", "k", k)
-    est = kth.select(kmv_estimate("kth_hash", k).alias("e")).collect()[0]["e"]
+    est = kth.select(kmv_estimate(k).alias("e")).collect()[0]["e"]
     # KMV std err ~ 1/sqrt(k-2) = 12.7%; assert a generous 3-sigma band
     assert abs(est - n) / n < 0.4, est
 
@@ -280,7 +280,7 @@ def test_qdigest_error_bound_and_size(spark):
     random.seed(11)
     vals = [random.randrange(0, 1 << 12) for _ in range(20000)]
     df = spark.createDataFrame([(v,) for v in vals], "v long")
-    rows = [r.asDict() for r in qdigest_build(df, "v", k=256, bits=12).collect()]
+    rows = [r.asDict() for r in qdigest_build(df, k=256, bits=12).collect()]
     n = sum(r["cnt"] for r in rows)
     assert n == len(vals)
     assert len(rows) < len(set(vals))  # genuinely compressed
@@ -303,11 +303,11 @@ def test_qdigest_partitioning_invariant(spark):
     df = spark.createDataFrame([(v,) for v in vals], "v long")
     a = {
         (r.node, r.cnt)
-        for r in qdigest_build(df.repartition(1), "v", k=64, bits=10).collect()
+        for r in qdigest_build(df.repartition(1), k=64, bits=10).collect()
     }
     b = {
         (r.node, r.cnt)
-        for r in qdigest_build(df.repartition(17), "v", k=64, bits=10).collect()
+        for r in qdigest_build(df.repartition(17), k=64, bits=10).collect()
     }
     assert a == b
 
@@ -331,7 +331,7 @@ def test_qdigest_merge_preserves_mass_and_bound(spark):
     df = spark.createDataFrame(
         [(0, v) for v in a_vals] + [(1, v) for v in b_vals], "shard int, v long"
     )
-    shards = qdigest_build(df, "v", k=256, bits=12, group_cols=["shard"])
+    shards = qdigest_build(df, k=256, bits=12, group_cols=["shard"])
     merged = qdigest_merge(shards.drop("shard"), k=256, bits=12)
     rows = [r.asDict() for r in merged.collect()]
     pooled = a_vals + b_vals
@@ -351,13 +351,13 @@ def test_qdigest_thr_zero_is_exact_histogram(spark):
 
     df = spark.createDataFrame([(v,) for v in [3, 1, 4, 1, 5]], "v long")
     rows = sorted(
-        (r.node, r.cnt) for r in qdigest_build(df, "v", k=2048, bits=8).collect()
+        (r.node, r.cnt) for r in qdigest_build(df, k=2048, bits=8).collect()
     )
     assert rows == [(256 + 1, 2), (256 + 3, 1), (256 + 4, 1), (256 + 5, 1)]
     q = {
         r.pct: r.est
         for r in qdigest_quantiles(
-            qdigest_build(df, "v", k=2048, bits=8), [50, 100], bits=8
+            qdigest_build(df, k=2048, bits=8), [50, 100], bits=8
         ).collect()
     }
     assert q == {50: 3, 100: 5}  # exact medians on an exact histogram
@@ -372,7 +372,7 @@ def test_qdigest_out_of_universe_raises(spark):
 
     df = spark.createDataFrame([(300,)], "v long")
     with pytest.raises(Exception, match="outside universe"):
-        qdigest_build(df, "v", k=16, bits=8).collect()
+        qdigest_build(df, k=16, bits=8).collect()
 
 
 def test_kmv_bottomk_and_pair_overlap(spark):

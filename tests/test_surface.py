@@ -12,14 +12,21 @@ work with no Spark session:
   helper are listed in :data:`ALLOWED` with their reason;
 * every top-level module constant is read by code outside ``tests/``,
   except the input schemas in :data:`ALLOWED_CONSTANTS`;
-* every defaulted parameter of a top-level def is passed, by name or by
-  position, by some call in the package, ``scripts/``, ``perfbench/``,
-  ``bench.py``, ``__spark_entry__.py`` or ``tests/``. A call with ``*args``
-  or ``**kwargs`` passes every parameter. ``@register`` query functions are
-  exempt: the driver fixes their signature. An option that only ever runs
-  at its default is a constant, not a parameter.
+* every parameter of a top-level def takes more than one value across the
+  calls in the package, ``scripts/``, ``perfbench/``, ``bench.py``,
+  ``__spark_entry__.py`` and ``tests/``. Arguments are compared as
+  literals; an omitted argument is the default's value, and a non-literal
+  argument, or a call with ``*args`` or ``**kwargs``, varies. A parameter
+  that every call gives one value (a default that no call passes among
+  them) is a constant, not a parameter. ``@register`` query functions are
+  exempt: the driver fixes their signature. So are the :data:`ALLOWED`
+  defs, which mirror the notebook's task settings, UDFs, whose calls pass
+  columns, and defs whose name is also read as a value (handed to
+  ``mapInPandas``, a UDF and so on), whose calls are not visible; for these,
+  only a default that no call passes is flagged.
 
-Names are matched across modules by name alone.
+Names are matched across modules by name alone, and ``from m import a as
+b`` reads and calls of ``b`` count as ones of ``a``.
 """
 
 from __future__ import annotations
@@ -68,40 +75,72 @@ ALLOWED_CONSTANTS: dict[str, str] = {
 
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
-# a call: (callee name, positional arg count, keyword names, uses * or **)
-Call = tuple[str, int, frozenset, bool]
+# a call: (callee name, positional argument values, keyword argument values,
+# uses * or **); a value is the repr of a literal, or None where it varies
+Call = tuple[str, tuple, dict, bool]
 
 
 def _trees(paths) -> dict[Path, ast.Module]:
     return {p: ast.parse(p.read_text()) for p in paths}
 
 
-def _is_register(decorator: ast.expr) -> bool:
-    func = decorator.func if isinstance(decorator, ast.Call) else decorator
-    return getattr(func, "id", getattr(func, "attr", None)) == "register"
+def _decorated(fn: ast.AST, *names: str) -> bool:
+    """Whether ``fn`` has a decorator, or a decorator call, named in ``names``."""
+    for decorator in getattr(fn, "decorator_list", ()):
+        func = decorator.func if isinstance(decorator, ast.Call) else decorator
+        if getattr(func, "id", getattr(func, "attr", None)) in names:
+            return True
+    return False
 
 
-def _reads(node: ast.AST, aliases: dict[str, str], calls: list[Call]) -> set[str]:
-    """Names and attribute names read under ``node``; records every
-    ``from m import a as b`` it passes in ``aliases`` (b -> a) and every
-    call in ``calls``. An explicit stack, about twice as fast as
-    ``ast.walk``."""
-    out, stack = set(), [node]
+def _literal(node: ast.expr) -> str | None:
+    """The repr of a literal expression, None for anything else."""
+    if type(node) is ast.Constant:
+        return repr(node.value)
+    if type(node) in (ast.Name, ast.Attribute, ast.Call):
+        return None
+    try:
+        return repr(ast.literal_eval(node))
+    except (ValueError, TypeError, SyntaxError):
+        return None
+
+
+def _reads(
+    node: ast.AST, aliases: dict[str, str], calls: list[Call], values: set[str]
+) -> set[str]:
+    """Names and attribute names read under ``node``; adds the ones read
+    other than as a call's callee to ``values``, records every ``from m
+    import a as b`` it passes in ``aliases`` (b -> a) and every call in
+    ``calls``. An explicit stack, about twice as fast as ``ast.walk``."""
+    out, stack, callees = set(), [node], set()
     while stack:
         n = stack.pop()
         kind = type(n)
         if kind is ast.Name:
             if type(n.ctx) is ast.Load:
                 out.add(n.id)
+                if id(n) not in callees:
+                    values.add(n.id)
             continue
         if kind is ast.Attribute:
             out.add(n.attr)
+            if id(n) not in callees:
+                values.add(n.attr)
         elif kind is ast.Call:
+            callees.add(id(n.func))
             name = getattr(n.func, "id", getattr(n.func, "attr", None))
             if name is not None:
-                kws = frozenset(k.arg for k in n.keywords)
-                star = None in kws or any(type(a) is ast.Starred for a in n.args)
-                calls.append((name, len(n.args), kws, star))
+                star = any(type(a) is ast.Starred for a in n.args) or any(
+                    k.arg is None for k in n.keywords
+                )
+                calls.append(
+                    (
+                        name,
+                        tuple(_literal(a) for a in n.args),
+                        {k.arg: _literal(k.value) for k in n.keywords},
+                        star,
+                    )
+                )
         elif kind is ast.ImportFrom:
             aliases.update((a.asname, a.name) for a in n.names if a.asname)
         for v in vars(n).values():
@@ -114,21 +153,24 @@ def _reads(node: ast.AST, aliases: dict[str, str], calls: list[Call]) -> set[str
     return out
 
 
-def _uses(tree: ast.Module, calls: list[Call]) -> set[str]:
+def _uses(tree: ast.Module, calls: list[Call], values: set[str]) -> set[str]:
     """Names read in ``tree``; a read of ``b`` after ``from m import a as b``
     counts as a read of ``a``, and a top-level def's reads of its own name
-    (recursion) do not count. Appends the calls in ``tree`` to ``calls``."""
+    (recursion) do not count. Appends the calls in ``tree`` to ``calls`` and
+    the names it reads as values to ``values``."""
     aliases: dict[str, str] = {}
     used: set[str] = set()
+    read: set[str] = set()
     first = len(calls)
     for stmt in tree.body:
-        names = _reads(stmt, aliases, calls)
+        names = _reads(stmt, aliases, calls, read)
         if isinstance(stmt, _DEFS):
             names.discard(stmt.name)
-            if any(_is_register(d) for d in stmt.decorator_list):
+            if _decorated(stmt, "register"):
                 names.add(stmt.name)
         used |= names
     calls[first:] = [(aliases.get(c[0], c[0]), *c[1:]) for c in calls[first:]]
+    values |= read | {aliases[n] for n in read if n in aliases}
     return used | {aliases[n] for n in used if n in aliases}
 
 
@@ -148,23 +190,85 @@ def _constants(stmt: ast.stmt) -> list[str]:
     return names
 
 
-def _defaulted(fn: ast.FunctionDef) -> list[tuple[int | None, str]]:
-    """(position or None for keyword-only, name) of each defaulted
-    parameter."""
+def _parameters(fn: ast.FunctionDef) -> list[tuple[int | None, str, str | None]]:
+    """(position or None for keyword-only, name, value of the default or
+    None) of each named parameter. A default that is no literal is its
+    source text, so that calls which omit the argument agree on it."""
     a = fn.args
     pos = a.posonlyargs + a.args
-    first = len(pos) - len(a.defaults)
-    out = [(i, p.arg) for i, p in enumerate(pos) if i >= first]
-    out += [(None, p.arg) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
-    return out
+    defaults = [None] * (len(pos) - len(a.defaults)) + a.defaults
+    out = [(i, p.arg, d) for i, (p, d) in enumerate(zip(pos, defaults))]
+    out += [(None, p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)]
+    return [
+        (i, name, None if d is None else _literal(d) or f"<{ast.unparse(d)}>")
+        for i, name, d in out
+    ]
+
+
+def _single_valued(package: dict, calls: list[Call], values: set[str]) -> list[str]:
+    """``path:line def(param=value)`` for each parameter of a top-level
+    def in ``package`` that every call in ``calls`` gives one value (module
+    docstring)."""
+    by_name: dict[str, list[Call]] = {}
+    for call in calls:
+        by_name.setdefault(call[0], []).append(call)
+    found = []
+    for path, tree in package.items():
+        for fn in tree.body:
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) or _decorated(
+                fn, "register"
+            ):
+                continue
+            sites = by_name.get(fn.name, [])
+            hidden = (
+                fn.name in ALLOWED or fn.name in values or _decorated(fn, "pandas_udf", "udf")
+            )
+            for i, param, default in _parameters(fn):
+                seen, passed = set(), False
+                for _, args, kws, star in sites:
+                    if star:
+                        seen.add(None)
+                        passed = True
+                    elif i is not None and i < len(args):
+                        seen.add(args[i])
+                        passed = True
+                    elif param in kws:
+                        seen.add(kws[param])
+                        passed = True
+                    else:
+                        # left out: the default's value; None (varies) for a
+                        # required argument, whose call is of another def
+                        seen.add(default)
+                if not sites and default is not None:
+                    seen.add(default)
+                if hidden:
+                    flagged = default is not None and not passed
+                else:
+                    flagged = len(seen) == 1 and None not in seen
+                if flagged:
+                    value = next(iter(seen)) if seen else default
+                    found.append(f"{path}:{fn.lineno} {fn.name}({param}={value})")
+    return found
+
+
+def _scan(package: dict, others: dict, tests: dict) -> tuple[set, list, set]:
+    """(names read outside tests/, every call, names read as values)."""
+    calls: list[Call] = []
+    values: set[str] = set()
+    used = set().union(
+        *(_uses(t, calls, values) for t in [*package.values(), *others.values()])
+    )
+    for tree in tests.values():
+        _uses(tree, calls, values)
+    return used, calls, values
 
 
 @pytest.fixture(scope="module")
 def surface():
-    """(package trees, names read outside tests/, every call in the repo).
-    Parsing and walking ~300k AST nodes allocates enough to set off cyclic
-    GC passes over the whole test process heap, which would about double
-    the time, so GC is off while it runs."""
+    """(package trees, names read outside tests/, every call in the repo,
+    names read as values). Parsing and walking ~300k AST nodes allocates
+    enough to set off cyclic GC passes over the whole test process heap,
+    which would about double the time, so GC is off while it runs."""
     gc.disable()
     try:
         package = _trees(sorted(PACKAGE.rglob("*.py")))
@@ -173,19 +277,14 @@ def surface():
             + sorted((ROOT / "perfbench").rglob("*.py"))
             + [ROOT / "bench.py", ROOT / "__spark_entry__.py"]
         )
-        calls: list[Call] = []
-        used = set().union(
-            *(_uses(t, calls) for t in [*package.values(), *others.values()])
-        )
-        for tree in _trees(sorted((ROOT / "tests").rglob("*.py"))).values():
-            _uses(tree, calls)
-        return package, used, calls
+        tests = _trees(sorted((ROOT / "tests").rglob("*.py")))
+        return (package, *_scan(package, others, tests))
     finally:
         gc.enable()
 
 
 def test_every_package_def_has_a_non_test_user(surface):
-    package, used, _ = surface
+    package, used, _, _ = surface
     defs: dict[str, list[str]] = {}
     for path, tree in package.items():
         for stmt in tree.body:
@@ -200,7 +299,7 @@ def test_every_package_def_has_a_non_test_user(surface):
 
 
 def test_every_module_constant_has_a_non_test_reader(surface):
-    package, used, _ = surface
+    package, used, _, _ = surface
     consts: dict[str, list[str]] = {}
     for path, tree in package.items():
         for stmt in tree.body:
@@ -214,25 +313,52 @@ def test_every_module_constant_has_a_non_test_reader(surface):
     )
 
 
-def test_every_defaulted_parameter_is_passed_somewhere(surface):
-    package, _, calls = surface
-    by_name: dict[str, list[Call]] = {}
-    for call in calls:
-        by_name.setdefault(call[0], []).append(call)
-    unpassed = []
-    for path, tree in package.items():
-        for fn in tree.body:
-            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)) or any(
-                _is_register(d) for d in fn.decorator_list
-            ):
-                continue
-            sites = by_name.get(fn.name, [])
-            for i, param in _defaulted(fn):
-                if not any(
-                    star or param in kws or (i is not None and npos > i)
-                    for _, npos, kws, star in sites
-                ):
-                    unpassed.append(f"  {path.relative_to(ROOT)}:{fn.lineno} {fn.name}({param})")
-    assert not unpassed, (
-        f"{len(unpassed)} defaulted parameters that no call passes:\n" + "\n".join(unpassed)
+def test_every_parameter_takes_more_than_one_value(surface):
+    package, _, calls, values = surface
+    found = _single_valued(
+        {p.relative_to(ROOT): t for p, t in package.items()}, calls, values
     )
+    assert not found, f"{len(found)} parameters that take only one value:\n" + "\n".join(
+        f"  {f}" for f in found
+    )
+
+
+def _flagged(package_src: str, tests_src: str) -> list[str]:
+    """The single-value check run over one package module and one test
+    module given as source."""
+    package = {Path("pkg.py"): ast.parse(package_src)}
+    _, calls, values = _scan(package, {}, {Path("test_pkg.py"): ast.parse(tests_src)})
+    return [f.split(" ", 1)[1] for f in _single_valued(package, calls, values)]
+
+
+PKG = """
+def f(df, n=3, *, col="v"):
+    return df
+"""
+
+
+def test_guard_counts_an_omitted_argument_as_its_default():
+    assert _flagged(PKG, "f(a, 3)\nf(b)\nf(c, n=3, col='v')") == ["f(n=3)", "f(col='v')"]
+
+
+def test_guard_lets_star_arguments_vary_every_parameter():
+    assert _flagged(PKG, "f(*xs)\nf(a, **kw)") == []
+
+
+def test_guard_resolves_an_aliased_import():
+    tests = "from pkg import f as g\ng(a, 3)\ng(b, 4, col='w')\ng(c, 3, col='v')"
+    assert _flagged(PKG, tests) == []
+    assert _flagged(PKG, "from pkg import f as g\ng(a, 5)\ng(b, 5)") == [
+        "f(n=5)",
+        "f(col='v')",
+    ]
+
+
+def test_guard_skips_a_def_read_as_a_value():
+    assert _flagged(PKG, "df.mapInPandas(f)\nf(a, 4, col='w')\nf(b, 4, col='w')") == []
+    # only a default that no visible call passes is flagged on such a def
+    assert _flagged(PKG, "df.mapInPandas(f)\nf(a)") == ["f(n=3)", "f(col='v')"]
+
+
+def test_guard_lets_a_literal_and_a_variable_vary():
+    assert _flagged(PKG, "f(a, 3, col='v')\nf(b, k, col=name)") == []

@@ -36,7 +36,7 @@ def test_tumbling_counts_and_sums(spark):
         ],
     )
     out = {r["win_start"]: (r["n_events"], r["total_value"])
-           for r in tumbling_agg(df, "10 minutes").collect()}
+           for r in tumbling_agg(df).collect()}
     assert out[_epoch(0)] == (2, 3.0)
     assert out[_epoch(10)] == (1, 4.0)
     assert out[_epoch(20)] == (1, 8.0)
@@ -44,7 +44,7 @@ def test_tumbling_counts_and_sums(spark):
 
 def test_sliding_window_membership(spark):
     df = events_df(spark, [(1, ts(7), "a", 1.0)])
-    out = sorted(r["win_start"] for r in sliding_agg(df, "10 minutes", "5 minutes").collect())
+    out = sorted(r["win_start"] for r in sliding_agg(df).collect())
     # event at 00:07 belongs to windows [00:00,00:10) and [00:05,00:15)
     assert out == [_epoch(0), _epoch(5)]
 
@@ -59,7 +59,7 @@ def test_sessionize_gap_split(spark):
             (2, ts(5), "a", 0.0),    # separate user
         ],
     )
-    out = sessionize(df, "30 minutes").collect()
+    out = sessionize(df).collect()
     u1 = sorted(
         [(r["session_start"], r["session_end"], r["n_events"]) for r in out if r["user"] == 1]
     )
@@ -82,7 +82,7 @@ def test_gapfill_forward_fills_empty_slots(spark):
     )
     out = {
         (r["event_type"], r["bucket_start"]): (r["n_events"], r["filled_value"])
-        for r in gapfill(df, "5 minutes").collect()
+        for r in gapfill(df).collect()
     }
     assert out[("a", _epoch(0))] == (2, 4.0)
     assert out[("a", _epoch(5))] == (0, 4.0)    # gap: carries slot-0 sum
@@ -146,7 +146,7 @@ def test_gapfill_invariants_on_catalog_data(spark):
     from data_engineering_assignment_spark.tables import load
 
     ev = load(spark, "/root/testdata/sf0.001", "events")
-    rows = gapfill(ev, "5 minutes").collect()
+    rows = gapfill(ev).collect()
     by_key = defaultdict(list)
     for r in rows:
         by_key[r["event_type"]].append(r)
@@ -224,7 +224,7 @@ def test_trailing_agg_bucketed_matches_flat_window(spark):
         F.sum(F.col("value").cast(DEC)).over(flat_w).alias("trail_sum"),
         F.count(F.lit(1)).over(flat_w).alias("trail_n"),
     )
-    bucketed = trailing_agg_bucketed(df, 3600, n_buckets=60).select(
+    bucketed = trailing_agg_bucketed(df).select(
         "event_id", "trail_sum", "trail_n"
     )
     a = {r["event_id"]: (r["trail_sum"], r["trail_n"]) for r in flat.collect()}
@@ -233,7 +233,7 @@ def test_trailing_agg_bucketed_matches_flat_window(spark):
     # and partitioning-independent
     c = {
         r["event_id"]: (r["trail_sum"], r["trail_n"])
-        for r in trailing_agg_bucketed(df.repartition(13), 3600, n_buckets=60)
+        for r in trailing_agg_bucketed(df.repartition(13))
         .select("event_id", "trail_sum", "trail_n")
         .collect()
     }
@@ -272,7 +272,7 @@ def test_trailing_agg_bucketed_duplicate_rows_and_negative_ts(spark):
     )
     bucketed = sorted(
         (r["ts_s"], r["trail_sum"], r["trail_n"])
-        for r in trailing_agg_bucketed(df, 3600, n_buckets=60)
+        for r in trailing_agg_bucketed(df)
         .select("ts_s", "trail_sum", "trail_n")
         .collect()
     )
@@ -315,7 +315,7 @@ def test_trailing_agg_bucketed_multi_value_columns(spark):
     got = {
         r["event_id"]: (r["trail_sum_value"], r["trail_sum_v2"], r["trail_n"])
         for r in trailing_agg_bucketed(
-            df, 3600, value_col=["value", "v2"], n_buckets=60
+            df, value_col=["value", "v2"]
         ).collect()
     }
     assert flat == got
@@ -361,7 +361,7 @@ def test_trailing_agg_bucketed_null_values(spark):
     }
     got = {
         r["event_id"]: (r["trail_sum"], r["trail_n"], r["trail_nn"])
-        for r in trailing_agg_bucketed(df, 3600, n_buckets=60).collect()
+        for r in trailing_agg_bucketed(df).collect()
     }
     assert flat == got
 
@@ -398,7 +398,7 @@ def test_lead_ts_bucketed_matches_flat_lead(spark):
         got = {
             (r.k, r.id): r._next_ts
             for r in lead_ts_bucketed(
-                df.repartition(nparts), "k", "ts_s", ["id"], bucket_s=3600
+                df.repartition(nparts), "k", ["id"]
             ).collect()
         }
         assert got == flat, nparts
