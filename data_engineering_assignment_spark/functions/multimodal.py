@@ -33,6 +33,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..sources import map_batches
+
 MEDIA_SCHEMA = (
     "path string, media_type string, width int, height int, channels int,"
     " n_frames int, content binary"
@@ -911,7 +913,7 @@ def decode_media(df: DataFrame) -> DataFrame:
             )
             yield out
 
-    return df.mapInPandas(mapper, schema)
+    return map_batches(df, mapper, schema)
 
 
 def resize_media(df: DataFrame, out_h: int) -> DataFrame:
@@ -935,7 +937,7 @@ def resize_media(df: DataFrame, out_h: int) -> DataFrame:
             out["height"] = out_h
             yield out
 
-    return df.mapInPandas(mapper, MEDIA_SCHEMA)
+    return map_batches(df, mapper, MEDIA_SCHEMA)
 
 
 def sample_frames(df: DataFrame, every_k: int) -> DataFrame:
@@ -954,7 +956,7 @@ def sample_frames(df: DataFrame, every_k: int) -> DataFrame:
             out["n_frames"] = n_frames
             yield out
 
-    return df.mapInPandas(mapper, MEDIA_SCHEMA)
+    return map_batches(df, mapper, MEDIA_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

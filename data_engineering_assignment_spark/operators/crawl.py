@@ -19,6 +19,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources import map_batches
+
+
 def _html_struct():
     from pyspark.sql.types import (
         ArrayType,
@@ -151,7 +154,7 @@ def html_extract(
             out["page"] = vals
             yield out
 
-    return df.mapInPandas(mapper, out_schema)
+    return map_batches(df, mapper, out_schema)
 
 
 def pdf_extract(df: DataFrame) -> DataFrame:
@@ -218,7 +221,7 @@ def pdf_extract(df: DataFrame) -> DataFrame:
             out["doc"] = vals
             yield out
 
-    return df.mapInPandas(mapper, out_schema)
+    return map_batches(df, mapper, out_schema)
 
 
 def document_extract(df: DataFrame, content_type_col: str | None = None) -> DataFrame:
@@ -346,7 +349,7 @@ def document_extract(df: DataFrame, content_type_col: str | None = None) -> Data
             ]
             yield out
 
-    return df.mapInPandas(mapper, out_schema)
+    return map_batches(df, mapper, out_schema)
 
 
 def with_url_parts(
@@ -900,13 +903,12 @@ def sitemap_entries(df: DataFrame, content_col: str = "http_body") -> DataFrame:
         ]
 
     return _binary_meta_source(
-        df.select(F.col("target_uri").alias("sitemap_uri"), content_col),
-        content_col, "sitemap_uri", parse_sitemap,
+        df, content_col, "target_uri", parse_sitemap,
         "kind string, loc string, lastmod string, changefreq string,"
         " priority string, n_images int, n_videos int,"
         " video_duration_sum long",
         rows_fn,
-    )
+    ).withColumnRenamed("target_uri", "sitemap_uri")
 
 
 def feed_entries(df: DataFrame) -> DataFrame:
@@ -934,12 +936,11 @@ def feed_entries(df: DataFrame) -> DataFrame:
         ]
 
     return _binary_meta_source(
-        df.select(F.col("target_uri").alias("feed_uri"), "http_body"),
-        "http_body", "feed_uri", parse_feed,
+        df, "http_body", "target_uri", parse_feed,
         "kind string, feed_title string, link string, title string,"
         " published string, entry_id string",
         rows_fn,
-    )
+    ).withColumnRenamed("target_uri", "feed_uri")
 
 
 def warc_revisit_export(df: DataFrame) -> DataFrame:
@@ -1217,7 +1218,7 @@ def robots_rules(robots: DataFrame, agent: str) -> DataFrame:
                 rows, columns=["url_host", "allow", "rule_regex", "spec"]
             )
 
-    return robots.mapInPandas(mapper, schema)
+    return map_batches(robots, mapper, schema)
 
 
 # A bounded SAMPLE of publicsuffix.org rules covering every rule KIND
@@ -1383,7 +1384,7 @@ def robots_sitemaps(robots: DataFrame) -> DataFrame:
                     continue
             yield pd.DataFrame(rows, columns=["url_host", "sitemap_url"])
 
-    return robots.mapInPandas(mapper, schema)
+    return map_batches(robots, mapper, schema)
 
 
 def robots_delays(robots: DataFrame) -> DataFrame:
@@ -1412,7 +1413,7 @@ def robots_delays(robots: DataFrame) -> DataFrame:
                     rows.append((host, None))
             yield pd.DataFrame(rows, columns=["url_host", "crawl_delay_s"])
 
-    return robots.mapInPandas(mapper, schema)
+    return map_batches(robots, mapper, schema)
 
 
 def robots_filter(urls: DataFrame, robots: DataFrame, agent: str) -> DataFrame:

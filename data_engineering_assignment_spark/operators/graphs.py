@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 PR_SCALE = 10**12  # pagerank_integer's fixed-point rank of 1.0
 PR_DAMP_NUM, PR_DAMP_DEN = 17, 20  # damping 0.85 as an exact ratio
 HITS_SCALE = 10**6  # hits_integer's fixed-point maximum hub/auth score
+HITS_ITERS = 3  # hits_integer's iteration count, replayed by its oracle
 CHECKPOINT_EVERY = 4  # loop rounds between lineage cuts
 MIN_PAIR_COUNT = 2  # order baskets two parts share to be co-purchase neighbours
 
@@ -438,8 +439,8 @@ def sssp_rounds(
     return dist
 
 
-def hits_integer(edges: DataFrame, iters: int = 3) -> DataFrame:
-    """(node, hub, auth) after ``iters`` integer HITS iterations
+def hits_integer(edges: DataFrame) -> DataFrame:
+    """(node, hub, auth) after :data:`HITS_ITERS` integer HITS iterations
     (Kleinberg 1999 hubs-and-authorities — the web-graph ranking pair
     beside :func:`pagerank_integer`; on a crawl host graph, hubs are
     link-directory hosts and authorities are link targets).
@@ -474,7 +475,7 @@ def hits_integer(edges: DataFrame, iters: int = 3) -> DataFrame:
     )
     h = nodes.select("node", F.lit(HITS_SCALE).cast("long").alias("hub"))
     a = None
-    for _ in range(iters):
+    for _ in range(HITS_ITERS):
         raw_a = (
             e.join(h, e.src == h.node)
             .groupBy(F.col("dst").alias("node"))

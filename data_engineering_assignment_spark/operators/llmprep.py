@@ -33,6 +33,8 @@ from .text import char_shingle_hash_stream, rolling_hash, tokens
 # (Spark) and RE2 (DuckDB) — no backrefs, no lookaround.
 EMAIL_PATTERN = r"[A-Za-z0-9._]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PHONE_PATTERN = r"\b555-[0-9]{2,8}\b"
+# percent of each source quality_percentile_gate keeps, read by its oracle
+QUALITY_KEEP_PCT = 80
 
 
 def hash_bucket() -> Column:
@@ -598,8 +600,9 @@ def intra_doc_repetition(df: DataFrame, para_tokens: int = 16) -> DataFrame:
 
 def quality_percentile_gate(df: DataFrame) -> DataFrame:
     """Per-group percentile quality gate: within each ``source``, keep the
-    top ``keep_pct``% of documents by ``quality`` score. The cut is pure
-    integer arithmetic — ``n_kept = (n * keep_pct) div 100`` — never a
+    top :data:`QUALITY_KEEP_PCT`% of documents by ``quality`` score. The
+    cut is pure integer arithmetic — ``n_kept = (n * QUALITY_KEEP_PCT)
+    div 100`` — never a
     floating-point percentile, so the kept set is identical on every engine
     and partitioning.
 
@@ -639,7 +642,7 @@ def quality_percentile_gate(df: DataFrame) -> DataFrame:
     uncontended). The resolve join on ``_qb`` drops NULL rows for free
     (equi-join never matches NULL). Output: (source, n_docs, n_kept,
     min_kept_quality)."""
-    keep_pct = 80
+    keep_pct = QUALITY_KEEP_PCT
     bw = F.lit(0.01)
     e = df.select(
         F.col("source").alias("_g"),

@@ -33,6 +33,7 @@ _MMIX_ADD = 1442695040888963407
 _MASK = (1 << 64) - 1
 _SEED = 42
 RP_K = 16  # components rp_norm_stats projects to
+RP_DIM = 64  # embedding width rp_norm_stats projects from
 
 
 def jl_signs(dim: int, row: int) -> list[float]:
@@ -65,15 +66,16 @@ def project(vec: Column, dim: int, k: int) -> Column:
     return F.array(*[_fold_dot(vec, jl_signs(dim, j)) for j in range(k)])
 
 
-def rp_norm_stats(df: DataFrame, dim: int) -> DataFrame:
-    """Per-vector JL norm-preservation telemetry at k = :data:`RP_K`.
+def rp_norm_stats(df: DataFrame) -> DataFrame:
+    """Per-vector JL norm-preservation telemetry, :data:`RP_DIM` to
+    k = :data:`RP_K` dims.
 
     E[||y||^2 / k] = ||x||^2 for the ±1 matrix, so ``distortion`` =
     ||y||^2 / (k ||x||^2) concentrates around 1 — the measured JL
     guarantee, per vector. Columns: id, x_norm2, y_norm2_over_k,
     distortion.
     """
-    k = RP_K
+    dim, k = RP_DIM, RP_K
     x = F.col("embedding")
     x_norm2 = F.aggregate(
         F.transform(x, lambda v: v.cast("double") * v.cast("double")),

@@ -18,8 +18,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources import map_batches
+
 SIM_SCALE = 4  # decimal places every reported cosine similarity keeps
 PQ_DIST_SCALE = 6  # decimal places of the PQ / IVF-PQ approximate distances
+IVF_N_PROBE = 4  # IVF cells each query scores in ivf_topk_portable
+PQ_TOP_K = 5  # neighbours the PQ / IVF-PQ twins report per query
+PQ_M = 32  # PQ sub-spaces
+PQ_CODES = 16  # codewords per PQ sub-space
+PQ_DIM = 64  # embedding width the PQ twins split into PQ_M sub-spaces
+SEMDEDUP_T = 0.4  # cosine threshold of semantic_dup_pairs_portable
+SEMDEDUP_CELLS = 16  # seed cells of semantic_dup_pairs_portable
 INC_DUP_COSINE = 0.4  # incremental_semantic_dedup counts corpus rows at or above it
 
 
@@ -327,7 +336,7 @@ def kmeans_centroids(corpus: DataFrame, n_centroids: int = 16, n_iter: int = 2):
     cents = _farthest_point_seeds(prep, n_centroids)
     for _ in range(n_iter):
         b = spark.sparkContext.broadcast(cents)
-        assigned = prep.mapInPandas(_cell_mapper(b), _VEC_SCHEMA)
+        assigned = map_batches(prep, _cell_mapper(b), _VEC_SCHEMA)
         stats = (
             assigned.select("cell", F.posexplode("vec").alias("pos", "val"))
             .groupBy("cell", "pos")
@@ -356,7 +365,6 @@ def ivf_topk_portable(
     queries: DataFrame,
     k: int = 5,
     n_centroids: int = 16,
-    n_probe: int = 4,
 ) -> DataFrame:
     """IVF top-k whose every step is SQL-expressible, so the operator is
     exact-oracle-checkable end to end (mirroring the ``dedup_minhash_lsh``
@@ -407,13 +415,13 @@ def ivf_topk_portable(
     # and tie semantics included) — the old n_centroids-fold crossJoin +
     # per-id window shuffled corpus x 16 rows EACH CARRYING the 64-double
     # vector; this is a zero-shuffle projection. The bounded query side
-    # keeps the window (it needs top-n_probe, and 10 rows cost nothing).
+    # keeps the window (it needs top-IVF_N_PROBE, and 10 rows cost nothing).
     assigned = c_prep.crossJoin(F.broadcast(cents_array(cents))).select(
         F.col("id").alias("neighbor_id"),
         F.col("vec").alias("c_vec"),
         argmax_cell(F.col("vec"), F.col("_cents")).alias("cell"),
     )
-    probed = assign(q_prep, n_probe).select(
+    probed = assign(q_prep, IVF_N_PROBE).select(
         F.col("id").alias("query_id"), F.col("vec").alias("q_vec"), "cell"
     )
     # corpus rows live in exactly one cell, so (query, neighbor) is unique
@@ -492,9 +500,9 @@ def semantic_dup_pairs(
     else:
         cents = _seed_centroids(c_prep, n_centroids)
     b_cents = spark.sparkContext.broadcast(cents)
-    assigned = c_prep.mapInPandas(_cell_mapper(b_cents), _VEC_SCHEMA)
+    assigned = map_batches(c_prep, _cell_mapper(b_cents), _VEC_SCHEMA)
     return assigned.groupBy("cell").applyInPandas(
-        _cell_pair_scanner(threshold, SIM_SCALE),
+        _cell_pair_scanner(threshold),
         "id_a bigint, id_b bigint, cell int, sim double",
     )
 
@@ -542,7 +550,7 @@ def hierarchical_cells(
     cents1 = kmeans_centroids(corpus, n_coarse, n_iter)
     b1 = corpus.sparkSession.sparkContext.broadcast(cents1)
     assigned1 = (
-        prep.mapInPandas(_cell_mapper(b1), _VEC_SCHEMA)
+        map_batches(prep, _cell_mapper(b1), _VEC_SCHEMA)
         .withColumnRenamed("cell", "cell1")
         # EAGER (a lazy flip was tried in r16 and reverted: the multiple
         # same-action consumers race to compute unpersisted partitions —
@@ -686,13 +694,13 @@ def semantic_dup_pairs_hier(
         (F.col("cell1").cast("int") * 65536 + F.col("sub").cast("int")).alias("cell"),
     )
     return combined.groupBy("cell").applyInPandas(
-        _cell_pair_scanner(threshold, SIM_SCALE),
+        _cell_pair_scanner(threshold),
         "id_a bigint, id_b bigint, cell int, sim double",
     )
 
 
-def _fround_double(x: float, scale: int) -> float:
-    """Python replica of Spark's ``F.round(double, scale)``: round the
+def _fround_double(x: float) -> float:
+    """Python replica of Spark's ``F.round(double, SIM_SCALE)``: round the
     SHORTEST-decimal representation HALF_UP (Catalyst's Round delegates to
     BigDecimal.valueOf, i.e. Double.toString — the same shortest-repr
     algorithm as Python's repr). Pinned bit-for-bit against F.round in
@@ -700,10 +708,10 @@ def _fround_double(x: float, scale: int) -> float:
     crosses .xxxx5 midpoints differently and must not replace this."""
     from decimal import ROUND_HALF_UP, Decimal
 
-    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-scale), ROUND_HALF_UP))
+    return float(Decimal(repr(x)).quantize(Decimal(1).scaleb(-SIM_SCALE), ROUND_HALF_UP))
 
 
-def _cell_pair_scanner(threshold: float, scale: int):
+def _cell_pair_scanner(threshold: float):
     """applyInPandas factory: one cell's rows in, its duplicate pairs out.
 
     Sorts the block by id (partitioning-independent), computes the full
@@ -726,9 +734,6 @@ def _cell_pair_scanner(threshold: float, scale: int):
     import numpy as np
     import pandas as pd
 
-    def fround(x: float) -> float:
-        return _fround_double(x, scale)
-
     def scanner(pdf):
         pdf = pdf.sort_values("id").reset_index(drop=True)
         ids = pdf["id"].to_numpy()
@@ -738,9 +743,9 @@ def _cell_pair_scanner(threshold: float, scale: int):
         raw = sims[ii, jj]
         # slack superset: rounding at scale s moves a value < 10^-s, so
         # nothing below threshold - 10^-s can round up across it
-        cand = raw >= threshold - 10.0**-scale
+        cand = raw >= threshold - 10.0**-SIM_SCALE
         ii, jj, raw = ii[cand], jj[cand], raw[cand]
-        rounded = np.array([fround(x) for x in raw], dtype=np.float64)
+        rounded = np.array([_fround_double(x) for x in raw], dtype=np.float64)
         keep = rounded >= threshold
         return pd.DataFrame(
             {
@@ -796,17 +801,14 @@ def portable_cells(
 
 
 def semantic_dup_pairs_portable(
-    corpus: DataFrame,
-    threshold: float = 0.4,
-    n_centroids: int = 16,
-    cells: DataFrame | None = None,
+    corpus: DataFrame, cells: DataFrame | None = None
 ) -> DataFrame:
     """SQL-expressible twin of :func:`semantic_dup_pairs` (the
     ivf_topk_portable discipline): Knuth-hash centroid seeding, no Lloyd
     refinement, assignment by argmax cosine over the broadcast seed rows
     via order-pinned JVM folds — every step reproducible bit-for-bit in
     DuckDB, so the within-cell pair set is exact-oracle-checkable. The
-    per-id assignment window fans each row ``n_centroids``-fold — fine at
+    per-id assignment window fans each row ``SEMDEDUP_CELLS``-fold — fine at
     oracle scale; production uses the narrow numpy pass.
 
     ``cells`` injects a precomputed :func:`portable_cells` result so a
@@ -814,12 +816,12 @@ def semantic_dup_pairs_portable(
     stats) shares ONE checkpointed table and ONE definition of the pair
     join — the survivors query used to carbon-copy this body (r7 review).
 
-    Output: (id_a, id_b, cell, sim), id_a < id_b, sim >= threshold.
+    Output: (id_a, id_b, cell, sim), id_a < id_b, sim >= SEMDEDUP_T.
     """
     assigned = (
         cells
         if cells is not None
-        else portable_cells(corpus, n_centroids)
+        else portable_cells(corpus, SEMDEDUP_CELLS)
     )
     a = assigned.alias("a").hint("shuffle_hash")
     b = assigned.alias("b").hint("shuffle_hash")
@@ -835,7 +837,7 @@ def semantic_dup_pairs_portable(
             F.col("a.cell").alias("cell"),
             sim.alias("sim"),
         )
-        .filter(F.col("sim") >= threshold)
+        .filter(F.col("sim") >= SEMDEDUP_T)
     )
 
 
@@ -1018,14 +1020,7 @@ def quantize_int8(df: DataFrame) -> DataFrame:
     return df.withColumn("q_scale", scale).withColumn("q", q)
 
 
-def pq_topk_portable(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    m: int = 32,
-    n_codes: int = 16,
-    dim: int = 64,
-) -> DataFrame:
+def pq_topk_portable(corpus: DataFrame, queries: DataFrame) -> DataFrame:
     """Product-quantization ADC top-k, portable twin (the third
     oracle-checkable ANN index after the LSH and IVF twins): vectors are
     L2-normalized, split into ``m`` subvectors, each encoded as the index
@@ -1053,11 +1048,11 @@ def pq_topk_portable(
       * rank: per-query window, corpus-sized partitions — fine for a
         bounded query set, the same trade the LSH/IVF twins make.
 
-    Output: (query_id, neighbor_id, approx_dist, rnk), rnk <= k.
+    Output: (query_id, neighbor_id, approx_dist, rnk), rnk <= PQ_TOP_K.
     """
-    if dim % m:
-        raise ValueError("dim must be divisible by m")
     from .parallelism import ensure_min_parallelism
+
+    k, m, n_codes, dim = PQ_TOP_K, PQ_M, PQ_CODES, PQ_DIM
 
     # the PQ encode (corpus x m x n_codes interpreted HOF argmin) is
     # narrow from the scan — one task at small-file scale without the
@@ -1080,7 +1075,7 @@ def pq_topk_portable(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("_s", _pq_adc(F.col("qvec"), F.col("codes"), FLAT, m, dim))
     )
-    return _pq_rank(scored, k, PQ_DIST_SCALE)
+    return _pq_rank(scored, k)
 
 
 def _pq_prep(df: DataFrame) -> DataFrame:
@@ -1220,7 +1215,7 @@ def _pq_adc(qvec: Column, codes_col: Column, FLAT: Column, m: int, dim: int) -> 
     return _flat_bound(FLAT, with_flat)
 
 
-def _pq_rank(scored: DataFrame, k: int, scale: int) -> DataFrame:
+def _pq_rank(scored: DataFrame, k: int) -> DataFrame:
     w = Window.partitionBy("query_id").orderBy(F.asc("_s"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w).cast("long"))
@@ -1228,7 +1223,7 @@ def _pq_rank(scored: DataFrame, k: int, scale: int) -> DataFrame:
         .select(
             "query_id",
             "neighbor_id",
-            F.round(F.col("_s").cast("decimal(27,12)"), scale)
+            F.round(F.col("_s").cast("decimal(27,12)"), PQ_DIST_SCALE)
             .cast("double")
             .alias("approx_dist"),
             "rnk",
@@ -1239,12 +1234,8 @@ def _pq_rank(scored: DataFrame, k: int, scale: int) -> DataFrame:
 def ivfpq_topk_portable(
     corpus: DataFrame,
     queries: DataFrame,
-    k: int = 5,
-    m: int = 32,
-    n_codes: int = 16,
     n_centroids: int = 16,
     n_probe: int = 4,
-    dim: int = 64,
 ) -> DataFrame:
     """IVF-PQ composed index (the FAISS IVFADC shape — Jégou et al. 2011,
     "Product Quantization for Nearest Neighbor Search"): coarse IVF cells
@@ -1263,11 +1254,11 @@ def ivfpq_topk_portable(
     documented simplification (residual PQ needs per-cell codebooks whose
     training is k-means, not SQL).
 
-    Output: (query_id, neighbor_id, approx_dist, rnk), rnk <= k.
+    Output: (query_id, neighbor_id, approx_dist, rnk), rnk <= PQ_TOP_K.
     """
-    if dim % m:
-        raise ValueError("dim must be divisible by m")
     from .parallelism import ensure_min_parallelism
+
+    k, m, n_codes, dim = PQ_TOP_K, PQ_M, PQ_CODES, PQ_DIM
 
     # the PQ encode (corpus x m x n_codes interpreted HOF argmin) is
     # narrow from the scan — one task at small-file scale without the
@@ -1335,4 +1326,4 @@ def ivfpq_topk_portable(
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .withColumn("_s", _pq_adc(F.col("qvec"), F.col("codes"), FLAT, m, dim))
     )
-    return _pq_rank(scored, k, PQ_DIST_SCALE)
+    return _pq_rank(scored, k)

@@ -30,6 +30,7 @@ from .dedup import PORTABLE_MOD
 # rank_values_pruned histogram width over [0, PORTABLE_MOD) hashes: ~500
 # buckets, so each resolve step reads one narrow hash range
 HASH_BUCKET_WIDTH = 2_000_000.0
+BLOOM_K = 4  # probe positions per item of bloom_build / bloom_maybe_contains
 
 
 def cms_bucket(rh: Column, i: int, width: int) -> Column:
@@ -83,19 +84,19 @@ def bloom_position(rh: Column, i: int, m_bits: int) -> Column:
 def bloom_build(
     df: DataFrame,
     item_col: str,
-    k: int = 4,
     m_bits: int = 1 << 14,
     hash_col: str | None = None,
 ) -> DataFrame:
     """Build a Bloom filter over the items as a DataFrame of DISTINCT set
-    bit positions (one ``pos`` long column, at most ``min(k*|items|, m_bits)``
+    bit positions (one ``pos`` long column, at most
+    ``min(BLOOM_K*|items|, m_bits)``
     rows — bounded by ``m_bits`` regardless of corpus size, hence always
     broadcast-eligible).
 
     The membership structure the 100 TB decontamination path wants: the
     exact benchmark-shingle set grows with the benchmark suite, but the
     filter is a fixed ``m_bits`` bits chosen for the target false-positive
-    rate (k = 4 probes, m/n ≈ 8 bits/item → ~2.4% FP), so the broadcast
+    rate (BLOOM_K = 4 probes, m/n ≈ 8 bits/item → ~2.4% FP), so the broadcast
     cost is a constant. Building is one explode + one distinct — map-side
     combinable, linear. ``hash_col`` names a column already holding the
     item's rolling hash — callers that materialize a hashed stream skip
@@ -107,7 +108,7 @@ def bloom_build(
     return (
         df.select(
             F.explode(
-                F.array(*[bloom_position(rh, i, m_bits) for i in range(k)])
+                F.array(*[bloom_position(rh, i, m_bits) for i in range(BLOOM_K)])
             ).alias("pos")
         )
         .distinct()
@@ -118,15 +119,15 @@ def bloom_maybe_contains(
     bloom: DataFrame,
     items: DataFrame,
     item_col: str,
-    k: int = 4,
     m_bits: int = 1 << 14,
     hash_col: str | None = None,
 ) -> DataFrame:
     """Probe each row's ``item_col`` against the filter: ``bloom_hit`` is
-    true iff ALL ``k`` probe positions are set (the Bloom "maybe present";
-    false is a certainty). ``k`` chained BROADCAST left joins, one per
-    probe position — fully NARROW: the probed stream is never exploded,
-    regrouped, or shuffled, each row just does k hash lookups against the
+    true iff ALL ``BLOOM_K`` probe positions are set (the Bloom "maybe
+    present"; false is a certainty). ``BLOOM_K`` chained BROADCAST left
+    joins, one per probe position — fully NARROW: the probed stream is
+    never exploded, regrouped, or shuffled, each row just does
+    ``BLOOM_K`` hash lookups against the
     broadcast position set (the filter is bounded by ``m_bits``, so the
     broadcasts are constant-size at any corpus size). ``hash_col`` as in
     :func:`bloom_build` — without it the per-char hash fold is inlined
@@ -136,6 +137,7 @@ def bloom_maybe_contains(
     from .text import rolling_hash
 
     rh = F.col(hash_col) if hash_col else rolling_hash(item_col)
+    k = BLOOM_K
     out = items
     for i in range(k):
         bi = bloom.select(

@@ -36,6 +36,10 @@ def _interval_seconds(interval: str) -> int:
     return int(parts[0]) * _UNIT_SECONDS[parts[1].lower()]
 
 
+# sessionize's inactivity gap in seconds, read by its oracle
+SESSION_GAP_S = _interval_seconds("30 minutes")
+
+
 def tumbling_agg(events: DataFrame, keys: list[str] | None = None) -> DataFrame:
     """Tumbling-window counts + exact value sums per (window, *keys)."""
     duration = "10 minutes"
@@ -164,21 +168,19 @@ def retention_cohorts(events: DataFrame) -> DataFrame:
 def sessionize(events: DataFrame) -> DataFrame:
     """Gap-based sessionization via analytic windows (batch equivalent of
     ``F.session_window``): a new session starts when the previous event of the
-    same user is more than ``gap`` away.
+    same user is more than :data:`SESSION_GAP_S` seconds away.
 
     Output: (user, session_id, session_start, session_end, n_events) with
     epoch-second bounds.
     """
     from pyspark.sql import Window as W
 
-    gap = "30 minutes"
-    gap_secs = _interval_seconds(gap)
     w = W.partitionBy("user_id").orderBy("ts")
     ts_sec = F.unix_timestamp(F.col("ts"))
     marked = events.withColumn(
         "new_session",
         F.when(
-            ts_sec - F.lag(ts_sec, 1).over(w) > gap_secs, 1
+            ts_sec - F.lag(ts_sec, 1).over(w) > SESSION_GAP_S, 1
         ).otherwise(0),
     ).withColumn(
         "session_seq",

@@ -1810,14 +1810,13 @@ def part_distance_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HITS_ITERS = 3  # host_graph_hits and its oracle replay the same count
-
-
 def _hits_oracle() -> str:
     """Unrolled-iteration HITS replay (the pagerank_integer oracle
     discipline): same edge derivation, same max-norm integer floor
     divisions, one CTE pair per half-step."""
-    iters = _HITS_ITERS
+    from ..operators.graphs import HITS_ITERS
+
+    iters = HITS_ITERS
     parts = [
         """
 WITH e AS MATERIALIZED (
@@ -1882,4 +1881,4 @@ def host_graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("src") != F.col("dst"))
         & ((3 * F.col("src") + 5 * F.col("dst")) % 7 < 3)
     )
-    return hits_integer(edges, iters=_HITS_ITERS)
+    return hits_integer(edges)

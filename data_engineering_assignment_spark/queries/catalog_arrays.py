@@ -12,7 +12,14 @@ from pyspark.sql import functions as F
 from ..operators.aggregates import dround, o_davg, o_dround
 from ..operators.similarity import (
     INC_DUP_COSINE,
+    IVF_N_PROBE,
+    PQ_CODES,
+    PQ_DIM,
     PQ_DIST_SCALE,
+    PQ_M,
+    PQ_TOP_K,
+    SEMDEDUP_CELLS,
+    SEMDEDUP_T,
     SIM_SCALE,
     cosine_topk,
     lsh_bucketed_topk,
@@ -21,16 +28,13 @@ from ..operators.similarity import (
 from ..tables import load
 from . import register
 
-# ANN and SemDeDup settings that a query passes to its operator and that
-# its SQL twin reads: one value each, so the two engines cannot drift apart
+# ANN settings that a query passes to its operator and that its SQL twin
+# reads: one value each, so the two engines cannot drift apart (the ones no
+# query varies are the operators' own constants, imported above)
 _DIM = 64  # embedding width
 _TOP_K = 5  # neighbours reported per query
-_N_CELLS = 16  # IVF / SemDeDup cells
-_N_PROBE = 4  # IVF cells each query scores
+_N_CELLS = 16  # IVF cells
 _LSH_PLANES = 4  # hyperplanes of the LSH bucket id
-_PQ_M = 32  # PQ sub-spaces
-_PQ_CODES = 16  # codewords per PQ sub-space
-_SEM_T = 0.4  # SemDeDup cosine threshold
 _RP_COARSE_M = 100  # projected-space candidates per query in rp_recall_telemetry
 
 _EMB_STATS_ORACLE = f"""
@@ -226,7 +230,7 @@ def _ivf_oracle() -> str:
     same left-to-right dot-product folds as the Spark expressions, so the
     'approximate' IVF is a deterministic function of its inputs and
     exact-oracle-checkable — same argument as the LSH twin."""
-    dim, k, n_centroids, n_probe = _DIM, _TOP_K, _N_CELLS, _N_PROBE
+    dim, k, n_centroids, n_probe = _DIM, _TOP_K, _N_CELLS, IVF_N_PROBE
     cos = (
         "list_sum(list_transform(range(1, {d}), i -> {a}[i] * {b}[i]))"
         " / sqrt(list_sum(list_transform({a}, x -> x * x))"
@@ -277,9 +281,7 @@ def cosine_topk_ivf_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return ivf_topk_portable(
-        emb, queries, k=_TOP_K, n_centroids=_N_CELLS, n_probe=_N_PROBE
-    )
+    return ivf_topk_portable(emb, queries, k=_TOP_K, n_centroids=_N_CELLS)
 
 
 _IVF_RECALL_ORACLE = f"""
@@ -315,9 +317,7 @@ def ivf_recall_telemetry(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     appr = (
-        ivf_topk_portable(
-            emb, queries, k=_TOP_K, n_centroids=_N_CELLS, n_probe=_N_PROBE
-        )
+        ivf_topk_portable(emb, queries, k=_TOP_K, n_centroids=_N_CELLS)
         .select("query_id", "neighbor_id")
         .withColumn("_c", F.lit(1))
     )
@@ -476,7 +476,7 @@ def _pq_oracle() -> str:
     argument as the LSH/IVF twins. The Spark side inlines the COLLECTED
     codebook as literals; doubles round-trip exactly, so both engines
     subtract identical values."""
-    dim, m, n_codes, k = _DIM, _PQ_M, _PQ_CODES, _TOP_K
+    dim, m, n_codes, k = PQ_DIM, PQ_M, PQ_CODES, PQ_TOP_K
     d_sub = dim // m
 
     def unrolled(a: str, b_arr: str, b_base: str, j: str) -> str:
@@ -552,9 +552,7 @@ def cosine_topk_pq_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return pq_topk_portable(
-        emb, queries, k=_TOP_K, m=_PQ_M, n_codes=_PQ_CODES, dim=_DIM
-    )
+    return pq_topk_portable(emb, queries)
 
 
 def _ivfpq_oracle() -> str:
@@ -562,8 +560,8 @@ def _ivfpq_oracle() -> str:
     cell assignment composed with the PQ twin's codebook/encode/ADC —
     the inverted list becomes a cell-id equi-join restricting which codes
     each query scores."""
-    dim, m, n_codes, k = _DIM, _PQ_M, _PQ_CODES, _TOP_K
-    n_centroids, n_probe = _N_CELLS, _N_PROBE
+    dim, m, n_codes, k = PQ_DIM, PQ_M, PQ_CODES, PQ_TOP_K
+    n_centroids, n_probe = _N_CELLS, IVF_N_PROBE
     d_sub = dim // m
     cos = (
         "list_sum(list_transform(range(1, {d}), i -> {a}[i] * {b}[i]))"
@@ -659,14 +657,7 @@ def cosine_topk_ivfpq_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
     return ivfpq_topk_portable(
-        emb,
-        queries,
-        k=_TOP_K,
-        m=_PQ_M,
-        n_codes=_PQ_CODES,
-        n_centroids=_N_CELLS,
-        n_probe=_N_PROBE,
-        dim=_DIM,
+        emb, queries, n_centroids=_N_CELLS, n_probe=IVF_N_PROBE
     )
 
 
@@ -674,7 +665,7 @@ def _semdedup_cells_cte() -> str:
     """Shared CTE chain for the SemDeDup oracles: Knuth-hash seed centroids
     + pinned-fold argmax assignment (the _ivf_oracle skeleton), ending in
     cells(vec_id, e, cell)."""
-    dim, n_centroids = _DIM, _N_CELLS
+    dim, n_centroids = _DIM, SEMDEDUP_CELLS
     cos = (
         "list_sum(list_transform(range(1, {d}), i -> {a}[i] * {b}[i]))"
         " / sqrt(list_sum(list_transform({a}, x -> x * x))"
@@ -712,7 +703,7 @@ WITH {_semdedup_cells_cte()}
 SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.cell AS cell,
        ROUND({_SEMDEDUP_PAIR_COS}, {SIM_SCALE}) AS sim
 FROM cells a JOIN cells b ON a.cell = b.cell AND a.vec_id < b.vec_id
-WHERE ROUND({_SEMDEDUP_PAIR_COS}, {SIM_SCALE}) >= {_SEM_T}
+WHERE ROUND({_SEMDEDUP_PAIR_COS}, {SIM_SCALE}) >= {SEMDEDUP_T}
 """
 
 
@@ -736,7 +727,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import semantic_dup_pairs_portable
 
     emb = load(spark, sf_dir, "embeddings")
-    return semantic_dup_pairs_portable(emb, threshold=_SEM_T, n_centroids=_N_CELLS)
+    return semantic_dup_pairs_portable(emb)
 
 
 _SEMDEDUP_SURV_ORACLE = f"""
@@ -777,8 +768,8 @@ def dedup_semantic_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     # one checkpointed assignment shared by the pair join and the
     # occupancy counts; the pair join itself has exactly one definition
-    cells = portable_cells(emb, n_centroids=_N_CELLS)
-    pairs = semantic_dup_pairs_portable(emb, threshold=_SEM_T, cells=cells)
+    cells = portable_cells(emb, n_centroids=SEMDEDUP_CELLS)
+    pairs = semantic_dup_pairs_portable(emb, cells=cells)
     occ = cells.groupBy("cell").agg(F.count(F.lit(1)).alias("n_points"))
     return semantic_survivor_stats(pairs, occ)
 
@@ -815,7 +806,7 @@ def semantic_recall_telemetry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     sem = (
-        semantic_dup_pairs_portable(emb, threshold=_SEM_T, n_centroids=_N_CELLS)
+        semantic_dup_pairs_portable(emb)
         .select("id_a", "id_b")
         .withColumn("_c", F.lit(1))
     )
@@ -962,9 +953,9 @@ def _rp_oracle() -> str:
     """SQL twin of rp_norm_stats: the ±1 sign rows are LITERAL lists (same
     driver-generated matrix as the Spark expression — no cross-engine RNG),
     every dot product a list_reduce fold in the identical prepend-0 order."""
-    from ..operators.projection import RP_K, jl_signs
+    from ..operators.projection import RP_DIM, RP_K, jl_signs
 
-    dim, k = _DIM, RP_K
+    dim, k = RP_DIM, RP_K
 
     def fold(expr: str) -> str:
         return (
@@ -1012,7 +1003,7 @@ FROM f
 def embedding_rp_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.projection import rp_norm_stats
 
-    return rp_norm_stats(load(spark, sf_dir, "embeddings"), dim=_DIM)
+    return rp_norm_stats(load(spark, sf_dir, "embeddings"))
 
 
 def _rp_recall_oracle() -> str:

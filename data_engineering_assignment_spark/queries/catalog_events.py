@@ -7,7 +7,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.aggregates import davg, o_davg, o_dsum
-from ..operators.windows import sessionize, sliding_agg, tumbling_agg
+from ..operators.windows import SESSION_GAP_S, sessionize, sliding_agg, tumbling_agg
 from ..tables import load
 from . import register
 
@@ -461,13 +461,13 @@ def events_multi_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SESSION_ORACLE = """
+_SESSION_ORACLE = f"""
 WITH seq AS (
   SELECT user_id,
          epoch_ms(ts) // 1000 AS ts_sec,
          CASE WHEN epoch_ms(ts) // 1000
                    - LAG(epoch_ms(ts) // 1000) OVER (PARTITION BY user_id ORDER BY ts)
-                   > 1800
+                   > {SESSION_GAP_S}
               THEN 1 ELSE 0 END AS new_session
   FROM events
 ), numbered AS (

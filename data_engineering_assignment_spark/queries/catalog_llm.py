@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from ..operators.llmprep import (
     EMAIL_PATTERN,
     PHONE_PATTERN,
+    QUALITY_KEEP_PCT,
     decontaminate,
     hash_sample,
     mix_sources,
@@ -22,6 +23,7 @@ from ..operators.llmprep import (
     repetition_stats,
 )
 from ..operators.aggregates import o_dround
+from ..operators.sketches import BLOOM_K
 from ..tables import load
 from . import register
 
@@ -439,7 +441,7 @@ def docs_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QGATE_ORACLE = """
+_QGATE_ORACLE = f"""
 WITH t AS (
   SELECT doc_id, source, string_split(text, ' ') AS toks FROM documents
 ), s AS (
@@ -458,8 +460,8 @@ WITH t AS (
 )
 SELECT source,
        COUNT(*) AS n_docs,
-       SUM(CASE WHEN rn * 100 <= n * 80 THEN 1 ELSE 0 END)::BIGINT AS n_kept,
-       MIN(CASE WHEN rn * 100 <= n * 80 THEN quality END) AS min_kept_quality
+       SUM(CASE WHEN rn * 100 <= n * {QUALITY_KEEP_PCT} THEN 1 ELSE 0 END)::BIGINT AS n_kept,
+       MIN(CASE WHEN rn * 100 <= n * {QUALITY_KEEP_PCT} THEN quality END) AS min_kept_quality
 FROM r GROUP BY source
 """
 
@@ -481,7 +483,6 @@ def quality_percentile_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return qgate(docs)
 
 
-_BLOOM_K = 4
 _BLOOM_M = 1 << 16
 
 _BLOOM_ORACLE = f"""
@@ -498,7 +499,7 @@ WITH toks AS (
 ), bloom AS (
   SELECT DISTINCT (((2 * k.k + 1) * rh + (7919 * k.k + 13)) % 1000000007)
                   % {_BLOOM_M} AS pos
-  FROM bench_rh CROSS JOIN (SELECT unnest(range(0, {_BLOOM_K})) AS k) k
+  FROM bench_rh CROSS JOIN (SELECT unnest(range(0, {BLOOM_K})) AS k) k
 ), train_sh AS (
   SELECT doc_id, source, shingle FROM sh WHERE doc_id % 97 <> 0
 ), train_rh AS (
@@ -507,9 +508,9 @@ WITH toks AS (
   SELECT doc_id, source, shingle,
          (((2 * k.k + 1) * rh + (7919 * k.k + 13)) % 1000000007)
          % {_BLOOM_M} AS pos
-  FROM train_rh CROSS JOIN (SELECT unnest(range(0, {_BLOOM_K})) AS k) k
+  FROM train_rh CROSS JOIN (SELECT unnest(range(0, {BLOOM_K})) AS k) k
 ), hits AS (
-  SELECT doc_id, source, shingle, COUNT(b.pos) = {_BLOOM_K} AS bloom_hit
+  SELECT doc_id, source, shingle, COUNT(b.pos) = {BLOOM_K} AS bloom_hit
   FROM probes p LEFT JOIN bloom b USING (pos)
   GROUP BY doc_id, source, shingle
 ), perdoc AS (
@@ -571,7 +572,7 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the filter is <= m_bits rows; checkpointing it keeps the k probe
     # broadcasts from re-aggregating the bench stream once each
     bloom = bloom_build(
-        b_rh, "_rh", k=_BLOOM_K, m_bits=_BLOOM_M, hash_col="_rh"
+        b_rh, "_rh", m_bits=_BLOOM_M, hash_col="_rh"
     ).localCheckpoint(eager=True)
 
     # probe is k narrow broadcast lookups per row — no explode, no regroup
@@ -579,7 +580,6 @@ def bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         bloom,
         t_pairs.select("doc_id", "source", "_rh"),
         "_rh",
-        k=_BLOOM_K,
         m_bits=_BLOOM_M,
         hash_col="_rh",
     )

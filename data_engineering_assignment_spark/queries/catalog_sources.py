@@ -19,6 +19,7 @@ from ..operators.aggregates import cond_sum, davg, dround, dsum, o_davg, o_droun
 from ..operators.graphs import PR_DAMP_DEN, PR_DAMP_NUM, PR_SCALE
 from ..pipelines.sales import read_sales_csv, sales_in_window
 from ..session import tune
+from ..sources import map_batches, schema_field_names
 from . import register
 
 def _doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -58,8 +59,6 @@ def _fixture_rows(
     row width differ from gate to gate."""
     import pandas as pd
 
-    from ..sources import schema_field_names
-
     names = schema_field_names(schema)
 
     def rows(batches):
@@ -70,7 +69,7 @@ def _fixture_rows(
                 columns=names,
             )
 
-    return docs.mapInPandas(rows, schema)
+    return map_batches(docs, rows, schema)
 
 
 def _fixture_scan_small(spark: SparkSession, sf_dir: str) -> bool:
@@ -1053,8 +1052,8 @@ def adpcm_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"slope0": slopes[:, 0], "ok": ok, "v1": v1, "v2": v2}
             )
 
-    decoded = docs.mapInPandas(
-        roundtrip, "slope0 int, ok boolean, v1 long, v2 long"
+    decoded = map_batches(
+        docs, roundtrip, "slope0 int, ok boolean, v1 long, v2 long"
     )
     return decoded.groupBy(F.col("slope0").cast("long").alias("slope0")).agg(
         F.count(F.lit(1)).alias("n_wavs"),
@@ -1329,8 +1328,8 @@ def media_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows.append((w, ok, v00, v23))
             yield pd.DataFrame(rows, columns=["src_w", "ok", "v00", "v23"])
 
-    out = resized.mapInPandas(
-        verify, "src_w int, ok boolean, v00 long, v23 long"
+    out = map_batches(
+        resized, verify, "src_w int, ok boolean, v00 long, v23 long"
     )
     return out.groupBy(F.col("src_w").cast("long").alias("src_w")).agg(
         F.count(F.lit(1)).alias("n_media"),
@@ -1430,8 +1429,8 @@ def video_frame_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows, columns=["rate", "ok", "v0", "v2", "v4"]
             )
 
-    out = sampled.mapInPandas(
-        verify, "rate int, ok boolean, v0 long, v2 long, v4 long"
+    out = map_batches(
+        sampled, verify, "rate int, ok boolean, v0 long, v2 long, v4 long"
     )
     return out.groupBy(F.col("rate").cast("long").alias("rate")).agg(
         F.count(F.lit(1)).alias("n_videos"),
@@ -4012,8 +4011,8 @@ def cdx_recrawl_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
                     rows.append((did, "b", blob(b"!" if c == 2 else b"")))
             yield pd.DataFrame(rows, columns=["archive_id", "snap", "content"])
 
-    media = docs.mapInPandas(
-        make, "archive_id long, snap string, content binary"
+    media = map_batches(
+        docs, make, "archive_id long, snap string, content binary"
     )
     old = cdx_index(media.filter(F.col("snap") == "a"))
     new = cdx_index(media.filter(F.col("snap") == "b"))

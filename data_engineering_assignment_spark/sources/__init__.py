@@ -348,6 +348,124 @@ def schema_field_names(schema: str) -> list[str]:
     return [f.strip().split()[0] for f in fields]
 
 
+# map_batches outputs by the expression id of their first output column, so
+# that a later map_batches over one of them, or over a column-only select of
+# one, finds the stage it extends. Only the newest _MAP_STAGES_KEPT are
+# kept (a query build makes a handful): the entry must outlive its frame,
+# whose select may be all the caller still holds, but a long-lived process
+# must not grow without bound.
+_MAP_STAGES: dict[int, tuple] = {}
+_MAP_STAGES_KEPT = 256
+
+
+def _stage_key(plan) -> int | None:
+    """Registry key of an analyzed MapInPandas plan node; None for any
+    other node."""
+    if plan.nodeName() != "MapInPandas":
+        return None
+    return plan.output().head().exprId().id()
+
+
+def _upstream_stage(df: DataFrame):
+    """``((input, fn, output), cols)`` when ``df`` is a :func:`map_batches`
+    output (``cols`` None) or a column-only selection of one (``cols`` the
+    selected column names in order); None otherwise."""
+    plan = df._jdf.queryExecution().analyzed()
+    cols = None
+    if plan.nodeName() == "Project":
+        exprs = plan.projectList()
+        items = [exprs.apply(i) for i in range(exprs.size())]
+        if any(e.getClass().getSimpleName() != "AttributeReference" for e in items):
+            return None
+        cols = [e.name() for e in items]
+        plan = plan.child()
+    key = _stage_key(plan)
+    stage = None if key is None else _MAP_STAGES.get(key)
+    return None if stage is None else (stage, cols)
+
+
+def _runner_conf(spark: SparkSession) -> dict[str, str]:
+    """The conf map the JVM hands every Arrow Python runner (session
+    timezone, Arrow safe-check, column assignment by name, ...)."""
+    jvm = spark._jvm
+    conf = jvm.org.apache.spark.sql.execution.python.ArrowPythonRunner.getPythonRunnerConfMap(
+        spark._jsparkSession.sessionState().conf()
+    )
+    return dict(jvm.scala.jdk.javaapi.CollectionConverters.asJava(conf))
+
+
+def _fuse(first, first_type: StructType, cols, second, runner_conf: dict[str, str]):
+    """One mapInPandas function running ``first`` then ``second``. Each
+    frame ``first`` yields takes the path the JVM hop between two stages
+    would give it: the worker's result check (columns matched by name)
+    and pandas→Arrow conversion for ``first_type``, the column-only
+    selection ``cols``, and the worker's Arrow→pandas conversion, under
+    the same runner conf. So ``second`` sees the values and dtypes it
+    would see behind the hop (a nullable long arrives as float64 with
+    NaN); empty frames are dropped, as the JVM sends no empty batch."""
+
+    def fused(batches):
+        import pyarrow as pa
+        from pyspark.sql.pandas.serializers import ArrowStreamPandasUDFSerializer
+        from pyspark.worker import assign_cols_by_name, wrap_pandas_batch_iter_udf
+
+        # as pyspark.worker.read_udfs builds it for SQL_MAP_PANDAS_ITER_UDF
+        ser = ArrowStreamPandasUDFSerializer(
+            runner_conf.get("spark.sql.session.timeZone"),
+            runner_conf.get(
+                "spark.sql.execution.pandas.convertToArrowArraySafely", "false"
+            ).lower() == "true",
+            assign_cols_by_name(runner_conf),
+            df_for_struct=True,
+            struct_in_pandas="dict",
+            ndarray_as_list=False,
+            arrow_cast=True,
+            int_to_decimal_coercion_enabled=runner_conf.get(
+                "spark.sql.execution.pythonUDF.pandas.intToDecimalCoercionEnabled", "false"
+            ).lower() == "true",
+        )
+
+        def hop():
+            wrapped = wrap_pandas_batch_iter_udf(first, first_type, runner_conf)
+            for result in wrapped(batches):
+                column = ser._create_batch(result).column(0)
+                if not len(column):
+                    continue
+                if cols is not None:
+                    column = pa.StructArray.from_arrays(
+                        [column.field(c) for c in cols], names=cols
+                    )
+                yield ser.arrow_to_pandas(column, 0)
+
+        return second(hop())
+
+    return fused
+
+
+def map_batches(df: DataFrame, fn, schema) -> DataFrame:
+    """``df.mapInPandas(fn, schema)``, the one way the package runs a
+    Python map stage. When ``df`` is the output of another map_batches
+    call, or a column-only ``select`` of one, the two functions are
+    composed (:func:`_fuse`) and run as ONE mapInPandas over the first
+    stage's input: one Python worker and one JVM↔Arrow round trip per
+    task instead of one per stage. Anything else between the stages (a
+    Filter, join, aggregate, exchange, localCheckpoint, a computed or
+    renamed column) leaves them separate. The second function sees the
+    first one's frames as they were yielded, not re-chunked to
+    ``spark.sql.execution.arrow.maxRecordsPerBatch``; the runner conf is
+    read when the stage is built."""
+    upstream = _upstream_stage(df)
+    if upstream is not None:
+        (src, first, first_out), cols = upstream
+        fn = _fuse(first, first_out.schema, cols, fn, _runner_conf(df.sparkSession))
+        df = src
+    out = df.mapInPandas(fn, schema)
+    _MAP_STAGES[_stage_key(out._jdf.queryExecution().analyzed())] = (df, fn, out)
+    while len(_MAP_STAGES) > _MAP_STAGES_KEPT:
+        del _MAP_STAGES[next(iter(_MAP_STAGES))]
+    return out
+
+
 def _binary_meta_source(
     df: DataFrame,
     content_col: str,
@@ -404,7 +522,7 @@ def _binary_meta_source(
                     rows.append((aid,) + (None,) * n_vals + (False,))
             yield pd.DataFrame(rows, columns=names)
 
-    return df.select(id_col, content_col).mapInPandas(mapper, schema)
+    return map_batches(df.select(id_col, content_col), mapper, schema)
 
 
 def mp3_meta(df: DataFrame) -> DataFrame:

@@ -322,7 +322,7 @@ def test_hits_integer_hand_computed(spark):
     )
     got = {
         r.node: (r.hub, r.auth)
-        for r in hits_integer(edges, iters=3).collect()
+        for r in hits_integer(edges).collect()
     }
     assert got == {
         1: (1_000_000, 0),

@@ -125,7 +125,7 @@ def test_ivf_topk_portable_recall_and_determinism(spark):
     exact = {
         (r["query_id"], r["neighbor_id"]) for r in cosine_topk(df, queries, k=3).collect()
     }
-    rows = ivf_topk_portable(df, queries, k=3, n_centroids=8, n_probe=4).collect()
+    rows = ivf_topk_portable(df, queries, k=3, n_centroids=8).collect()
     approx = {(r["query_id"], r["neighbor_id"]) for r in rows}
     assert len(exact & approx) / len(exact) >= 0.5
     per_q = {}
@@ -133,7 +133,7 @@ def test_ivf_topk_portable_recall_and_determinism(spark):
         per_q.setdefault(r["query_id"], []).append(r["rnk"])
     assert all(sorted(v) == list(range(1, len(v) + 1)) for v in per_q.values())
     again = ivf_topk_portable(
-        df.repartition(7), queries, k=3, n_centroids=8, n_probe=4
+        df.repartition(7), queries, k=3, n_centroids=8
     ).collect()
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
@@ -209,14 +209,14 @@ def test_pq_portable_recall_floor_and_determinism(spark, sf_dir):
         (r["query_id"], r["neighbor_id"])
         for r in cosine_topk(emb, queries, k=5).collect()
     }
-    got = pq_topk_portable(emb, queries, k=5, m=32, n_codes=16, dim=64).collect()
+    got = pq_topk_portable(emb, queries).collect()
     pq = {(r["query_id"], r["neighbor_id"]) for r in got}
     assert len(exact & pq) / len(exact) >= 0.35
 
     again = {
         (r["query_id"], r["neighbor_id"], r["approx_dist"], r["rnk"])
         for r in pq_topk_portable(
-            emb.repartition(7), queries, k=5, m=32, n_codes=16, dim=64
+            emb.repartition(7), queries
         ).collect()
     }
     assert again == {
@@ -258,7 +258,7 @@ def test_semantic_production_matches_portable_twin(spark, sf_dir):
     }
     twin = {
         (r["id_a"], r["id_b"], r["cell"]): r["sim"]
-        for r in semantic_dup_pairs_portable(emb, threshold=0.4, n_centroids=16).collect()
+        for r in semantic_dup_pairs_portable(emb).collect()
     }
     assert set(prod) == set(twin)
     assert prod  # non-trivial fixture: some duplicates exist
@@ -281,7 +281,7 @@ def test_semantic_pairs_are_within_cell_restriction_of_exact(spark, sf_dir):
     emb = load(spark, sf_dir, "embeddings")
     got = {
         (r["id_a"], r["id_b"])
-        for r in semantic_dup_pairs_portable(emb, threshold=0.4, n_centroids=16).collect()
+        for r in semantic_dup_pairs_portable(emb).collect()
     }
     cells = {r["id"]: r["cell"] for r in portable_cells(emb, 16).collect()}
     n = emb.select(F.col("vec_id").alias("id"), F.col("embedding").cast("array<double>").alias("vec"))
@@ -493,7 +493,7 @@ def test_fround_matches_spark_round_bitwise(spark):
         for r in df.select("i", F.round("x", 4).alias("r")).collect()
     }
     for i, v in enumerate(vals):
-        mine = _fround_double(v, 4)
+        mine = _fround_double(v)
         assert mine == got[i] or (mine == 0.0 and got[i] == 0.0), (v, mine, got[i])
 
 
@@ -611,13 +611,11 @@ def test_ivfpq_probe_all_equals_pq(spark, sf_dir):
     q = emb.filter(F.col("vec_id") < 5)
     pq = {
         (r["query_id"], r["rnk"]): (r["neighbor_id"], r["approx_dist"])
-        for r in pq_topk_portable(emb, q, k=5).collect()
+        for r in pq_topk_portable(emb, q).collect()
     }
     ivfpq = {
         (r["query_id"], r["rnk"]): (r["neighbor_id"], r["approx_dist"])
-        for r in ivfpq_topk_portable(
-            emb, q, k=5, n_centroids=8, n_probe=8
-        ).collect()
+        for r in ivfpq_topk_portable(emb, q, n_centroids=8, n_probe=8).collect()
     }
     assert ivfpq == pq
     assert len(pq) == 25
@@ -636,7 +634,7 @@ def test_ivfpq_candidates_only_from_probed_cells(spark, sf_dir):
 
     emb = load(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
-    out = ivfpq_topk_portable(emb, q, k=5, n_centroids=16, n_probe=4).collect()
+    out = ivfpq_topk_portable(emb, q, n_centroids=16, n_probe=4).collect()
     assert out
     # NOTE: ivfpq assigns on NORMALIZED vectors; portable_cells on raw —
     # cosine is scale-invariant up to ulps, so cells agree on this data
@@ -708,7 +706,7 @@ def test_rp_distortion_concentrates(spark, sf_dir):
     from data_engineering_assignment_spark.operators.projection import rp_norm_stats
     from data_engineering_assignment_spark.tables import load
 
-    rows = rp_norm_stats(load(spark, sf_dir, "embeddings"), dim=64).collect()
+    rows = rp_norm_stats(load(spark, sf_dir, "embeddings")).collect()
     assert rows
     ds = [r.distortion for r in rows]
     mean = sum(ds) / len(ds)
@@ -722,7 +720,7 @@ def test_rp_stats_plan_no_shuffle(spark, sf_dir):
     from data_engineering_assignment_spark.tables import load
 
     plan = (
-        rp_norm_stats(load(spark, sf_dir, "embeddings"), dim=64)
+        rp_norm_stats(load(spark, sf_dir, "embeddings"))
         ._jdf.queryExecution()
         .executedPlan()
         .toString()

@@ -62,19 +62,19 @@ def test_bloom_no_false_negatives_and_bounded_fps(spark):
     )
 
     members = _stream(spark, ["item%d" % i for i in range(200)])
-    bloom = bloom_build(members, "tok", k=4, m_bits=1 << 12)
+    bloom = bloom_build(members, "tok", m_bits=1 << 12)
     # filter is bounded by min(k*n, m) distinct positions
     assert bloom.count() <= min(4 * 200, 1 << 12)
 
     # every member must probe true — a false negative is impossible
-    hits = bloom_maybe_contains(bloom, members, "tok", k=4, m_bits=1 << 12)
+    hits = bloom_maybe_contains(bloom, members, "tok", m_bits=1 << 12)
     assert hits.filter(~F.col("bloom_hit")).count() == 0
 
     # non-members: load 800/4096 -> per-bit ~0.18, FP ~ 0.18^4 ~ 0.1%;
     # 500 probes should see only a handful of false positives
     others = _stream(spark, ["other%d" % i for i in range(500)])
     fps = (
-        bloom_maybe_contains(bloom, others, "tok", k=4, m_bits=1 << 12)
+        bloom_maybe_contains(bloom, others, "tok", m_bits=1 << 12)
         .filter(F.col("bloom_hit"))
         .count()
     )
@@ -87,8 +87,8 @@ def test_bloom_probe_is_deterministic_and_portable(spark):
     from data_engineering_assignment_spark.operators.sketches import bloom_build
 
     rows = ["alpha", "beta", "gamma"]
-    one = bloom_build(_stream(spark, rows).coalesce(1), "tok", k=4, m_bits=1 << 10)
-    many = bloom_build(_stream(spark, rows).repartition(8), "tok", k=4, m_bits=1 << 10)
+    one = bloom_build(_stream(spark, rows).coalesce(1), "tok", m_bits=1 << 10)
+    many = bloom_build(_stream(spark, rows).repartition(8), "tok", m_bits=1 << 10)
     assert sorted(r["pos"] for r in one.collect()) == sorted(
         r["pos"] for r in many.collect()
     )

@@ -359,3 +359,108 @@ def test_warc_records_dead_letter_has_full_width_with_both_flags(spark):
     for r in rows:
         assert r["parse_ok"] is False
         assert all(r[c] is None for c in cols if c not in ("archive_id", "parse_ok"))
+
+
+# map_batches fusion: a composed chain must hand its second function the
+# frames a JVM hop would, so each case runs fused and behind a
+# localCheckpoint barrier (two real stages) and must agree, dtypes included.
+_GEN_SCHEMA = (
+    "k long, n long, s string, b binary, d decimal(10,2), ts timestamp,"
+    " st struct<x: int, y: string>"
+)
+
+
+def _stage_fns(drop: str | None = None):
+    """(generator, describer) for mapInPandas; nested so that they pickle
+    by value (workers cannot import this test module). The generator
+    emits every column of _GEN_SCHEMA but ``drop``; the describer emits
+    one row per input row, its key and the repr of what it saw: column
+    dtypes and values."""
+
+    def gen(batches):
+        import datetime
+
+        import pandas as pd
+
+        t0 = datetime.datetime(2024, 6, 1, 12, 0)
+        for pdf in batches:
+            ks = [int(k) for k in pdf["id"]]
+            out = pd.DataFrame(
+                {
+                    "k": ks,
+                    "n": [None if k % 3 == 0 else k * 10 for k in ks],
+                    "s": [f"s{k}" for k in ks],
+                    "b": [bytes([k]) * 3 for k in ks],
+                    "d": [None if k % 5 == 0 else Decimal(k) / 4 for k in ks],
+                    "ts": [t0 + datetime.timedelta(minutes=37 * k) for k in ks],
+                    "st": [{"x": k, "y": None if k % 2 else f"y{k}"} for k in ks],
+                }
+            )
+            yield out if drop is None else out.drop(columns=drop)
+
+    def describe(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            dtypes = ",".join(f"{c}:{t}" for c, t in pdf.dtypes.items())
+            yield pd.DataFrame(
+                {
+                    "k": pdf["k"],
+                    "seen": [f"{dtypes}|{row!r}" for row in pdf.itertuples(index=False)],
+                }
+            )
+
+    return gen, describe
+
+
+def _map_nodes(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count("MapInPandas")
+
+
+def _fused_and_barrier(spark, cols=None, drop=None):
+    gen, describe = _stage_fns(drop)
+    first = sources.map_batches(spark.range(0, 24, numPartitions=2), gen, _GEN_SCHEMA)
+    barrier = first.localCheckpoint(eager=False)
+    if cols is not None:
+        first, barrier = first.select(*cols), barrier.select(*cols)
+    out = "k long, seen string"
+    return (
+        sources.map_batches(first, describe, out),
+        sources.map_batches(barrier, describe, out),
+    )
+
+
+def test_fused_stages_see_what_a_jvm_hop_delivers(spark):
+    key = "spark.sql.session.timeZone"
+    utc = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        for cols in (None, ("st", "k", "n", "ts")):
+            fused, barrier = _fused_and_barrier(spark, cols)
+            assert _map_nodes(fused) == 1, cols
+            got = sorted(map(tuple, fused.collect()))
+            assert len(got) == 24
+            assert got == sorted(map(tuple, barrier.collect())), cols
+    finally:
+        spark.conf.set(key, utc)
+    # k = 0: a NULL long arrives as float64 NaN, a timestamp as a naive
+    # datetime64 in the session timezone
+    seen = got[0][1]
+    assert "n:float64" in seen and "ts:datetime64[ns]" in seen, seen
+    assert "n=nan" in seen and "2024-06-01 12:00:00" in seen, seen
+
+
+def test_fused_stage_checks_result_columns_like_the_worker(spark):
+    import pytest
+
+    for df in _fused_and_barrier(spark, drop="s"):
+        with pytest.raises(Exception, match="RESULT_COLUMN_NAMES_MISMATCH"):
+            df.collect()
+
+
+def test_media_gates_generate_and_decode_in_one_python_stage(spark, sf_dir):
+    from data_engineering_assignment_spark.queries import load_catalog
+
+    catalog = load_catalog()
+    for name in ("png_decode_stats", "wav_audio_stats"):
+        assert _map_nodes(catalog[name].build(spark, sf_dir)) == 1, name

@@ -15,15 +15,19 @@ work with no Spark session:
 * every parameter of a top-level def takes more than one value across the
   calls in the package, ``scripts/``, ``perfbench/``, ``bench.py``,
   ``__spark_entry__.py`` and ``tests/``. Arguments are compared as
-  literals; an omitted argument is the default's value, and a non-literal
-  argument, or a call with ``*args`` or ``**kwargs``, varies. A parameter
+  literals, a bare name bound once to a literal at module level counting
+  as that literal; an omitted argument is the default's value, and any
+  other argument, or a call with ``*args`` or ``**kwargs``, varies. A parameter
   that every call gives one value (a default that no call passes among
   them) is a constant, not a parameter. ``@register`` query functions are
   exempt: the driver fixes their signature. So are the :data:`ALLOWED`
   defs, which mirror the notebook's task settings, UDFs, whose calls pass
   columns, and defs whose name is also read as a value (handed to
   ``mapInPandas``, a UDF and so on), whose calls are not visible; for these,
-  only a default that no call passes is flagged.
+  only a default that no call passes is flagged;
+* ``mapInPandas`` is called only in ``sources/__init__.py``: every other
+  Python map stage goes through ``sources.map_batches``, which fuses
+  chained stages.
 
 Names are matched across modules by name alone, and ``from m import a as
 b`` reads and calls of ``b`` count as ones of ``a``.
@@ -93,11 +97,14 @@ def _decorated(fn: ast.AST, *names: str) -> bool:
     return False
 
 
-def _literal(node: ast.expr) -> str | None:
-    """The repr of a literal expression, None for anything else."""
+def _literal(node: ast.expr, consts: dict[str, str] | None = None) -> str | None:
+    """The repr of a literal expression, or of the literal a name in
+    ``consts`` is bound to; None for anything else."""
     if type(node) is ast.Constant:
         return repr(node.value)
-    if type(node) in (ast.Name, ast.Attribute, ast.Call):
+    if type(node) is ast.Name:
+        return (consts or {}).get(node.id)
+    if type(node) in (ast.Attribute, ast.Call):
         return None
     try:
         return repr(ast.literal_eval(node))
@@ -106,12 +113,17 @@ def _literal(node: ast.expr) -> str | None:
 
 
 def _reads(
-    node: ast.AST, aliases: dict[str, str], calls: list[Call], values: set[str]
+    node: ast.AST,
+    aliases: dict[str, str],
+    calls: list[Call],
+    values: set[str],
+    consts: dict[str, str],
 ) -> set[str]:
     """Names and attribute names read under ``node``; adds the ones read
     other than as a call's callee to ``values``, records every ``from m
     import a as b`` it passes in ``aliases`` (b -> a) and every call in
-    ``calls``. An explicit stack, about twice as fast as ``ast.walk``."""
+    ``calls``, its arguments resolved through the module constants
+    ``consts``. An explicit stack, about twice as fast as ``ast.walk``."""
     out, stack, callees = set(), [node], set()
     while stack:
         n = stack.pop()
@@ -136,8 +148,8 @@ def _reads(
                 calls.append(
                     (
                         name,
-                        tuple(_literal(a) for a in n.args),
-                        {k.arg: _literal(k.value) for k in n.keywords},
+                        tuple(_literal(a, consts) for a in n.args),
+                        {k.arg: _literal(k.value, consts) for k in n.keywords},
                         star,
                     )
                 )
@@ -162,8 +174,9 @@ def _uses(tree: ast.Module, calls: list[Call], values: set[str]) -> set[str]:
     used: set[str] = set()
     read: set[str] = set()
     first = len(calls)
+    consts = _literal_constants(tree)
     for stmt in tree.body:
-        names = _reads(stmt, aliases, calls, read)
+        names = _reads(stmt, aliases, calls, read, consts)
         if isinstance(stmt, _DEFS):
             names.discard(stmt.name)
             if _decorated(stmt, "register"):
@@ -188,6 +201,26 @@ def _constants(stmt: ast.stmt) -> list[str]:
             if isinstance(n, ast.Name) and not n.id.startswith("__"):
                 names.append(n.id)
     return names
+
+
+def _literal_constants(tree: ast.Module) -> dict[str, str]:
+    """Module-level names bound to a literal, as that literal's repr; a
+    name bound anywhere else in the module too (a second assignment, a
+    local, a parameter) is left out."""
+    bound: dict[str, int] = {}
+    for n in ast.walk(tree):
+        if type(n) is ast.Name and type(n.ctx) is not ast.Load:
+            bound[n.id] = bound.get(n.id, 0) + 1
+        elif type(n) is ast.arg:
+            bound[n.arg] = bound.get(n.arg, 0) + 1
+    out = {}
+    for stmt in tree.body:
+        names = _constants(stmt)
+        if len(names) == 1 and bound.get(names[0]) == 1:
+            value = _literal(stmt.value)
+            if value is not None:
+                out[names[0]] = value
+    return out
 
 
 def _parameters(fn: ast.FunctionDef) -> list[tuple[int | None, str, str | None]]:
@@ -362,3 +395,26 @@ def test_guard_skips_a_def_read_as_a_value():
 
 def test_guard_lets_a_literal_and_a_variable_vary():
     assert _flagged(PKG, "f(a, 3, col='v')\nf(b, k, col=name)") == []
+
+
+def test_guard_resolves_a_module_constant():
+    pkg = PKG + "SCALE = 4\n\ndef g(df):\n    return f(df, SCALE)\n"
+    assert _flagged(pkg, "f(a, 4, col=x)") == ["f(n=4)"]
+    # a name bound twice in the module is no constant
+    rebound = pkg + "\ndef h(SCALE):\n    return f(a, SCALE)\n"
+    assert _flagged(rebound, "f(a, 4, col=x)") == []
+
+
+def test_mapinpandas_only_in_the_helper_module(surface):
+    package = surface[0]
+    helper = PACKAGE / "sources" / "__init__.py"
+    callers = sorted(
+        f"{path.relative_to(ROOT)}:{node.lineno}"
+        for path, tree in package.items()
+        if path != helper
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "mapInPandas"
+    )
+    assert callers == [], "mapInPandas outside sources.map_batches:\n" + "\n".join(callers)
